@@ -1035,9 +1035,11 @@ def q_geometry_quarantine(spark, sf_dir):
     """P4: geometry validity filter — the fixture polygons (all valid)
     unioned with three injected broken rows; returns per-bucket counts."""
     from socialmapper_spark.operators.spatial_join import validate_geometries
+    from socialmapper_spark.session import local_frame
 
     polys = _read_geo(spark, sf_dir, "polygons").select("poly_id", "geometry_wkb")
-    broken = spark.createDataFrame(
+    broken = local_frame(
+        spark,
         [
             ("bad_null", None),
             ("bad_truncated", b"\x01\x03\x00\x00"),
@@ -1259,8 +1261,10 @@ def q_blocklist(spark, sf_dir):
     """Domain-blocklist decision per crawl page: suffix-chain explode +
     broadcast join; blocked_by = most specific matching entry."""
     from socialmapper_spark.operators.web import blocklist_filter
+    from socialmapper_spark.session import local_frame
 
-    bl = spark.createDataFrame(
+    bl = local_frame(
+        spark,
         [("host3.example.org",), ("host13.example.org",), ("blocked.net",)],
         "domain string",
     )
@@ -1479,13 +1483,14 @@ def q_crawl_curation(spark, sf_dir):
         per_host_cap,
         snapshot_dedup,
     )
+    from socialmapper_spark.session import local_frame
 
     d = snapshot_dedup(_crawl(spark, sf_dir))
     kept = admission_gate(
         d, min_chars=122, min_words=23, max_digit_ratio=0.05
     ).filter("keep").select("url")
-    bl = spark.createDataFrame(
-        [("host3.example.org",), ("host13.example.org",)], "domain string"
+    bl = local_frame(
+        spark, [("host3.example.org",), ("host13.example.org",)], "domain string"
     )
     unblocked = blocklist_filter(d, bl).filter(
         F.col("blocked_by").isNull()

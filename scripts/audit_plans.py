@@ -9,6 +9,12 @@ its FORMATTED physical plan's nodes:
   - `CartesianProduct` (non-broadcast cross join) — never allowed; the
     deliberate brute-force-kNN parity path uses a BROADCAST nested-loop
     join, which is bounded by the broadcast side.
+  - `Scan ExistingRDD` over Python rows (a table built by
+    `createDataFrame` on a Python list) — never allowed: its rows are
+    unpickled by a Python worker pool of its own; constant tables go
+    through `session.local_frame` (a JVM `LocalTableScan`) instead. A
+    `localCheckpoint` plans under the same node name but scans a JVM RDD,
+    so the node's RDD origin (`applySchemaToPythonRDD`) tells them apart.
   - Arrow-vectorized Python (`ArrowEvalPython`, `MapInPandas`,
     `FlatMapGroupsInPandas`, `FlatMapGroupsInPandasWithState`,
     `BroadcastNestedLoopJoin`) — allowed ONLY for entries whitelisted
@@ -25,10 +31,12 @@ result's, and the stream-side shape is pytest-pinned instead.
 from __future__ import annotations
 
 import json
+import pathlib
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = pathlib.Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -43,7 +51,7 @@ WHITELIST: dict[str, tuple[set[str], str]] = {
     "zcta_assignments": ({"ArrowEvalPython", "MapInPandas"},
                          "polygon edge prep (polygon-table-sized)"),
     "flagship_demographics": ({"ArrowEvalPython", "MapInPandas"},
-                              "polygon edge prep + vectorized PIP refine"),
+                              "polygon edge prep (the PIP refine is Catalyst)"),
     "geometry_quarantine": ({"ArrowEvalPython", "MapInPandas"},
                             "WKB validity parse over the polygon table"),
     "zonal_stats": ({"ArrowEvalPython", "MapInPandas"},
@@ -122,6 +130,7 @@ WHITELIST: dict[str, tuple[set[str], str]] = {
                      "IVF assignment + per-partition heap kernel"),
 }
 
+PY_ROWS_SCAN = "Scan ExistingRDD (Python rows)"
 PY_NODES = {
     "BatchEvalPython",
     "ArrowEvalPython",
@@ -130,7 +139,21 @@ PY_NODES = {
     "FlatMapGroupsInPandasWithState",
     "CartesianProduct",
     "BroadcastNestedLoopJoin",
+    PY_ROWS_SCAN,
 }
+
+
+def plan_nodes(plan: str) -> list[str]:
+    """Operator names from a FORMATTED plan's per-node detail blocks.
+    Scans keep their source word ("Scan parquet"); a scan of an RDD of
+    Python rows is named ``PY_ROWS_SCAN``."""
+    nodes = []
+    for block in re.split(r"^(?=\(\d+\) )", plan, flags=re.M)[1:]:
+        name = re.match(r"\(\d+\) (Scan \w+|\w+)", block).group(1)
+        if name == "Scan ExistingRDD" and " at applySchemaToPythonRDD " in block:
+            name = PY_ROWS_SCAN
+        nodes.append(name)
+    return nodes
 
 
 def main() -> None:
@@ -151,7 +174,7 @@ def main() -> None:
             results[name] = {"error": str(exc)[:200], "verdict": "error"}
             unexpected.append(name)
             continue
-        ops = re.findall(r"^\(\d+\) (\w+)", plan, re.M)
+        ops = plan_nodes(plan)
         flagged = sorted({o for o in ops if o in PY_NODES})
         allowed, reason = WHITELIST.get(name, (set(), ""))
         bad = [o for o in flagged if o not in allowed]
@@ -172,7 +195,7 @@ def main() -> None:
         for v in ("clean", "whitelisted", "unexpected", "error")
     }
     out = {"sf": SF_DIR, "counts": counts, "entries": results}
-    with open("/root/repo/PLAN_AUDIT.json", "w") as f:
+    with open(ROOT / "PLAN_AUDIT.json", "w") as f:
         json.dump(out, f, indent=1, sort_keys=True)
     print(json.dumps({"metric": "plan_audit", **counts}))
     if unexpected:

@@ -14,7 +14,8 @@ Stages (each resumable via the lineage checkpoint table):
 On restart after a failure, completed buckets of stage 1 are skipped
 (anti-join against the lineage table) — the north_rule's
 resume-without-recompute. Zero per-row Python: the only Python on
-executors is the vectorized PIP-refine Arrow UDF.
+executors is the vectorized polygon-table geometry prep; the PIP refine
+is a Catalyst expression.
 
 Build the zip:  cd /root/repo && zip -r engine.zip socialmapper_spark
 Local smoke:    python scripts/run_flagship_job.py --sf /root/testdata/sf0.001 --out /tmp/flagship_job

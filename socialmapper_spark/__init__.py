@@ -22,9 +22,10 @@ explicit skew salting, and Iceberg-or-parquet table IO.
 
 Architecture is Spark-first: DataFrame/SQL plans optimized by Catalyst,
 pure column expressions on the hot path (cell encode, haversine, geoparse
-regex, sentinel cleansing are all JVM-side), and vectorized Arrow/pandas
-UDFs only where built-ins cannot express the semantics (exact polygon
-refine, Albers projection). Zero per-row Python.
+regex, sentinel cleansing and the exact polygon refine — ``pip_refine_expr``
+— are all JVM-side), and vectorized Arrow/pandas UDFs only where built-ins
+cannot express the semantics (polygon-table geometry prep, Albers
+projection). Zero per-row Python.
 
 No third-party geo libraries are required: the container lacks h3 /
 shapely / pyproj, so `socialmapper_spark.geo` implements a deterministic

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from socialmapper_spark.session import local_frame
+
 # state FIPS -> adjacent state FIPS (census/__init__.py:334-411)
 STATE_NEIGHBORS: dict[str, list[str]] = {
     "01": ["13", "28", "47"],
@@ -85,7 +87,7 @@ def get_neighboring_counties(county_fips: str) -> list[str]:
 def state_neighbors_table(spark: SparkSession) -> DataFrame:
     """(state, neighbor) dimension — ~220 rows, broadcast side."""
     rows = [(s, n) for s, ns in STATE_NEIGHBORS.items() for n in ns]
-    return spark.createDataFrame(rows, "state string, neighbor string")
+    return local_frame(spark, rows, "state string, neighbor string")
 
 
 def filter_to_neighboring_states(

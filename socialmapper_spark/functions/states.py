@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from socialmapper_spark.session import local_frame
+
 # (name, USPS abbreviation, FIPS) — public FIPS 5-2 / census facts
 STATES: list[tuple[str, str, str]] = [
     ("Alabama", "AL", "01"), ("Alaska", "AK", "02"), ("Arizona", "AZ", "04"),
@@ -52,8 +54,8 @@ def state_dim(spark: SparkSession) -> DataFrame:
             aliases.add(fips.lstrip("0"))
         for a in aliases:
             rows.append((a, name, abbr, fips))
-    return spark.createDataFrame(
-        rows, "alias string, state_name string, state_abbr string, state_fips string"
+    return local_frame(
+        spark, rows, "alias string, state_name string, state_abbr string, state_fips string"
     )
 
 

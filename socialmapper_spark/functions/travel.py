@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from socialmapper_spark.session import local_frame
+
 # mode → (network_type, default_kmh, min_kmh, max_kmh)
 # EXACT values from travel_modes.py:47-70
 TRAVEL_MODE_CONFIGS: dict[str, tuple[str, float, float, float]] = {
@@ -43,7 +45,8 @@ def travel_mode_table(spark: SparkSession) -> DataFrame:
     rows = [
         (m, nt, d, lo, hi) for m, (nt, d, lo, hi) in TRAVEL_MODE_CONFIGS.items()
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "travel_mode string, network_type string, default_speed_kmh double, "
         "min_speed_kmh double, max_speed_kmh double",

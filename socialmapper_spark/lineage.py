@@ -92,7 +92,11 @@ def bucket_stats(
 
 
 def completed_buckets(spark: SparkSession, lineage_path: str, stage: str) -> DataFrame:
-    """Buckets already committed for this stage (empty frame if no table)."""
+    """Buckets already committed for this stage (empty frame if no table).
+
+    The empty frame is a zero-row ``Range``, planned in the JVM: a
+    ``createDataFrame`` over an empty list would start a Python worker
+    pool only to unpickle no rows."""
     if os.path.exists(lineage_path):
         lin = spark.read.parquet(lineage_path)
         return (
@@ -100,7 +104,25 @@ def completed_buckets(spark: SparkSession, lineage_path: str, stage: str) -> Dat
             .select("bucket")
             .distinct()
         )
-    return spark.createDataFrame([], "bucket int")
+    return spark.range(0).select(F.col("id").cast("int").alias("bucket"))
+
+
+def pending_rows(
+    spark: SparkSession,
+    df: DataFrame,
+    stage: str,
+    key_col: str,
+    lineage_path: str,
+    n_buckets: int = 32,
+) -> DataFrame:
+    """``df`` bucketed by ``key_col``, minus the buckets the lineage
+    table records as committed for ``stage``. A fresh stage (no lineage
+    table yet) has nothing to subtract, so its plan carries no anti-join
+    and no extra shuffle."""
+    bucketed = with_bucket(df, key_col, n_buckets)
+    if not os.path.exists(lineage_path):
+        return bucketed
+    return bucketed.join(completed_buckets(spark, lineage_path, stage), "bucket", "left_anti")
 
 
 def run_stage_with_lineage(
@@ -119,7 +141,9 @@ def run_stage_with_lineage(
     """Execute a stage resumably.
 
     1. bucket the output by ``key_col``
-    2. anti-join buckets already committed in the lineage table
+    2. drop the buckets already committed (:func:`pending_rows`): the
+       anti-join against the lineage table runs only when that table
+       exists, so a fresh stage writes every bucket without it
     3. write the remaining buckets (parquet, partitioned by bucket —
        a crashed write leaves partial bucket dirs that are simply
        overwritten on retry because commit happens per bucket AFTER
@@ -137,9 +161,7 @@ def run_stage_with_lineage(
 
     Returns the number of buckets processed this run (0 = fully resumed).
     """
-    bucketed = with_bucket(df, key_col, n_buckets)
-    done = completed_buckets(spark, lineage_path, stage)
-    todo = bucketed.join(done, "bucket", "left_anti")
+    todo = pending_rows(spark, df, stage, key_col, lineage_path, n_buckets)
     if chunk_size:
         todo = todo.persist()
 

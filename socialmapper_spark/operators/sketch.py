@@ -74,6 +74,11 @@ def hll_registers(
     combine regardless of input size, so the exchange carries KBs per
     group. This is the artifact to persist: tomorrow's registers merge
     with today's via :func:`hll_merge` without touching either scan.
+
+    NULL keys are dropped before hashing, as ``count(distinct)`` drops
+    them: a NULL key would otherwise hash to one register row with a
+    NULL idx and rho, which :func:`hll_estimate` counts as an occupied
+    register.
     """
     if not 4 <= p <= 18:
         raise ValueError("p must be in [4, 18]")
@@ -86,7 +91,8 @@ def hll_registers(
         .cast("int")
     )
     return (
-        df.select(
+        df.filter(F.col(key_col).isNotNull())
+        .select(
             *group_cols,
             F.shiftright(h, rembits).cast("int").alias("idx"),
             rho.alias("rho"),
@@ -184,6 +190,7 @@ def hll_sql(
     return f"""
         with hashed as (
             select {gsel}{h} as h from {table_expr}
+            where ({key_expr}) is not null
         ),
         regs as (
             select {gpfx}cast(h >> {rembits} as int) as idx,

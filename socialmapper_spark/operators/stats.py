@@ -20,6 +20,7 @@ from socialmapper_spark.functions.scalar import cleanse_census_value
 from socialmapper_spark.geo.albers import albers5070_forward
 from socialmapper_spark.geo.wkb import wkb_to_rings
 from socialmapper_spark.operators.census import dmean, dsum
+from socialmapper_spark.session import local_frame
 
 
 def polygon_area_km2(wkb: bytes) -> float:
@@ -289,7 +290,7 @@ def global_rank(vals: DataFrame):
     for p in sorted(sizes):
         offsets.append((p, acc))
         acc += sizes[p]
-    off_df = spark.createDataFrame(offsets or [(0, 0)], "__pid int, __off long")
+    off_df = local_frame(spark, offsets or [(0, 0)], "__pid int, __off long")
     w = Window.partitionBy("__pid").orderBy(
         F.col("value").asc(), F.col("geoid").asc()
     )

@@ -60,6 +60,26 @@ def get_spark(
     return builder.getOrCreate()
 
 
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str):
+    """A small constant table built from driver-side ``rows`` that plans
+    as a JVM ``LocalTableScan``. ``createDataFrame`` on a Python list
+    plans as ``Scan ExistingRDD`` instead, whose rows are unpickled by a
+    Python worker pool of their own beside the one the Arrow UDFs use.
+    An Arrow table goes to the driver JVM as is, empty or not and
+    whatever the session's Arrow setting (a pandas frame would fall back
+    to the list path when empty or with Arrow off)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    struct = DataType.fromDDL(schema)
+    names = struct.fieldNames()
+    table = pa.Table.from_pylist(
+        [dict(zip(names, r)) for r in rows], schema=to_arrow_schema(struct)
+    )
+    return spark.createDataFrame(table, struct)
+
+
 def release_caches(df) -> int:
     """Release the persist() handles an operator attached to its returned
     DataFrame (``__spark_graft_caches__``). Operators like the kring kNN

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from socialmapper_spark.lineage import (
     completed_buckets,
+    pending_rows,
     run_stage_with_lineage,
     verify_lineage,
     with_bucket,
@@ -135,3 +136,33 @@ def test_chunked_commit_resume_skips_committed_buckets(spark, tmp_path):
     assert verify_lineage(spark, out, lin, "assign", ["url", "poly_id"])
     # the checkpointed table is complete and exact
     assert spark.read.parquet(out).count() == 2000
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_completed_buckets_without_table_is_jvm_empty(spark, tmp_path):
+    """No lineage table: an empty ``bucket int`` frame planned in the JVM
+    (a list-backed ``Scan ExistingRDD`` would start a Python worker pool)."""
+    done = completed_buckets(spark, str(tmp_path / "missing"), "stage1")
+    assert done.schema.simpleString() == "struct<bucket:int>"
+    assert done.count() == 0
+    assert "ExistingRDD" not in _plan(done)
+
+
+def test_fresh_stage_plan_has_no_anti_join(spark, workdir):
+    """A stage with no lineage table yet writes its bucketed frame as is;
+    once the table exists, the resume anti-join is back in the plan."""
+    df = _source(spark)
+    out, lin = str(workdir / "out"), str(workdir / "lineage")
+    fresh = pending_rows(spark, df, "geoparse", "url", lin, n_buckets=8)
+    assert "LeftAnti" not in _plan(fresh)
+    assert "ExistingRDD" not in _plan(fresh)
+    assert fresh.count() == df.count()
+    run_stage_with_lineage(
+        spark, df, "geoparse", "url", ["url", "cell_r7"], out, lin, n_buckets=8,
+    )
+    resumed = pending_rows(spark, df, "geoparse", "url", lin, n_buckets=8)
+    assert "LeftAnti" in _plan(resumed)
+    assert resumed.count() == 0

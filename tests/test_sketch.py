@@ -201,3 +201,32 @@ def test_cms_merge_by_sum(spark, keyed):
     assert sorted(map(tuple, merged.collect())) == sorted(
         map(tuple, cms_sketch(keyed, "k").collect())
     )
+
+
+def test_hll_null_keys_skipped_in_both_twins(spark, tmp_path):
+    """NULL keys are dropped before hashing in the Spark operator and the
+    DuckDB twin alike: a NULL key used to leave one (idx NULL, rho NULL)
+    register row, counted as occupied, so zero_registers came out one
+    short in both engines."""
+    import duckdb
+    import pandas as pd
+
+    from socialmapper_spark.operators.sketch import hll_sql
+
+    keys = [f"key{i}" for i in range(500)]
+    rows = [("a", k) for k in keys] + [("a", None)] * 7 + [("b", None)] * 3
+    path = str(tmp_path / "keys.parquet")
+    pd.DataFrame(rows, columns=["grp", "k"]).to_parquet(path)
+    df = spark.read.parquet(path)
+
+    regs = hll_registers(df, "k", ("grp",), p=8).collect()
+    assert {r["idx"]: r["rho"] for r in regs} == hll_registers_py(keys, p=8)
+
+    got = [tuple(r) for r in hll_cardinality(df, "k", ("grp",), p=8).collect()]
+    twin = duckdb.sql(
+        hll_sql(f"read_parquet('{path}')", "k", {"grp": "grp"}, p=8)
+    ).fetchall()
+    assert got == twin
+    # the all-NULL group has no registers, so no estimate row
+    assert [r[0] for r in got] == ["a"]
+    assert got[0][2] == 256 - len(hll_registers_py(keys, p=8))
