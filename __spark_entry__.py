@@ -1476,6 +1476,12 @@ def q_crawl_curation(spark, sf_dir):
     admission gate → domain blocklist → per-host cap → canonical key.
     Every stage is the registry operator; the oracle composes their SQL
     twins stage-for-stage."""
+    return crawl_curation_frame(spark, _crawl(spark, sf_dir))
+
+
+def crawl_curation_frame(spark, crawl: DataFrame) -> DataFrame:
+    """q_crawl_curation over a caller-provided crawl frame (the scaling
+    harness threads its replicated crawl in)."""
     from socialmapper_spark.operators.web import (
         admission_gate,
         blocklist_filter,
@@ -1485,7 +1491,7 @@ def q_crawl_curation(spark, sf_dir):
     )
     from socialmapper_spark.session import local_frame
 
-    d = snapshot_dedup(_crawl(spark, sf_dir))
+    d = snapshot_dedup(crawl)
     kept = admission_gate(
         d, min_chars=122, min_words=23, max_digit_ratio=0.05
     ).filter("keep").select("url")

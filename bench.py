@@ -11,18 +11,24 @@ pages table (70% of rows in 3 hot cells — the salting/AQE path is
 exercised, not dodged).
 
 Scaling-efficiency evidence (BASELINE.json north_rule: ≥0.8 from N to
-4N): run with SPARK_GRAFT_CPUS=8 and =32 on the same input; see
-scripts/bench_scaling.py which does both and reports efficiency.
+4N) comes from scripts/scaling.py, which runs each workload at N and 4N
+cores in fresh JVMs and normalizes by the calibration kernel timed here
+too (``kernel_sec``).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import pathlib
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = pathlib.Path(__file__).resolve().parent
+sys.path.insert(0, str(ROOT))
+sys.path.insert(0, str(ROOT / "scripts"))
+
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def timed(fn, *args):
@@ -31,10 +37,10 @@ def timed(fn, *args):
     return time.perf_counter() - t0, n
 
 
-def checksum_all(df) -> int:
-    """Force-evaluate EVERY output column (sum of xxhash64 over the full
-    row), returning the row count. count() is the wrong sink for a
-    non-filtering plan: Catalyst column-prunes everything the count does
+def checksum_all(df, *cols: str) -> int:
+    """Force-evaluate EVERY output column (or just ``cols``) through an
+    xxhash64 fold, returning the row count. count() is the wrong sink for
+    a non-filtering plan: Catalyst column-prunes everything the count does
     not need, so a reason-emitting funnel degenerates to a scan of its
     join keys and the bench times the pruned plan, not the operator."""
     from pyspark.sql import functions as F
@@ -42,13 +48,13 @@ def checksum_all(df) -> int:
     row = df.select(
         F.count("*").alias("n"),
         # bit_xor, not sum: ANSI mode makes sum of 64-bit hashes overflow
-        F.bit_xor(F.xxhash64(*[F.col(c) for c in df.columns])).alias("chk"),
+        F.bit_xor(F.xxhash64(*(cols or df.columns))).alias("chk"),
     ).collect()[0]
     return row["n"]
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = SF_DIR
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     # sandbox files are tiny — 1 MB splits restore scan parallelism (the
     # library default is 16 MB; see session.py)
@@ -146,25 +152,21 @@ def main() -> None:
     # interleaved best-of-N: the sandbox host has 2-3x run-to-run noise, so
     # a single pass measures the host, not the engine. Interleaving (round-
     # robin over queries, best time kept) decorrelates slow host windows
-    # from any one query — the same protocol scripts/bench_scaling.py uses.
+    # from any one query — the same protocol scripts/scaling.py uses.
     rounds = int(os.environ.get("SPARK_GRAFT_ROUNDS", "3"))
     queries: dict[str, float] = {name: float("inf") for name, _ in bench_queries}
     counts: dict[str, int | None] = {}
 
     # in-window calibration kernel (r4 VERDICT task 6): a ~2 s pure-JVM
-    # md5+xxhash fold over spark.range — the same kernel shape the scaling
-    # scripts calibrate against. Its best time rides along in the output
-    # JSON as kernel_sec, so any cross-round "regression" can be
-    # normalized against the host window it was measured in (the r3→r4
-    # driver flagship delta was 1.34× pure host noise).
-    kernel_rows = int(os.environ.get("SPARK_GRAFT_KERNEL_ROWS", "20000000"))
-    kernel_df = spark.range(0, kernel_rows, 1, numPartitions=cpus * 4)
-    kernel_df.count()  # materialize range outside the timed window
+    # md5+xxhash fold over spark.range — the kernel scripts/scaling.py
+    # calibrates against. Its best time rides along in the output JSON as
+    # kernel_sec, so any cross-round "regression" can be normalized
+    # against the host window it was measured in (the r3→r4 driver
+    # flagship delta was 1.34× pure host noise).
+    from scaling import cpu_kernel
 
-    def kernel():
-        kernel_df.select(
-            F.avg(F.xxhash64(F.md5(F.col("id").cast("string"))))
-        ).collect()
+    kernel_rows = int(os.environ.get("SPARK_GRAFT_KERNEL_ROWS", "20000000"))
+    kernel, _ = cpu_kernel(spark, sf_dir, kernel_rows)
 
     kernel_sec = float("inf")
     for _ in range(rounds):

@@ -30,7 +30,7 @@ once to /tmp as 32-file directories so the stream source parallelizes.
 Usage:
   python scripts/streaming_bench.py                 # harness, writes STREAMING_BENCH.json
   python scripts/streaming_bench.py one <op> <cores>  # one timed run
-  python scripts/streaming_bench.py scaling         # 8-vs-32 evidence,
+  python scripts/streaming_bench.py scaling         # N-vs-4N evidence (N = nproc // 4),
                                                     # writes BENCH_SCALING_STREAMING.json
 """
 
@@ -38,11 +38,12 @@ from __future__ import annotations
 
 import json
 import os
-import subprocess
+import pathlib
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = pathlib.Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 REPLICATE = 8
 CORES = 32
@@ -180,18 +181,13 @@ ROWS_IN = {
 
 
 def main() -> None:
+    from scaling import run_child
+
     ensure_fixture()
     rows_in = ROWS_IN
     results = {}
     for op in ("gate", "gate_noop", "window", "sessions"):
-        out = subprocess.run(
-            [sys.executable, __file__, "one", op, str(CORES)],
-            capture_output=True, text=True, timeout=1800,
-        )
-        lines = [l for l in out.stdout.strip().splitlines() if l.startswith("{")]
-        if not lines:
-            raise RuntimeError(f"{op}: {out.stderr[-600:]}")
-        r = json.loads(lines[-1])
+        r = run_child([sys.executable, __file__, "one", op, str(CORES)])
         results[op] = r
         print(f"{op}: {r['sec']} s, {r['rows_out']} rows out", file=sys.stderr)
 
@@ -218,14 +214,14 @@ def main() -> None:
         "sessionization including the end-of-stream state-store flush "
         "and the 764k-row memory-sink collect."
     )
-    with open("/root/repo/STREAMING_BENCH.json", "w") as f:
+    with open(ROOT / "STREAMING_BENCH.json", "w") as f:
         json.dump(summary, f, indent=2)
     print(json.dumps(summary))
 
 
 def scaling() -> None:
-    """8-vs-32-core scaling evidence for the streaming family — the same
-    protocol as scripts/bench_scaling*.py (fresh JVM per run, interleaved
+    """N-vs-4N scaling evidence for the streaming family through the shared
+    protocol of scripts/scaling.py (fresh JVM per run, interleaved
     big/small ordering, cooldowns, best-of-R, same-window pure-JVM
     calibration kernel as the host ceiling). Ops measured: gate_noop (the
     executor-side gate — the memory-sink gate's 1.2M-row driver collect
@@ -233,65 +229,39 @@ def scaling() -> None:
     operator), window, and sessions (whose 764k-row collect tail is kept:
     it deflates the measured ratio, which is the conservative direction).
     """
-    sys.path.insert(0, "/root/repo/scripts")
-    from bench_scaling import (
-        COOLDOWN_S,
-        CORES_BIG,
-        CORES_SMALL,
-        KERNEL,
-        KERNEL_ROWS,
-        RUNS,
-        run_json,
-    )
+    from scaling import child_argv, core_pair, efficiency, measure
 
     ensure_fixture()
-    kernel_path = "/tmp/scaling_kernel.py"
-    with open(kernel_path, "w") as f:
-        f.write(KERNEL)
-
+    pair = small, big = core_pair(len(os.sched_getaffinity(0)))
     ops = ("gate_noop", "window", "sessions")
-    best: dict[tuple[str, int], float] = {}
-    for r in range(RUNS):
-        order = (CORES_BIG, CORES_SMALL) if r % 2 == 0 else (CORES_SMALL, CORES_BIG)
-        for cores in order:
-            k = run_json([sys.executable, kernel_path, str(cores), str(KERNEL_ROWS)])
-            best[("kernel", cores)] = min(best.get(("kernel", cores), 1e9), k["sec"])
-            time.sleep(COOLDOWN_S)
-            for op in ops:
-                d = run_json(
-                    [sys.executable, __file__, "one", op, str(cores)],
-                    timeout=1800,
-                )
-                best[(op, cores)] = min(best.get((op, cores), 1e9), d["sec"])
-                print(f"run {r} cores {cores}: {op} {d['sec']}s", file=sys.stderr)
-            time.sleep(COOLDOWN_S)
+    jobs = {"kernel": child_argv("kernel")}
+    for op in ops:
+        jobs[op] = lambda cores, op=op: [sys.executable, __file__, "one", op, str(cores)]
+    best = measure(jobs, pair)
 
-    factor = CORES_BIG / CORES_SMALL
-    ceiling = best[("kernel", CORES_SMALL)] / best[("kernel", CORES_BIG)] / factor
+    ceiling = efficiency(best, "kernel", pair)
     summary = {
-        "metric": f"streaming_scaling_efficiency_{CORES_SMALL}_to_{CORES_BIG}",
+        "metric": f"streaming_scaling_efficiency_{small}_to_{big}",
         "unit": "ratio",
         "host_ceiling_efficiency": round(ceiling, 3),
-        "kernel_sec_small": best[("kernel", CORES_SMALL)],
-        "kernel_sec_big": best[("kernel", CORES_BIG)],
+        "kernel_sec_small": best["kernel"][small]["sec"],
+        "kernel_sec_big": best["kernel"][big]["sec"],
         "replicate": REPLICATE,
     }
     for op in ops:
-        raw = best[(op, CORES_SMALL)] / best[(op, CORES_BIG)] / factor
-        summary[f"{op}_sec_small"] = best[(op, CORES_SMALL)]
-        summary[f"{op}_sec_big"] = best[(op, CORES_BIG)]
+        raw = efficiency(best, op, pair)
+        for side, cores in (("small", small), ("big", big)):
+            summary[f"{op}_sec_{side}"] = best[op][cores]["sec"]
         summary[f"{op}_raw_efficiency"] = round(raw, 3)
         summary[f"{op}_normalized_efficiency"] = round(raw / ceiling, 3)
-        summary[f"{op}_rows_per_sec_small"] = round(
-            ROWS_IN[op] / best[(op, CORES_SMALL)], 1
-        )
-        summary[f"{op}_rows_per_sec_big"] = round(
-            ROWS_IN[op] / best[(op, CORES_BIG)], 1
-        )
+        for side, cores in (("small", small), ("big", big)):
+            summary[f"{op}_rows_per_sec_{side}"] = round(
+                ROWS_IN[op] / best[op][cores]["sec"], 1
+            )
     summary["value"] = summary["gate_noop_normalized_efficiency"]
     summary["note"] = (
-        "eighth-workload scaling evidence: the streaming family at "
-        "local[8] vs local[32] on the 8x-replicated fixtures "
+        "streaming-family scaling evidence at "
+        f"local[{small}] vs local[{big}] on the 8x-replicated fixtures "
         "(availableNow drain, fresh JVM per run, interleaved best-of-R, "
         "same-window pure-JVM kernel as the host ceiling). gate_noop is "
         "the executor-side stateless gate (noop sink); window is the "
@@ -300,7 +270,7 @@ def scaling() -> None:
         "764k-row memory-sink collect tail is deliberately kept (it "
         "deflates the ratio — conservative)."
     )
-    with open("/root/repo/BENCH_SCALING_STREAMING.json", "w") as f:
+    with open(ROOT / "BENCH_SCALING_STREAMING.json", "w") as f:
         json.dump(summary, f, indent=2)
     print(json.dumps(summary))
 
