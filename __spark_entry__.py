@@ -1279,17 +1279,6 @@ def q_host_cap(spark, sf_dir):
     return per_host_cap(_crawl(spark, sf_dir).select("url").distinct(), k=100)
 
 
-def q_host_cap_bucketed(spark, sf_dir):
-    """Mega-host-safe exact selection variant of the per-host cap
-    (md5-prefix bucketing, only the candidate buckets ranked) — must be
-    output-identical to the window form, so it shares its oracle."""
-    from socialmapper_spark.operators.web import per_host_cap
-
-    return per_host_cap(
-        _crawl(spark, sf_dir).select("url").distinct(), k=100, strategy="bucketed"
-    )
-
-
 def q_unigram_familiarity(spark, sf_dir):
     """Corpus-unigram LM quality score (extension surface — the CCNet-style
     perplexity-filter tier kept in exactly-rounded arithmetic so the
@@ -1314,16 +1303,6 @@ def q_bigram_familiarity(spark, sf_dir):
     from socialmapper_spark.operators.lm import unigram_familiarity
 
     return unigram_familiarity(_read(spark, sf_dir, "documents"), n=2)
-
-
-def q_unigram_familiarity_salted(spark, sf_dir):
-    """The skew-safe (salted dictionary join) form of the LM scorer —
-    output-identical by construction, so it shares unigram_familiarity's
-    oracle and salt-invariance is driver-checkable (the
-    salted_cell_counts precedent)."""
-    from socialmapper_spark.operators.lm import unigram_familiarity
-
-    return unigram_familiarity(_read(spark, sf_dir, "documents"), skew_safe=True)
 
 
 def q_decontaminate(spark, sf_dir):
@@ -1654,9 +1633,9 @@ def q_asof_join(spark, sf_dir):
     single batch snapshot with no temporal axis): every event picks the
     most recent purchase-snapshot for its user (``snap_ts <= ts``,
     inclusive, standard ASOF semantics — the DuckDB oracle runs a native
-    ``ASOF LEFT JOIN``). Scale path: snapshot-array dimension + a
-    higher-order-function probe, so per-key cost is bounded by snapshot
-    cadence, never left-side cardinality (operators/temporal.py docstring).
+    ``ASOF LEFT JOIN``). Default compact strategy: snapshot-array
+    dimension + a higher-order-function probe, O(snapshots per key) per
+    left row (operators/temporal.py docstring has the measured regimes).
 
     Timestamps are projected as unix micros: both engines read the same
     parquet int64, so the cross-engine hash is exact."""
@@ -1664,9 +1643,9 @@ def q_asof_join(spark, sf_dir):
 
 
 def q_asof_join_union(spark, sf_dir):
-    """The as-of join's ``strategy="union"`` fallback (union-then-window —
-    the classic formulation, kept for payloads too wide to array-pack) on
-    the same inputs and projection as ``asof_join``; shares that entry's
+    """The as-of join's ``strategy="union"`` form (union-then-window, the
+    faster one on keys with many snapshots and many left rows) on the
+    same inputs and projection as ``asof_join``; shares that entry's
     DuckDB ``ASOF LEFT JOIN`` oracle, so strategy equivalence is
     driver-checkable (the dedup_groups/dedup_groups_star precedent)."""
     return asof_join_frame(_read(spark, sf_dir, "events"), strategy="union")
@@ -1827,7 +1806,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "cms_host_snapshots": q_cms_host_snapshots,
         # r5-new LM quality scorer (rotation rule 3: no driver row yet)
         "unigram_familiarity": q_unigram_familiarity,
-        "unigram_familiarity_salted": q_unigram_familiarity_salted,
         "bigram_familiarity": q_bigram_familiarity,
         # r5-changed plans (rotation rule 2): exact-integer raster decode,
         # chunked-lineage module, CC convergence contracts, curation refactor
@@ -1848,7 +1826,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "admission_gate_stream": q_admission_gate_stream,
         "winnow_pairs": q_winnow_pairs,
         "crawl_enrich_stream": q_crawl_enrich_stream,
-        "host_cap_bucketed": q_host_cap_bucketed,
         "tag_filter": q_tag_filter,
         "speed_clamp": q_speed_clamp,
         "geometry_quarantine": q_geometry_quarantine,
@@ -2518,25 +2495,7 @@ def oracle_sql() -> dict[str, str]:
             )
             select url, host, host_rank from r where host_rank <= 100
         """,
-        "host_cap_bucketed": f"""
-            -- identical to host_cap: the bucketed strategy is an exact
-            -- distributed-selection rewrite with the same output contract
-            with u as (
-                select distinct url from read_parquet('{g}/crawl_pages.parquet')
-            ),
-            r as (
-                select url,
-                       regexp_extract(url, '://(?:[^/@?#]*@)?([^/:?#]+)', 1) as host,
-                       row_number() over (
-                         partition by regexp_extract(url, '://(?:[^/@?#]*@)?([^/:?#]+)', 1)
-                         order by md5(url), url) as host_rank
-                from u
-            )
-            select url, host, host_rank from r where host_rank <= 100
-        """,
         "unigram_familiarity": unigram_familiarity_sql(),
-        # salt-invariance: the skew-safe form shares the oracle
-        "unigram_familiarity_salted": unigram_familiarity_sql(),
         "bigram_familiarity": unigram_familiarity_sql(n=2),
         "decontaminate": f"""
             with bg as (

@@ -95,17 +95,12 @@ WHITELIST: dict[str, tuple[set[str], str]] = {
     "unigram_familiarity": ({"BroadcastNestedLoopJoin"},
                             "one-row corpus-total frame broadcast-crossed "
                             "(operators/lm.py)"),
-    "unigram_familiarity_salted": ({"BroadcastNestedLoopJoin"},
-                                   "one-row corpus-total frame "
-                                   "broadcast-crossed (operators/lm.py)"),
     "bigram_familiarity": ({"BroadcastNestedLoopJoin"},
                            "one-row corpus-total frame broadcast-crossed "
                            "(operators/lm.py)"),
     "corpus_curation_lm": ({"BroadcastNestedLoopJoin"},
                            "one-row corpus-total frame broadcast-crossed "
                            "on the LM branch (operators/lm.py)"),
-    "raster_tiles": ({"FlatMapGroupsInPandas"},
-                     "per-tile ndarray materialization (applyInPandas)"),
     # composites built on page_assignments / knn_join inherit the polygon
     # prep mapInPandas (polygon-table-sized) and the Albers/parity nodes
     "dedup_units": ({"ArrowEvalPython", "MapInPandas",

@@ -12,11 +12,12 @@ Usage: python scripts/check_correctness.py [query ...]
 from __future__ import annotations
 
 import math
+import pathlib
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = [

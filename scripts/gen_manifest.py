@@ -7,24 +7,23 @@ Run after the end-of-round local replica: python scripts/gen_manifest.py
 
 from __future__ import annotations
 
-import glob
 import json
+import pathlib
 import re
-import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = pathlib.Path(__file__).resolve().parents[1]
 
 GATE_SLOTS = 50  # the driver's correctness gate samples the first 50 entries
 
 
 def registry_names() -> list[str]:
-    src = open("/root/repo/__spark_entry__.py").read()
+    src = (ROOT / "__spark_entry__.py").read_text()
     m = re.search(r"def queries\(\).*?return \{(.*?)\n    \}", src, re.S)
     return re.findall(r"\"([a-z0-9_]+)\":\s*q_", m.group(1))
 
 
 def oracle_names() -> set[str]:
-    src = open("/root/repo/__spark_entry__.py").read()
+    src = (ROOT / "__spark_entry__.py").read_text()
     m = re.search(r"def oracle_sql\(\).*", src, re.S)
     names = set(re.findall(r'^        "([a-z0-9_]+)":', m.group(0), re.M))
     # composed entries are assigned after the literal dict:
@@ -35,8 +34,8 @@ def oracle_names() -> set[str]:
 
 def green_history() -> dict[str, list[int]]:
     hist: dict[str, list[int]] = {}
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
-        rnd = int(re.search(r"r(\d+)", path).group(1))
+    for path in sorted(ROOT.glob("CORRECTNESS_r*.json")):
+        rnd = int(re.search(r"r(\d+)", path.name).group(1))
         d = json.load(open(path))
         for k, v in d.items():
             ok = (
@@ -74,8 +73,7 @@ def main() -> None:
         greens = ",".join(f"r{r}" for r in hist.get(n, [])) or "—"
         lines.append(f"| {i} | {n} | {gate} | {okind} | {greens} |")
     out = "\n".join(lines) + "\n"
-    with open("/root/repo/CORRECTNESS_MANIFEST.md", "w") as f:
-        f.write(out)
+    (ROOT / "CORRECTNESS_MANIFEST.md").write_text(out)
     n_green = sum(1 for n in names if hist.get(n))
     print(f"wrote CORRECTNESS_MANIFEST.md: {len(names)} entries, "
           f"{n_green} with >=1 driver-green round, "

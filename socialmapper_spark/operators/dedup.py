@@ -411,8 +411,12 @@ def dedup_groups(
     large-star/small-star (Kiveris et al., "Connected Components in
     MapReduce and Beyond") converges in O(log n) rounds on a path graph
     where hash-min needs diameter rounds — same join/agg shapes per
-    round, identical output. If ``docs`` is given, docs absent from any
-    pair come out as singleton groups (their own canonical).
+    round, identical output once converged. Measured (10 alternating
+    pairs, local[4]): hash-min 1.32 s vs star 2.32 s median on the sf0.1
+    near-dup pairs; on a 3001-node path hash-min stops at
+    ``max_iter=25`` with 2976 groups while star converges to one in
+    8.2 s. If ``docs`` is given, docs absent from any pair come out as
+    singleton groups (their own canonical).
     """
     if method not in ("hashmin", "star"):
         raise ValueError(f"method must be 'hashmin' or 'star', got {method!r}")

@@ -33,11 +33,14 @@ Scale design (100 TB):
   is persisted so the corpus is scanned and exploded ONCE, not three
   times (handle surfaced for ``session.release_caches``);
 - the term dictionary is built with a second combinable aggregate and
-  joined on the token key; at web scale the dictionary (100M+ terms)
-  exceeds broadcast, and the honest plan is a shuffled hash join whose
-  hot keys (stopwords appear in every document) are exactly the AQE
-  skew-split case the skew drill (SKEW_DRILL.json) measures — AQE is
-  on repo-wide (session.py);
+  joined on the token key. At sf0.1 (and whenever it fits under the
+  broadcast threshold) the join plans as a BroadcastHashJoin, so
+  stopword skew never reaches a shuffle. A dictionary too big to
+  broadcast (100M+ terms at web scale) plans as a shuffled join, and its
+  hot stopword keys are AQE's skew-split case (AQE is on repo-wide,
+  session.py; the skew drill, SKEW_DRILL.json, measures it). The join
+  is not salted: on the sf0.1 documents salting lost 9 of 10
+  alternating pairs for unigrams and 26 of 40 for bigrams;
 - the corpus total is a ONE-ROW aggregate attached via
   broadcast(cross-join), the whitelisted one-row-frame pattern
   (operators/stats.py precedent); nothing else touches the driver.
@@ -52,8 +55,6 @@ def unigram_familiarity(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    skew_safe: bool = False,
-    n_salts: int = 16,
     n: int = 1,
 ) -> DataFrame:
     """Per-document unigram-LM familiarity score →
@@ -66,17 +67,6 @@ def unigram_familiarity(
     tokenize to one empty-string token (Spark ``split`` and DuckDB
     ``string_split`` agree), which simply participates as a term —
     filter upstream if that token should not score.
-
-    ``skew_safe=True`` swaps the dictionary join for
-    ``operators.skew.salted_join`` — stopwords appear in essentially
-    every document, so under a plain shuffled join each stopword's
-    probe rows land on ONE reducer; salting by the doc id spreads a hot
-    token across ``n_salts`` reducers with identical row multiplicity,
-    so the output (and the oracle hash) is unchanged. Registered as its
-    own driver-gated entry against the SAME oracle (the
-    salted_cell_counts salt-invariance precedent). AQE's skew-split
-    handles moderate skew without it; the salted path is the explicit
-    100-TB hedge for the pathological dictionary.
 
     ``n > 1`` scores over word n-grams instead of unigrams (the next
     rung of the CCNet ladder: bigram familiarity catches word-salad
@@ -103,14 +93,8 @@ def unigram_familiarity(
     doc_tok = toks.groupBy(id_col, "tok").agg(F.count("*").alias("k")).persist()
     tf = doc_tok.groupBy("tok").agg(F.sum("k").alias("tf"))
     total = tf.agg(F.sum("tf").alias("corpus_total"))
-    if skew_safe:
-        from socialmapper_spark.operators.skew import salted_join
-
-        joined = salted_join(doc_tok, tf, key="tok", salt_src=id_col, n_salts=n_salts)
-    else:
-        joined = doc_tok.join(tf, "tok")
     per_doc = (
-        joined
+        doc_tok.join(tf, "tok")
         .groupBy(id_col)
         .agg(
             F.sum("k").alias("n_tokens"),

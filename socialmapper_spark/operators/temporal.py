@@ -27,14 +27,21 @@ shuffle of the left side on the key at most, and none when the dim
 broadcasts), then resolves the match per row with
 ``try_element_at(filter(snaps, s -> s.ts <= left_ts), -1)`` (the array
 is ts-sorted, so the last qualifying element is the pick) — JVM
-higher-order functions inside whole-stage codegen. Per-key state is bounded by the
-snapshot cadence (one per host-day ≈ 365/key/year), NOT by the left
-cardinality, so a mega-host costs the same as a cold one — the classic
-union-then-window as-of (also provided, as ``strategy="union"``, and
-cross-checked in tests) degrades to a single-task window on a hot key;
-the compact strategy is the 100-TB-safe default. Ties (two snapshots
-with equal ts on one key) resolve to the lexicographically greatest
-payload via struct comparison — deterministic at any parallelism.
+higher-order functions inside whole-stage codegen. Each left row scans
+its key's snapshot array, so compact costs O(snapshots per key) per left
+row: cheap at snapshot cadence (one per host-day ≈ 365/key/year), and
+the default — it won 10 of 10 alternating pairs against union on the
+sf0.1 events (0.83 s vs 0.96 s median, local[4]). On a key with many
+snapshots *and* many left rows that scan turns quadratic: one key with
+20k left rows × 20k snapshots takes 10.3 s compact vs 0.51 s union
+(union won 10 of 10). ``strategy="union"``, the classic union-then-window
+as-of, sorts the key's left and right rows together instead, so it is
+O((L + R) log(L + R)) per key (one task per key) and is the choice for
+dense snapshot histories. Both strategies give identical output
+(cross-checked in tests, and both registered against one oracle). Ties
+(two snapshots with equal ts on one key) resolve to the
+lexicographically greatest payload via struct comparison —
+deterministic at any parallelism.
 
 ``interval_join`` replicates each interval into the fixed-width time
 buckets it covers (``sequence`` + ``explode`` — a narrow fan-out of the
@@ -70,12 +77,11 @@ def asof_join(
     (inclusive, DuckDB ``ASOF LEFT JOIN ... ON l.ts >= r.ts`` semantics);
     payload columns are NULL when no snapshot precedes the row.
 
-    ``strategy="compact"`` (default, scale path): snapshot-array
-    dimension + higher-order-function probe — see module docstring.
-    ``strategy="union"``: the classic tag-union-window spelling; exact
-    same output (cross-checked in tests), but the per-key window sorts
-    left+right rows together, so a hot key serializes — kept as the
-    parity/verification twin, not the production path.
+    ``strategy="compact"`` (default): snapshot-array dimension +
+    higher-order-function probe, O(snapshots per key) per left row.
+    ``strategy="union"``: the classic tag-union-window spelling, one
+    per-key sort of left + right rows; same output, and faster on keys
+    with many snapshots and many left rows (module docstring).
     """
     keys = [on] if isinstance(on, str) else list(on)
     payload = [c for c in right.columns if c not in keys and c != right_ts]

@@ -90,3 +90,17 @@ def test_pagerank_float_rank_is_single_division(spark):
     df = spark.createDataFrame(EDGES, "src string, dst string, w int")
     for r in pagerank(df, weight_col="w").collect():
         assert r["rank"] == r["rank_fp"] / PAGERANK_SCALE
+
+
+def test_pagerank_int64_overflow_raises(spark):
+    """A scale × weight product past int64 must fail loudly, never wrap
+    into a plausible rank: the per-edge contribution is long arithmetic,
+    and the session runs with ANSI mode on, so the overflow raises
+    ARITHMETIC_OVERFLOW."""
+    import pytest
+
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    scale, w = 10**12, 10**9  # damped rank × w ≈ 8.5e20 > 2**63
+    df = spark.createDataFrame([("a", "b", w), ("b", "a", 1)], "src string, dst string, w long")
+    with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
+        pagerank(df, weight_col="w", scale=scale, iterations=1).collect()

@@ -54,12 +54,6 @@ def test_plan_no_python_and_broadcast_total(corpus):
     assert "CartesianProduct" not in plan  # the one-row total is broadcast
 
 
-def test_skew_safe_path_is_output_identical(corpus):
-    plain = sorted(unigram_familiarity(corpus).collect())
-    salted = sorted(unigram_familiarity(corpus, skew_safe=True).collect())
-    assert plain == salted
-
-
 def test_bigram_familiarity(spark):
     # corpus bigrams: "a b" tf=2, "b c" tf=1, "b d" tf=1 -> total=4
     docs = spark.createDataFrame(

@@ -373,51 +373,35 @@ def test_host_top_terms_explodes_corpus_once(spark):
         release_caches(out)
 
 
-# --- per-host cap: bucketed exact selection ---------------------------------------
+# --- per-host cap: window selection ----------------------------------------------
 
-def test_host_cap_bucketed_equals_window(spark):
-    """The bucketed distributed-selection strategy must be output-
-    identical to the window form — including boundary cases (host with
-    exactly k urls, host below k, ties broken by (md5, url))."""
+def test_host_cap_keeps_first_k_in_md5_order(spark):
+    """A host with more than k urls keeps exactly k, one with exactly k
+    and one with fewer keep all of theirs; kept urls and their ranks
+    follow the (md5(url), url) order, checked against hashlib."""
+    import hashlib
+
     from socialmapper_spark.operators.web import per_host_cap
 
-    urls = (
-        [(f"https://big.example.org/p{i}",) for i in range(40)]
-        + [(f"https://exact.example.org/p{i}",) for i in range(5)]
-        + [(f"https://small.example.org/p{i}",) for i in range(2)]
-    )
-    pages = spark.createDataFrame(urls, "url string")
-    a = sorted(map(tuple, per_host_cap(pages, k=5).collect()))
-    b = sorted(map(tuple, per_host_cap(pages, k=5, strategy="bucketed").collect()))
-    assert a == b
-    hosts = [r[1] for r in b]
-    assert hosts.count("big.example.org") == 5
-    assert hosts.count("exact.example.org") == 5
-    assert hosts.count("small.example.org") == 2
-
-
-def test_host_cap_bucketed_shuffles_on_bucket_key(spark):
-    """The corpus-scale exchange must key on (host, bucket) — the skew
-    split — and the candidate-rank window must only see candidate rows,
-    never the host's full url set."""
-    from socialmapper_spark.operators.web import per_host_cap
-
+    k = 5
+    sizes = {"big.example.org": 40, "exact.example.org": k, "small.example.org": 2}
+    urls = {h: [f"https://{h}/p{i}" for i in range(n)] for h, n in sizes.items()}
     pages = spark.createDataFrame(
-        [(f"https://h{i % 2}.org/p{i}",) for i in range(200)], "url string"
+        [(u,) for us in urls.values() for u in us], "url string"
     )
-    out = per_host_cap(pages, k=3, strategy="bucketed")
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "hashpartitioning(host" in plan and "__b" in plan
-    rows = sorted(map(tuple, out.collect()))
-    assert rows == sorted(map(tuple, per_host_cap(pages, k=3).collect()))
+    got = sorted(map(tuple, per_host_cap(pages, k=k).collect()))
 
+    def order(u):
+        return hashlib.md5(u.encode()).hexdigest(), u
 
-def test_host_cap_rejects_unknown_strategy(spark):
-    from socialmapper_spark.operators.web import per_host_cap
-
-    pages = spark.createDataFrame([("https://a.org/x",)], "url string")
-    with pytest.raises(ValueError, match="window"):
-        per_host_cap(pages, strategy="bogus")
+    exp = sorted(
+        (u, h, rank)
+        for h, us in urls.items()
+        for rank, u in enumerate(sorted(us, key=order)[:k], 1)
+    )
+    assert got == exp
+    hosts = [r[1] for r in got]
+    assert [hosts.count(h) for h in sizes] == [k, k, 2]
 
 
 # --- corpus curation composition ----------------------------------------------------
