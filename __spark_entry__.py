@@ -490,8 +490,9 @@ def q_event_windows_stream(spark, sf_dir):
     """Structured Streaming twin of event_windows (watermark + window,
     availableNow drain) — must produce identical rows to the batch plan."""
     from socialmapper_spark.operators.events import window_rollup_stream
+    from socialmapper_spark.streaming import parquet_stream
 
-    return window_rollup_stream(spark, sf_dir, "events.parquet")
+    return window_rollup_stream(parquet_stream(spark, sf_dir, "events.parquet"))
 
 
 def q_event_sessions(spark, sf_dir):
@@ -505,8 +506,11 @@ def q_event_sessions_stream(spark, sf_dir):
     """Custom stateful streaming operator (applyInPandasWithState):
     per-user streaming sessionization — must equal the batch plan."""
     from socialmapper_spark.operators.events import sessionize_stream
+    from socialmapper_spark.streaming import parquet_stream
 
-    return sessionize_stream(spark, sf_dir, gap_minutes=30)
+    return sessionize_stream(
+        parquet_stream(spark, sf_dir, "events.parquet"), gap_minutes=30
+    )
 
 
 def q_event_props(spark, sf_dir):
@@ -919,7 +923,7 @@ def q_embedding_quantize(spark, sf_dir):
 
 def q_dedup_groups(spark, sf_dir):
     """Near-dup GROUPS: minhash candidates → jaccard verify → iterative
-    hash-min connected components → (doc_id, group_id, is_canonical)."""
+    connected components → (doc_id, group_id, is_canonical)."""
     from socialmapper_spark.operators.dedup import (
         dedup_groups,
         jaccard_verify,
@@ -930,22 +934,6 @@ def q_dedup_groups(spark, sf_dir):
     pairs = near_dup_pairs_minhash(docs)
     verified = jaccard_verify(docs, pairs, threshold=0.3).select("doc_a", "doc_b")
     return dedup_groups(verified, docs=docs)
-
-
-def q_dedup_groups_star(spark, sf_dir):
-    """Connected components via alternating large-star/small-star
-    (O(log n)-round variant for long-chain graphs) — must equal the
-    hash-min result exactly, so it shares dedup_groups' golden oracle."""
-    from socialmapper_spark.operators.dedup import (
-        dedup_groups,
-        jaccard_verify,
-        near_dup_pairs_minhash,
-    )
-
-    docs = _read(spark, sf_dir, "documents")
-    pairs = near_dup_pairs_minhash(docs)
-    verified = jaccard_verify(docs, pairs, threshold=0.3).select("doc_a", "doc_b")
-    return dedup_groups(verified, docs=docs, method="star")
 
 
 def q_binary_metadata(spark, sf_dir):
@@ -1176,6 +1164,14 @@ def _crawl(spark, sf_dir):
     return spark.read.parquet(str(d / "crawl_pages.parquet"))
 
 
+def _crawl_stream(spark, sf_dir):
+    from socialmapper_spark.fixtures import ensure_crawl_fixture
+    from socialmapper_spark.streaming import parquet_stream
+
+    d = ensure_crawl_fixture(sf_dir)
+    return parquet_stream(spark, str(d), "crawl_pages.parquet")
+
+
 def q_snapshot_dedup(spark, sf_dir):
     """Latest-crawl-wins dedup over the multi-snapshot crawl table
     (struct-max groupBy — map-side partial agg, no window sort)."""
@@ -1201,10 +1197,9 @@ def q_host_daily(spark, sf_dir):
 def q_host_daily_stream(spark, sf_dir):
     """Structured Streaming twin of host_daily (watermark + tumbling
     window, availableNow drain) — identical rows to the batch plan."""
-    from socialmapper_spark.fixtures import ensure_crawl_fixture
     from socialmapper_spark.operators.web import host_daily_stream
 
-    return host_daily_stream(spark, str(ensure_crawl_fixture(sf_dir)))
+    return host_daily_stream(_crawl_stream(spark, sf_dir))
 
 
 def q_html_extract(spark, sf_dir):
@@ -1429,16 +1424,16 @@ def q_cms_host_snapshots(spark, sf_dir):
 def q_admission_gate_stream(spark, sf_dir):
     """Streaming twin of the admission gate (stateless append mode) —
     row-equal to batch, checked against the SAME SQL oracle."""
-    from socialmapper_spark.fixtures import ensure_crawl_fixture
-    from socialmapper_spark.operators.web import admission_gate_stream
+    from socialmapper_spark.operators.web import admission_gate
+    from socialmapper_spark.streaming import drain
 
-    return admission_gate_stream(
-        spark,
-        str(ensure_crawl_fixture(sf_dir)),
+    gated = admission_gate(
+        _crawl_stream(spark, sf_dir),
         min_chars=122,
         min_words=23,
         max_digit_ratio=0.05,
     )
+    return drain(gated, "append")
 
 
 def q_host_top_terms(spark, sf_dir):
@@ -1603,12 +1598,11 @@ def q_crawl_enrich_stream(spark, sf_dir):
     """Stream-static dimension join: streaming crawl pages enriched with
     the batch-computed per-host rollup (broadcast static side, stateless
     append) — must be row-equal to the equivalent batch join."""
-    from socialmapper_spark.fixtures import ensure_crawl_fixture
-    from socialmapper_spark.operators.web import crawl_enrich_stream, host_stats
+    from socialmapper_spark.operators.web import crawl_enrich, host_stats
+    from socialmapper_spark.streaming import drain
 
-    crawl_dir = str(ensure_crawl_fixture(sf_dir))
-    dim = host_stats(spark.read.parquet(f"{crawl_dir}/crawl_pages.parquet"))
-    return crawl_enrich_stream(spark, crawl_dir, dim)
+    dim = host_stats(_crawl(spark, sf_dir))
+    return drain(crawl_enrich(_crawl_stream(spark, sf_dir), dim), "append")
 
 
 def q_snapshot_dedup_stream(spark, sf_dir):
@@ -1621,11 +1615,9 @@ def q_snapshot_dedup_stream(spark, sf_dir):
     projects exactly that set so a SQL oracle (distinct url) can
     hash-check it; the per-row payload invariants stay pytest-pinned
     (tests assert every emitted row exists in the input)."""
-    from socialmapper_spark.fixtures import ensure_crawl_fixture
     from socialmapper_spark.operators.web import snapshot_dedup_stream
 
-    out = snapshot_dedup_stream(spark, str(ensure_crawl_fixture(sf_dir)))
-    return out.select("url")
+    return snapshot_dedup_stream(_crawl_stream(spark, sf_dir)).select("url")
 
 
 def q_asof_join(spark, sf_dir):
@@ -1647,7 +1639,7 @@ def q_asof_join_union(spark, sf_dir):
     faster one on keys with many snapshots and many left rows) on the
     same inputs and projection as ``asof_join``; shares that entry's
     DuckDB ``ASOF LEFT JOIN`` oracle, so strategy equivalence is
-    driver-checkable (the dedup_groups/dedup_groups_star precedent)."""
+    driver-checkable."""
     return asof_join_frame(_read(spark, sf_dir, "events"), strategy="union")
 
 
@@ -1817,7 +1809,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "vectorize_hotspots": q_vectorize_hotspots,
         "lineage_stats": q_lineage_stats,
         "dedup_groups": q_dedup_groups,
-        "dedup_groups_star": q_dedup_groups_star,
         "corpus_curation": q_corpus_curation,
         "corpus_curation_lm": q_corpus_curation_lm,
         # entries with exactly one driver-green round (rotation rule 3)
@@ -2597,10 +2588,6 @@ def oracle_sql() -> dict[str, str]:
             from read_parquet('{tg}/golden_ivf_ann.parquet')
         """,
         "dedup_groups": f"""
-            select doc_id, group_id, is_canonical
-            from read_parquet('{tg}/golden_dedup_groups.parquet')
-        """,
-        "dedup_groups_star": f"""
             select doc_id, group_id, is_canonical
             from read_parquet('{tg}/golden_dedup_groups.parquet')
         """,

@@ -25,12 +25,14 @@ from __future__ import annotations
 
 import json
 import os
+import pathlib
 import shutil
 import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = pathlib.Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 N_BUCKETS = 32
@@ -124,7 +126,7 @@ def main() -> None:
             "verifies against the lineage rows."
         ),
     }
-    with open("/root/repo/RESUME_DRILL.json", "w") as f:
+    with open(ROOT / "RESUME_DRILL.json", "w") as f:
         json.dump(result, f, indent=2)
     print(json.dumps(result))
 

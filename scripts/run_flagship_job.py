@@ -17,19 +17,20 @@ resume-without-recompute. Zero per-row Python: the only Python on
 executors is the vectorized polygon-table geometry prep; the PIP refine
 is a Catalyst expression.
 
-Build the zip:  cd /root/repo && zip -r engine.zip socialmapper_spark
+Build the zip:  zip -r engine.zip socialmapper_spark   (from the repo root)
 Local smoke:    python scripts/run_flagship_job.py --sf /root/testdata/sf0.001 --out /tmp/flagship_job
 """
 
 from __future__ import annotations
 
 import argparse
+import pathlib
 import sys
 
 try:  # provided by `--py-files engine.zip` under spark-submit
     import socialmapper_spark  # noqa: F401
 except ImportError:  # bare `python scripts/run_flagship_job.py` local smoke
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
 from pyspark.sql import functions as F  # noqa: E402
 

@@ -35,11 +35,13 @@ Usage:
 from __future__ import annotations
 
 import json
+import pathlib
 import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = pathlib.Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 N_ROWS = 48_000_000
 FRAC_HOT = 0.5
@@ -158,7 +160,7 @@ def main() -> None:
             "best-of-2 after a warm run."
         ),
     }
-    with open("/root/repo/SKEW_DRILL.json", "w") as f:
+    with open(ROOT / "SKEW_DRILL.json", "w") as f:
         json.dump(summary, f, indent=2)
     print(json.dumps(summary))
 

@@ -3,7 +3,7 @@ has row-exact oracles (six registry entries) but previously no measured
 throughput; this drill times the three representative profiles at bench
 scale on replicated fixtures.
 
-  gate      — admission_gate_stream: stateless append-mode projection
+  gate      — admission_gate over a stream: stateless append-mode projection
               (the continuous-ingest quality gate) into the memory sink
               the registry uses — includes the driver collect of every
               output row, so it is a SINK-bound number at 1.2M rows out.
@@ -110,53 +110,37 @@ def one(op: str, cores: int) -> None:
         .getOrCreate()
     )
 
-    def run() -> int:
+    from socialmapper_spark.streaming import drain, parquet_stream
+
+    def source(table: str):
         # The replicated fixtures are directories of part files, so point
-        # the ops at the table directory with a part-file glob (the sf
-        # fixtures they normally read are single files named by the glob).
-        if op == "gate_noop":
+        # the source at the table directory with a part-file glob.
+        return parquet_stream(spark, f"{FIX_DIR}/{table}.parquet", "*.parquet")
+
+    def run() -> int:
+        if op in ("gate", "gate_noop"):
+            from socialmapper_spark.operators.web import admission_gate
+
+            gated = admission_gate(
+                source("crawl_pages"), min_chars=122, min_words=23,
+                max_digit_ratio=0.05,
+            )
+            if op == "gate":
+                return drain(gated, "append").count()
             # Intrinsic executor-side gate rate: same streaming scan and
             # gate projection, but into the noop sink so the driver-side
             # memory-sink collect (1.2M rows) is out of the measurement.
-            from socialmapper_spark.operators.web import admission_gate
-
-            path = f"{FIX_DIR}/crawl_pages.parquet"
-            schema = spark.read.parquet(path).schema
-            stream = (
-                spark.readStream.schema(schema)
-                .option("pathGlobFilter", "*.parquet")
-                .parquet(path)
-            )
-            gated = admission_gate(
-                stream, min_chars=122, min_words=23, max_digit_ratio=0.05
-            )
-            q = (
-                gated.writeStream.format("noop")
-                .trigger(availableNow=True)
-                .start()
-            )
+            q = gated.writeStream.format("noop").trigger(availableNow=True).start()
             q.awaitTermination()
             return 150_000 * REPLICATE  # gate emits every decision row
-        if op == "gate":
-            from socialmapper_spark.operators.web import admission_gate_stream
-
-            out = admission_gate_stream(
-                spark, f"{FIX_DIR}/crawl_pages.parquet", file_glob="*.parquet",
-                min_chars=122, min_words=23, max_digit_ratio=0.05,
-            )
-        elif op == "window":
+        if op == "window":
             from socialmapper_spark.operators.web import host_daily_stream
 
-            out = host_daily_stream(
-                spark, f"{FIX_DIR}/crawl_pages.parquet", file_glob="*.parquet"
-            )
+            out = host_daily_stream(source("crawl_pages"))
         elif op == "sessions":
             from socialmapper_spark.operators.events import sessionize_stream
 
-            out = sessionize_stream(
-                spark, f"{FIX_DIR}/events.parquet", file_glob="*.parquet",
-                gap_minutes=30,
-            )
+            out = sessionize_stream(source("events"), gap_minutes=30)
         else:
             raise ValueError(op)
         return out.count()

@@ -8,7 +8,7 @@ by an INDEPENDENT brute-force numpy implementation of the reference
 semantics — these parquet files are what `oracle_sql()` reads for the
 non-SQL-expressible spatial operators, and what the pytest suite pins.
 
-Layout: /root/repo/data/geo/<sfname>/{pages,polygons,pois,census_long,
+Layout: <repo>/data/geo/<sfname>/{pages,polygons,pois,census_long,
 golden_geoparsed,golden_assignments,golden_knn}.parquet
 
 Everything is a pure function of the scale name; a version marker file
@@ -32,7 +32,8 @@ from socialmapper_spark.geo.wkb import polygon_to_wkb, wkb_to_rings
 from socialmapper_spark.functions.scalar import KM_TO_MILES
 
 FIXTURE_VERSION = "v7"
-GEO_ROOT = pathlib.Path("/root/repo/data/geo")
+DATA_ROOT = pathlib.Path(__file__).resolve().parents[1] / "data"
+GEO_ROOT = DATA_ROOT / "geo"
 
 # bbox: synthetic NC-like grid (FIXTURES.md §2)
 LAT0, LAT1 = 35.0, 36.0
@@ -407,7 +408,7 @@ def _write_goldens(out, urls, texts, polys, pois):
 # similarity.py). Deterministic; used as oracles for non-SQL-expressible ops.
 # ---------------------------------------------------------------------------
 
-TEXT_ROOT = pathlib.Path("/root/repo/data/text")
+TEXT_ROOT = DATA_ROOT / "text"
 TEXT_GOLDEN_VERSION = "v6"
 COSINE_QUERY_IDS = [0, 1, 2, 3, 4]
 COSINE_K = 10

@@ -386,7 +386,6 @@ def dedup_groups(
     docs: DataFrame | None = None,
     id_col: str = "doc_id",
     max_iter: int = 25,
-    method: str = "hashmin",
 ) -> DataFrame:
     """Connected-component grouping of verified near-dup pairs →
     ``(doc_id, group_id, is_canonical)`` — the keep/drop decision table a
@@ -404,26 +403,23 @@ def dedup_groups(
     min aggregate, all keyed on doc_id — no driver state beyond the 1-row
     convergence count. Iterations = component diameter; near-dup
     components are tiny dense cliques (diameter ≤ 2-3 — band-sharing is
-    near-transitive), so the default hash-min loop converges in 2-4
-    rounds and is the simpler, equally-parallel choice for this
-    operator's contract. For general graphs with LONG CHAINS (diameter
-    ≫ rounds you can afford) pass ``method='star'``: alternating
-    large-star/small-star (Kiveris et al., "Connected Components in
-    MapReduce and Beyond") converges in O(log n) rounds on a path graph
-    where hash-min needs diameter rounds — same join/agg shapes per
-    round, identical output once converged. Measured (10 alternating
-    pairs, local[4]): hash-min 1.32 s vs star 2.32 s median on the sf0.1
-    near-dup pairs; on a 3001-node path hash-min stops at
-    ``max_iter=25`` with 2976 groups while star converges to one in
-    8.2 s. If ``docs`` is given, docs absent from any pair come out as
+    near-transitive), so hash-min converges in 2-4 rounds and runs first.
+    Graphs with LONG CHAINS (diameter > ``max_iter``) are caught by
+    observation: if hash-min is still changing after ``max_iter`` rounds
+    its labels are discarded and alternating large-star/small-star
+    (Kiveris et al., "Connected Components in MapReduce and Beyond")
+    runs on the same pairs — O(log n) rounds even on a path graph, same
+    join/agg shapes per round, identical output once converged, and a
+    RuntimeError if it too hits ``max_iter``. Measured (local[4]):
+    hash-min 1.32 s vs star 2.32 s median on the sf0.1 near-dup pairs,
+    so the common case never pays for star; on a 3001-node path the
+    fallback returns the one component in 17.5 s (hash-min alone stopped
+    at 2976 groups; star alone takes 7.5 s). If ``docs`` is given, docs absent from any pair come out as
     singleton groups (their own canonical).
     """
-    if method not in ("hashmin", "star"):
-        raise ValueError(f"method must be 'hashmin' or 'star', got {method!r}")
-    if method == "star":
+    labels, converged = _hashmin_labels(pairs, max_iter)
+    if not converged:
         labels = _star_labels(pairs, max_iter)
-    else:
-        labels = _hashmin_labels(pairs, max_iter)
     out = labels.select(
         F.col("node").alias(id_col),
         F.col("label").alias("group_id"),
@@ -445,8 +441,10 @@ def dedup_groups(
     return out
 
 
-def _hashmin_labels(pairs: DataFrame, max_iter: int) -> DataFrame:
-    """(node, label) fixed point of hash-to-min label propagation."""
+def _hashmin_labels(pairs: DataFrame, max_iter: int) -> tuple[DataFrame, bool]:
+    """((node, label), converged) after at most ``max_iter`` rounds of
+    hash-to-min label propagation. Unconverged labels keep one row per
+    node but may split a component into several labels."""
     sym = (
         pairs.select(F.col("doc_a").alias("node"), F.col("doc_b").alias("peer"))
         .unionByName(
@@ -466,6 +464,7 @@ def _hashmin_labels(pairs: DataFrame, max_iter: int) -> DataFrame:
         # ContextCleaner once the frame reference is released.
         .localCheckpoint(eager=True)
     )
+    converged = False
     for _ in range(max_iter):
         # alias-qualify both sides: labels descends from sym, so unqualified
         # column refs would be flagged as an ambiguous self-join
@@ -490,25 +489,10 @@ def _hashmin_labels(pairs: DataFrame, max_iter: int) -> DataFrame:
         changed = new.filter(F.col("__chg")).limit(1).count()
         labels = new.drop("__chg")
         if changed == 0:
+            converged = True
             break
-    else:
-        # convergence contract mirror of _star_labels: hash-min's
-        # max_iter exit is milder (one row per node is still guaranteed)
-        # but labels may not have propagated across full components —
-        # a single component can come out split into several group_ids.
-        # Warn rather than raise: hash-min needs diameter rounds, and a
-        # caller on a long-chain graph may accept partial merging.
-        import warnings
-
-        warnings.warn(
-            f"hash-min connected-components still changing after "
-            f"{max_iter} rounds; components may be split — raise "
-            f"max_iter or use method='star' (O(log n) rounds)",
-            RuntimeWarning,
-            stacklevel=2,
-        )
     sym.unpersist()
-    return labels
+    return labels, converged
 
 
 def _star_labels(pairs: DataFrame, max_iter: int) -> DataFrame:
@@ -590,7 +574,7 @@ def _star_labels(pairs: DataFrame, max_iter: int) -> DataFrame:
         )
     # fixed point: edges are stars (u → root); roots label themselves.
     # Nodes whose only pair rows were self-pairs (doc_a == doc_b) carry
-    # no star edge — union them back as their own label so the method
+    # no star edge — union them back as their own label so the result
     # matches hash-min (whose symmetrized edge set keeps them) row for
     # row on any input.
     labeled = edges.select(F.col("u").alias("node"), F.col("v").alias("label")).unionByName(

@@ -3,11 +3,14 @@
 The reference has no event-time processing (SURVEY.md §2.10 — its
 "streaming" is chunked file I/O, census/infrastructure/streaming.py), so
 this operator is part of the training-data-pipeline extension surface:
-tumbling-window rollups of an event stream, expressed once as a batch
-DataFrame plan and once as Structured Streaming with a watermark. Both
-produce identical rows on a finite input (tested), which is the Spark
-unification guarantee the engine leans on: the batch twin IS the oracle
-for the streaming path.
+tumbling-window rollups and per-user sessions of an event stream. Each is
+expressed once as a batch DataFrame plan and once as a stateful
+Structured Streaming plan over a frame from
+:func:`socialmapper_spark.streaming.parquet_stream`, drained by
+:func:`socialmapper_spark.streaming.drain`. Both produce identical rows on
+a finite input (tested, also across several micro-batches), which is the
+Spark unification guarantee the engine leans on: the batch twin IS the
+oracle for the streaming path.
 
 Scale notes: the batch plan is a single hash aggregate on
 (window, event_type) — partial aggregation map-side, shuffle carries one
@@ -18,12 +21,11 @@ length.
 
 from __future__ import annotations
 
-import uuid
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from socialmapper_spark.operators.census import dsum
+from socialmapper_spark.streaming import drain
 
 
 def window_rollup(events: DataFrame) -> DataFrame:
@@ -49,25 +51,17 @@ def window_rollup(events: DataFrame) -> DataFrame:
     )
 
 
-def window_rollup_stream(
-    spark: SparkSession, events_dir: str, file_glob: str = "events.parquet"
-) -> DataFrame:
-    """Structured Streaming twin of :func:`window_rollup`.
+def window_rollup_stream(stream: DataFrame) -> DataFrame:
+    """Structured Streaming twin of :func:`window_rollup` over a streaming
+    events frame.
 
-    Reads the same parquet through ``readStream`` with a 1-hour watermark
-    and a tumbling ``F.window``, drains it with an availableNow trigger
-    into a memory sink, and returns the finished result re-projected to
-    the batch schema. Complete output mode is used so the finite test
-    input yields every window (append mode would hold back windows newer
-    than the final watermark); a production deployment of this operator
-    runs append mode with the same watermark into a parquet/Iceberg sink.
+    A 1-hour watermark and a tumbling ``F.window``, drained to the end of
+    the input, with the finished result re-projected to the batch schema.
+    Complete output mode is used so the finite input yields every window
+    (append mode would hold back windows newer than the final watermark);
+    a production deployment of this operator runs append mode with the
+    same watermark into a parquet/Iceberg sink.
     """
-    schema = spark.read.option("pathGlobFilter", file_glob).parquet(events_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", file_glob)
-        .parquet(events_dir)
-    )
     # watermarks require TIMESTAMP (tz-aware); parquet NTZ → UTC instant.
     # The session timezone is UTC, so window starts match the batch
     # date_trunc on the NTZ column exactly. Streaming forbids
@@ -89,17 +83,8 @@ def window_rollup_stream(
             dsum("value").alias("total_value"),
         )
     )
-    sink = f"events_rollup_{uuid.uuid4().hex[:12]}"
-    q = (
-        per_user.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return (
-        spark.table(sink)
+        drain(per_user, "complete")
         .groupBy(
             F.date_format(F.col("win.start"), "yyyy-MM-dd HH:mm:ss").alias("hour"),
             "event_type",
@@ -112,15 +97,9 @@ def window_rollup_stream(
     )
 
 
-def sessionize_stream(
-    spark: SparkSession,
-    events_dir: str,
-    gap_minutes: int = 30,
-    file_glob: str = "events.parquet",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
+def sessionize_stream(stream: DataFrame, gap_minutes: int = 30) -> DataFrame:
     """Custom stateful streaming operator via ``applyInPandasWithState``
-    (build mandate): per-user streaming sessionization.
+    (build mandate): per-user sessionization of a streaming events frame.
 
     Each user's events are processed by a stateful grouped-map function
     keyed on user_id. The state store holds the user's OPEN session
@@ -198,29 +177,19 @@ def sessionize_stream(
             ],
         )
 
-    schema = spark.read.option("pathGlobFilter", file_glob).parquet(events_dir).schema
-    reader = spark.readStream.schema(schema).option("pathGlobFilter", file_glob)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(events_dir).select("user_id", "event_id", "ts", "value")
-    sessions = stream.groupBy("user_id").applyInPandasWithState(
-        proc, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    sessions = (
+        stream.select("user_id", "event_id", "ts", "value")
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            proc, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+        )
     )
-    sink = f"events_sessions_{uuid.uuid4().hex[:12]}"
     checkpoint = tempfile.mkdtemp(prefix="sessionize_ckpt_")
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    closed = drain(sessions, "append", checkpoint)
     # end-of-stream flush: open sessions live in the state store; read them
     # back with the State Data Source and finish them as closed sessions
     open_sessions = (
-        spark.read.format("statestore")
+        stream.sparkSession.read.format("statestore")
         .load(checkpoint)
         .select(
             F.col("key.user_id").alias("user_id"),
@@ -239,7 +208,7 @@ def sessionize_stream(
             ),
         )
     )
-    return spark.table(sink).unionByName(open_sessions)
+    return closed.unionByName(open_sessions)
 
 
 def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:

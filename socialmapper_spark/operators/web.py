@@ -1,7 +1,15 @@
 """Crawl-table operators over the input_hint page shape
 (url, warc_ts, html, text, lang): snapshot dedup, host rollups,
 html→text extraction, URL canonicalization, the composite admission
-gate, and the domain blocklist filter.
+gate, the domain blocklist filter, and the host-dimension enrichment.
+
+The stateless operators (``admission_gate``, ``crawl_enrich``) run
+unchanged on a batch frame or on a streaming one from
+:func:`socialmapper_spark.streaming.parquet_stream`; a caller drains the
+stream with :func:`socialmapper_spark.streaming.drain` in append mode.
+The two stateful ones have their own stream forms, which drain
+themselves: ``host_daily_stream`` (watermark + tumbling window) and
+``snapshot_dedup_stream`` (``dropDuplicatesWithinWatermark``).
 
 The reference has no crawl-table analog (its nearest dedup is the
 census-unit groupBy, reference socialmapper/census/utils.py); these are
@@ -21,10 +29,10 @@ Catalyst (no Python on executors).
 
 from __future__ import annotations
 
-import uuid
-
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from socialmapper_spark.streaming import drain
 
 # URI authority minus userinfo and port: the char class excludes the
 # '@' userinfo terminator, the ':' port separator, and path/query/frag
@@ -358,24 +366,16 @@ def host_daily(pages: DataFrame) -> DataFrame:
     )
 
 
-def host_daily_stream(
-    spark: SparkSession, crawl_dir: str, file_glob: str = "crawl_pages.parquet"
-) -> DataFrame:
-    """Structured Streaming twin of :func:`host_daily` — the continuous
-    ingest form (new WARC drops append to the crawl table; per-host daily
-    volume updates incrementally).
+def host_daily_stream(stream: DataFrame) -> DataFrame:
+    """Structured Streaming twin of :func:`host_daily` over a streaming
+    crawl frame — the continuous ingest form (new WARC drops append to the
+    crawl table; per-host daily volume updates incrementally).
 
-    1-day watermark + tumbling 1-day window, availableNow drain into a
-    memory sink, complete output mode (finite test input must yield every
-    window; production runs append mode with the same watermark into a
-    parquet/Iceberg sink). Must equal the batch plan row-for-row.
+    1-day watermark + tumbling 1-day window, drained in complete output
+    mode (a finite input must yield every window; production runs append
+    mode with the same watermark into a parquet/Iceberg sink). Must equal
+    the batch plan row-for-row, over one micro-batch or several.
     """
-    schema = spark.read.option("pathGlobFilter", file_glob).parquet(crawl_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", file_glob)
-        .parquet(crawl_dir)
-    )
     agg = (
         stream.withColumn("warc_ts", F.col("warc_ts").cast("timestamp"))
         .withWatermark("warc_ts", "1 day")
@@ -388,16 +388,7 @@ def host_daily_stream(
             F.sum((F.col("lang") == "en").cast("long")).alias("n_en"),
         )
     )
-    sink = f"host_daily_{uuid.uuid4().hex[:12]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink).select(
+    return drain(agg, "complete").select(
         F.date_format(F.col("win.start"), "yyyy-MM-dd").alias("day"),
         "host",
         "n_pages",
@@ -455,90 +446,30 @@ def host_top_terms(
     return out
 
 
-def admission_gate_stream(
-    spark: SparkSession,
-    crawl_dir: str,
-    file_glob: str = "crawl_pages.parquet",
-    **gate_kwargs,
-) -> DataFrame:
-    """Structured Streaming twin of :func:`admission_gate` — the gate as
-    a continuous ingest filter. Stateless (pure projection), so append
-    mode emits every decision exactly once with zero state store usage;
-    must equal the batch gate row-for-row (same oracle)."""
-    schema = spark.read.option("pathGlobFilter", file_glob).parquet(crawl_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", file_glob)
-        .parquet(crawl_dir)
-    )
-    gated = admission_gate(stream, **gate_kwargs)
-    sink = f"admission_gate_{uuid.uuid4().hex[:12]}"
-    q = (
-        gated.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+def crawl_enrich(pages: DataFrame, host_dim: DataFrame) -> DataFrame:
+    """Host-dimension join — the production pattern of enriching a live
+    crawl stream with a precomputed reference table: pages inner-join the
+    per-host rollup (:func:`host_stats` output or any host-keyed dim) on
+    host, emitting (host, url, warc_ts_us, dim columns...).
 
-
-def crawl_enrich_stream(
-    spark: SparkSession,
-    crawl_dir: str,
-    host_dim: DataFrame,
-    file_glob: str = "crawl_pages.parquet",
-) -> DataFrame:
-    """Stream-static dimension join — the production pattern of enriching
-    a live stream with a precomputed reference table: streaming crawl
-    pages inner-join the static per-host rollup (:func:`host_stats`
-    output or any host-keyed dim) on host.
-
-    Completes the engine's streaming operator family (windowed agg,
-    sessionization, watermarked dedup, stateless projection gate, and
-    now stream-static join). Stateless by construction: Spark plans a
-    stream-static inner equi-join with the static side broadcast per
-    micro-batch — no state store, no watermark needed, append mode emits
-    each page exactly once. Must be row-equal to the equivalent batch
-    join (same SQL oracle).
+    Runs on a batch or a streaming ``pages`` frame. On a stream Spark
+    plans a stream-static inner equi-join with the static side broadcast
+    per micro-batch — stateless, no watermark needed, append mode emits
+    each page exactly once.
     """
-    schema = spark.read.option("pathGlobFilter", file_glob).parquet(crawl_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", file_glob)
-        .parquet(crawl_dir)
-    )
-    enriched = (
-        stream.select(
-            "url",
-            F.unix_micros(F.col("warc_ts").cast("timestamp")).alias("warc_ts_us"),
-            page_host(F.col("url")).alias("host"),
-        )
-        .join(F.broadcast(host_dim), "host")
-    )
-    sink = f"crawl_enrich_{uuid.uuid4().hex[:12]}"
-    q = (
-        enriched.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+    return pages.select(
+        "url",
+        F.unix_micros(F.col("warc_ts").cast("timestamp")).alias("warc_ts_us"),
+        page_host(F.col("url")).alias("host"),
+    ).join(F.broadcast(host_dim), "host")
 
 
-def snapshot_dedup_stream(
-    spark: SparkSession,
-    crawl_dir: str,
-    file_glob: str = "crawl_pages.parquet",
-    watermark: str = "30 days",
-) -> DataFrame:
-    """Streaming ingestion-gate dedup: FIRST-seen-wins per url within the
-    watermark horizon (``dropDuplicatesWithinWatermark`` — per-url state
-    is evicted once event time passes the horizon, so state stays bounded
-    on an unbounded crawl stream).
+def snapshot_dedup_stream(stream: DataFrame, watermark: str = "30 days") -> DataFrame:
+    """Streaming ingestion-gate dedup over a streaming crawl frame:
+    FIRST-seen-wins per url within the watermark horizon
+    (``dropDuplicatesWithinWatermark`` — per-url state is evicted once
+    event time passes the horizon, so state stays bounded on an unbounded
+    crawl stream).
 
     Complementary semantics to the batch :func:`snapshot_dedup`
     (latest-wins backfill): an admission gate emits a url the first time
@@ -547,25 +478,10 @@ def snapshot_dedup_stream(
     contract is set-level: one row per url, and every emitted row exists
     in the input (no oracle twin — documented nondeterminism).
     """
-    schema = spark.read.option("pathGlobFilter", file_glob).parquet(crawl_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", file_glob)
-        .parquet(crawl_dir)
-    )
     gated = (
         stream.withColumn("warc_ts", F.col("warc_ts").cast("timestamp"))
         .withWatermark("warc_ts", watermark)
         .dropDuplicatesWithinWatermark(["url"])
         .select("url", F.unix_micros(F.col("warc_ts")).alias("warc_ts_us"), "lang")
     )
-    sink = f"snapshot_gate_{uuid.uuid4().hex[:12]}"
-    q = (
-        gated.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+    return drain(gated, "append")

@@ -131,19 +131,23 @@ def test_sessionize_exact_gap_not_split(spark):
 
 def test_sessionize_stream_equals_batch(spark):
     from socialmapper_spark.operators.events import sessionize, sessionize_stream
+    from socialmapper_spark.streaming import parquet_stream
 
     events = spark.read.parquet(f"{SF_SMALL}/events.parquet")
     batch = {tuple(r) for r in sessionize(events).collect()}
-    stream = {tuple(r) for r in sessionize_stream(spark, SF_SMALL).collect()}
+    source = parquet_stream(spark, SF_SMALL, "events.parquet")
+    stream = {tuple(r) for r in sessionize_stream(source).collect()}
     assert batch == stream and len(batch) > 0
 
 
 def test_window_rollup_stream_equals_batch(spark):
     from socialmapper_spark.operators.events import window_rollup, window_rollup_stream
+    from socialmapper_spark.streaming import parquet_stream
 
     events = spark.read.parquet(f"{SF_SMALL}/events.parquet")
     batch = {tuple(r) for r in window_rollup(events).collect()}
-    stream = {tuple(r) for r in window_rollup_stream(spark, SF_SMALL).collect()}
+    source = parquet_stream(spark, SF_SMALL, "events.parquet")
+    stream = {tuple(r) for r in window_rollup_stream(source).collect()}
     assert batch == stream and len(batch) > 0
 
 
@@ -507,6 +511,7 @@ def test_sessionize_stream_multibatch_equals_batch(spark, tmp_path):
     import pandas as pd
 
     from socialmapper_spark.operators.events import sessionize, sessionize_stream
+    from socialmapper_spark.streaming import parquet_stream
 
     rng_rows = []
     # 20 users, sessions deliberately crossing the file split points
@@ -540,7 +545,7 @@ def test_sessionize_stream_multibatch_equals_batch(spark, tmp_path):
     stream = {
         tuple(r)
         for r in sessionize_stream(
-            spark, str(d), file_glob="*.parquet", max_files_per_trigger=1
+            parquet_stream(spark, str(d), "*.parquet", max_files_per_trigger=1)
         ).collect()
     }
     assert stream == batch

@@ -137,28 +137,37 @@ def test_winnow_pairs_bucket_audit(spark):
     assert audit["n_rows_in_dropped"] >= 6
 
 
-# --- dedup_groups: large-star/small-star variant ------------------------------
+# --- dedup_groups: hash-min and large-star/small-star labelers ---------------
+
+def _label_rows(labels):
+    """(node, label) frame -> dedup_groups_py's sorted row shape."""
+    return sorted(
+        (r["node"], r["label"], r["node"] == r["label"]) for r in labels.collect()
+    )
+
 
 def test_star_equals_hashmin_on_path_graph(spark):
     """A 40-node path is the adversarial case for hash-min (needs ~diameter
-    rounds); the star variant must converge well inside max_iter and give
-    the identical labeling."""
-    from socialmapper_spark.operators.dedup import dedup_groups, dedup_groups_py
+    rounds); the star labeler must converge well inside max_iter and give
+    the union-find labeling."""
+    from socialmapper_spark.operators.dedup import _star_labels, dedup_groups_py
 
     path_pairs = [(i, i + 1) for i in range(40)]
     pairs = spark.createDataFrame(path_pairs, "doc_a long, doc_b long")
-    got = sorted(
-        (r["doc_id"], r["group_id"], r["is_canonical"])
-        for r in dedup_groups(pairs, method="star", max_iter=10).collect()
-    )
+    got = _label_rows(_star_labels(pairs, max_iter=10))
     assert got == dedup_groups_py(path_pairs)
     # every node folds into the single component rooted at 0
     assert all(g == 0 for _, g, _ in got)
 
 
 def test_star_equals_hashmin_on_mixed_graph(spark):
-    """Cliques + chains + singletons: both methods, same output."""
-    from socialmapper_spark.operators.dedup import dedup_groups
+    """Cliques + chains + singletons: both labelers, same output."""
+    from socialmapper_spark.operators.dedup import (
+        _hashmin_labels,
+        _star_labels,
+        dedup_groups,
+        dedup_groups_py,
+    )
 
     edges = (
         [(1, 2), (2, 3), (1, 3)]          # triangle
@@ -168,19 +177,21 @@ def test_star_equals_hashmin_on_mixed_graph(spark):
     pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
     docs = spark.createDataFrame([(i,) for i in [1, 2, 3, 10, 11, 12, 13, 20, 21, 99]],
                                  "doc_id long")
-    a = sorted(map(tuple, dedup_groups(pairs, docs=docs, method="hashmin").collect()))
-    b = sorted(map(tuple, dedup_groups(pairs, docs=docs, method="star").collect()))
-    assert a == b
-    assert (99, 99, True) in b  # singleton from docs
+    labels, converged = _hashmin_labels(pairs, max_iter=25)
+    assert converged
+    a = _label_rows(labels)
+    b = _label_rows(_star_labels(pairs, max_iter=25))
+    assert a == b == dedup_groups_py(edges)
+    assert (99, 99, True) in map(tuple, dedup_groups(pairs, docs=docs).collect())
 
 
 def test_star_matches_union_find_on_random_graphs(spark):
     """Seeded random graphs (mixed density, self-contained components,
-    duplicate and reversed edges) — the star variant must equal the
+    duplicate and reversed edges) — the star labeler must equal the
     union-find twin on every one."""
     import random
 
-    from socialmapper_spark.operators.dedup import dedup_groups, dedup_groups_py
+    from socialmapper_spark.operators.dedup import _star_labels, dedup_groups_py
 
     for seed in (1, 7, 23):
         rng = random.Random(seed)
@@ -192,33 +203,26 @@ def test_star_matches_union_find_on_random_graphs(spark):
         if not edges:
             continue
         pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-        got = sorted(
-            (r["doc_id"], r["group_id"], r["is_canonical"])
-            for r in dedup_groups(pairs, method="star").collect()
-        )
+        got = _label_rows(_star_labels(pairs, max_iter=25))
         assert got == dedup_groups_py(edges), f"seed {seed}"
 
 
 def test_star_keeps_self_pair_only_nodes(spark):
     """A node whose only pair rows are self-pairs (doc_a == doc_b) must
-    come out as its own singleton group from BOTH methods — the star
-    variant unions such nodes back after the u != v edge filter."""
-    from socialmapper_spark.operators.dedup import dedup_groups, dedup_groups_py
+    come out as its own singleton group from BOTH labelers — the star
+    labeler unions such nodes back after the u != v edge filter."""
+    from socialmapper_spark.operators.dedup import (
+        _hashmin_labels,
+        _star_labels,
+        dedup_groups_py,
+    )
 
     edges = [(5, 5), (1, 2), (7, 7), (2, 2)]
     pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    a = sorted(map(tuple, dedup_groups(pairs, method="hashmin").collect()))
-    b = sorted(map(tuple, dedup_groups(pairs, method="star").collect()))
+    a = _label_rows(_hashmin_labels(pairs, max_iter=25)[0])
+    b = _label_rows(_star_labels(pairs, max_iter=25))
     assert a == b == dedup_groups_py(edges)
     assert (5, 5, True) in b and (7, 7, True) in b
-
-
-def test_dedup_groups_rejects_unknown_method(spark):
-    from socialmapper_spark.operators.dedup import dedup_groups
-
-    pairs = spark.createDataFrame([(1, 2)], "doc_a long, doc_b long")
-    with pytest.raises(ValueError, match="hashmin"):
-        dedup_groups(pairs, method="bogus")
 
 
 # --- dropped-bucket audits -----------------------------------------------------
@@ -437,25 +441,16 @@ def test_crawl_enrich_stream_equals_batch_join(spark):
     """The stream-static join must be stateless (no watermark, append
     mode) and row-equal to the same join run as a batch plan."""
     from socialmapper_spark.fixtures import ensure_crawl_fixture
-    from socialmapper_spark.operators.web import (
-        crawl_enrich_stream,
-        host_stats,
-        page_host,
-    )
+    from socialmapper_spark.operators.web import crawl_enrich, host_stats
+    from socialmapper_spark.streaming import drain, parquet_stream
 
     crawl_dir = str(ensure_crawl_fixture("sf0.001"))
     pages = spark.read.parquet(f"{crawl_dir}/crawl_pages.parquet")
     dim = host_stats(pages)
-    got = crawl_enrich_stream(spark, crawl_dir, dim)
-    batch = (
-        pages.select(
-            "url",
-            F.unix_micros(F.col("warc_ts").cast("timestamp")).alias("warc_ts_us"),
-            page_host(F.col("url")).alias("host"),
-        ).join(dim, "host")
-    )
+    source = parquet_stream(spark, crawl_dir, "crawl_pages.parquet")
+    got = drain(crawl_enrich(source, dim), "append")
     a = sorted(map(tuple, got.collect()))
-    b = sorted(map(tuple, batch.collect()))
+    b = sorted(map(tuple, crawl_enrich(pages, dim).collect()))
     assert a == b and len(a) == pages.count()  # inner join loses no page
 
 

@@ -107,40 +107,48 @@ def _chain_pairs(spark, n=12):
 
 
 def test_star_cc_raises_on_non_convergence(spark):
-    """Exiting the star loop via max_iter leaves non-star edges; the
-    labeling would emit conflicting (node,label) rows — must raise, not
-    silently return duplicate doc_id rows."""
+    """When hash-min and then star both run out of rounds, star's edge set
+    is not yet disjoint stars and the labeling would emit conflicting
+    (node,label) rows — must raise, not silently return duplicate doc_id
+    rows."""
     from socialmapper_spark.operators.dedup import dedup_groups
 
     with pytest.raises(RuntimeError, match="did not converge"):
-        dedup_groups(_chain_pairs(spark), method="star", max_iter=1).collect()
+        dedup_groups(_chain_pairs(spark), max_iter=1).collect()
 
 
-def test_hashmin_cc_warns_on_non_convergence(spark):
-    """hash-min's max_iter exit keeps one row per node but may split a
-    long-chain component; the contract is a RuntimeWarning."""
-    from socialmapper_spark.operators.dedup import dedup_groups
+def test_hashmin_cc_falls_back_to_star_on_non_convergence(spark):
+    """A chain longer than max_iter leaves hash-min unconverged (its labels
+    would split the component); dedup_groups then runs star and returns
+    the one correct group, without the old split-component warning."""
+    import warnings
 
-    with pytest.warns(RuntimeWarning, match="still changing"):
-        out = dedup_groups(_chain_pairs(spark, n=20), max_iter=2).collect()
-    # still exactly one row per node even when warned
-    ids = [r["doc_id"] for r in out]
-    assert len(ids) == len(set(ids)) == 21
+    from socialmapper_spark.operators.dedup import (
+        _hashmin_labels,
+        dedup_groups,
+        dedup_groups_py,
+    )
+
+    pairs = _chain_pairs(spark, n=20)
+    labels, converged = _hashmin_labels(pairs, max_iter=6)
+    assert not converged and labels.select("label").distinct().count() > 1
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        out = sorted(map(tuple, dedup_groups(pairs, max_iter=6).collect()))
+    assert out == dedup_groups_py([(i, i + 1) for i in range(20)])
+    assert {g for _, g, _ in out} == {0}
 
 
 def test_star_cc_converged_chain_matches_hashmin(spark):
-    """With enough rounds both methods agree exactly on a path graph."""
-    from socialmapper_spark.operators.dedup import dedup_groups
+    """With enough rounds both labelers agree exactly on a path graph."""
+    from socialmapper_spark.operators.dedup import _hashmin_labels, _star_labels
 
-    a = sorted(
-        (r["doc_id"], r["group_id"], r["is_canonical"])
-        for r in dedup_groups(_chain_pairs(spark), method="star").collect()
-    )
-    b = sorted(
-        (r["doc_id"], r["group_id"], r["is_canonical"])
-        for r in dedup_groups(_chain_pairs(spark), method="hashmin").collect()
-    )
-    assert a == b and a[0] == (0, 0, True)
+    def rows(labels):
+        return sorted((r["node"], r["label"]) for r in labels.collect())
+
+    labels, converged = _hashmin_labels(_chain_pairs(spark), max_iter=25)
+    a = rows(_star_labels(_chain_pairs(spark), max_iter=25))
+    assert converged and rows(labels) == a and a[0] == (0, 0)
 
 
 # --- exact integer cell/tile decode (r4 ADVICE raster.py:108) ------------------

@@ -260,21 +260,21 @@ def test_knn_kring_plan_stays_in_plan(spark, geo_small):
 
 
 def test_page_assignments_stream_equals_batch(spark, geo_small):
-    """Streaming (stream-static broadcast joins, 3 micro-batches) must
-    equal the batch assignment plan row-for-row."""
+    """The batch assignment plan run on a pages stream (stream-static
+    broadcast joins, append mode) must equal the batch run row-for-row,
+    over every output column."""
     from socialmapper_spark.pipeline import page_assignments
-    from socialmapper_spark.streaming.pipeline import page_assignments_stream
+    from socialmapper_spark.streaming import drain, parquet_stream
 
     pages = spark.read.parquet(f"{geo_small}/pages.parquet")
     polygons = spark.read.parquet(f"{geo_small}/polygons.parquet")
-    batch = {
-        (r["url"], r["poly_id"])
-        for r in page_assignments(spark, pages, polygons).collect()
-    }
-    stream = {
-        (r["url"], r["poly_id"])
-        for r in page_assignments_stream(spark, str(geo_small), polygons).collect()
-    }
+    batch_df = page_assignments(spark, pages, polygons)
+    source = parquet_stream(spark, str(geo_small), "pages.parquet")
+    stream_df = drain(page_assignments(spark, source, polygons), "append")
+    assert stream_df.columns == batch_df.columns
+    assert "travel_time_minutes" in batch_df.columns
+    batch = sorted(map(tuple, batch_df.collect()), key=repr)
+    stream = sorted(map(tuple, stream_df.collect()), key=repr)
     assert stream == batch and len(batch) > 1000
 
 

@@ -93,10 +93,12 @@ def test_host_daily_stream_equals_batch(spark):
     batch host_daily rows exactly."""
     from socialmapper_spark.fixtures import ensure_crawl_fixture
     from socialmapper_spark.operators.web import host_daily, host_daily_stream
+    from socialmapper_spark.streaming import parquet_stream
 
     d = str(ensure_crawl_fixture(SF_SMALL))
     batch = {tuple(r) for r in host_daily(_crawl(spark)).collect()}
-    stream = {tuple(r) for r in host_daily_stream(spark, d).collect()}
+    source = parquet_stream(spark, d, "crawl_pages.parquet")
+    stream = {tuple(r) for r in host_daily_stream(source).collect()}
     assert stream == batch and len(batch) > 0
 
 
@@ -105,10 +107,12 @@ def test_snapshot_dedup_stream_one_row_per_url(spark):
     every emitted (url, warc_ts_us) pair exists in the input."""
     from socialmapper_spark.fixtures import ensure_crawl_fixture
     from socialmapper_spark.operators.web import snapshot_dedup_stream
+    from socialmapper_spark.streaming import parquet_stream
 
     d = str(ensure_crawl_fixture(SF_SMALL))
     pages = _crawl(spark)
-    out = snapshot_dedup_stream(spark, d).collect()
+    source = parquet_stream(spark, d, "crawl_pages.parquet")
+    out = snapshot_dedup_stream(source).collect()
     urls = [r["url"] for r in out]
     assert len(urls) == len(set(urls)) == pages.select("url").distinct().count()
     in_pairs = {
