@@ -43,21 +43,13 @@ SF_DIR = "/root/testdata/sf0.01"
 # entry -> (allowed node kinds, why Python/NLJ is the right plan there)
 WHITELIST: dict[str, tuple[set[str], str]] = {
     # vectorized Arrow UDFs over the POLYGON table (thousands of rows,
-    # never the page/doc side): geometry prep, area, centroid
+    # never the page/doc side): validity, area, centroid. The PIP polygon
+    # index is built on the driver and plans as local tables, so no entry
+    # is whitelisted for it.
     "isochrone_area": ({"ArrowEvalPython"}, "shoelace area over WKB polygons"),
     "unit_centroids": ({"ArrowEvalPython"}, "polygon centroid over WKB"),
-    "pip_assignments": ({"ArrowEvalPython", "MapInPandas"},
-                        "polygon edge prep (polygon-table-sized)"),
-    "zcta_assignments": ({"ArrowEvalPython", "MapInPandas"},
-                         "polygon edge prep (polygon-table-sized)"),
-    "flagship_demographics": ({"ArrowEvalPython", "MapInPandas"},
-                              "polygon edge prep (the PIP refine is Catalyst)"),
-    "geometry_quarantine": ({"ArrowEvalPython", "MapInPandas"},
+    "geometry_quarantine": ({"ArrowEvalPython"},
                             "WKB validity parse over the polygon table"),
-    "zonal_stats": ({"ArrowEvalPython", "MapInPandas"},
-                    "polygon cover prep upstream of the raster agg"),
-    "polygon_burn": ({"ArrowEvalPython", "MapInPandas"},
-                     "polygon cover prep (vector->raster)"),
     # simhash needs per-doc token hashing with bit accumulation — a
     # vectorized numpy kernel; no Catalyst expression computes it
     "simhash": ({"ArrowEvalPython"}, "64-bit simhash numpy kernel"),
@@ -101,15 +93,9 @@ WHITELIST: dict[str, tuple[set[str], str]] = {
     "corpus_curation_lm": ({"BroadcastNestedLoopJoin"},
                            "one-row corpus-total frame broadcast-crossed "
                            "on the LM branch (operators/lm.py)"),
-    # composites built on page_assignments / knn_join inherit the polygon
-    # prep mapInPandas (polygon-table-sized) and the Albers/parity nodes
-    "dedup_units": ({"ArrowEvalPython", "MapInPandas",
-                     "BroadcastNestedLoopJoin"},
-                    "PIP polygon prep + kNN Albers/parity upstream"),
-    "counties_from_pages": ({"MapInPandas"},
-                            "PIP polygon edge prep upstream"),
-    "lineage_stats": ({"MapInPandas"},
-                      "PIP polygon edge prep upstream of the audited stage"),
+    # composites built on knn_join inherit its Albers/parity nodes
+    "dedup_units": ({"ArrowEvalPython", "BroadcastNestedLoopJoin"},
+                    "kNN Albers/parity upstream"),
     # ANN family: vectorized hyperplane/IVF assignment pandas_udfs
     # (similarity.py:383,482,759 — embedding-batch Arrow kernels) and the
     # shared per-partition top-k HEAP kernel for the _many forms

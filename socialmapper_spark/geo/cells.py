@@ -30,9 +30,12 @@ import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from socialmapper_spark.geo.wkb import RingTable
+
 _R_SHIFT = 2**58
 _IX_SHIFT = 2**29
 MAX_RES = 22
+_CHUNK_VERTICES = 1 << 16  # ring_cover_cells' scratch-memory bound
 
 
 def cell_size_deg(res: int) -> float:
@@ -142,78 +145,143 @@ def covering_cells(rings: list[np.ndarray], res: int) -> list[int]:
     ]
 
 
-def _ring_boundary_cover(ring: np.ndarray, res: int) -> np.ndarray:
-    """(ix, iy) pairs of every cell a ring's edges pass through (superset).
+def _run_ranks(counts: np.ndarray) -> np.ndarray:
+    """0, 1, ..., counts[i] - 1 for each run i, concatenated."""
+    return np.arange(counts.sum()) - np.repeat(np.cumsum(counts) - counts, counts)
 
-    Fully vectorized supercover: each edge is subdivided into pieces no
-    longer than one cell edge per axis, and each piece contributes the
-    (≤2×2) cells of its own bbox — a tight superset of the true segment
-    supercover with O(perimeter / cell_size) output, so a long diagonal
-    edge no longer inflates the cover quadratically like a bbox would.
+
+def _first_center_at_or_after(x: np.ndarray, size: float, origin: float) -> np.ndarray:
+    """Smallest grid index ``g`` whose cell center ``(g + 0.5) * size -
+    origin`` (the exact float expression the cover tests) is ``>= x``."""
+    g = np.floor((x + origin) / size - 0.5).astype(np.int64) - 1
+    for _ in range(3):  # the float estimate is off by at most a step or two
+        g += (g + 0.5) * size - origin < x
+    return g
+
+
+def ring_cover_cells(rings: RingTable, res: int) -> tuple[np.ndarray, np.ndarray]:
+    """Cells intersecting each polygon of a ring table — (polygon index,
+    cell id) pairs, unique and sorted, vectorized over the whole table
+    (no per-polygon numpy calls). The cover is the union of two parts per
+    exterior ring, both over-approximations of nothing but the ring (no
+    false negatives, SURVEY.md §4 O3):
+
+    - boundary: each edge is cut into pieces no longer than one cell per
+      axis, and each piece adds the (≤2×2) cells of its own bbox — a tight
+      superset of the edge's supercover, O(perimeter / cell size), so a long
+      diagonal edge does not inflate the cover like a bbox would;
+    - interior: the cells of the ring's bbox whose center is inside the
+      ring by the even-odd rule, found per cell row by scanline: the
+      crossings ``(y1 > cy) != (y2 > cy)`` of a row, sorted, pair up into
+      the spans of inside centers. The crossing x is the same float
+      expression ``points_in_ring`` evaluates, so the verdicts agree with
+      testing every bbox center.
+
+    Holes are not subtracted: cells inside a hole are false positives the
+    exact refine removes, the safe direction. The pass runs over chunks of
+    whole polygons of about ``_CHUNK_VERTICES`` vertices each, which bounds
+    its scratch memory on a nationwide table.
     """
+    if not np.isfinite(rings.xy).all():
+        raise ValueError("polygon coordinates must be finite (see validate_geometries)")
+    rings = rings.exteriors()
+    n = len(rings.poly)
+    firsts = np.flatnonzero(np.diff(rings.poly, prepend=-1) != 0)
+    at = np.searchsorted(rings.start[firsts], np.arange(0, rings.start[-1], _CHUNK_VERTICES))
+    cuts = np.unique(np.concatenate([firsts[np.minimum(at, len(firsts) - 1)], [0, n]]))
+    if n and (int(rings.poly.max()) + 1) * _nx(res) * _ny(res) >= 1 << 63:
+        raise ValueError(f"too many polygons for one resolution-{res} cover")
+    parts = [_cover_chunk(rings.rings(a, b), res) for a, b in zip(cuts[:-1], cuts[1:])]
+    if not parts:
+        return np.zeros(0, np.int64), np.zeros(0, np.int64)
+    return np.concatenate([p[0] for p in parts]), np.concatenate([p[1] for p in parts])
+
+
+def _cover_chunk(rings: RingTable, res: int) -> tuple[np.ndarray, np.ndarray]:
+    """:func:`ring_cover_cells` over non-empty exterior rings that hold
+    every ring of their polygons (at least one)."""
     size = cell_size_deg(res)
-    ring = np.asarray(ring, dtype=np.float64)
-    x1, y1 = ring[:, 0], ring[:, 1]
-    x2, y2 = np.roll(x1, -1), np.roll(y1, -1)
+    nx, ny = _nx(res), _ny(res)
+    n_vert = np.diff(rings.start)
+    ring = np.repeat(np.arange(len(n_vert)), n_vert)
+    x1, y1 = rings.xy[:, 0], rings.xy[:, 1]
+    nxt = rings.successor()
+    x2, y2 = x1[nxt], y1[nxt]
+
+    # boundary pieces
     npiece = np.maximum(
         1,
         np.ceil(np.maximum(np.abs(x2 - x1), np.abs(y2 - y1)) / size).astype(np.int64),
     )
-    e = np.repeat(np.arange(ring.shape[0]), npiece)
-    k = np.arange(npiece.sum()) - np.repeat(np.cumsum(npiece) - npiece, npiece)
+    e = np.repeat(np.arange(len(ring)), npiece)
+    k = _run_ranks(npiece)
     t0 = k / npiece[e]
     t1 = (k + 1) / npiece[e]
     ax = x1[e] + (x2[e] - x1[e]) * t0
     ay = y1[e] + (y2[e] - y1[e]) * t0
     bx = x1[e] + (x2[e] - x1[e]) * t1
     by = y1[e] + (y2[e] - y1[e]) * t1
-    ix0 = np.floor((np.minimum(ax, bx) + 180.0) / size).astype(np.int64)
-    ix1 = np.floor((np.maximum(ax, bx) + 180.0) / size).astype(np.int64)
-    iy0 = np.floor((np.minimum(ay, by) + 90.0) / size).astype(np.int64)
-    iy1 = np.floor((np.maximum(ay, by) + 90.0) / size).astype(np.int64)
-    # each piece spans at most 2 cells per axis; emit the 4 bbox corners
-    ix = np.concatenate([ix0, ix1, ix0, ix1])
-    iy = np.concatenate([iy0, iy0, iy1, iy1])
-    return np.unique(np.stack([ix, iy], axis=1), axis=0)
+    px0 = np.floor((np.minimum(ax, bx) + 180.0) / size).astype(np.int64)
+    px1 = np.floor((np.maximum(ax, bx) + 180.0) / size).astype(np.int64)
+    py0 = np.floor((np.minimum(ay, by) + 90.0) / size).astype(np.int64)
+    py1 = np.floor((np.maximum(ay, by) + 90.0) / size).astype(np.int64)
+    # each piece spans at most 2 cells per axis; emit its distinct bbox corners
+    wide, tall = px1 != px0, py1 != py0
+    both = wide & tall
+    parts_ix = [px0, px1[wide], px0[tall], px1[both]]
+    parts_iy = [py0, py0[wide], py1[tall], py1[both]]
+    pr = ring[e]
+    parts_ring = [pr, pr[wide], pr[tall], pr[both]]
+
+    # interior: per ring bbox in cell indices, then the crossings of every
+    # edge with the cell-center rows it spans
+    lo = rings.start[:-1]
+    ix0 = np.floor((np.minimum.reduceat(x1, lo) + 180.0) / size).astype(np.int64)
+    ix1 = np.floor((np.maximum.reduceat(x1, lo) + 180.0) / size).astype(np.int64)
+    iy0 = np.floor((np.minimum.reduceat(y1, lo) + 90.0) / size).astype(np.int64)
+    iy1 = np.floor((np.maximum.reduceat(y1, lo) + 90.0) / size).astype(np.int64)
+    r0 = _first_center_at_or_after(np.minimum(y1, y2), size, 90.0)
+    nrow = _first_center_at_or_after(np.maximum(y1, y2), size, 90.0) - r0
+    ce = np.repeat(np.arange(len(ring)), nrow)
+    gy = _run_ranks(nrow) + r0[ce]
+    cy = (gy + 0.5) * size - 90.0
+    cr = ring[ce]
+    hit = ((y1[ce] > cy) != (y2[ce] > cy)) & (gy >= iy0[cr]) & (gy <= iy1[cr])
+    ce, gy, cy, cr = ce[hit], gy[hit], cy[hit], cr[hit]
+    xint = (x2[ce] - x1[ce]) * (cy - y1[ce]) / (y2[ce] - y1[ce]) + x1[ce]
+    order = np.lexsort((xint, gy, cr))
+    # a closed ring crosses each row an even number of times, so after the
+    # sort the crossings of every (ring, row) pair up from an even offset
+    span_a = xint[order[0::2]]
+    span_b = xint[order[1::2]]
+    span_ring = cr[order[0::2]]
+    span_row = gy[order[0::2]]
+    g0 = np.maximum(_first_center_at_or_after(span_a, size, 180.0), ix0[span_ring])
+    g1 = np.minimum(_first_center_at_or_after(span_b, size, 180.0), ix1[span_ring] + 1)
+    width = np.maximum(g1 - g0, 0)
+    s = np.repeat(np.arange(len(width)), width)
+    parts_ix.append(_run_ranks(width) + g0[s])
+    parts_iy.append(span_row[s])
+    parts_ring.append(span_ring[s])
+
+    ix = np.concatenate(parts_ix) % nx
+    iy = np.clip(np.concatenate(parts_iy), 0, ny - 1)
+    who = rings.poly[np.concatenate(parts_ring)]
+    key = np.unique((who * nx + ix) * ny + iy)
+    who, rem = np.divmod(key, nx * ny)
+    ix, iy = np.divmod(rem, ny)
+    return who, np.int64(res) * _R_SHIFT + ix * _IX_SHIFT + iy
 
 
 def polygon_cover_cells(polys: list[list[np.ndarray]], res: int) -> np.ndarray:
-    """Cells intersecting the polygon itself (not just its bbox) — int64 ids.
-
-    Still an over-approximation (no false negatives, SURVEY.md §4 O3):
-    boundary cells come from the exterior-edge supercover; interior cells
-    are the bbox candidates whose center lies inside the exterior ring.
-    Holes are ignored (cells inside a hole become false positives that the
-    exact refine removes — over-approximation is the safe direction).
-    ``polys`` is a list of MultiPolygon members, each [exterior, holes...].
-    """
-    from socialmapper_spark.geo.pip import points_in_ring
-
-    size = cell_size_deg(res)
-    nx, ny = _nx(res), _ny(res)
-    parts = []
-    for rings in polys:
-        ext = np.asarray(rings[0], dtype=np.float64)
-        parts.append(_ring_boundary_cover(ext, res))
-        lon_min, lat_min = ext.min(axis=0)
-        lon_max, lat_max = ext.max(axis=0)
-        ix0 = int(np.floor((lon_min + 180.0) / size))
-        ix1 = int(np.floor((lon_max + 180.0) / size))
-        iy0 = int(np.floor((lat_min + 90.0) / size))
-        iy1 = int(np.floor((lat_max + 90.0) / size))
-        gx, gy = np.meshgrid(
-            np.arange(ix0, ix1 + 1), np.arange(iy0, iy1 + 1), indexing="ij"
-        )
-        gx = gx.ravel()
-        gy = gy.ravel()
-        cx = (gx + 0.5) * size - 180.0
-        cy = (gy + 0.5) * size - 90.0
-        inside = points_in_ring(cx, cy, ext)
-        parts.append(np.stack([gx[inside], gy[inside]], axis=1))
-    ixy = np.unique(np.concatenate(parts, axis=0), axis=0)
-    ix = ixy[:, 0] % nx
-    iy = np.clip(ixy[:, 1], 0, ny - 1)
-    return np.unique(np.int64(res) * _R_SHIFT + ix * _IX_SHIFT + iy)
+    """Cells intersecting one polygon (not just its bbox) — sorted int64
+    ids; :func:`ring_cover_cells` over a one-polygon table. ``polys`` is a
+    list of MultiPolygon members, each [exterior, holes...]."""
+    exts = [np.asarray(rings[0], dtype=np.float64) for rings in polys]
+    n = len(exts)
+    table = RingTable(np.concatenate(exts), np.cumsum([0] + [len(r) for r in exts]),
+                      np.zeros(n, dtype=np.int64), np.ones(n, dtype=bool))
+    return ring_cover_cells(table, res)[1]
 
 
 # ---------------------------------------------------------------------------

@@ -6,8 +6,8 @@ spatial join to shrink geometry payloads
 ``geometry.simplify(tolerance, preserve_topology=True)`` and
 /root/reference/socialmapper/isochrone/__init__.py:136-139). The reference
 delegates to shapely/GEOS; here it is an original iterative
-Douglas-Peucker over numpy vertex arrays so it can run *distributed*
-inside the polygon-prep ``mapInPandas`` (no GEOS wheel in the container).
+Douglas-Peucker over numpy vertex arrays (no GEOS wheel in the
+container), run once per ring by the polygon prep.
 
 Differences from GEOS, documented: plain DP does not guarantee topology
 preservation for pathological self-near rings; for the convex-ish
@@ -20,6 +20,8 @@ backstop GEOS also applies).
 from __future__ import annotations
 
 import numpy as np
+
+from socialmapper_spark.geo.wkb import RingTable
 
 
 def _perp_dist(pts: np.ndarray, a: np.ndarray, b: np.ndarray) -> np.ndarray:
@@ -91,3 +93,21 @@ def simplify_polygon(rings: list[np.ndarray], tol: float) -> list[np.ndarray]:
         if s.shape[0] >= 3:
             out.append(s)
     return out
+
+
+def simplify_rings(rings: RingTable, tol: float) -> RingTable:
+    """:func:`simplify_polygon` over every member of a ring table."""
+    xy, poly, exterior = [], [], []
+    bounds = np.append(np.flatnonzero(rings.exterior), len(rings.poly))
+    for a, b in zip(bounds[:-1], bounds[1:]):
+        member = [rings.xy[rings.start[r] : rings.start[r + 1]] for r in range(a, b)]
+        kept = simplify_polygon(member, tol)
+        xy += kept
+        poly += [rings.poly[a]] * len(kept)
+        exterior += [True] + [False] * (len(kept) - 1)
+    return RingTable(
+        np.concatenate(xy) if xy else np.empty((0, 2)),
+        np.cumsum([0] + [len(r) for r in xy]),
+        np.asarray(poly, dtype=np.int64),
+        np.asarray(exterior, dtype=bool),
+    )

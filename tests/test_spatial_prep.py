@@ -1,9 +1,10 @@
-"""Distributed polygon-index prep + F9 simplify (VERDICT r1 items 2/3).
+"""Polygon-index prep + F9 simplify (VERDICT r1 items 2/3).
 
-Pins that the polygon side of the two-phase PIP join scales: the cover
-and geometry shipping happen inside the Spark plan (mapInPandas +
-broadcast hash join), never via a driver-side geometry loop, and the
-cover wraps the polygon rather than its bbox.
+Pins the polygon side of the two-phase PIP join: the index is built in
+one vectorized numpy pass on the driver and reaches the plan as JVM local
+tables, so no Python node appears in the prep or the flagship plan; and
+the cover wraps the polygon rather than its bbox, with no false
+negatives, the same per polygon as over a whole table.
 """
 
 import numpy as np
@@ -15,9 +16,11 @@ from socialmapper_spark.geo.cells import (
     cell_np,
     covering_cells,
     polygon_cover_cells,
+    ring_cover_cells,
 )
+from socialmapper_spark.geo.pip import points_in_polygon
 from socialmapper_spark.geo.simplify import simplify_polygon, simplify_ring
-from socialmapper_spark.geo.wkb import polygon_to_wkb
+from socialmapper_spark.geo.wkb import polygon_to_wkb, wkb_ring_table
 from socialmapper_spark.operators.spatial_join import prepare_polygons, spatial_join
 
 
@@ -105,11 +108,75 @@ class TestPolygonCover:
         assert cell_np([40.0], [-95.0], 7)[0] in set(cover.tolist())
 
 
+def _multipolygon_wkb(members):
+    import struct
+
+    return b"".join(
+        [struct.pack("<BII", 1, 6, len(members))] + [polygon_to_wkb(m) for m in members]
+    )
+
+
+def _inside_points(members, n, rng):
+    """Uniform points of the members' bboxes that fall inside a member
+    (exterior minus holes)."""
+    xs, ys = [], []
+    for rings in members:
+        lo, hi = rings[0].min(axis=0), rings[0].max(axis=0)
+        px, py = rng.uniform(lo[0], hi[0], n), rng.uniform(lo[1], hi[1], n)
+        keep = points_in_polygon(px, py, rings)
+        xs.append(px[keep])
+        ys.append(py[keep])
+    return np.concatenate(xs), np.concatenate(ys)
+
+
+# (multi)polygons as lists of members, each [exterior, holes...]
+_SHAPES = {
+    "multipolygon_with_hole": [
+        [_circle(-95.0, 40.0, 0.2, 40), _circle(-95.0, 40.0, 0.08, 24)],
+        [_circle(-94.5, 40.1, 0.05, 12)],
+    ],
+    "sub_cell": [[_circle(-95.0101, 40.0101, 0.002, 9)]],
+    "sliver": [[np.array([[-96.0, 39.0], [-95.2, 39.6], [-95.99, 39.001]])]],
+}
+
+
+class TestTableCover:
+    """The whole-table cover: no false negatives for awkward shapes, and
+    the same cells per polygon as the one-polygon cover."""
+
+    @pytest.mark.parametrize("name", sorted(_SHAPES))
+    def test_no_false_negatives(self, name):
+        members = _SHAPES[name]
+        table = wkb_ring_table([_multipolygon_wkb(members)]).opened()
+        owner, cover = ring_cover_cells(table, 8)
+        assert set(owner.tolist()) == {0}
+        px, py = _inside_points(members, 20000, np.random.default_rng(3))
+        assert len(px) > 0
+        assert set(cell_np(py, px, 8).tolist()) <= set(cover.tolist())
+
+    def test_mixed_table_matches_each_polygon(self, monkeypatch):
+        from socialmapper_spark.geo import cells
+
+        monkeypatch.setattr(cells, "_CHUNK_VERTICES", 16)  # several chunks
+        names = sorted(_SHAPES) * 2
+        table = wkb_ring_table([_multipolygon_wkb(_SHAPES[n]) for n in names])
+        owner, cover = ring_cover_cells(table.opened(), 7)
+        rng = np.random.default_rng(5)
+        for i, n in enumerate(names):
+            mine = cover[owner == i]
+            assert np.array_equal(mine, polygon_cover_cells(_SHAPES[n], 7))
+            px, py = _inside_points(_SHAPES[n], 5000, rng)
+            assert set(cell_np(py, px, 7).tolist()) <= set(mine.tolist())
+
+    def test_empty_table(self):
+        owner, cover = ring_cover_cells(wkb_ring_table([]), 7)
+        assert len(owner) == len(cover) == 0
+
+
 @pytest.fixture(scope="module")
 def grid_polygons(spark):
-    """10k 0.01°×0.01° squares tiling a 1°×1° area — generated inside the
-    plan (range → mapInPandas), so the polygon table itself never exists
-    on the driver."""
+    """10k 0.01°×0.01° squares tiling a 1°×1° area, generated by a plan
+    (range → mapInPandas) that ``prepare_polygons`` collects."""
 
     def gen(batches):
         for pdf in batches:
@@ -142,19 +209,34 @@ def grid_polygons(spark):
     )
 
 
-def test_prepare_polygons_is_distributed(spark, grid_polygons):
-    """Index build over 10k polygons with zero driver-side geometry work:
-    the cover plan is scan → MapInPandas, no ExistingRDD (the signature of
-    a driver-collected createDataFrame)."""
+def test_prepare_polygons_plans_no_python(spark, grid_polygons, geo_small):
+    """The index over 10k polygons reaches the plan as JVM local tables:
+    no Python node and no Python-row RDD scan in any of its three sides,
+    nor anywhere in the flagship plan. (The broadcast joins collect these
+    sides to the driver anyway.)"""
+    from socialmapper_spark.pipeline import flagship_query
+
+    python_nodes = ("MapInPandas", "ArrowEvalPython", "BatchEvalPython", "Scan ExistingRDD")
     index = prepare_polygons(spark, grid_polygons)
-    plan = index.cells_df._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan
-    assert "ExistingRDD" not in plan
-    gplan = index.geoms_df._jdf.queryExecution().executedPlan().toString()
-    assert "ExistingRDD" not in gplan
+    for df in (index.cells_df, index.geoms_df, index.meta_df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert not [n for n in python_nodes if n in plan], plan
     # 10k tiny squares at res 7 → roughly 1-4 cover cells each
     n = index.cells_df.count()
     assert 10000 <= n < 50000
+
+    plan = (
+        flagship_query(
+            spark,
+            spark.read.parquet(f"{geo_small}/pages.parquet"),
+            spark.read.parquet(f"{geo_small}/polygons.parquet"),
+            spark.read.parquet(f"{geo_small}/census_long.parquet"),
+        )
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert not [n for n in python_nodes + ("PythonUDF",) if n in plan], plan
 
 
 def test_grid_assignment_exact(spark, grid_polygons):
@@ -221,8 +303,8 @@ def test_grid_disk_col_matches_python_twin(spark):
 
 def test_flagship_plan_zero_per_row_python(spark, geo_small):
     """north_star: 'zero per-row Python'. The flagship plan must contain
-    no Arrow/Batch Python eval on the page side; the only Python nodes
-    are the MapInPandas polygon-prep over the tiny polygon table."""
+    no Arrow/Batch Python eval on the page side, and its joins are
+    broadcast hash joins."""
     from socialmapper_spark.pipeline import flagship_query
 
     plan = (
