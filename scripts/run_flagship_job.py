@@ -13,9 +13,8 @@ Stages (each resumable via the lineage checkpoint table):
 
 On restart after a failure, completed buckets of stage 1 are skipped
 (anti-join against the lineage table) — the north_rule's
-resume-without-recompute. Zero per-row Python: the only Python on
-executors is the vectorized polygon-table geometry prep; the PIP refine
-is a Catalyst expression.
+resume-without-recompute. Zero Python on executors: the polygon prep
+runs on the driver and the PIP refine is a Catalyst expression.
 
 Build the zip:  zip -r engine.zip socialmapper_spark   (from the repo root)
 Local smoke:    python scripts/run_flagship_job.py --sf /root/testdata/sf0.001 --out /tmp/flagship_job
@@ -31,8 +30,6 @@ try:  # provided by `--py-files engine.zip` under spark-submit
     import socialmapper_spark  # noqa: F401
 except ImportError:  # bare `python scripts/run_flagship_job.py` local smoke
     sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
-
-from pyspark.sql import functions as F  # noqa: E402
 
 
 def main() -> None:
@@ -53,8 +50,7 @@ def main() -> None:
 
     from socialmapper_spark.fixtures import geo_dir_for
     from socialmapper_spark.lineage import run_stage_with_lineage, verify_lineage
-    from socialmapper_spark.operators.census import dmean, dsum, pivot_census
-    from socialmapper_spark.pipeline import page_assignments
+    from socialmapper_spark.pipeline import iso_rollup, page_assignments
     from socialmapper_spark.session import get_spark
     from socialmapper_spark.sinks import export_units
 
@@ -89,27 +85,7 @@ def main() -> None:
         raise SystemExit("lineage checksum mismatch — refusing to aggregate")
 
     # stage 2: travel-time-band rollup from the checkpointed table
-    a = spark.read.parquet(assign_path)
-    iso = a.filter(F.col("kind") == "isochrone").select(
-        "url", F.col("poly_id").alias("iso_id"), "travel_time_minutes"
-    )
-    bg = a.filter(F.col("kind") == "blockgroup").select(
-        "url", F.col("GEOID").alias("bg_geoid")
-    )
-    pairs = iso.join(bg, "url")
-    iso_bgs = pairs.select("iso_id", "travel_time_minutes", "bg_geoid").distinct()
-    page_counts = pairs.groupBy("iso_id").agg(F.countDistinct("url").alias("n_pages"))
-    wide = pivot_census(census)
-    per_iso = (
-        iso_bgs.join(wide, iso_bgs["bg_geoid"] == wide["geoid"], "left")
-        .groupBy("iso_id", "travel_time_minutes")
-        .agg(
-            F.countDistinct("bg_geoid").alias("n_block_groups"),
-            dsum("B01003_001E").alias("total_population"),
-            dmean("B19013_001E").alias("median_household_income"),
-        )
-        .join(page_counts, "iso_id")
-    )
+    per_iso = iso_rollup(spark.read.parquet(assign_path), census)
     fmt = export_units(per_iso, f"{args.out}/demographics")
     print(f"stage rollup: wrote demographics as {fmt}")
     spark.stop()

@@ -10,6 +10,14 @@ implementations that agree bit-for-bit:
 - :func:`geoparse_cols` — pure Catalyst column expressions (regexp_extract
   + array/map built-ins). This is the production path: JVM-side, inside
   whole-stage codegen, zero Python.
+- :func:`pair_strings` — the two ``regexp_extract`` calls alone.
+  ``lat``/``lon`` each inline them about ten times, and Catalyst
+  copies the whole expression into every filter it pushes below the
+  projection that defines them (``FilterExec`` has no common
+  subexpression elimination). ``pipeline.geoparse_pages`` therefore
+  extracts the pair once behind a ``Generate``, which no predicate on
+  the generator's output can cross, and passes the strings to
+  :func:`geoparse_cols`.
 - :func:`geoparse_py` — the numpy/pandas twin used by golden generation
   and the pytest parity suite.
 
@@ -88,10 +96,18 @@ def geoparse_py(text: str | None) -> tuple[float | None, float | None, list[str]
 # Catalyst implementation (production hot path — no UDF)
 # ---------------------------------------------------------------------------
 
-def geoparse_cols(text: Column) -> dict[str, Column]:
-    """Returns {'lat','lon','mentions'} column expressions over ``text``."""
-    raw_lat = F.regexp_extract(text, _PAIR_RE, 1)
-    raw_lon = F.regexp_extract(text, _PAIR_RE, 2)
+def pair_strings(text: Column) -> tuple[Column, Column]:
+    """The first coordinate pair's (lat, lon) strings; "" when none."""
+    return F.regexp_extract(text, _PAIR_RE, 1), F.regexp_extract(text, _PAIR_RE, 2)
+
+
+def geoparse_cols(
+    text: Column, raw_lat: Column | None = None, raw_lon: Column | None = None
+) -> dict[str, Column]:
+    """Returns {'lat','lon','mentions'} column expressions over ``text``;
+    pass ``raw_lat``/``raw_lon`` if :func:`pair_strings` already ran."""
+    if raw_lat is None or raw_lon is None:
+        raw_lat, raw_lon = pair_strings(text)
     cand_lat = F.when(raw_lat != "", raw_lat.cast("double"))
     cand_lon = F.when(raw_lon != "", raw_lon.cast("double"))
     valid = (

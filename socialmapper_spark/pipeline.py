@@ -7,12 +7,12 @@ pages → geoparse → cell index → two-phase PIP vs isochrones AND block
 groups → census pivot-join (sentinel-cleansed) → A1 aggregation
 (sum population / mean income).
 
-Plan shape at scale: the pages scan is joined twice against broadcast
-polygon indexes (no shuffle of the big side), the url-level
-iso×blockgroup pairing shuffles only matched rows on url, and the final
-aggregate is a hash agg on (poly_id, GEOID) pairs — tiny. Hot-cell skew
-in the pages table never reaches a shuffle boundary with the page row
-attached.
+Plan shape at scale: each page's coordinate regex runs once, the pages
+scan is joined against broadcast polygon indexes (no shuffle of the big
+side), the url-level iso×blockgroup pairing shuffles only matched rows
+on url, and the rollup after it is one chain of hash aggs on (iso, GEOID)
+pairs — tiny, with nothing persisted. Hot-cell skew in the pages table
+never reaches a shuffle boundary with the page row attached.
 """
 
 from __future__ import annotations
@@ -20,8 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from socialmapper_spark.geo.geoparse import geoparse_cols
-from socialmapper_spark.operators.census import pivot_census
+from socialmapper_spark.geo.geoparse import geoparse_cols, pair_strings
+from socialmapper_spark.operators.census import dmean, dsum, pivot_census
 from socialmapper_spark.operators.spatial_join import (
     PREFILTER_RES,
     prepare_polygons,
@@ -34,16 +34,19 @@ def geoparse_pages(pages: DataFrame) -> DataFrame:
     """pages → geoparsed(url, warc_ts, lang, lat, lon, mentions, cell_r7/8/9).
 
     Pure Catalyst — regexp + array ops + arithmetic; no UDF, no shuffle.
+    The coordinate regex runs once per page, behind a one-row ``inline``
+    ``Generate``: filters on lat/lon/cells (``lat IS NOT NULL``, a join's
+    inferred ``isnotnull(cell_r7)``) cannot be pushed below it, so they
+    never copy the regex (see ``geo/geoparse.py``).
     """
-    g = geoparse_cols(F.col("text"))
-    out = pages.select(
-        "url",
-        "warc_ts",
-        "lang",
-        g["lat"].alias("lat"),
-        g["lon"].alias("lon"),
-        g["mentions"].alias("mentions"),
+    raw_lat, raw_lon = pair_strings(F.col("text"))
+    extracted = pages.select(
+        "url", "warc_ts", "lang", "text",
+        F.inline(F.array(F.struct(raw_lat.alias("raw_lat"), raw_lon.alias("raw_lon")))),
     )
+    g = geoparse_cols(F.col("text"), F.col("raw_lat"), F.col("raw_lon"))
+    out = extracted.select("url", "warc_ts", "lang",
+                           *[g[c].alias(c) for c in ("lat", "lon", "mentions")])
     for r in (7, 8, 9):
         out = out.withColumn(f"cell_r{r}", cell_col(F.col("lat"), F.col("lon"), r))
     return out
@@ -79,67 +82,46 @@ def flagship_query(
     medians — reference semantics, deliberately not weighted
     (api/client.py:283-286).
     """
-    # single pass over the (expensive) assignment stream: per-url agg with
-    # map-side combine collects that page's isochrones and block groups at
-    # once, so the PIP join executes exactly once and the only wide shuffle
-    # carries (url, small arrays) — at 100 TB this avoids recomputing or
-    # caching the assignment stream for the iso/bg/count branches.
-    assigns = page_assignments(spark, pages, polygons)
+    return iso_rollup(page_assignments(spark, pages, polygons), census_long)
+
+
+def iso_rollup(assigns: DataFrame, census_long: DataFrame) -> DataFrame:
+    """The flagship's rollup of (url, poly_id, GEOID, kind,
+    travel_time_minutes) assignments; a page counts for an isochrone only
+    if it also falls in some block group.
+
+    One consumer chain, so nothing is persisted: the per-url agg (map-side
+    combined, the only shuffle carrying urls) collects each page's
+    isochrones and block groups, so the PIP join runs exactly once. Each
+    (url, iso) row then posexplodes its block groups; exactly one of them
+    has pos 0, so summing ``count_if(pos = 0)`` over an isochrone's
+    (iso, bg) groups counts its pages. The pivot has one row per geoid, so
+    after the left join ``count(*)`` counts distinct block groups.
+    """
+    iso = F.when(F.col("kind") == "isochrone", F.struct("poly_id", "travel_time_minutes"))
+    bg = F.when(F.col("kind") == "blockgroup", F.col("GEOID"))
     per_url = (
         assigns.groupBy("url")
-        .agg(
-            F.collect_set(
-                F.when(
-                    F.col("kind") == "isochrone",
-                    F.struct("poly_id", "travel_time_minutes"),
-                )
-            ).alias("isos"),
-            F.collect_set(
-                F.when(F.col("kind") == "blockgroup", F.col("GEOID"))
-            ).alias("bgs"),
-        )
+        .agg(F.collect_set(iso).alias("isos"), F.collect_set(bg).alias("bgs"))
         .filter((F.size("isos") > 0) & (F.size("bgs") > 0))
-        # two consumers (pair explosion + page counts) with different column
-        # prunings defeat ReuseExchange, which would re-run the PIP join.
-        # per_url is the matched-page aggregate — the same intermediate the
-        # staged production pipeline materializes as a lineage-checkpointed
-        # table between stage 1 (assign) and stage 2 (aggregate); persist()
-        # is its single-job analog. Spill-safe (MEMORY_AND_DISK default).
-        .persist()
     )
-    iso_pairs = per_url.select("url", F.explode("isos").alias("iso"), "bgs")
-    # per_url holds exactly one row per url, so after the iso explode each
-    # (url, iso) pair is already unique: n_pages is a plain map-side-
-    # combinable count — no countDistinct expand, one less wide shuffle
-    page_counts = iso_pairs.groupBy(F.col("iso.poly_id").alias("iso_id")).agg(
-        F.count("*").alias("n_pages")
-    )
-    pairs = iso_pairs.select(
-        "url",
+    pairs = per_url.select(F.explode("isos").alias("iso"), "bgs").select(
         F.col("iso.poly_id").alias("iso_id"),
         F.col("iso.travel_time_minutes").alias("travel_time_minutes"),
-        F.explode("bgs").alias("bg_geoid"),
+        F.posexplode("bgs").alias("pos", "bg_geoid"),
     )
-    iso_bgs = pairs.select("iso_id", "travel_time_minutes", "bg_geoid").distinct()
-
+    iso_bgs = pairs.groupBy("iso_id", "travel_time_minutes", "bg_geoid").agg(
+        F.count_if(F.col("pos") == 0).alias("n_first")
+    )
     wide = pivot_census(census_long)
     joined = iso_bgs.join(wide, iso_bgs["bg_geoid"] == wide["geoid"], "left")
-    from socialmapper_spark.operators.census import dmean, dsum
-
-    per_iso = joined.groupBy("iso_id", "travel_time_minutes").agg(
-        F.countDistinct("bg_geoid").alias("n_block_groups"),
-        dsum("B01003_001E").alias("total_population"),
-        dmean("B19013_001E").alias("median_household_income"),
-    )
     return (
-        per_iso.join(page_counts, "iso_id")
-        .select(
-            "iso_id",
-            "travel_time_minutes",
-            "n_pages",
-            "n_block_groups",
-            "total_population",
-            "median_household_income",
+        joined.groupBy("iso_id", "travel_time_minutes")
+        .agg(
+            F.sum("n_first").alias("n_pages"),
+            F.count("*").alias("n_block_groups"),
+            dsum("B01003_001E").alias("total_population"),
+            dmean("B19013_001E").alias("median_household_income"),
         )
         .orderBy("iso_id")
     )

@@ -10,7 +10,12 @@ from socialmapper_spark.operators.census import (
 )
 from socialmapper_spark.operators.knn import knn_join
 from socialmapper_spark.operators.spatial_join import prepare_polygons, spatial_join
-from socialmapper_spark.pipeline import flagship_query, geoparse_pages, page_assignments
+from socialmapper_spark.pipeline import (
+    flagship_query,
+    geoparse_pages,
+    iso_rollup,
+    page_assignments,
+)
 
 
 @pytest.fixture(scope="module")
@@ -119,6 +124,55 @@ def test_flagship_query(spark, tables):
         assert r["n_pages"] > 0
         assert r["total_population"] is not None and r["total_population"] > 0
         assert 30000.0 <= r["median_household_income"] <= 120000.0
+
+
+def test_flagship_plan_parses_once_and_caches_nothing(spark, tables):
+    """The coordinate regex appears once per capture group in the
+    optimized plan (pushed-down filters used to copy it into every
+    FilterExec), and the rollup persists nothing, so a call leaves the
+    session's CacheManager as it found it."""
+    spark.catalog.clearCache()
+    df = flagship_query(spark, tables["pages"], tables["polygons"], tables["census_long"])
+    qe = df._jdf.queryExecution()
+    assert qe.optimizedPlan().toString().count("regexp_extract(") == 2
+    assert "InMemoryTableScan" not in qe.executedPlan().toString()
+    df.collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_iso_rollup_hand_count(spark):
+    """u1 lies in two isochrones and three block groups, g1 is shared by
+    u1 and u2, u3 has an isochrone but no block group (so it counts
+    nowhere), and g3 has no census rows (it still counts as a block
+    group, with no population)."""
+    assigns = spark.createDataFrame(
+        [
+            ("u1", "iso_a", None, "isochrone", 10),
+            ("u1", "iso_b", None, "isochrone", 20),
+            ("u1", "bg1", "g1", "blockgroup", None),
+            ("u1", "bg2", "g2", "blockgroup", None),
+            ("u1", "bg3", "g3", "blockgroup", None),
+            ("u2", "iso_a", None, "isochrone", 10),
+            ("u2", "bg1", "g1", "blockgroup", None),
+            ("u3", "iso_b", None, "isochrone", 20),
+            ("u4", "bg2", "g2", "blockgroup", None),
+        ],
+        "url string, poly_id string, GEOID string, kind string, travel_time_minutes int",
+    )
+    census = spark.createDataFrame(
+        [
+            ("g1", "B01003_001E", 100.0),
+            ("g1", "B19013_001E", 50000.0),
+            ("g2", "B01003_001E", 200.0),
+            ("g2", "B19013_001E", 70000.0),
+        ],
+        "geoid string, variable_code string, value double",
+    )
+    got = [tuple(r) for r in iso_rollup(assigns, census).collect()]
+    assert got == [
+        ("iso_a", 10, 2, 3, 300.0, 60000.0),
+        ("iso_b", 20, 1, 3, 300.0, 60000.0),
+    ]
 
 
 def test_spatial_join_plan_shape(spark, tables):

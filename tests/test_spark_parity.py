@@ -75,3 +75,30 @@ def test_geoparse_golden_partition_invariance(spark, geo_small):
         (r["url"], r["lat"], r["lon"], tuple(r["mentions"])) for r in golden.collect()
     )
     assert a == g
+
+
+def test_geoparse_pages_filtered_matches_py(spark):
+    """The production path (regex once behind a Generate, then the
+    ``lat IS NOT NULL`` filter every PIP entry applies) equals the Python
+    twin row for row on the sf0.01 pages."""
+    import pyarrow.parquet as pq
+
+    from socialmapper_spark.fixtures import geo_dir_for
+    from socialmapper_spark.pipeline import geoparse_pages
+
+    path = f"{geo_dir_for('sf0.01')}/pages.parquet"
+    got = sorted(
+        (r["url"], r["lat"], r["lon"], tuple(r["mentions"]))
+        for r in geoparse_pages(spark.read.parquet(path))
+        .filter(F.col("lat").isNotNull())
+        .select("url", "lat", "lon", "mentions")
+        .collect()
+    )
+    t = pq.read_table(path, columns=["url", "text"]).to_pydict()
+    exp = sorted(
+        (url, lat, lon, tuple(m))
+        for url, (lat, lon, m) in zip(t["url"], map(geoparse_py, t["text"]))
+        if lat is not None
+    )
+    assert len(exp) > 40000
+    assert got == exp
