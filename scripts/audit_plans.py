@@ -66,17 +66,17 @@ WHITELIST: dict[str, tuple[set[str], str]] = {
                               "applyInPandasWithState stateful sessions"),
     # brute-force kNN parity path: BROADCAST nested-loop (bounded small
     # side), kept as the exactness oracle for the k-ring strategy; the
-    # ArrowEvalPython is the vectorized EPSG:5070 Albers transform
-    # (knn.py:50 — pandas_udf struct<x,y>), POI/page-batch-sized
+    # ArrowEvalPython is the probe side's Albers projection (knn.py
+    # _albers_udf) over an AQE-coalesced shuffle; POIs project on the driver
     "knn_nearest": ({"BroadcastNestedLoopJoin", "ArrowEvalPython"},
-                    "broadcast brute-force parity path + Albers UDF"),
+                    "broadcast brute-force parity path + probe-side Albers UDF"),
     "knn_topk": ({"BroadcastNestedLoopJoin", "ArrowEvalPython"},
-                 "broadcast brute-force top-k parity path + Albers UDF"),
+                 "broadcast brute-force top-k parity path + probe-side Albers UDF"),
     "knn_kring": ({"BroadcastNestedLoopJoin", "ArrowEvalPython"},
-                  "Albers UDF + exactness-preserving brute-force fallback "
+                  "probe-side Albers UDF + exactness-preserving brute-force fallback "
                   "(broadcast candidates; strategy='auto' caps the POI side)"),
     "centroid_nearest_poi": ({"BroadcastNestedLoopJoin", "ArrowEvalPython"},
-                             "centroid UDF + broadcast nearest join"),
+                             "centroid UDF + probe-side Albers UDF + broadcast join"),
     "cluster_metrics": ({"BroadcastNestedLoopJoin"},
                         "one-row bounds frame broadcast-crossed"),
     "equal_interval_bins": ({"BroadcastNestedLoopJoin"},
@@ -95,7 +95,7 @@ WHITELIST: dict[str, tuple[set[str], str]] = {
                            "on the LM branch (operators/lm.py)"),
     # composites built on knn_join inherit its Albers/parity nodes
     "dedup_units": ({"ArrowEvalPython", "BroadcastNestedLoopJoin"},
-                    "kNN Albers/parity upstream"),
+                    "kNN probe-side Albers/parity upstream"),
     # ANN family: vectorized hyperplane/IVF assignment pandas_udfs
     # (similarity.py:383,482,759 — embedding-batch Arrow kernels) and the
     # shared per-partition top-k HEAP kernel for the _many forms

@@ -10,7 +10,7 @@ whose lineage rows committed before the crash:
                  lineage table holding exactly fail_after*chunk_size
                  committed buckets.
   phase resume — fresh JVM: the same stage with no failure; the
-                 lineage anti-join schedules ONLY the never-committed
+                 lineage filter schedules ONLY the never-committed
                  buckets; then verifies every bucket checksum and runs
                  the stage-2 rollup off the checkpointed table.
 
@@ -121,8 +121,8 @@ def main() -> None:
         "note": (
             "driver killed by injected failure after 2 committed chunks "
             "(8 buckets each) of the sf0.1 flagship assignment stage; the "
-            "fresh-JVM rerun anti-joins the lineage table and recomputes "
-            "only the never-committed buckets, then every bucket checksum "
+            "fresh-JVM rerun reads the committed bucket ids from the lineage "
+            "table and recomputes only the others, then every bucket checksum "
             "verifies against the lineage rows."
         ),
     }

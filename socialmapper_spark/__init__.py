@@ -23,9 +23,9 @@ explicit skew salting, and Iceberg-or-parquet table IO.
 Architecture is Spark-first: DataFrame/SQL plans optimized by Catalyst,
 pure column expressions on the hot path (cell encode, haversine, geoparse
 regex, sentinel cleansing and the exact polygon refine — ``pip_refine_expr``
-— are all JVM-side), and vectorized Arrow/pandas UDFs only where built-ins
-cannot express the semantics (polygon-table geometry prep, Albers
-projection). Zero per-row Python.
+— are all JVM-side), static sides (polygon index, kNN POIs) built once on
+the driver as local tables, and Arrow UDFs only where built-ins cannot
+express the semantics (probe-side Albers projection). Zero per-row Python.
 
 No third-party geo libraries are required: the container lacks h3 /
 shapely / pyproj, so `socialmapper_spark.geo` implements a deterministic

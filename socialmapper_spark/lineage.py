@@ -4,8 +4,9 @@ Absent in the reference (single machine, SQLite caches —
 /root/reference/socialmapper/isochrone/cache.py is the closest analog);
 required here: every stage emits per-bucket lineage rows
 (stage, bucket, cell_min, cell_max, row_count, checksum, status) to a
-checkpoint table, and a restarted job anti-joins committed buckets so
-failed stages resume without recompute.
+checkpoint table, and a restarted job filters out the committed buckets
+(their ids read on the driver from that table) so failed stages resume
+without recompute.
 
 Buckets are deterministic functions of the data (``pmod(xxhash64(key),
 n_buckets)`` or a cell prefix), NOT Spark partition ids — task placement
@@ -23,6 +24,8 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from socialmapper_spark.session import local_frame
 
 LINEAGE_SCHEMA = (
     "stage string, bucket int, cell_min long, cell_max long, "
@@ -107,22 +110,21 @@ def completed_buckets(spark: SparkSession, lineage_path: str, stage: str) -> Dat
     return spark.range(0).select(F.col("id").cast("int").alias("bucket"))
 
 
-def pending_rows(
-    spark: SparkSession,
-    df: DataFrame,
-    stage: str,
-    key_col: str,
-    lineage_path: str,
-    n_buckets: int = 32,
-) -> DataFrame:
-    """``df`` bucketed by ``key_col``, minus the buckets the lineage
-    table records as committed for ``stage``. A fresh stage (no lineage
-    table yet) has nothing to subtract, so its plan carries no anti-join
-    and no extra shuffle."""
+def pending_buckets(spark: SparkSession, lineage_path: str, stage: str, n_buckets: int) -> list[int]:
+    """``range(n_buckets)`` minus the buckets committed for ``stage``, read
+    on the driver from the one-row-per-bucket lineage table."""
+    done = set()
+    if os.path.exists(lineage_path):
+        done = {r["bucket"] for r in completed_buckets(spark, lineage_path, stage).collect()}
+    return [b for b in range(n_buckets) if b not in done]
+
+
+def pending_rows(df: DataFrame, key_col: str, n_buckets: int, pending: list[int]) -> DataFrame:
+    """``df`` bucketed by ``key_col``, filtered to the ``pending`` bucket
+    ids (:func:`pending_buckets`; no join, and no filter when every
+    bucket is pending)."""
     bucketed = with_bucket(df, key_col, n_buckets)
-    if not os.path.exists(lineage_path):
-        return bucketed
-    return bucketed.join(completed_buckets(spark, lineage_path, stage), "bucket", "left_anti")
+    return bucketed if len(pending) == n_buckets else bucketed.filter(F.col("bucket").isin(pending))
 
 
 def run_stage_with_lineage(
@@ -141,64 +143,68 @@ def run_stage_with_lineage(
     """Execute a stage resumably.
 
     1. bucket the output by ``key_col``
-    2. drop the buckets already committed (:func:`pending_rows`): the
-       anti-join against the lineage table runs only when that table
-       exists, so a fresh stage writes every bucket without it
-    3. write the remaining buckets (parquet, partitioned by bucket —
-       a crashed write leaves partial bucket dirs that are simply
-       overwritten on retry because commit happens per bucket AFTER
-       the data lands)
-    4. append per-bucket lineage rows
+    2. keep the pending buckets (:func:`pending_buckets`: no pass over
+       the data; nothing to filter on a fresh stage)
+    3. write them (parquet, partitioned by bucket — a crashed write
+       leaves partial bucket dirs that are simply overwritten on retry
+       because commit happens per bucket AFTER the data lands)
+    4. collect per-bucket stats from the data as written, append them
+       as lineage rows
 
     ``chunk_size`` sets the COMMIT GRANULARITY: with it, pending buckets
     land and their lineage rows commit in chunks of that many buckets,
     so a mid-job crash loses at most one in-flight chunk instead of the
     whole stage — the recompute window a 1000-executor job wants bounded.
-    The bucketed frame is persisted for the chunk loop (one upstream
-    pass, each chunk reads the cache) and released before returning.
-    ``fail_after_chunks`` is the failure-injection hook for resume
-    drills/tests: raises after that many chunks have committed.
+    With more than one chunk the bucketed frame is persisted for the
+    chunk loop (one upstream pass, each chunk reads the cache) and
+    released before returning; one pass over that cache drops the
+    pending buckets that hold no rows, so chunks of empty buckets are
+    never written (a bucket that lands no rows commits no lineage row
+    and stays pending). ``fail_after_chunks`` is the failure-injection
+    hook for resume drills/tests: raises after that many chunks have
+    committed.
 
-    Returns the number of buckets processed this run (0 = fully resumed).
+    Returns the number of buckets that landed rows (0 = fully resumed).
     """
-    todo = pending_rows(spark, df, stage, key_col, lineage_path, n_buckets)
-    if chunk_size:
+    pending = pending_buckets(spark, lineage_path, stage, n_buckets)
+    if not pending:
+        return 0
+    todo = pending_rows(df, key_col, n_buckets, pending)
+    cached = chunk_size is not None and len(pending) > chunk_size
+    if cached:
         todo = todo.persist()
-
+    landed = 0
     try:
-        # short-circuit: nothing to do
-        pending = todo.select("bucket").distinct().collect()
-        if not pending:
-            return 0
-
-        pending_ids = sorted(r["bucket"] for r in pending)
-        step = chunk_size or len(pending_ids)
-        chunks = [
-            pending_ids[i : i + step] for i in range(0, len(pending_ids), step)
-        ]
+        if cached:
+            pending = sorted(r["bucket"] for r in todo.select("bucket").distinct().collect())
+        step = chunk_size or len(pending)
+        chunks = [pending[i : i + step] for i in range(0, len(pending), step)]
         for ci, chunk in enumerate(chunks):
             if fail_after_chunks is not None and ci >= fail_after_chunks:
                 raise RuntimeError(
                     f"injected failure after {ci} committed chunks "
                     f"({ci * step} buckets)"
                 )
-            part = todo.filter(F.col("bucket").isin(chunk))
+            part = todo.filter(F.col("bucket").isin(chunk)) if cached else todo
             (
                 part.write.mode("overwrite")
                 .partitionBy("bucket")
                 .option("partitionOverwriteMode", "dynamic")
                 .parquet(out_path)
             )
-            # recompute stats from the data as written (what landed is
-            # what is certified, not what we intended to write)
-            written = spark.read.parquet(out_path).filter(
+            # certify what landed, not what we meant to write; the given
+            # schema reads a chunk that landed no rows as empty
+            written = spark.read.schema(todo.schema).parquet(out_path).filter(
                 F.col("bucket").isin(chunk)
             )
-            stats = bucket_stats(written, stage, checksum_cols, cell_col)
-            stats.write.mode("append").parquet(lineage_path)
-        return len(pending_ids)
+            stats = bucket_stats(written, stage, checksum_cols, cell_col).collect()
+            if stats:  # a chunk that landed no rows commits nothing
+                rows = local_frame(spark, list(map(tuple, stats)), LINEAGE_SCHEMA)
+                rows.write.mode("append").parquet(lineage_path)
+            landed += len(stats)
+        return landed
     finally:
-        if chunk_size:
+        if cached:
             todo.unpersist()
 
 
@@ -217,8 +223,9 @@ def verify_lineage(
         .select("bucket", "row_count", "checksum")
         .dropDuplicates(["bucket"])
     )
-    # lineage tables are tiny (one row per bucket); compare driver-side —
-    # also sidesteps a Spark 4.1 exceptAll-over-aggregate binding bug
-    fa = {(r["bucket"], r["row_count"], r["checksum"]) for r in fresh.collect()}
-    fb = {(r["bucket"], r["row_count"], r["checksum"]) for r in recorded.collect()}
-    return fa == fb
+    # one query: a bucket mismatches when its row count or checksum
+    # differ or only one side has it (exceptAll would trip a Spark 4.1
+    # binding bug over the aggregate)
+    f, r = fresh.alias("f"), recorded.alias("r")
+    same = F.struct("f.row_count", "f.checksum").eqNullSafe(F.struct("r.row_count", "r.checksum"))
+    return f.join(r, "bucket", "full").filter(~same).isEmpty()

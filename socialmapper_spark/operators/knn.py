@@ -15,24 +15,28 @@ Two strategies, same results (tested equal):
   the parity baseline.
 - ``strategy="kring"`` — scale path for large POI sets: POIs are
   expanded *inside the plan* into all cells within RING k of their own
-  cell (pure-Catalyst ``grid_disk_col`` explode — no driver loop, so a
-  million-POI table expands distributed); points equi-join that
+  cell (pure-Catalyst ``grid_disk_col`` explode over the POI table's
+  local scan — no driver loop over |POIs|·rings²); points equi-join that
   broadcast (cell → poi) table, compute exact distances on candidates
   only, take per-point top-k. Points with no candidate in k rings fall
   back to the broadcast path (exactness is never sacrificed — the ring
   prune is an optimization, not an approximation).
 
-Both sides' Albers (x, y) are computed by the same vectorized Arrow UDF
-(the only Python in this operator) — one definition, applied in-plan, so
-no coordinate ever round-trips through the driver. The only driver-side
-work is a one-row stats aggregate over the (small) POI table that sizes
-the ring radius.
+The POI side is prepared once on the driver when ``knn_join`` is called:
+a ``toArrow`` collect of (id, lat, lon), the Albers (x, y) and the ring
+stats in numpy, returned as a JVM ``LocalTableScan`` (every strategy
+broadcasts it anyway). The page side runs the same numpy call in-plan as
+an Arrow UDF, the only Python here, after a shuffle on the point id, so
+AQE sizes its tasks by the ~24 B per row it projects, not by the pages'
+splits. Tasks, not rows, are what a Python stage costs: pyspark's per-task
+setup re-reads every cached zip importer's directory (~98% of a small task).
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
@@ -57,16 +61,28 @@ def _albers_udf():
     return project
 
 
-def _poi_stats(poi_sdf: DataFrame) -> tuple[int, float, float]:
-    """One-row aggregate over the (small) POI side: count, bbox area in
-    km², mean |lat|. The only POI information that ever reaches the
-    driver — used to size the ring radius, never the geometry itself."""
-    r = poi_sdf.agg(
-        F.count("*").alias("n"),
-        ((F.max("poi_x") - F.min("poi_x")) * (F.max("poi_y") - F.min("poi_y")) / 1e6).alias("area"),
-        F.avg(F.abs("__poi_lat")).alias("alat"),
-    ).collect()[0]
-    return int(r["n"]), max(float(r["area"] or 0.0), 1.0), float(r["alat"] or 0.0)
+def _poi_side(spark: SparkSession, pois: DataFrame) -> tuple[DataFrame, int, float, float]:
+    """The POI side (poi_id, poi_x, poi_y, __poi_lat, __poi_lon) projected
+    on the driver as a local table, and its count, bbox area in km² and
+    mean |lat|. POIs with a NULL or non-finite coordinate are dropped: a
+    NaN x/y reaches Arrow as NULL and would sort first in every min(struct)."""
+    table = pois.select(
+        F.col("id").alias("poi_id"), F.col("lat").cast("double"), F.col("lon").cast("double")
+    ).toArrow()
+    lat = table.column("lat").to_numpy(zero_copy_only=False)
+    lon = table.column("lon").to_numpy(zero_copy_only=False)
+    keep = np.isfinite(lat) & np.isfinite(lon)
+    lat, lon = lat[keep], lon[keep]
+    x, y = albers5070_forward(lat, lon)
+    n = len(lat)
+    area = float(np.ptp(x) * np.ptp(y) / 1e6) if n else 0.0
+    alat = float(np.abs(lat).mean()) if n else 0.0
+    ids = table.column("poi_id").filter(pa.array(keep))
+    side = pa.table({"poi_id": ids, "poi_x": x, "poi_y": y, "__poi_lat": lat, "__poi_lon": lon})
+    schema = f"poi_id {pois.schema['id'].dataType.simpleString()}, " + ", ".join(
+        f"{c} double" for c in side.column_names[1:]
+    )
+    return spark.createDataFrame(side, schema), n, max(area, 1.0), alat
 
 
 def _auto_rings(n: int, area_km2: float, mean_abs_lat: float, k: int) -> int:
@@ -75,7 +91,7 @@ def _auto_rings(n: int, area_km2: float, mean_abs_lat: float, k: int) -> int:
     forces them and the prune buys nothing). Target reach ≈ 2× the radius
     of a circle expected to contain k POIs at the observed density; capped
     so the broadcast (cell → poi) table stays small."""
-    density = n / area_km2  # pois per km²
+    density = max(n, 1) / area_km2  # pois per km²; an empty side sizes as one
     target_reach_km = 2.0 * float(np.sqrt(k / (np.pi * density)))
     edge_km = (
         cell_size_deg(KNN_RES) * 110.57 * float(np.cos(np.deg2rad(mean_abs_lat)))
@@ -105,39 +121,18 @@ def knn_join(
     """Per-point k nearest POIs.
 
     Output: id_col, poi_id, distance_km, distance_miles, knn_rank
-    (k=1 callers usually drop knn_rank). NULL-coordinate points drop out.
+    (k=1 callers usually drop knn_rank). NULL-coordinate points drop out;
+    POIs with a NULL or non-finite lat/lon are dropped on the driver,
+    before the projection and the ring sizing. The call runs one job,
+    the POI side's ``toArrow`` collect.
 
     ``strategy="auto"`` picks broadcast for POI sets up to
     AUTO_BROADCAST_MAX_POIS (the crossJoin+min(struct) plan beats the
     ring machinery when |POIs| candidates per point is already cheap) and
     the k-ring prune beyond that.
     """
-    proj = _albers_udf()
-    poi_sdf = (
-        pois.select(
-            F.col("id").alias("poi_id"),
-            F.col("lat").alias("__poi_lat"),
-            F.col("lon").alias("__poi_lon"),
-        )
-        .withColumn("__pxy", proj(F.col("__poi_lat"), F.col("__poi_lon")))
-        .select(
-            "poi_id",
-            F.col("__pxy.x").alias("poi_x"),
-            F.col("__pxy.y").alias("poi_y"),
-            "__poi_lat",
-            "__poi_lon",
-        )
-    )
-    n_pois = area_km2 = mean_abs_lat = None
-    if strategy in ("auto", "kring"):
-        # the kring path consumes poi_sdf at least twice (ring explode +
-        # fallback broadcast, plus the stats agg when rings is auto) —
-        # persist so the POI scan + Arrow projection run once
-        poi_sdf = poi_sdf.persist()
+    poi_sdf, n_pois, area_km2, mean_abs_lat = _poi_side(spark, pois)
     poi_xy = poi_sdf.select("poi_id", "poi_x", "poi_y")
-    if strategy == "auto" or (strategy == "kring" and rings is None):
-        # the one driver-side action on the POI side: a 1-row stats agg
-        n_pois, area_km2, mean_abs_lat = _poi_stats(poi_sdf)
     if strategy == "auto":
         strategy = "broadcast" if n_pois <= AUTO_BROADCAST_MAX_POIS else "kring"
     if strategy == "kring" and rings is None:
@@ -166,10 +161,12 @@ def knn_join(
     # prune to the three columns the join needs BEFORE the Arrow
     # projection: the probe side often carries wide payload columns
     # (mentions arrays, text) that would otherwise ride through the
-    # UDF, the persist, and every shuffle of the kring machinery
+    # UDF and every shuffle of the kring machinery. The repartition sizes
+    # the UDF's tasks by these bytes; the groupBy keeps its own exchange
+    # (Spark cannot see partitioning through the UDF)
     pts = points.filter(F.col(lat).isNotNull() & F.col(lon).isNotNull()).select(
         id_col, lat, lon
-    )
+    ).repartition(id_col)
     pts = pts.withColumn("__xy", _albers_udf()(F.col(lat), F.col(lon)))
     pts = pts.withColumn("__x", F.col("__xy.x")).withColumn("__y", F.col("__xy.y"))
 
@@ -226,20 +223,15 @@ def knn_join(
         return out.select(*cols)
 
     if strategy == "broadcast":
-        out = finish(pts.crossJoin(F.broadcast(poi_xy)))
-        if poi_sdf.is_cached:  # auto/degraded entry persisted the POI side
-            out.__spark_graft_caches__ = [poi_sdf]
-        return out
+        return finish(pts.crossJoin(F.broadcast(poi_xy)))
 
     if strategy != "kring":
         raise ValueError(f"unknown strategy {strategy!r}")
 
     # --- k-ring candidate prune -------------------------------------------
-    if rings is None:
-        rings = _auto_rings(n_pois, area_km2, mean_abs_lat, k)
     # expand each POI into its ring disk *inside the plan*: pure-Catalyst
-    # array build + explode, distributed over the POI table's partitions —
-    # no driver loop proportional to |POIs|·rings²
+    # array build + explode over the local POI table — no driver loop
+    # proportional to |POIs|·rings²
     cells_df = poi_sdf.withColumn(
         "__pcell", cell_col(F.col("__poi_lat"), F.col("__poi_lon"), KNN_RES)
     ).select(
@@ -311,8 +303,8 @@ def knn_join(
         fb_pts = missing
     fallback = finish(fb_pts.crossJoin(F.broadcast(poi_xy)))
     out = covered.unionByName(fallback)
-    # the persists above are consumed lazily by this returned plan, so the
-    # operator cannot unpersist them itself; hand the caller the handles
+    # the persist above is consumed lazily by this returned plan, so the
+    # operator cannot unpersist it itself; hand the caller the handle
     # (session.release_caches) for release after its terminal action
-    out.__spark_graft_caches__ = [poi_sdf, near]
+    out.__spark_graft_caches__ = [near]
     return out

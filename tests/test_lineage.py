@@ -1,12 +1,14 @@
 """Lineage emission + checkpoint resume (SURVEY.md §7.1 M5)."""
 
 import pathlib
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
 from socialmapper_spark.lineage import (
     completed_buckets,
+    pending_buckets,
     pending_rows,
     run_stage_with_lineage,
     verify_lineage,
@@ -107,7 +109,7 @@ def test_checksum_partition_invariance(spark, workdir):
 def test_chunked_commit_resume_skips_committed_buckets(spark, tmp_path):
     """r5: chunked commit granularity — a crash after k committed chunks
     loses only the in-flight chunk; the rerun recomputes exactly the
-    never-committed buckets (lineage anti-join), and verify passes."""
+    never-committed buckets (lineage filter), and verify passes."""
     import pytest
 
     from socialmapper_spark.lineage import run_stage_with_lineage, verify_lineage
@@ -153,16 +155,62 @@ def test_completed_buckets_without_table_is_jvm_empty(spark, tmp_path):
 
 def test_fresh_stage_plan_has_no_anti_join(spark, workdir):
     """A stage with no lineage table yet writes its bucketed frame as is;
-    once the table exists, the resume anti-join is back in the plan."""
+    once buckets are committed, the frame ``run_stage_with_lineage``
+    writes is a filter on the pending bucket ids (read on the driver),
+    not a join against the table."""
     df = _source(spark)
     out, lin = str(workdir / "out"), str(workdir / "lineage")
-    fresh = pending_rows(spark, df, "geoparse", "url", lin, n_buckets=8)
+    fresh = pending_rows(df, "url", 8, pending_buckets(spark, lin, "geoparse", 8))
     assert "LeftAnti" not in _plan(fresh)
     assert "ExistingRDD" not in _plan(fresh)
     assert fresh.count() == df.count()
+    part = with_bucket(df, "url", 8).filter(F.col("bucket") < 3).drop("bucket")
     run_stage_with_lineage(
-        spark, df, "geoparse", "url", ["url", "cell_r7"], out, lin, n_buckets=8,
+        spark, part, "geoparse", "url", ["url", "cell_r7"], out, lin, n_buckets=8,
     )
-    resumed = pending_rows(spark, df, "geoparse", "url", lin, n_buckets=8)
-    assert "LeftAnti" in _plan(resumed)
-    assert resumed.count() == 0
+    resumed = pending_rows(df, "url", 8, pending_buckets(spark, lin, "geoparse", 8))
+    plan = _plan(resumed)
+    assert "Join" not in plan
+    assert re.search(r"Filter .*pmod\(xxhash64\(url.* IN \(3,4,5,6,7\)", plan), plan
+    assert resumed.count() == with_bucket(df, "url", 8).filter(F.col("bucket") >= 3).count()
+
+
+def test_chunked_rerun_over_empty_buckets_writes_no_chunk(spark, workdir):
+    """Buckets that receive no rows commit nothing and stay pending; a
+    chunked rerun of the finished stage drops them in its pass over the
+    cache, so it writes no chunk (one would raise through
+    ``fail_after_chunks=0``) and the output still verifies."""
+    df = _source(spark).orderBy("url").limit(10)
+    out, lin = str(workdir / "out"), str(workdir / "lineage")
+    args = dict(n_buckets=64, chunk_size=8)
+    n1 = run_stage_with_lineage(spark, df, "sparse", "url", ["url"], out, lin, **args)
+    assert 0 < n1 <= 10
+    assert len(pending_buckets(spark, lin, "sparse", 64)) == 64 - n1 > 8
+    assert run_stage_with_lineage(spark, df, "sparse", "url", ["url"], out, lin,
+                                  fail_after_chunks=0, **args) == 0
+    assert verify_lineage(spark, out, lin, "sparse", ["url"])
+    assert spark.read.parquet(out).count() == 10
+
+
+def test_verify_lineage_flags_tampered_output(spark, workdir):
+    """verify_lineage is false when a bucket's rows change or a committed
+    bucket is missing from the output."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    df = _source(spark)
+    out, lin = str(workdir / "out"), str(workdir / "lineage")
+    args = ("geoparse", ["url", "cell_r7"], "cell_r7")
+    run_stage_with_lineage(spark, df, "geoparse", "url", ["url", "cell_r7"], out, lin,
+                           n_buckets=8, cell_col="cell_r7")
+    assert verify_lineage(spark, out, lin, *args)
+    one = pathlib.Path(out) / "bucket=1"
+    table = pa.concat_tables([pq.read_table(f) for f in sorted(one.glob("*.parquet"))])
+    shutil.rmtree(one)
+    one.mkdir()
+    pq.write_table(table.slice(1), one / "part-0.parquet")
+    assert not verify_lineage(spark, out, lin, *args)
+    shutil.rmtree(one)
+    assert not verify_lineage(spark, out, lin, *args)

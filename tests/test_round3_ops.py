@@ -255,11 +255,12 @@ def test_knn_kring_caches_released_via_helper(spark, geo_small):
     probes = geoparse_pages(pages).filter(F.col("lat").isNotNull()).limit(100)
     out = knn_join(spark, probes, pois, k=1, strategy="kring", rings=3)
     assert out.count() == 100
-    # two persists: POI side + the pruned per-point top-k (`near`); the
-    # probe side is single-consumer since the LEFT candidate join rework
+    # one persist: the pruned per-point top-k (`near`); the POI side is a
+    # driver-built local table, and the probe side is single-consumer
+    # since the LEFT candidate join rework
     handles = getattr(out, "__spark_graft_caches__", [])
-    assert len(handles) == 2 and all(h.is_cached for h in handles)
-    assert release_caches(out) == 2
+    assert len(handles) == 1 and all(h.is_cached for h in handles)
+    assert release_caches(out) == 1
     assert not any(h.is_cached for h in handles)
     assert release_caches(probes) == 0  # frames without handles are no-ops
 

@@ -7,6 +7,8 @@ the cover wraps the polygon rather than its bbox, with no false
 negatives, the same per polygon as over a whole table.
 """
 
+import re
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -341,6 +343,119 @@ def test_knn_kring_plan_stays_in_plan(spark, geo_small):
     assert "Generate explode" in plan  # the in-plan grid_disk expansion
 
 
+def _walk(spark, node, seen=None):
+    """Every node of an executed plan, through AQE final plans and query
+    stages, visiting each cached relation's plan once."""
+    seen = set() if seen is None else seen
+    yield node
+    kind = node.getClass().getSimpleName()
+    if kind == "AdaptiveSparkPlanExec":
+        kids = [node.executedPlan()]
+    elif kind.endswith("QueryStageExec"):
+        kids = [node.plan()]
+    elif kind == "InMemoryTableScanExec":
+        cached = node.relation().cachedPlan()
+        key = spark._jvm.java.lang.System.identityHashCode(cached)
+        kids = [] if key in seen else [cached]
+        seen.add(key)
+    else:
+        kids = [node.children().apply(i) for i in range(node.children().size())]
+    for kid in kids:
+        yield from _walk(spark, kid, seen)
+
+
+def _kind(node):
+    return node.getClass().getSimpleName()
+
+
+@pytest.mark.parametrize("strategy,rings", [("broadcast", None), ("kring", 4)])
+def test_knn_python_stage_reads_one_coalesced_shuffle(spark, geo_small, strategy, rings):
+    """The kNN plan has one Arrow UDF (the page side's Albers projection),
+    fed by an AQE-coalesced read of a repartition on the point id, so
+    its task count follows the projected bytes, not the pages' splits.
+    The POI side is a local table (projected on the driver), never a
+    cached relation."""
+    from socialmapper_spark.operators.knn import knn_join
+    from socialmapper_spark.pipeline import geoparse_pages
+    from socialmapper_spark.session import release_caches
+
+    pages = spark.read.parquet(f"{geo_small}/pages.parquet")
+    pois = spark.read.parquet(f"{geo_small}/pois.parquet").filter(F.col("lat") <= 90)
+    out = knn_join(spark, geoparse_pages(pages), pois, k=1, strategy=strategy, rings=rings)
+    out.collect()
+    nodes = list(_walk(spark, out._jdf.queryExecution().executedPlan()))
+    release_caches(out)
+    udfs = [n for n in nodes if _kind(n) == "ArrowEvalPythonExec"]
+    assert len(udfs) == 1
+    read = udfs[0].child()
+    assert _kind(read) == "AQEShuffleReadExec"
+    exchange = read.child().plan()
+    assert _kind(exchange) == "ShuffleExchangeExec"
+    assert re.match(r"Exchange hashpartitioning\(url#\d+, \d+\), REPARTITION_BY_COL",
+                    exchange.simpleString(25))
+    broadcasts = [n for n in nodes if _kind(n) == "BroadcastExchangeExec"]
+    assert broadcasts
+    for b in broadcasts:
+        below = {_kind(n) for n in _walk(spark, b)}
+        assert "LocalTableScanExec" in below
+        assert "InMemoryTableScanExec" not in below
+
+
+def test_knn_driver_projection_matches_arrow_udf(spark):
+    """The driver-side POI projection equals the in-plan Arrow UDF's bit
+    for bit: the same numpy call on the same float64 values."""
+    from socialmapper_spark.fixtures import geo_dir_for
+    from socialmapper_spark.operators.knn import _albers_udf, _poi_side
+
+    pois = spark.read.parquet(f"{geo_dir_for('sf0.01')}/pois.parquet").filter(
+        F.col("lat") <= 90
+    )
+    side, n, _, _ = _poi_side(spark, pois)
+    driver = side.select("poi_id", "poi_x", "poi_y").toPandas().sort_values("poi_id")
+    udf = (
+        pois.select(F.col("id").alias("poi_id"), _albers_udf()(F.col("lat"), F.col("lon")).alias("xy"))
+        .select("poi_id", F.col("xy.x").alias("poi_x"), F.col("xy.y").alias("poi_y"))
+        .toPandas()
+        .sort_values("poi_id")
+    )
+    assert n == len(udf) == len(driver) > 0
+    assert list(driver["poi_id"]) == list(udf["poi_id"])
+    for c in ("poi_x", "poi_y"):
+        assert np.array_equal(
+            driver[c].to_numpy().view(np.int64), udf[c].to_numpy().view(np.int64)
+        )
+
+
+def test_knn_ignores_null_and_nan_pois(spark, geo_small):
+    """A POI with a NULL or NaN coordinate has no distance to anything;
+    it must not change any point's answer (a NaN x/y used to reach Arrow
+    as NULL and win every min(struct)), and a table of only such POIs
+    gives no rows."""
+    from socialmapper_spark.operators.knn import knn_join
+    from socialmapper_spark.pipeline import geoparse_pages
+    from socialmapper_spark.session import local_frame, release_caches
+
+    pages = geoparse_pages(spark.read.parquet(f"{geo_small}/pages.parquet"))
+    pois = spark.read.parquet(f"{geo_small}/pois.parquet").filter(F.col("lat") <= 90)
+    bad = local_frame(
+        spark,
+        [("nullpoi", None, None), ("nanpoi", float("nan"), -78.9)],
+        "id string, lat double, lon double",
+    )
+    dirty = pois.unionByName(bad, allowMissingColumns=True)
+    for strategy, rings in (("broadcast", None), ("kring", None), ("kring", 2)):
+        want = knn_join(spark, pages, pois, k=1, strategy=strategy, rings=rings)
+        got = knn_join(spark, pages, dirty, k=1, strategy=strategy, rings=rings)
+        rows = sorted(map(tuple, got.collect()))
+        assert rows == sorted(map(tuple, want.collect())) and len(rows) > 1000
+        release_caches(want)
+        release_caches(got)
+        # nothing valid left: no POI to be near (auto rings used to divide by 0)
+        none = knn_join(spark, pages, bad, k=1, strategy=strategy, rings=rings)
+        assert none.count() == 0
+        release_caches(none)
+
+
 def test_page_assignments_stream_equals_batch(spark, geo_small):
     """The batch assignment plan run on a pages stream (stream-static
     broadcast joins, append mode) must equal the batch run row-for-row,
@@ -363,7 +478,7 @@ def test_page_assignments_stream_equals_batch(spark, geo_small):
 def test_knn_kring_at_20k_pois_matches_broadcast(spark, geo_small):
     """The kring scale path must stay exact at a POI cardinality where
     the broadcast cross-join would be the wrong plan (20k POIs, generated
-    in-plan — no driver POI list ever exists)."""
+    in-plan)."""
     from socialmapper_spark.operators.knn import knn_join
     from socialmapper_spark.pipeline import geoparse_pages
 
