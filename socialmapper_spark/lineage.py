@@ -6,7 +6,10 @@ required here: every stage emits per-bucket lineage rows
 (stage, bucket, cell_min, cell_max, row_count, checksum, status) to a
 checkpoint table, and a restarted job filters out the committed buckets
 (their ids read on the driver from that table) so failed stages resume
-without recompute.
+without recompute. A stage's rows are rebalanced by bucket before the
+write, so each bucket lands as one file (AQE splits only a bucket larger
+than its advisory partition size), and each commit appends one lineage
+file.
 
 Buckets are deterministic functions of the data (``pmod(xxhash64(key),
 n_buckets)`` or a cell prefix), NOT Spark partition ids — task placement
@@ -101,7 +104,7 @@ def completed_buckets(spark: SparkSession, lineage_path: str, stage: str) -> Dat
     ``createDataFrame`` over an empty list would start a Python worker
     pool only to unpickle no rows."""
     if os.path.exists(lineage_path):
-        lin = spark.read.parquet(lineage_path)
+        lin = spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path)
         return (
             lin.filter((F.col("stage") == stage) & (F.col("status") == "committed"))
             .select("bucket")
@@ -147,9 +150,13 @@ def run_stage_with_lineage(
        the data; nothing to filter on a fresh stage)
     3. write them (parquet, partitioned by bucket — a crashed write
        leaves partial bucket dirs that are simply overwritten on retry
-       because commit happens per bucket AFTER the data lands)
+       because commit happens per bucket AFTER the data lands). The rows
+       are rebalanced by bucket first, so each bucket lands as one file,
+       not one per upstream task; AQE coalesces small buckets into few
+       write tasks and splits one larger than its advisory partition
+       size into files of about that size
     4. collect per-bucket stats from the data as written, append them
-       as lineage rows
+       as lineage rows (one file per commit)
 
     ``chunk_size`` sets the COMMIT GRANULARITY: with it, pending buckets
     land and their lineage rows commit in chunks of that many buckets,
@@ -187,7 +194,8 @@ def run_stage_with_lineage(
                 )
             part = todo.filter(F.col("bucket").isin(chunk)) if cached else todo
             (
-                part.write.mode("overwrite")
+                part.hint("rebalance", "bucket")
+                .write.mode("overwrite")
                 .partitionBy("bucket")
                 .option("partitionOverwriteMode", "dynamic")
                 .parquet(out_path)
@@ -200,7 +208,7 @@ def run_stage_with_lineage(
             stats = bucket_stats(written, stage, checksum_cols, cell_col).collect()
             if stats:  # a chunk that landed no rows commits nothing
                 rows = local_frame(spark, list(map(tuple, stats)), LINEAGE_SCHEMA)
-                rows.write.mode("append").parquet(lineage_path)
+                rows.coalesce(1).write.mode("append").parquet(lineage_path)
             landed += len(stats)
         return landed
     finally:
@@ -218,7 +226,7 @@ def verify_lineage(
         "bucket", "row_count", "checksum"
     )
     recorded = (
-        spark.read.parquet(lineage_path)
+        spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path)
         .filter((F.col("stage") == stage) & (F.col("status") == "committed"))
         .select("bucket", "row_count", "checksum")
         .dropDuplicates(["bucket"])

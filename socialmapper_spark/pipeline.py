@@ -96,7 +96,10 @@ def iso_rollup(assigns: DataFrame, census_long: DataFrame) -> DataFrame:
     (url, iso) row then posexplodes its block groups; exactly one of them
     has pos 0, so summing ``count_if(pos = 0)`` over an isochrone's
     (iso, bg) groups counts its pages. The pivot has one row per geoid, so
-    after the left join ``count(*)`` counts distinct block groups.
+    after the left join ``count(*)`` counts distinct block groups. The
+    result has one row per isochrone, so it is sorted in one partition: a
+    global ``orderBy`` would start a range-sampling job and a map stage of
+    its own.
     """
     iso = F.when(F.col("kind") == "isochrone", F.struct("poly_id", "travel_time_minutes"))
     bg = F.when(F.col("kind") == "blockgroup", F.col("GEOID"))
@@ -123,5 +126,6 @@ def iso_rollup(assigns: DataFrame, census_long: DataFrame) -> DataFrame:
             dsum("B01003_001E").alias("total_population"),
             dmean("B19013_001E").alias("median_household_income"),
         )
-        .orderBy("iso_id")
+        .coalesce(1)
+        .sortWithinPartitions("iso_id")
     )

@@ -4,6 +4,12 @@ Designed for a multi-executor cluster reading ~10^12-row Iceberg tables;
 the sandbox runs the same config on ``local[N]``. The knobs that matter at
 scale (AQE, skew-join handling, adaptive partition coalescing, Arrow
 batching) are identical in both.
+
+DataFrame call-site capture (``spark.python.sql.dataFrameDebugging``) is
+off: with Spark's default, every ``pyspark.sql.functions`` call walks the
+Python stack, makes three extra py4j round trips and tries to import
+IPython. Error classes are unchanged; a DataFrame error's query context
+just carries no Python call-site lines.
 """
 
 from __future__ import annotations
@@ -54,6 +60,7 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", str(16 * 1024 * 1024)),
         )
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

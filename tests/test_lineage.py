@@ -192,6 +192,42 @@ def test_chunked_rerun_over_empty_buckets_writes_no_chunk(spark, workdir):
     assert spark.read.parquet(out).count() == 10
 
 
+@pytest.mark.parametrize("chunk_size", [None, 2])
+def test_stage_writes_one_file_per_bucket(spark, workdir, chunk_size):
+    """The write is rebalanced by bucket, so a stage over several input
+    partitions lands each bucket as one file, not one per upstream task;
+    each committed chunk appends one lineage file."""
+    df = _source(spark).repartition(4)
+    out, lin = str(workdir / "out"), str(workdir / "lineage")
+    n = run_stage_with_lineage(spark, df, "geoparse", "url", ["url", "cell_r7"], out, lin,
+                               n_buckets=8, cell_col="cell_r7", chunk_size=chunk_size)
+    assert n == 8
+    dirs = sorted(pathlib.Path(out).glob("bucket=*"))
+    assert len(dirs) == 8
+    assert {d.name: len(list(d.glob("*.parquet"))) for d in dirs} == {d.name: 1 for d in dirs}
+    assert len(list(pathlib.Path(lin).glob("*.parquet"))) == 8 // (chunk_size or 8)
+    assert verify_lineage(spark, out, lin, "geoparse", ["url", "cell_r7"], "cell_r7")
+
+
+def test_stage_splits_a_bucket_above_the_advisory_size(spark, workdir):
+    """A bucket larger than AQE's advisory partition size lands as several
+    files, so no bucket has to fit in one write task; it still verifies.
+    AQE splits a bucket at map-task boundaries, hence several input
+    partitions."""
+    df = _source(spark).repartition(4)
+    out, lin = str(workdir / "out"), str(workdir / "lineage")
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    spark.conf.set(key, "4k")
+    try:
+        run_stage_with_lineage(spark, df, "geoparse", "url", ["url", "cell_r7"], out, lin,
+                               n_buckets=2, cell_col="cell_r7")
+    finally:
+        spark.conf.unset(key)
+    files = [len(list(d.glob("*.parquet"))) for d in sorted(pathlib.Path(out).glob("bucket=*"))]
+    assert len(files) == 2 and min(files) > 1, files
+    assert verify_lineage(spark, out, lin, "geoparse", ["url", "cell_r7"], "cell_r7")
+
+
 def test_verify_lineage_flags_tampered_output(spark, workdir):
     """verify_lineage is false when a bucket's rows change or a committed
     bucket is missing from the output."""

@@ -140,6 +140,17 @@ def test_flagship_plan_parses_once_and_caches_nothing(spark, tables):
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
+def test_flagship_sorts_without_range_exchange(spark, tables):
+    """The one-row-per-isochrone result is sorted in one partition: the
+    executed plan has no range-partitioning exchange (whose sampling job
+    and map stage a global sort would start), and rows still come out
+    ordered by iso_id."""
+    df = flagship_query(spark, tables["pages"], tables["polygons"], tables["census_long"])
+    ids = [r["iso_id"] for r in df.collect()]
+    assert ids and ids == sorted(ids)
+    assert "rangepartitioning" not in df._jdf.queryExecution().executedPlan().toString().lower()
+
+
 def test_iso_rollup_hand_count(spark):
     """u1 lies in two isochrones and three block groups, g1 is shared by
     u1 and u2, u3 has an isochrone but no block group (so it counts
