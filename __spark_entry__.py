@@ -1,12 +1,15 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Driver contract (PySpark target).
 
 ``entry(spark)`` runs the flagship query (per-isochrone travel-time-band
-demographic aggregation) at sf0.001. ``queries()`` exposes one entry per
-implemented operator from SURVEY.md §2 plus the training-data-pipeline
-extensions; ``oracle_sql()`` gives the DuckDB twin for each.
+demographic aggregation) at sf0.001. The registry is one table, filled
+at import: each ``q_<name>(spark, sf_dir)`` below is entry ``<name>``,
+and its ``@oracle`` decorator carries its DuckDB twin. ``queries()``
+returns the entries in definition order; ``oracle_sql(sf_dir)`` renders
+every twin at the scale ``sf_dir`` (default sf0.01).
+scripts/check_correctness.py runs both sides and compares them.
 
 Geospatial inputs (pages/polygons/pois/census_long) are deterministic
-seed-42 fixtures generated under /root/repo/data/geo/<sf>/ on first use
+seed-42 fixtures generated under <repo>/data/geo/<sf>/ on first use
 (FIXTURES.md); the PIP/kNN oracles read brute-force numpy goldens
 produced by an independent single-node implementation of the reference
 semantics (golden_* parquet) — the same oracle strategy as SURVEY.md
@@ -16,15 +19,15 @@ and DuckDB produce bit-identical values regardless of accumulation order.
 
 from __future__ import annotations
 
+import pathlib
 import sys
 from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
-
-GEO_SF01 = "/root/repo/data/geo/sf0.01"
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent))
 
 
 def _geo(sf_dir: str) -> str:
@@ -59,9 +62,164 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# queries — engine side
+# the registry
 # ---------------------------------------------------------------------------
 
+class Scale(NamedTuple):
+    """What an oracle reads at one scale: the geo fixture directory, the
+    text-golden directory, and the cleansed and wide census SQL over that
+    geo directory. TPC-H tables are views the caller registers."""
+
+    geo: str
+    text: str
+    cleansed: str
+    wide: str
+
+
+_REGISTRY: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+
+
+def oracle(sql: str | Callable[[Scale], str]):
+    """Register the decorated ``q_<name>`` as entry ``<name>`` with its
+    DuckDB twin: a SQL string, or a function of the ``Scale``. The twin
+    stays on the function as ``.oracle(scale)``, so entries with one
+    contract share one twin."""
+
+    def register(fn):
+        fn.oracle = sql if callable(sql) else (lambda s: sql)
+        _REGISTRY[fn.__name__.removeprefix("q_")] = fn
+        return fn
+
+    return register
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Every entry, in the order its ``q_*`` is defined below. Order
+    matters: the driver's correctness gate checks only the first 50
+    entries (scripts/check_correctness.py checks all of them)."""
+    return dict(_REGISTRY)
+
+
+def oracle_sql(sf_dir: str = "/root/testdata/sf0.01") -> dict[str, str]:
+    """Every entry's DuckDB twin at the scale ``sf_dir``. The scale's geo
+    fixtures and text goldens are built on first use and read by absolute
+    path; the TPC-H tables by the view names the caller registers over
+    ``sf_dir``."""
+    from socialmapper_spark import fixtures
+
+    geo = _geo(sf_dir)
+    fixtures.ensure_geo_extras(sf_dir)
+    fixtures.ensure_crawl_fixture(sf_dir)
+    text = str(fixtures.ensure_text_goldens(sf_dir))
+    cleansed = f"""
+        select geoid, variable_code, {_CLEANSE_SQL} as value_clean
+        from read_parquet('{geo}/census_long.parquet')
+    """
+    wide = f"""
+        select geoid,
+               max(case when variable_code='B01003_001E' then value_clean end) as B01003_001E,
+               max(case when variable_code='B19013_001E' then value_clean end) as B19013_001E,
+               max(case when variable_code='B01002_001E' then value_clean end) as B01002_001E,
+               max(case when variable_code='B25044_003E' then value_clean end) as B25044_003E,
+               max(case when variable_code='B25044_010E' then value_clean end) as B25044_010E
+        from ({cleansed}) group by geoid
+    """
+    scale = Scale(geo, text, cleansed, wide)
+    return {name: fn.oracle(scale) for name, fn in _REGISTRY.items()}
+
+
+# ---------------------------------------------------------------------------
+# registry entries, in gate order (see queries())
+# ---------------------------------------------------------------------------
+
+@oracle(lambda s: f"""
+    select url, poly_id, GEOID, kind
+    from read_parquet('{s.geo}/golden_assignments.parquet')
+""")
+def q_pip_assignments(spark, sf_dir):
+    """J1/J2: two-phase PIP spatial join."""
+    from socialmapper_spark.pipeline import page_assignments
+
+    out = page_assignments(
+        spark, _read_geo(spark, sf_dir, "pages"), _read_geo(spark, sf_dir, "polygons")
+    )
+    return out.select("url", "poly_id", "GEOID", "kind")
+
+
+@oracle(lambda s: f"""
+    select url, poi_id, distance_km, distance_miles
+    from read_parquet('{s.geo}/golden_knn.parquet')
+""")
+def q_knn_nearest(spark, sf_dir):
+    """J3/T3: nearest POI per page (broadcast brute force, parity path)."""
+    from socialmapper_spark.operators.knn import knn_join
+    from socialmapper_spark.pipeline import geoparse_pages
+
+    geop = geoparse_pages(_read_geo(spark, sf_dir, "pages"))
+    pois = _read_geo(spark, sf_dir, "pois").filter(F.col("lat") <= 90.0)
+    out = knn_join(spark, geop, pois, k=1, strategy="broadcast")
+    return out.select("url", "poi_id", "distance_km", "distance_miles")
+
+
+@oracle(q_knn_nearest.oracle)
+def q_knn_kring(spark, sf_dir):
+    """J3 scale path: k-ring pruned kNN — must equal the brute force."""
+    from socialmapper_spark.operators.knn import knn_join
+    from socialmapper_spark.pipeline import geoparse_pages
+
+    geop = geoparse_pages(_read_geo(spark, sf_dir, "pages"))
+    pois = _read_geo(spark, sf_dir, "pois").filter(F.col("lat") <= 90.0)
+    out = knn_join(spark, geop, pois, k=1, strategy="kring")
+    return out.select("url", "poi_id", "distance_km", "distance_miles")
+
+
+@oracle(lambda s: f"""
+    with iso as (
+        select a.url, a.poly_id as iso_id, 15 as travel_time_minutes
+        from read_parquet('{s.geo}/golden_assignments.parquet') a
+        where a.kind = 'isochrone'
+    ), bg as (
+        select url, GEOID as bg_geoid
+        from read_parquet('{s.geo}/golden_assignments.parquet')
+        where kind = 'blockgroup'
+    ), pairs as (
+        select iso.iso_id, iso.travel_time_minutes, iso.url, bg.bg_geoid
+        from iso join bg using (url)
+    ), iso_bgs as (
+        select distinct iso_id, travel_time_minutes, bg_geoid from pairs
+    ), page_counts as (
+        select iso_id, count(distinct url) as n_pages from pairs group by iso_id
+    ), wide as ({s.wide})
+    select b.iso_id, b.travel_time_minutes,
+           p.n_pages,
+           count(distinct b.bg_geoid) as n_block_groups,
+           cast(sum(cast(w.B01003_001E as decimal(20,6))) as double) as total_population,
+           cast(sum(cast(w.B19013_001E as decimal(20,6))) as double)
+               / count(w.B19013_001E) as median_household_income
+    from iso_bgs b
+    left join wide w on b.bg_geoid = w.geoid
+    join page_counts p on b.iso_id = p.iso_id
+    group by b.iso_id, b.travel_time_minutes, p.n_pages
+""")
+def q_flagship_demographics(spark, sf_dir):
+    """Flagship travel-time-band demographics (A1 + J1/J2/J4 composed)."""
+    from socialmapper_spark.pipeline import flagship_query
+
+    return flagship_query(
+        spark,
+        _read_geo(spark, sf_dir, "pages"),
+        _read_geo(spark, sf_dir, "polygons"),
+        _read_geo(spark, sf_dir, "census_long"),
+    )
+
+
+@oracle(lambda s: f"""
+    select url, lat, lon,
+           coalesce(array_to_string(mentions, '|'), '') as mentions_str,
+           case when lat is null then null else {_CELL_SQL_R7} end as cell_r7,
+           case when lat is null then null else {_CELL_SQL_R9} end as cell_r9
+    from read_parquet('{s.geo}/golden_geoparsed.parquet')
+""")
 def q_geoparse(spark, sf_dir):
     """F18/F19: geoparse + cell encode, pure Catalyst."""
     from socialmapper_spark.pipeline import geoparse_pages
@@ -74,269 +232,172 @@ def q_geoparse(spark, sf_dir):
     )
 
 
-def q_pip_assignments(spark, sf_dir):
-    """J1/J2: two-phase PIP spatial join."""
-    from socialmapper_spark.pipeline import page_assignments
+@oracle(lambda s: _embedding_quantize_sql())
+def q_embedding_quantize(spark, sf_dir):
+    """Symmetric int8 max-abs quantization of the embeddings table, with
+    per-vector reconstruction-error audit — floor-based rounding so the
+    codes are bit-reproducible across Spark and DuckDB.
 
-    out = page_assignments(
-        spark, _read_geo(spark, sf_dir, "pages"), _read_geo(spark, sf_dir, "polygons")
-    )
-    return out.select("url", "poly_id", "GEOID", "kind")
+    Registry projection serializes the int8 codes as a comma-joined
+    string (the mentions_str pattern above): the driver's pandas
+    canonicalizer cannot sort/hash an array<int> column (r4's only red
+    row was exactly this, not a value mismatch)."""
+    from socialmapper_spark.operators.similarity import quantize_embeddings
 
-
-def q_knn_nearest(spark, sf_dir):
-    """J3/T3: nearest POI per page (broadcast brute force, parity path)."""
-    from socialmapper_spark.operators.knn import knn_join
-    from socialmapper_spark.pipeline import geoparse_pages
-
-    geop = geoparse_pages(_read_geo(spark, sf_dir, "pages"))
-    pois = _read_geo(spark, sf_dir, "pois").filter(F.col("lat") <= 90.0)
-    out = knn_join(spark, geop, pois, k=1, strategy="broadcast")
-    return out.select("url", "poi_id", "distance_km", "distance_miles")
-
-
-def q_knn_kring(spark, sf_dir):
-    """J3 scale path: k-ring pruned kNN — must equal the brute force."""
-    from socialmapper_spark.operators.knn import knn_join
-    from socialmapper_spark.pipeline import geoparse_pages
-
-    geop = geoparse_pages(_read_geo(spark, sf_dir, "pages"))
-    pois = _read_geo(spark, sf_dir, "pois").filter(F.col("lat") <= 90.0)
-    out = knn_join(spark, geop, pois, k=1, strategy="kring")
-    return out.select("url", "poi_id", "distance_km", "distance_miles")
-
-
-def q_flagship(spark, sf_dir):
-    """Flagship travel-time-band demographics (A1 + J1/J2/J4 composed)."""
-    from socialmapper_spark.pipeline import flagship_query
-
-    return flagship_query(
-        spark,
-        _read_geo(spark, sf_dir, "pages"),
-        _read_geo(spark, sf_dir, "polygons"),
-        _read_geo(spark, sf_dir, "census_long"),
-    )
-
-
-def q_census_cleanse(spark, sf_dir):
-    """P3 sentinel cleansing (exact reference rules)."""
-    from socialmapper_spark.functions.scalar import cleanse_census_value
-
-    cl = _read_geo(spark, sf_dir, "census_long")
-    return cl.select(
-        "geoid", "variable_code",
-        cleanse_census_value(F.col("variable_code"), F.col("value")).alias("value_clean"),
-    )
-
-
-def q_census_pivot(spark, sf_dir):
-    """J4: long → wide pivot with cleansing."""
-    from socialmapper_spark.operators.census import pivot_census
-
-    return pivot_census(_read_geo(spark, sf_dir, "census_long"))
-
-
-def q_geoid_components(spark, sf_dir):
-    """F10: GEOID split into hierarchy components."""
-    from socialmapper_spark.functions.scalar import geoid_split
-
-    polys = _read_geo(spark, sf_dir, "polygons").filter(F.col("kind") == "blockgroup")
-    parts = geoid_split(F.col("GEOID"))
-    return polys.select(
-        "GEOID",
-        parts["state_fips"].alias("state_fips"),
-        parts["county_fips"].alias("county_fips"),
-        parts["tract"].alias("tract"),
-        parts["block_group"].alias("block_group"),
-    )
-
-
-def q_state_bounds(spark, sf_dir):
-    """S2/F14: hard-coded state bbox filter over geoparsed pages."""
-    from socialmapper_spark.functions.scalar import state_bounds_filter
-    from socialmapper_spark.pipeline import geoparse_pages
-
-    geop = geoparse_pages(_read_geo(spark, sf_dir, "pages")).filter(
-        F.col("lat").isNotNull()
-    )
-    return state_bounds_filter(geop, "NC").select("url", "lat", "lon")
-
-
-def q_dedup_units(spark, sf_dir):
-    """A2: dedup group-by with min/first agg rules over PIP+kNN output."""
-    from socialmapper_spark.operators.census import dedup_units
-    from socialmapper_spark.operators.knn import knn_join
-    from socialmapper_spark.pipeline import geoparse_pages, page_assignments
-
-    assigns = page_assignments(
-        spark, _read_geo(spark, sf_dir, "pages"), _read_geo(spark, sf_dir, "polygons")
-    ).filter(F.col("kind") == "blockgroup")
-    geop = geoparse_pages(_read_geo(spark, sf_dir, "pages"))
-    pois = _read_geo(spark, sf_dir, "pois").filter(F.col("lat") <= 90.0)
-    knn = knn_join(spark, geop, pois, k=1, strategy="broadcast")
-    units = assigns.select("url", "GEOID").join(knn, "url")
-    return dedup_units(
-        units,
-        keys=["GEOID"],
-        min_cols=["distance_miles"],
-        first_cols=["poi_id"],
-        order_col="url",
-    ).withColumnRenamed("poi_id", "first_poi_id")
-
-
-def q_demographic_summary(spark, sf_dir):
-    """A1: sum/mean dispatch over the cleansed wide census frame."""
-    from socialmapper_spark.operators.census import demographic_summary, pivot_census
-
-    wide = pivot_census(_read_geo(spark, sf_dir, "census_long"))
-    return demographic_summary(
-        wide, ["B01003_001E", "B19013_001E", "B01002_001E", "B25044_003E", "B25044_010E"]
-    )
-
-
-def q_coordinate_quarantine(spark, sf_dir):
-    """P1: invalid-coordinate quarantine (returns the rejected rows)."""
-    from socialmapper_spark.functions.scalar import validate_coordinates
-
-    pois = _read_geo(spark, sf_dir, "pois")
-    _, bad = validate_coordinates(pois)
-    return bad.select("id", "lat", "lon")
-
-
-def q_knn_topk(spark, sf_dir):
-    """T4: general k nearest (k=3) via window top-k over broadcast candidates."""
-    from socialmapper_spark.operators.knn import knn_join
-    from socialmapper_spark.pipeline import geoparse_pages
-
-    geop = geoparse_pages(_read_geo(spark, sf_dir, "pages"))
-    pois = _read_geo(spark, sf_dir, "pois").filter(F.col("lat") <= 90.0)
-    out = knn_join(spark, geop, pois, k=3, strategy="broadcast")
-    return out.select("url", "poi_id", "distance_km", "distance_miles", "knn_rank")
-
-
-def q_isochrone_area(spark, sf_dir):
-    """A3: equal-area km² per travel-time band (shoelace in EPSG:5070)."""
-    from socialmapper_spark.operators.stats import isochrone_area
-
-    return isochrone_area(_read_geo(spark, sf_dir, "polygons"))
-
-
-def q_cluster_metrics(spark, sf_dir):
-    """A4: cluster-size metrics with the H3 cell as the cluster key."""
-    from socialmapper_spark.operators.stats import cluster_metrics
-    from socialmapper_spark.pipeline import geoparse_pages
-
-    return cluster_metrics(geoparse_pages(_read_geo(spark, sf_dir, "pages")))
-
-
-def q_null_rate(spark, sf_dir):
-    """A5: per-variable valid/null counts after sentinel cleansing."""
-    from socialmapper_spark.operators.stats import null_rate_stats
-
-    return null_rate_stats(_read_geo(spark, sf_dir, "census_long"))
-
-
-def q_geoid_prefix(spark, sf_dir):
-    """A6: GEOID state/state+county prefix grouping (the batching/salt key)."""
-    from socialmapper_spark.operators.stats import geoid_prefix_groups
-
-    polys = _read_geo(spark, sf_dir, "polygons").filter(F.col("kind") == "blockgroup")
-    return geoid_prefix_groups(polys)
-
-
-def q_quantile_bins(spark, sf_dir):
-    """F16: quantile classification binning (ntile) over median income."""
-    from socialmapper_spark.operators.census import pivot_census
-    from socialmapper_spark.operators.stats import quantile_bins
-
-    wide = pivot_census(_read_geo(spark, sf_dir, "census_long"))
-    return quantile_bins(wide, "B19013_001E", k=5)
-
-
-def q_equal_interval_bins(spark, sf_dir):
-    """F16 (second scheme): equal-interval classification over income."""
-    from socialmapper_spark.operators.census import pivot_census
-    from socialmapper_spark.operators.stats import equal_interval_bins
-
-    wide = pivot_census(_read_geo(spark, sf_dir, "census_long"))
-    return equal_interval_bins(wide, "B19013_001E", k=5)
-
-
-def q_custom_coords(spark, sf_dir):
-    """S3: schema-tolerant custom coordinates reader (lat/latitude/y etc.)."""
-    from socialmapper_spark.fixtures import ensure_geo_extras
-    from socialmapper_spark.sources import read_custom_coordinates
-
-    geo = str(ensure_geo_extras(sf_dir))
-    out = read_custom_coordinates(spark, f"{geo}/custom_coords.csv")
-    tags_str = F.array_join(
-        F.transform(
-            F.array_sort(F.map_entries("tags")),
-            lambda e: F.concat(e["key"], F.lit("="), e["value"]),
+    out = quantize_embeddings(_read(spark, sf_dir, "embeddings"))
+    return out.select(
+        "vec_id",
+        "scale",
+        F.array_join(F.transform("q", lambda x: x.cast("string")), ",").alias(
+            "q_str"
         ),
-        "|",
-    )
-    return out.select("id", "name", "type", "lat", "lon", tags_str.alias("tags_str"))
-
-
-def q_state_normalize(spark, sf_dir):
-    """P6: state name/abbr/FIPS normalization via broadcast dim join."""
-    from socialmapper_spark.functions.states import normalize_state
-
-    pois = _read_geo(spark, sf_dir, "pois")
-    # exercise all three alias formats deterministically per row
-    aliased = pois.select(
-        "id",
-        F.when(F.length("id") % 3 == 0, F.lit("NC"))
-        .when(F.length("id") % 3 == 1, F.lit("37"))
-        .otherwise(F.lit("north carolina"))
-        .alias("state"),
-    )
-    out = normalize_state(spark, aliased, "state")
-    return out.select("id", "state", "state_name", "state_abbr", "state_fips")
-
-
-def q_counties_from_pages(spark, sf_dir):
-    """J7: distinct (state, county) containing any geoparsed page."""
-    from socialmapper_spark.functions.scalar import geoid_split
-    from socialmapper_spark.pipeline import page_assignments
-
-    assigns = page_assignments(
-        spark, _read_geo(spark, sf_dir, "pages"), _read_geo(spark, sf_dir, "polygons")
-    ).filter(F.col("kind") == "blockgroup")
-    parts = geoid_split(F.col("GEOID"))
-    return (
-        assigns.select(
-            parts["state_fips"].alias("state_fips"),
-            parts["county_fips"].alias("county_fips"),
-        )
-        .distinct()
-        .orderBy("state_fips", "county_fips")
+        "max_abs_err",
     )
 
 
-def q_poi_broadcast(spark, sf_dir):
-    """J5: first-POI metadata broadcast onto every block-group unit."""
-    pois = _read_geo(spark, sf_dir, "pois").filter(F.col("lat") <= 90.0)
-    first_poi = pois.orderBy("id").limit(1).select(
-        F.col("id").alias("poi_id"), F.col("name").alias("poi_name")
+@oracle(lambda s: f"""
+    -- deterministic projection of the streaming admission gate:
+    -- one row per admitted url (payload columns are micro-batch-
+    -- order-chosen and stay pytest-pinned; see q_snapshot_dedup_stream)
+    select url
+    from read_parquet('{s.geo}/crawl_pages.parquet')
+    group by url
+""")
+def q_snapshot_dedup_stream(spark, sf_dir):
+    """Streaming first-seen-wins url admission gate
+    (dropDuplicatesWithinWatermark). Which physical row is 'first' is
+    micro-batch-order-dependent, so the payload columns (warc_ts, lang)
+    are engine-chosen; the DETERMINISTIC contract is the admitted url
+    set — every url emitted exactly once inside the watermark horizon
+    (fixture snapshots span 4 days << the 30-day horizon). The registry
+    projects exactly that set so a SQL oracle (distinct url) can
+    hash-check it; the per-row payload invariants stay pytest-pinned
+    (tests assert every emitted row exists in the input)."""
+    from socialmapper_spark.operators.web import snapshot_dedup_stream
+
+    return snapshot_dedup_stream(_crawl_stream(spark, sf_dir)).select("url")
+
+
+@oracle("""
+    with snaps as (
+      select user_id, ts as snap_ts, max(value) as snap_value
+      from events where event_type = 'purchase' group by 1, 2
     )
-    units = _read_geo(spark, sf_dir, "polygons").filter(
-        F.col("kind") == "blockgroup"
-    ).select("GEOID")
-    return units.crossJoin(F.broadcast(first_poi))
+    select e.event_id, e.user_id, epoch_us(e.ts) as ts_us,
+           epoch_us(s.snap_ts) as snap_us, s.snap_value
+    from events e asof left join snaps s
+      on e.user_id = s.user_id and e.ts >= s.snap_ts
+""")
+def q_asof_join(spark, sf_dir):
+    """Temporal as-of join (extension surface — the reference pipeline is a
+    single batch snapshot with no temporal axis): every event picks the
+    most recent purchase-snapshot for its user (``snap_ts <= ts``,
+    inclusive, standard ASOF semantics — the DuckDB oracle runs a native
+    ``ASOF LEFT JOIN``). Default compact strategy: snapshot-array
+    dimension + a higher-order-function probe, O(snapshots per key) per
+    left row (operators/temporal.py docstring has the measured regimes).
+
+    Timestamps are projected as unix micros: both engines read the same
+    parquet int64, so the cross-engine hash is exact."""
+    return asof_join_frame(_read(spark, sf_dir, "events"))
 
 
-def q_unit_centroids(spark, sf_dir):
-    """F7: block-group centroids (EPSG:5070 shoelace → back to 4326)."""
-    from socialmapper_spark.fixtures import ensure_geo_extras
-    from socialmapper_spark.operators.stats import unit_centroids
+# strategy equivalence: the union-then-window fallback must produce the
+# exact rows the compact strategy does, so it shares the oracle
+@oracle(q_asof_join.oracle)
+def q_asof_join_union(spark, sf_dir):
+    """The as-of join's ``strategy="union"`` form (union-then-window, the
+    faster one on keys with many snapshots and many left rows) on the
+    same inputs and projection as ``asof_join``; shares that entry's
+    DuckDB ``ASOF LEFT JOIN`` oracle, so strategy equivalence is
+    driver-checkable."""
+    return asof_join_frame(_read(spark, sf_dir, "events"), strategy="union")
 
-    ensure_geo_extras(sf_dir)
-    out = unit_centroids(_read_geo(spark, sf_dir, "polygons"))
-    return out.select("GEOID", "lat", "lon")
+
+@oracle("""
+    with ivals as (
+      select event_id as interval_id, event_type, ts as start_ts,
+             ts + interval 45 minute as end_ts
+      from events where event_id % 100 = 0
+    )
+    select e.event_id, i.interval_id, e.event_type,
+           epoch_us(e.ts) as ts_us, epoch_us(i.start_ts) as start_us
+    from events e join ivals i
+      on e.event_type = i.event_type
+     and e.ts >= i.start_ts and e.ts < i.end_ts
+""")
+def q_interval_join(spark, sf_dir):
+    """Temporal interval-containment join (extension surface): events
+    attributed to 45-minute campaign windows of the same event_type
+    (start inclusive, end exclusive). The naive range theta-join lowers
+    to BroadcastNestedLoopJoin; this operator buckets time so Catalyst
+    gets an equi-join key (operators/temporal.py docstring — plan
+    asserted NestedLoop-free in tests/test_temporal.py)."""
+    return interval_join_frame(_read(spark, sf_dir, "events"))
 
 
+@oracle("""
+    with a as (
+      select event_id as a_id, event_type, ts as a_start,
+             ts + interval 30 minute as a_end
+      from events where event_id % 50 = 0
+    ), b as (
+      select event_id as b_id, event_type, ts as b_start,
+             ts + interval 45 minute as b_end
+      from events where event_id % 70 = 0
+    )
+    select a.a_id, b.b_id, a.event_type,
+           epoch_us(a.a_start) as a_start_us,
+           epoch_us(b.b_start) as b_start_us
+    from a join b
+      on a.event_type = b.event_type
+     and a.a_start < b.b_end and b.b_start < a.a_end
+""")
+def q_interval_overlap(spark, sf_dir):
+    """Interval-OVERLAP join (extension surface): two event-derived
+    interval sets (30-min and 45-min windows of the same event_type)
+    paired wherever they overlap, end-exclusive. Both sides
+    bucket-replicate into an equi-join and the pair dedup happens
+    plan-side in the overlap-start bucket — no NestedLoop, no distinct
+    (operators/temporal.py interval_overlap_join docstring; the naive
+    range theta-join is a BroadcastNestedLoopJoin and the naive bucket
+    dedup a second wide shuffle)."""
+    events = _read(spark, sf_dir, "events")
+    from socialmapper_spark.operators.temporal import interval_overlap_join
+
+    a = events.filter(F.col("event_id") % 50 == 0).select(
+        F.col("event_id").alias("a_id"),
+        "event_type",
+        F.col("ts").alias("a_start"),
+        (F.col("ts") + F.expr("INTERVAL 30 MINUTES")).alias("a_end"),
+    )
+    b = events.filter(F.col("event_id") % 70 == 0).select(
+        F.col("event_id").alias("b_id"),
+        F.col("event_type").alias("event_type_b"),
+        F.col("ts").alias("b_start"),
+        (F.col("ts") + F.expr("INTERVAL 45 MINUTES")).alias("b_end"),
+    ).withColumnRenamed("event_type_b", "event_type")
+    out = interval_overlap_join(
+        a, b,
+        left_start="a_start", left_end="a_end",
+        right_start="b_start", right_end="b_end",
+        on=["event_type"], bucket_seconds=1800,
+    )
+    return out.select(
+        "a_id",
+        "b_id",
+        "event_type",
+        F.unix_micros(F.col("a_start").cast("timestamp")).alias("a_start_us"),
+        F.unix_micros(F.col("b_start").cast("timestamp")).alias("b_start_us"),
+    )
+
+
+@oracle(lambda s: f"""
+    select {_CELL_SQL_R7} as cell_r7, count(*) as n_rows
+    from read_parquet('{s.geo}/golden_geoparsed.parquet')
+    where lat is not null
+    group by 1
+""")
 def q_salted_cell_counts(spark, sf_dir):
     """Skew tools in-registry: exact per-cell page counts via two-phase
     salted aggregation (operators/skew.py salted_count_by_key, 32 salts
@@ -355,43 +416,226 @@ def q_salted_cell_counts(spark, sf_dir):
     return salted_count_by_key(geop, "cell_r7", n_salts=32, salt_src="url")
 
 
-def q_centroid_nearest_poi(spark, sf_dir):
-    """J3 (the reference's actual shape): distance from each block-group
-    CENTROID to its nearest POI, min Euclidean km in EPSG:5070."""
-    from socialmapper_spark.fixtures import ensure_geo_extras
-    from socialmapper_spark.operators.knn import knn_join
-    from socialmapper_spark.operators.stats import unit_centroids
+@oracle(lambda s: f"""
+    select doc_a, doc_b from read_parquet('{s.text}/golden_minhash_pairs.parquet')
+""")
+def q_minhash_pairs(spark, sf_dir):
+    """MinHash+LSH near-dup candidate pairs over documents."""
+    from socialmapper_spark.operators.dedup import near_dup_pairs_minhash
 
-    ensure_geo_extras(sf_dir)
-    cents = unit_centroids(_read_geo(spark, sf_dir, "polygons"))
-    pois = _read_geo(spark, sf_dir, "pois").filter(F.col("lat") <= 90.0)
-    out = knn_join(spark, cents, pois, k=1, strategy="broadcast", id_col="GEOID")
-    return out.select("GEOID", "poi_id", "distance_km", "distance_miles")
+    return near_dup_pairs_minhash(_read(spark, sf_dir, "documents"))
 
 
-def q_frame_sample(spark, sf_dir):
-    """Multimodal: deterministic frame sampling (one→many mapInPandas)."""
-    from socialmapper_spark.operators.multimodal import frame_sample
+@oracle(lambda s: f"""
+    select doc_a, doc_b, jaccard
+    from read_parquet('{s.text}/golden_jaccard.parquet')
+""")
+def q_jaccard_verified(spark, sf_dir):
+    """LSH candidates verified by exact shingle-set Jaccard ≥ 0.3."""
+    from socialmapper_spark.operators.dedup import jaccard_verify, near_dup_pairs_minhash
 
-    return frame_sample(_read_geo(spark, sf_dir, "pages"), n_frames=4)
+    docs = _read(spark, sf_dir, "documents")
+    pairs = near_dup_pairs_minhash(docs)
+    return jaccard_verify(docs, pairs, threshold=0.3)
 
 
-def q_geoid_build(spark, sf_dir):
-    """F10 (build direction): assemble zero-padded GEOIDs from components."""
-    from socialmapper_spark.functions.scalar import geoid_build
+@oracle(lambda s: f"""
+    select doc_id, {_repetition_sql()}
+    from documents
+""")
+def q_repetition_stats(spark, sf_dir):
+    """Gopher-style intra-doc repetition ratios (dup unigram/2-gram/
+    3-gram shares), pure Catalyst."""
+    from socialmapper_spark.functions.text import repetition_cols
 
-    polys = _read_geo(spark, sf_dir, "polygons").filter(F.col("kind") == "blockgroup")
-    return polys.select(
-        "poly_id",
-        geoid_build(
-            F.col("STATE"), F.col("COUNTY"), F.col("TRACT"), F.col("BLKGRP")
-        ).alias("geoid_built"),
-        (geoid_build(
-            F.col("STATE"), F.col("COUNTY"), F.col("TRACT"), F.col("BLKGRP")
-        ) == F.col("GEOID")).alias("matches"),
+    rc = repetition_cols(F.col("text"))
+    return _read(spark, sf_dir, "documents").select(
+        "doc_id",
+        rc["dup_word_ratio"].alias("dup_word_ratio"),
+        rc["dup_2gram_ratio"].alias("dup_2gram_ratio"),
+        rc["dup_3gram_ratio"].alias("dup_3gram_ratio"),
     )
 
 
+@oracle(lambda s: f"""
+    with bg as (
+        select distinct unnest({_grams8_sql()}) as g
+        from documents where doc_id % 97 = 0
+    ),
+    dg as (
+        select doc_id, unnest(list_distinct({_grams8_sql()})) as g
+        from documents
+    ),
+    h as (
+        select doc_id, count(*) as n
+        from dg join bg using (g) group by doc_id
+    )
+    select d.doc_id,
+           cast(coalesce(h.n, 0) as bigint) as n_hit_grams,
+           coalesce(h.n, 0) > 0 as contaminated
+    from documents d left join h using (doc_id)
+""")
+def q_decontaminate(spark, sf_dir):
+    """Benchmark decontamination: flag docs sharing any exact 8-gram
+    with the (deterministically chosen) benchmark subset."""
+    from socialmapper_spark.operators.dedup import decontaminate
+
+    docs = _read(spark, sf_dir, "documents")
+    bench = docs.filter(F.col("doc_id") % 97 == 0)
+    return decontaminate(docs, bench)
+
+
+@oracle(lambda s: _decontaminate_bloom_sql())
+def q_decontaminate_bloom(spark, sf_dir):
+    """Bloom-filter decontamination (the 100 TB screen): same benchmark
+    subset as q_decontaminate; broadcasts ≤ m occupied long bit
+    positions instead of the gram strings. Cross-engine-deterministic
+    md5-60 probes, so the DuckDB twin reproduces even the false
+    positives exactly."""
+    from socialmapper_spark.operators.dedup import decontaminate_bloom
+
+    docs = _read(spark, sf_dir, "documents")
+    bench = docs.filter(F.col("doc_id") % 97 == 0)
+    return decontaminate_bloom(docs, bench)
+
+
+@oracle(lambda s: _host_pagerank_sql(s.geo))
+def q_host_pagerank(spark, sf_dir):
+    """Host-graph PageRank (crawl-frontier prioritization): edges are
+    derived deterministically from the crawl table — each distinct url
+    on host h links to host (item*31+7) mod 16 — then ranked with 5
+    fixed-point integer PageRank rounds (operators/graph.py). All-int64
+    update rule, so the DuckDB unrolled-CTE twin is bit-identical."""
+    from socialmapper_spark.fixtures import ensure_crawl_fixture
+    from socialmapper_spark.operators.graph import pagerank
+    from socialmapper_spark.operators.web import page_host
+
+    g = ensure_crawl_fixture(sf_dir)
+    pages = spark.read.parquet(f"{g}/crawl_pages.parquet")
+    item = F.regexp_extract("url", "/item/([0-9]+)", 1).cast("long")
+    edges = pages.select("url").distinct().select(
+        page_host(F.col("url")).alias("src"),
+        F.concat(
+            F.lit("host"),
+            F.pmod(item * 31 + 7, F.lit(16)).cast("string"),
+            F.lit(".example.org"),
+        ).alias("dst"),
+    )
+    return pagerank(edges).withColumnRenamed("node", "host")
+
+
+@oracle(lambda s: _item_pagerank_sql(s.geo))
+def q_item_pagerank(spark, sf_dir):
+    """Page-level PageRank at meaningful graph size (~66k nodes at
+    sf0.1 vs 16 hosts in host_pagerank): each distinct crawl item i
+    emits two deterministic out-edges into a 4096-hub space
+    ((i*31+7) mod 4096 and (i*131+29) mod 4096) — a skewed in-degree
+    link graph (few hub pages absorb most links, the web norm). Same
+    integer update rule; the DuckDB twin unrolls the same 5 rounds."""
+    from socialmapper_spark.fixtures import ensure_crawl_fixture
+    from socialmapper_spark.operators.graph import pagerank
+
+    g = ensure_crawl_fixture(sf_dir)
+    pages = spark.read.parquet(f"{g}/crawl_pages.parquet")
+    item = F.regexp_extract("url", "/item/([0-9]+)", 1).cast("long")
+    edges = (
+        pages.select(item.alias("i"))
+        .distinct()
+        .select(
+            "i",
+            F.explode(
+                F.array(
+                    F.pmod(F.col("i") * 31 + 7, F.lit(4096)),
+                    F.pmod(F.col("i") * 131 + 29, F.lit(4096)),
+                )
+            ).alias("d"),
+        )
+        .select(
+            F.concat(F.lit("i"), F.col("i").cast("string")).alias("src"),
+            F.concat(F.lit("i"), F.col("d").cast("string")).alias("dst"),
+        )
+    )
+    return pagerank(edges).withColumnRenamed("node", "item")
+
+
+@oracle(lambda s: _hll_snapshots_sql(s.geo))
+def q_hll_snapshots(spark, sf_dir):
+    """Per-host distinct-snapshot cardinality via the deterministic
+    HyperLogLog sketch (operators/sketch.py, p=8 → 256 registers,
+    rse ~6.5%): key = snapshot text (~940 distinct per host at sf0.01,
+    load ≈ 3.7·m — inside raw-HLL's accurate regime). The register
+    build is one map-side-combinable max keyed (host, idx); the DuckDB
+    twin (hll_sql, generated beside the operator) reproduces hash,
+    registers, and the single-IEEE-division estimate bit-exactly."""
+    from socialmapper_spark.fixtures import ensure_crawl_fixture
+    from socialmapper_spark.operators.sketch import hll_cardinality
+    from socialmapper_spark.operators.web import page_host
+
+    g = ensure_crawl_fixture(sf_dir)
+    pages = spark.read.parquet(f"{g}/crawl_pages.parquet")
+    return hll_cardinality(
+        pages.select(page_host(F.col("url")).alias("host"), "text"),
+        "text",
+        ("host",),
+        p=8,
+    ).orderBy("host")
+
+
+@oracle(lambda s: _cms_host_snapshots_sql(s.geo))
+def q_cms_host_snapshots(spark, sf_dir):
+    """Per-host snapshot frequency via a 4×2048 count-min sketch
+    (operators/sketch.py): the sketch is ONE combinable integer sum
+    bounded at d·w counter rows however large the crawl, broadcast to
+    the probe join. Estimates are exact-or-over by construction; with
+    16 hosts vs 8192 counters, collisions are improbable and the
+    estimates equal the exact counts — the DuckDB twin (cms_sql) is
+    bit-exact either way."""
+    from socialmapper_spark.fixtures import ensure_crawl_fixture
+    from socialmapper_spark.operators.sketch import cms_counts
+    from socialmapper_spark.operators.web import page_host
+
+    g = ensure_crawl_fixture(sf_dir)
+    pages = spark.read.parquet(f"{g}/crawl_pages.parquet")
+    return cms_counts(
+        pages.select(page_host(F.col("url")).alias("host")), "host"
+    ).orderBy("host")
+
+
+@oracle(lambda s: _familiarity_sql())
+def q_unigram_familiarity(spark, sf_dir):
+    """Corpus-unigram LM quality score (extension surface — the CCNet-style
+    perplexity-filter tier kept in exactly-rounded arithmetic so the
+    cross-engine hash is exact; operators/lm.py docstring). Each document
+    scores the occurrence-weighted mean corpus probability of its tokens."""
+    return unigram_familiarity_frame(_read(spark, sf_dir, "documents"))
+
+
+@oracle(lambda s: _familiarity_sql(n=2))
+def q_bigram_familiarity(spark, sf_dir):
+    """The n=2 rung of the familiarity ladder: word-bigram corpus
+    probability — catches word-salad whose individual words are all
+    common (operators/lm.py docstring). Same exactly-rounded
+    arithmetic; docs with <2 words drop out (both engines)."""
+    from socialmapper_spark.operators.lm import unigram_familiarity
+
+    return unigram_familiarity(_read(spark, sf_dir, "documents"), n=2)
+
+
+@oracle(lambda s: f"""
+    with px as (
+        select cast(floor((lon+180.0)/0.0054931640625) as bigint) % 65536 as ix,
+               least(greatest(cast(floor((lat+90.0)/0.0054931640625) as bigint),0),32767) as iy,
+               count(*) as value
+        from read_parquet('{s.geo}/golden_geoparsed.parquet')
+        where lat is not null
+        group by 1, 2
+    )
+    select 4*288230376151711744 + (ix//32)*536870912 + (iy//32) as tile_id,
+           cast(iy % 32 as int) as px_row,
+           cast(ix % 32 as int) as px_col,
+           value
+    from px
+""")
 def q_rasterize(spark, sf_dir):
     """Raster↔vector (north_rule): vector→raster — per-pixel page counts
     addressed as (tile, row, col), pure Catalyst cell/bit math."""
@@ -402,16 +646,36 @@ def q_rasterize(spark, sf_dir):
     return rasterize_counts(geop)
 
 
-def q_vectorize_hotspots(spark, sf_dir):
-    """Raster↔vector: raster→vector — hotspot pixels (value ≥ 50) back as
-    cell polygons with exact bounds."""
-    from socialmapper_spark.operators.raster import rasterize_counts, vectorize_threshold
-    from socialmapper_spark.pipeline import geoparse_pages
-
-    geop = geoparse_pages(_read_geo(spark, sf_dir, "pages"))
-    return vectorize_threshold(rasterize_counts(geop), threshold=50)
-
-
+@oracle(lambda s: f"""
+    -- 3x3 zero-padded focal sum/mean over the r9 pixel grid:
+    -- lon wraps (double-mod keeps jx nonnegative), lat clamps
+    -- (off-grid rows drop); sums cast to bigint (DuckDB sum()
+    -- is HUGEINT) so the value hash matches Spark's long
+    with px as (
+        select cast(floor((lon+180.0)/0.0054931640625) as bigint) % 65536 as ix,
+               least(greatest(cast(floor((lat+90.0)/0.0054931640625) as bigint),0),32767) as iy,
+               count(*) as value
+        from read_parquet('{s.geo}/golden_geoparsed.parquet')
+        where lat is not null
+        group by 1, 2
+    ),
+    o as (
+        select dx, dy
+        from (values (-1), (0), (1)) a(dx), (values (-1), (0), (1)) b(dy)
+    ),
+    c as (
+        select ((ix + dx) % 65536 + 65536) % 65536 as jx,
+               iy + dy as jy, value
+        from px, o
+        where iy + dy >= 0 and iy + dy < 32768
+    )
+    select cast(9 as bigint)*288230376151711744
+             + jx*536870912 + jy as cell,
+           cast(sum(value) as bigint) as focal_sum,
+           cast(count(*) as bigint) as focal_n,
+           cast(sum(value) as bigint) / 9.0 as focal_mean
+    from c group by jx, jy
+""")
 def q_focal_stats(spark, sf_dir):
     """Raster focal smoothing: 3×3 zero-padded focal sum/mean over the
     rasterized page counts (lon-wrapping, lat-clamped grid topology) —
@@ -423,6 +687,25 @@ def q_focal_stats(spark, sf_dir):
     return focal_stats(rasterize_counts(geop))
 
 
+@oracle(lambda s: f"""
+    -- independent derivation: rasterize DIRECTLY at r7 (the
+    -- Spark side aggregates the r9 raster up — the power-of-two
+    -- hierarchy makes the two computations provably equal)
+    with px as (
+        select cast(floor((lon+180.0)/0.02197265625) as bigint) % 16384 as ix,
+               least(greatest(cast(floor((lat+90.0)/0.02197265625) as bigint),0),8191) as iy,
+               count(*) as value
+        from read_parquet('{s.geo}/golden_geoparsed.parquet')
+        where lat is not null
+        group by 1, 2
+    )
+    select cast(4 as bigint)*288230376151711744
+             + (ix//8)*536870912 + (iy//8) as tile_id,
+           cast(iy % 8 as int) as px_row,
+           cast(ix % 8 as int) as px_col,
+           cast(value as bigint) as value
+    from px
+""")
 def q_downsample(spark, sf_dir):
     """Raster pyramid level: the r9 pixel counts aggregated to r7 —
     must equal rasterizing directly at r7 (the power-of-two hierarchy
@@ -435,6 +718,10 @@ def q_downsample(spark, sf_dir):
     return downsample_counts(rasterize_counts(geop), res=9, to_res=7)
 
 
+@oracle(lambda s: f"""
+    select poly_id, GEOID, kind, n_pixels, total_value, mean_value
+    from read_parquet('{s.geo}/golden_zonal.parquet')
+""")
 def q_zonal_stats(spark, sf_dir):
     """Zonal statistics: per-polygon aggregate of the r9 pixel raster
     (center-rule membership) — raster×vector composed through the
@@ -448,6 +735,9 @@ def q_zonal_stats(spark, sf_dir):
     return zonal_stats(spark, rasterize_counts(geoparse_pages(pages)), polygons)
 
 
+@oracle(lambda s: f"""
+    select cell, poly_id from read_parquet('{s.geo}/golden_burn.parquet')
+""")
 def q_polygon_burn(spark, sf_dir):
     """Polygon burn (vector→raster for polygons): every r9 cell whose
     center lies inside each polygon — candidates are cover-cell children,
@@ -458,6 +748,54 @@ def q_polygon_burn(spark, sf_dir):
     return rasterize_polygons(spark, _read_geo(spark, sf_dir, "polygons"))
 
 
+@oracle(lambda s: f"""
+    with px as (
+        select cast(floor((lon+180.0)/0.0054931640625) as bigint) % 65536 as ix,
+               least(greatest(cast(floor((lat+90.0)/0.0054931640625) as bigint),0),32767) as iy,
+               count(*) as value
+        from read_parquet('{s.geo}/golden_geoparsed.parquet')
+        where lat is not null
+        group by 1, 2
+    )
+    select 9*288230376151711744 + ix*536870912 + iy as cell,
+           value,
+           cast(iy as double)*0.0054931640625 - 90.0 as lat_min,
+           (cast(iy as double)*0.0054931640625 - 90.0) + 0.0054931640625 as lat_max,
+           cast(ix as double)*0.0054931640625 - 180.0 as lon_min,
+           (cast(ix as double)*0.0054931640625 - 180.0) + 0.0054931640625 as lon_max
+    from px where value >= 50
+""")
+def q_vectorize_hotspots(spark, sf_dir):
+    """Raster↔vector: raster→vector — hotspot pixels (value ≥ 50) back as
+    cell polygons with exact bounds."""
+    from socialmapper_spark.operators.raster import rasterize_counts, vectorize_threshold
+    from socialmapper_spark.pipeline import geoparse_pages
+
+    geop = geoparse_pages(_read_geo(spark, sf_dir, "pages"))
+    return vectorize_threshold(rasterize_counts(geop), threshold=50)
+
+
+@oracle(lambda s: f"""
+    with a as (
+        select asg.url, asg.poly_id, {_CELL_SQL_R9} as cell_r9
+        from read_parquet('{s.geo}/golden_assignments.parquet') asg
+        join read_parquet('{s.geo}/golden_geoparsed.parquet') gp
+          on asg.url = gp.url
+    ),
+    b as (
+        select *,
+               cast(cast(('0x' || substr(md5('0:' || url), 1, 15))
+                         as bigint) % 32 as int) as bucket
+        from a
+    )
+    select 'assign' as stage, bucket,
+           count(*) as row_count,
+           bit_xor(cast(('0x' || substr(md5('0:' || url || chr(31)
+                                            || poly_id), 1, 15))
+                        as bigint)) as checksum,
+           min(cell_r9) as cell_min, max(cell_r9) as cell_max
+    from b group by bucket
+""")
 def q_lineage_stats(spark, sf_dir):
     """O14: per-bucket lineage rows (bucket, row_count, checksum) for the
     assignment stage, in the cross-engine md5-60 mode: bucket id AND the
@@ -477,24 +815,642 @@ def q_lineage_stats(spark, sf_dir):
     ).select("stage", "bucket", "row_count", "checksum", "cell_min", "cell_max")
 
 
-# --- event-time operators over the driver's events table ---------------------
+@oracle(lambda s: f"""
+    select doc_id, group_id, is_canonical
+    from read_parquet('{s.text}/golden_dedup_groups.parquet')
+""")
+def q_dedup_groups(spark, sf_dir):
+    """Near-dup GROUPS: minhash candidates → jaccard verify → iterative
+    connected components → (doc_id, group_id, is_canonical)."""
+    from socialmapper_spark.operators.dedup import (
+        dedup_groups,
+        jaccard_verify,
+        near_dup_pairs_minhash,
+    )
 
-def q_event_windows(spark, sf_dir):
-    """Tumbling 1-hour rollup per event type (batch plan)."""
-    from socialmapper_spark.operators.events import window_rollup
-
-    return window_rollup(_read(spark, sf_dir, "events"))
-
-
-def q_event_windows_stream(spark, sf_dir):
-    """Structured Streaming twin of event_windows (watermark + window,
-    availableNow drain) — must produce identical rows to the batch plan."""
-    from socialmapper_spark.operators.events import window_rollup_stream
-    from socialmapper_spark.streaming import parquet_stream
-
-    return window_rollup_stream(parquet_stream(spark, sf_dir, "events.parquet"))
+    docs = _read(spark, sf_dir, "documents")
+    pairs = near_dup_pairs_minhash(docs)
+    verified = jaccard_verify(docs, pairs, threshold=0.3).select("doc_a", "doc_b")
+    return dedup_groups(verified, docs=docs)
 
 
+@oracle(lambda s: f"""
+    -- stage-for-stage composition of the registry twins:
+    -- language_id + quality + repetition + decontaminate +
+    -- stratified sampling + pii scrub (same constants as the
+    -- Spark plan in q_corpus_curation)
+    with bg as (
+        select distinct unnest({_grams8_sql()}) as g
+        from documents where doc_id % 97 = 0
+    ),
+    dg as (
+        select doc_id, unnest(list_distinct({_grams8_sql()})) as g
+        from documents
+    ),
+    h as (
+        select doc_id, count(*) as n
+        from dg join bg using (g) group by doc_id
+    ),
+    cont as (
+        select d.doc_id, coalesce(h.n, 0) > 0 as contaminated
+        from documents d left join h using (doc_id)
+    ),
+    rep as (select doc_id, {_repetition_sql()} from documents),
+    base as (
+        select d.doc_id,
+               d.text,
+               {_language_id_sql_twin()} as lang_pred,
+               {_quality_sql()} as quality_score,
+               rep.dup_3gram_ratio as dup3,
+               cont.contaminated
+        from documents d
+        join rep using (doc_id)
+        join cont using (doc_id)
+    ),
+    dec as (
+        select *,
+               case when lang_pred <> 'en' then 'non_allowed_lang'
+                    when quality_score < {_CURATION_MIN_QUALITY}
+                      then 'low_quality'
+                    when dup3 > {_CURATION_MAX_DUP3} then 'repetitive'
+                    when contaminated then 'contaminated'
+                    when not ({_curation_sample_sql()})
+                      then 'sampled_out'
+                    else 'ok' end as reason
+        from base
+    )
+    select doc_id, lang_pred, quality_score, reason,
+           reason = 'ok' as keep,
+           case when reason = 'ok' then {_pii_scrub_sql()} end
+             as text_final
+    from dec
+""")
+def q_corpus_curation(spark, sf_dir):
+    """End-to-end DOCUMENT curation — the text-side twin of
+    q_crawl_curation, as ONE plan: language gate → quality-score gate →
+    repetition gate → benchmark decontamination → deterministic
+    language-stratified sampling → PII scrub of the survivors. Emits
+    every doc with its first-failing-stage reason (admission_gate's
+    audit convention), so the whole funnel is hash-checkable. Every
+    stage is a registry operator; the oracle composes their SQL twins
+    stage-for-stage. Scale shape: ALL text-derived columns (gates,
+    language id, sampling decision, scrub) compute in ONE scan-side
+    projection that drops raw text before the single doc_id-keyed join
+    with the decontamination flags (benchmark grams broadcast; per-doc
+    count agg) — so text-gate expressions evaluate once per row and only
+    the output's scrubbed text crosses the exchange. Deliberately NOT
+    split into filter-then-join: a filter on a computed column gets the
+    alias SUBSTITUTED into the predicate by Catalyst's pushdown
+    (PushDownPredicates rewrites through Project), re-inlining the whole
+    language/quality/repetition tree into the filter — measured 40×
+    slower (8.7 s vs 0.2 s at sf0.1) with codegen falling over the
+    method-size cliff; the join-everything shape keeps each expensive
+    alias referenced ≥2 times, which CollapseProject refuses to inline.
+    Zero Python nodes."""
+    return corpus_curation_frame(_read(spark, sf_dir, "documents"))
+
+
+@oracle(lambda s: f"""
+    select f.*, l.familiarity,
+           coalesce(l.familiarity >= 1e-4, false) as lm_pass
+    from ({q_corpus_curation.oracle(s)}) f
+    left join ({q_unigram_familiarity.oracle(s)}) l using (doc_id)
+""")
+def q_corpus_curation_lm(spark, sf_dir):
+    """The curation funnel composed with the LM quality scorer: every
+    doc's first-failing-stage reason PLUS its corpus-unigram familiarity
+    and a fixed-threshold LM gate (`familiarity >= 1e-4` — a literal so
+    the boolean is bit-reproducible; real pipelines pick the threshold
+    from a held-out calibration). One doc_id-keyed join of two
+    already-oracled plans; the oracle composes their SQL twins as
+    subqueries. The documents scan is shared lineage but evaluated per
+    branch (funnel projection vs LM explode — different column sets, so
+    a shared persist would trade a narrow scan for a wide cache; the
+    funnel side persists nothing, the LM side keeps its (doc, token)
+    cache)."""
+    from socialmapper_spark.operators.lm import unigram_familiarity
+
+    docs = _read(spark, sf_dir, "documents")
+    funnel = corpus_curation_frame(docs)
+    lm_full = unigram_familiarity(docs)
+    # the caches attribute lives on the returned object — grab it BEFORE
+    # any further transformation (the r4 host_top_terms advice)
+    caches = getattr(lm_full, "__spark_graft_caches__", None)
+    lm = lm_full.select("doc_id", "familiarity")
+    out = funnel.join(lm, "doc_id", "left")
+    out = out.withColumn(
+        "lm_pass",
+        F.coalesce(F.col("familiarity") >= F.lit(1e-4), F.lit(False)),
+    )
+    if caches:
+        out.__spark_graft_caches__ = caches
+    return out
+
+
+@oracle(lambda s: f"""
+    with d as (
+        select url, lang, text from (
+            select url, lang, text,
+                   row_number() over (
+                     partition by url
+                     order by warc_ts desc, md5(text) desc,
+                              lang desc, text desc) as rn
+            from read_parquet('{s.geo}/crawl_pages.parquet'))
+        where rn = 1
+    ),
+    kept as (
+        select url from ({_admission_gate_sql('d')}) where keep
+    ),
+    hosts as (
+        select url,
+               regexp_extract(url, '://(?:[^/@?#]*@)?([^/:?#]+)', 1) as host
+        from d
+    ),
+    e as (
+        select url, host,
+               unnest(list_transform(
+                   range(len(string_split(host, '.'))),
+                   i -> array_to_string(string_split(host, '.')[i+1:], '.')
+               )) as suffix
+        from hosts
+    ),
+    unblocked as (
+        select url from e
+        group by url, host
+        having max(case when suffix in
+            ('host3.example.org', 'host13.example.org') then 1 end) is null
+    ),
+    admitted as (
+        select hosts.url, hosts.host
+        from hosts join kept using (url) join unblocked using (url)
+    ),
+    r as (
+        select url, host,
+               row_number() over (
+                 partition by host order by md5(url), url) as host_rank
+        from admitted
+    )
+    select url, host, host_rank, {_canonical_url_sql('url')} as canonical
+    from r where host_rank <= 50
+""")
+def q_crawl_curation(spark, sf_dir):
+    """End-to-end crawl curation — the composition a 100-TB pipeline
+    actually runs, as ONE plan: latest-snapshot dedup → quality
+    admission gate → domain blocklist → per-host cap → canonical key.
+    Every stage is the registry operator; the oracle composes their SQL
+    twins stage-for-stage."""
+    return crawl_curation_frame(spark, _crawl(spark, sf_dir))
+
+
+@oracle(lambda s: f"""
+    with words as (
+        select regexp_extract(url, '://(?:[^/@?#]*@)?([^/:?#]+)', 1) as host,
+               unnest(string_split(text, ' ')) as word
+        from read_parquet('{s.geo}/crawl_pages.parquet')
+    ),
+    w as (select host, word from words where length(word) >= 4),
+    tf as (select host, word, count(*) as tf from w group by 1, 2),
+    dfh as (select word, count(distinct host) as dfh from w group by 1),
+    scored as (
+        select tf.host, tf.word, tf.tf, dfh.dfh,
+               cast(tf.tf as double) / dfh.dfh as score
+        from tf join dfh using (word)
+    )
+    select host, word, tf, dfh, score, term_rank from (
+        select *, row_number() over (
+            partition by host order by score desc, word asc) as term_rank
+        from scored)
+    where term_rank <= 5
+""")
+def q_host_top_terms(spark, sf_dir):
+    """Top-5 host-characteristic terms (tf / document-frequency score —
+    IEEE-division-exact across engines)."""
+    from socialmapper_spark.operators.web import host_top_terms
+
+    return host_top_terms(_crawl(spark, sf_dir))
+
+
+@oracle(lambda s: _admission_gate_sql(
+    f"read_parquet('{s.geo}/crawl_pages.parquet')"
+))
+def q_admission_gate_stream(spark, sf_dir):
+    """Streaming twin of the admission gate (stateless append mode) —
+    row-equal to batch, checked against the SAME SQL oracle."""
+    from socialmapper_spark.operators.web import admission_gate
+    from socialmapper_spark.streaming import drain
+
+    gated = admission_gate(
+        _crawl_stream(spark, sf_dir),
+        min_chars=122,
+        min_words=23,
+        max_digit_ratio=0.05,
+    )
+    return drain(gated, "append")
+
+
+@oracle(lambda s: f"""
+    -- same bucket-bounded pairing as the Spark plan: only
+    -- fingerprints shared by 2..1000 docs generate pairs, then
+    -- pairs need >= 2 shared fingerprints (min_shared=2)
+    with f as (
+        select doc_id, fingerprint
+        from read_parquet('{s.text}/golden_winnow.parquet')
+    ),
+    ok as (
+        select fingerprint from f
+        group by fingerprint having count(*) between 2 and 1000
+    ),
+    p as (
+        select a.doc_id as doc_a, b.doc_id as doc_b,
+               cast(count(*) as bigint) as n_shared
+        from f a
+        join f b using (fingerprint)
+        join ok using (fingerprint)
+        where a.doc_id < b.doc_id
+        group by 1, 2
+    )
+    select doc_a, doc_b, n_shared from p where n_shared >= 2
+""")
+def q_winnow_pairs(spark, sf_dir):
+    """Substring-level near-dup candidates: pairs sharing ≥2 winnowing
+    fingerprints through bounded buckets, with the shared count."""
+    from socialmapper_spark.operators.dedup import near_dup_pairs_winnow
+
+    return near_dup_pairs_winnow(_read(spark, sf_dir, "documents"), min_shared=2)
+
+
+@oracle(lambda s: f"""
+    -- batch twin of the stream-static dimension join
+    with hs as (
+        select regexp_extract(url, '://(?:[^/@?#]*@)?([^/:?#]+)', 1)
+                 as host,
+               count(*) as n_pages,
+               count(distinct url) as n_urls,
+               max(epoch_us(warc_ts)) as latest_ts_us,
+               round(avg(case when lang = 'en' then 1.0 else 0.0 end), 6)
+                 as en_share
+        from read_parquet('{s.geo}/crawl_pages.parquet')
+        group by 1
+    )
+    select p.host, p.url, p.warc_ts_us,
+           hs.n_pages, hs.n_urls, hs.latest_ts_us, hs.en_share
+    from (
+        select url, epoch_us(warc_ts) as warc_ts_us,
+               regexp_extract(url, '://(?:[^/@?#]*@)?([^/:?#]+)', 1)
+                 as host
+        from read_parquet('{s.geo}/crawl_pages.parquet')
+    ) p join hs using (host)
+""")
+def q_crawl_enrich_stream(spark, sf_dir):
+    """Stream-static dimension join: streaming crawl pages enriched with
+    the batch-computed per-host rollup (broadcast static side, stateless
+    append) — must be row-equal to the equivalent batch join."""
+    from socialmapper_spark.operators.web import crawl_enrich, host_stats
+    from socialmapper_spark.streaming import drain
+
+    dim = host_stats(_crawl(spark, sf_dir))
+    return drain(crawl_enrich(_crawl_stream(spark, sf_dir), dim), "append")
+
+
+@oracle(lambda s: f"""
+    select id, cast(latitude as double) as lat, cast(lng as double) as lon,
+           city
+    from read_csv('{s.geo}/custom_coords.csv', header = true)
+    where latitude is not null and lng is not null and city = 'Durham'
+""")
+def q_tag_filter(spark, sf_dir):
+    """S1: POI tag filter over the map-typed tags column (the engine twin
+    of the Overpass tag query: tags[key] == value)."""
+    from socialmapper_spark.sources.custom_coords import read_custom_coordinates
+
+    pois = read_custom_coordinates(spark, f"{_geo(sf_dir)}/custom_coords.csv")
+    return pois.filter(F.col("tags")["city"] == "Durham").select(
+        "id", "lat", "lon", F.col("tags")["city"].alias("city")
+    )
+
+
+@oracle("""
+    select event_id,
+           case when value < 8.0 then 'walk'
+                when value < 40.0 then 'bike'
+                else 'drive' end as travel_mode,
+           value as requested_kmh,
+           case when value < 8.0 then greatest(3.0, least(value, 7.0))
+                when value < 40.0 then greatest(8.0, least(value, 30.0))
+                else greatest(20.0, least(value, 130.0)) end as speed_kmh
+    from events
+""")
+def q_speed_clamp(spark, sf_dir):
+    """F15: travel-mode speed validation clamp (travel_modes.py:41-43),
+    mode derived deterministically from the event value."""
+    from socialmapper_spark.functions.travel import clamp_speed_col
+
+    ev = _read(spark, sf_dir, "events")
+    mode = (
+        F.when(F.col("value") < 8.0, F.lit("walk"))
+        .when(F.col("value") < 40.0, F.lit("bike"))
+        .otherwise(F.lit("drive"))
+    )
+    return ev.select(
+        "event_id",
+        mode.alias("travel_mode"),
+        F.col("value").alias("requested_kmh"),
+        clamp_speed_col(mode, F.col("value")).alias("speed_kmh"),
+    )
+
+
+@oracle(lambda s: f"""
+    select 'valid' as bucket, poly_id
+    from read_parquet('{s.geo}/polygons.parquet')
+    union all
+    select 'invalid' as bucket, poly_id
+    from (values ('bad_null'), ('bad_truncated'), ('bad_degenerate')) t(poly_id)
+""")
+def q_geometry_quarantine(spark, sf_dir):
+    """P4: geometry validity filter — the fixture polygons (all valid)
+    unioned with three injected broken rows; returns per-bucket counts."""
+    from socialmapper_spark.operators.spatial_join import validate_geometries
+    from socialmapper_spark.session import local_frame
+
+    polys = _read_geo(spark, sf_dir, "polygons").select("poly_id", "geometry_wkb")
+    broken = local_frame(
+        spark,
+        [
+            ("bad_null", None),
+            ("bad_truncated", b"\x01\x03\x00\x00"),
+            ("bad_degenerate", bytes.fromhex(
+                # Polygon with a 2-point ring
+                "0103000000010000000200000000000000000000000000000000000000"
+                "000000000000f03f000000000000f03f"
+            )),
+        ],
+        "poly_id string, geometry_wkb binary",
+    )
+    valid, invalid = validate_geometries(polys.unionByName(broken))
+    return valid.select(F.lit("valid").alias("bucket"), "poly_id").unionByName(
+        invalid.select(F.lit("invalid").alias("bucket"), "poly_id")
+    )
+
+
+@oracle(lambda s: f"""
+    select STATE, kind, count(*) as n
+    from read_parquet('{s.geo}/polygons.parquet')
+    where STATE in ('13', '37')
+    group by STATE, kind
+""")
+def q_neighbor_states(spark, sf_dir):
+    """Neighbors API: polygons in states adjacent to South Carolina ('45'
+    → NC + GA; fixture has NC rows) via the broadcast adjacency filter."""
+    from socialmapper_spark.functions.neighbors import filter_to_neighboring_states
+
+    polys = _read_geo(spark, sf_dir, "polygons")
+    return (
+        filter_to_neighboring_states(polys, "45")
+        .groupBy("STATE", "kind")
+        .agg(F.count("*").alias("n"))
+    )
+
+
+@oracle(lambda s: f"""
+    select min(lat) - 5.0/111.0 as min_lat,
+           min(lon) - 5.0/111.0 as min_lon,
+           max(lat) + 5.0/111.0 as max_lat,
+           max(lon) + 5.0/111.0 as max_lon
+    from read_parquet('{s.geo}/pois.parquet')
+    where lat <= 90.0 and lat is not null and lon is not null
+""")
+def q_poi_bbox(spark, sf_dir):
+    """F5: buffered bounding box over the valid POI set."""
+    from socialmapper_spark.functions.bbox import poi_bounding_box
+
+    pois = _read_geo(spark, sf_dir, "pois").filter(F.col("lat") <= 90.0)
+    return poi_bounding_box(pois, buffer_km=5.0)
+
+
+@oracle(lambda s: f"""
+    with p as (
+        select lat, lon,
+               cast(5 as bigint)*288230376151711744
+               + (cast(floor((lon+180.0)/0.087890625) as bigint) % 4096)*536870912
+               + least(greatest(cast(floor((lat+90.0)/0.087890625) as bigint),0),2047)
+                 as cluster
+        from read_parquet('{s.geo}/pois.parquet')
+        where lat <= 90.0 and lat is not null and lon is not null
+    ), grp as (
+        select cluster, count(*) as n_pois,
+               min(lat) as lat0, min(lon) as lon0,
+               max(lat) as lat1, max(lon) as lon1
+        from p group by cluster
+    )
+    select cluster, n_pois,
+           lat0 - (2.0 + cast(15 as double)/15.0 + cast(n_pois as double)/10.0)/111.0 as min_lat,
+           lon0 - (2.0 + cast(15 as double)/15.0 + cast(n_pois as double)/10.0)/111.0 as min_lon,
+           lat1 + (2.0 + cast(15 as double)/15.0 + cast(n_pois as double)/10.0)/111.0 as max_lat,
+           lon1 + (2.0 + cast(15 as double)/15.0 + cast(n_pois as double)/10.0)/111.0 as max_lon
+    from grp
+""")
+def q_cluster_bbox(spark, sf_dir):
+    """F6: adaptive per-cluster network bboxes (cluster = r5 cell)."""
+    from socialmapper_spark.functions.bbox import cluster_network_bboxes
+    from socialmapper_spark.geo.cells import cell_col
+
+    pois = (
+        _read_geo(spark, sf_dir, "pois")
+        .filter(F.col("lat") <= 90.0)
+        .withColumn("cluster", cell_col(F.col("lat"), F.col("lon"), 5))
+    )
+    return cluster_network_bboxes(pois, "cluster", travel_time_minutes=15, buffer_km=2.0)
+
+
+@oracle(lambda s: f"""
+    select query_id, vec_id, cosine, rank
+    from read_parquet('{s.text}/golden_cosine_topk.parquet')
+""")
+def q_cosine_topk_many(spark, sf_dir):
+    """Many-query cosine top-k: one scan + broadcast query matrix +
+    partition-local heaps — must equal the per-query-branch plan."""
+    from socialmapper_spark.fixtures import COSINE_K, COSINE_QUERY_IDS
+    from socialmapper_spark.operators.similarity import cosine_topk_many
+
+    out = cosine_topk_many(
+        spark, _read(spark, sf_dir, "embeddings"), COSINE_QUERY_IDS, COSINE_K
+    )
+    return out.withColumn("query_id", F.col("query_id").cast("long"))
+
+
+@oracle(lambda s: f"""
+    with v as (select geoid, B19013_001E as value from ({s.wide})
+               where B19013_001E is not null),
+    st as (select cast(sum(cast(value as decimal(20,6))) as double) as s,
+                  cast(sum(cast(round(value*value, 6) as decimal(30,6))) as double) as s2,
+                  count(*) as n, max(value) as mx from v),
+    c as (select s/n as m, sqrt(greatest(s2/n - (s/n)*(s/n), 0.0)) as sd, mx from st)
+    select geoid, value,
+           least(1 + cast(value > m - 2*sd as int) + cast(value > m - sd as int)
+                   + cast(value > m + sd as int) + cast(value > m + 2*sd as int),
+                 case when mx > m + 2*sd then 5 else 4 end) as bin
+    from v, c
+""")
+def q_std_mean_bins(spark, sf_dir):
+    """F16 std_mean: cuts at mean ± {1,2}·std plus max."""
+    from socialmapper_spark.operators.classify import std_mean_bins
+
+    return std_mean_bins(_wide(spark, sf_dir))
+
+
+@oracle(lambda s: f"""
+    with v as (select geoid, B19013_001E as value from ({s.wide})
+               where B19013_001E is not null),
+    q as (select quantile_cont(value, [0.01,0.10,0.50,0.90,0.99,1.00]) as qs from v)
+    select geoid, value,
+           least(1 + cast(value > qs[1] as int) + cast(value > qs[2] as int)
+                   + cast(value > qs[3] as int) + cast(value > qs[4] as int)
+                   + cast(value > qs[5] as int) + cast(value > qs[6] as int),
+                 6) as bin
+    from v, q
+""")
+def q_percentile_bins(spark, sf_dir):
+    """F16 percentiles: cuts at [1,10,50,90,99,100] exact percentiles."""
+    from socialmapper_spark.operators.classify import percentile_bins
+
+    return percentile_bins(_wide(spark, sf_dir))
+
+
+@oracle(lambda s: f"""
+    with v as (select geoid, B19013_001E as value from ({s.wide})
+               where B19013_001E is not null),
+    q as (select quantile_cont(value, [0.25,0.50,0.75]) as qs, max(value) as mx from v),
+    c as (select qs[1] - 1.5*(qs[3]-qs[1]) as c1, qs[1] as c2, qs[2] as c3,
+                 qs[3] as c4, qs[3] + 1.5*(qs[3]-qs[1]) as c5, mx from q)
+    select geoid, value,
+           least(1 + cast(value > c1 as int) + cast(value > c2 as int)
+                   + cast(value > c3 as int) + cast(value > c4 as int)
+                   + cast(value > c5 as int)
+                   + case when mx > c5 then cast(value > mx as int) else 0 end,
+                 case when mx > c5 then 6 else 5 end) as bin
+    from v, c
+""")
+def q_box_plot_bins(spark, sf_dir):
+    """F16 box_plot: quartiles ± 1.5·IQR fences."""
+    from socialmapper_spark.operators.classify import box_plot_bins
+
+    return box_plot_bins(_wide(spark, sf_dir))
+
+
+@oracle(lambda s: f"""
+    select geoid, B19013_001E as value,
+           ntile(5) over (order by B19013_001E asc, geoid asc) as bin
+    from ({s.wide}) where B19013_001E is not null
+""")
+def q_defined_interval_bins(spark, sf_dir):
+    """F16 defined_interval — the reference resolves it to quantiles
+    (chloropleth.py:146-149)."""
+    from socialmapper_spark.operators.classify import defined_interval_bins
+
+    return defined_interval_bins(_wide(spark, sf_dir))
+
+
+@oracle(lambda s: f"""
+    with v as (select geoid, B19013_001E as value from ({s.wide})
+               where B19013_001E is not null),
+    d as (select distinct value from v),
+    g as (select value, lag(value) over (order by value) as prev from d),
+    topg as (select (value + prev)/2.0 as mid from g where prev is not null
+             order by (value - prev) desc, value desc limit 4),
+    c as (select list(mid order by mid) || [(select max(value) from v)] as cs
+          from topg)
+    select geoid, value,
+           least(1 + len(list_filter(cs, x -> value > x)), len(cs)) as bin
+    from v, c
+""")
+def q_maximum_breaks_bins(spark, sf_dir):
+    """F16 maximum_breaks: midpoints of the 4 largest sorted-value gaps."""
+    from socialmapper_spark.operators.classify import maximum_breaks_bins
+
+    return maximum_breaks_bins(_wide(spark, sf_dir))
+
+
+@oracle(lambda s: f"""
+    select geoid, value, bin from read_parquet('{s.geo}/golden_classify.parquet')
+    where scheme = 'head_tail'
+""")
+def q_head_tail_bins(spark, sf_dir):
+    """F16 head_tail_breaks: iterated mean splits (golden-parquet oracle)."""
+    from socialmapper_spark.operators.classify import head_tail_bins
+
+    return head_tail_bins(_wide(spark, sf_dir))
+
+
+@oracle(lambda s: f"""
+    select geoid, value, bin from read_parquet('{s.geo}/golden_classify.parquet')
+    where scheme = 'fisher_jenks'
+""")
+def q_fisher_jenks_bins(spark, sf_dir):
+    """F16 fisher_jenks: exact 1-D DP classification (golden oracle)."""
+    from socialmapper_spark.operators.classify import fisher_jenks_bins
+
+    return fisher_jenks_bins(_wide(spark, sf_dir))
+
+
+@oracle(lambda s: f"""
+    select geoid, value, bin from read_parquet('{s.geo}/golden_classify.parquet')
+    where scheme = 'natural_breaks'
+""")
+def q_natural_breaks_bins(spark, sf_dir):
+    """F16 natural_breaks: deterministic 1-D k-means (golden oracle)."""
+    from socialmapper_spark.operators.classify import natural_breaks_bins
+
+    return natural_breaks_bins(_wide(spark, sf_dir))
+
+
+@oracle(lambda s: f"""
+    select geoid, value, bin from read_parquet('{s.geo}/golden_classify.parquet')
+    where scheme = 'jenks_caspall'
+""")
+def q_jenks_caspall_bins(spark, sf_dir):
+    """F16 jenks_caspall: deterministic mean-reassignment (golden oracle)."""
+    from socialmapper_spark.operators.classify import jenks_caspall_bins
+
+    return jenks_caspall_bins(_wide(spark, sf_dir))
+
+
+@oracle(lambda s: f"""
+    select geoid, value, bin from read_parquet('{s.geo}/golden_classify.parquet')
+    where scheme = 'max_p'
+""")
+def q_max_p_bins(spark, sf_dir):
+    """F16 max_p_classifier (13/13): deterministic exact-L1-DP twin of
+    mapclassify's randomized MaxP (golden oracle)."""
+    from socialmapper_spark.operators.classify import max_p_bins
+
+    return max_p_bins(_wide(spark, sf_dir))
+
+
+@oracle("""
+    with e as (
+        select user_id, event_id, ts, value, epoch_us(ts) as us from events
+    ), f as (
+        select *,
+               case when lag(us) over w is null then 1
+                    when us - lag(us) over w > 1800000000 then 1
+                    else 0 end as new_s
+        from e
+        window w as (partition by user_id order by ts, event_id)
+    ), g as (
+        select *,
+               sum(new_s) over (
+                   partition by user_id order by ts, event_id
+                   rows between unbounded preceding and current row
+               ) as session_seq
+        from f
+    )
+    select user_id, cast(session_seq as bigint) as session_seq,
+           strftime(min(ts), '%Y-%m-%d %H:%M:%S.%f') as session_start,
+           strftime(max(ts), '%Y-%m-%d %H:%M:%S.%f') as session_end,
+           count(*) as n_events,
+           cast(sum(cast(value as decimal(20,6))) as double) as total_value
+    from g group by user_id, session_seq
+""")
 def q_event_sessions(spark, sf_dir):
     """Per-user sessionization (30-min gap) via lag + running-sum windows."""
     from socialmapper_spark.operators.events import sessionize
@@ -502,6 +1458,7 @@ def q_event_sessions(spark, sf_dir):
     return sessionize(_read(spark, sf_dir, "events"), gap_minutes=30)
 
 
+@oracle(q_event_sessions.oracle)
 def q_event_sessions_stream(spark, sf_dir):
     """Custom stateful streaming operator (applyInPandasWithState):
     per-user streaming sessionization — must equal the batch plan."""
@@ -513,108 +1470,16 @@ def q_event_sessions_stream(spark, sf_dir):
     )
 
 
-def q_event_props(spark, sf_dir):
-    """F17: JSON payload extraction (get_json_object over the props column,
-    mirroring the reference's POI tags parse, extraction.py:59-62)."""
-    ev = _read(spark, sf_dir, "events")
-    return ev.select(
-        "event_id",
-        F.get_json_object(F.col("props"), "$.k").alias("k_val"),
-        F.get_json_object(F.col("props"), "$.missing").alias("missing_val"),
-    )
-
-
-# --- relational parity over the driver's TPC-H-ish tables -------------------
-
-def q_pricing_summary(spark, sf_dir):
-    """A-family hash aggregate (TPC-H Q1 shape) with exact decimal sums."""
-    from socialmapper_spark.operators.census import dmean, dsum
-
-    li = _read(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp")
-    )
-    return (
-        li.groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            dsum("l_quantity").alias("sum_qty"),
-            dsum("l_extendedprice").alias("sum_base_price"),
-            dmean("l_quantity").alias("avg_qty"),
-            dmean("l_discount").alias("avg_disc"),
-            F.count("*").alias("count_order"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
-    )
-
-
-def q_market_join(spark, sf_dir):
-    """Broadcast equi-join chain: customer ⨝ orders ⨝ nation."""
-    from socialmapper_spark.operators.census import dsum
-
-    cust = _read(spark, sf_dir, "customer")
-    orders = _read(spark, sf_dir, "orders")
-    nation = _read(spark, sf_dir, "nation")
-    return (
-        orders.join(cust, orders["o_custkey"] == cust["c_custkey"])
-        .join(F.broadcast(nation), cust["c_nationkey"] == nation["n_nationkey"])
-        .groupBy("n_name", "c_mktsegment")
-        .agg(
-            F.count("*").alias("n_orders"),
-            dsum("o_totalprice").alias("revenue"),
-        )
-    )
-
-
-def q_top_customers(spark, sf_dir):
-    """Window top-k: top 3 customers by revenue per market segment."""
-    from pyspark.sql import Window
-    from socialmapper_spark.operators.census import dsum
-
-    cust = _read(spark, sf_dir, "customer")
-    orders = _read(spark, sf_dir, "orders")
-    rev = (
-        orders.join(cust, orders["o_custkey"] == cust["c_custkey"])
-        .groupBy("c_mktsegment", "c_custkey")
-        .agg(dsum("o_totalprice").alias("revenue"))
-    )
-    w = Window.partitionBy("c_mktsegment").orderBy(
-        F.col("revenue").desc(), F.col("c_custkey").asc()
-    )
-    return (
-        rev.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("c_mktsegment", "c_custkey", "revenue", "rank")
-    )
-
-
-def q_deterministic_sample(spark, sf_dir):
-    """T1: seeded/deterministic sampling — md5-keyed order + limit."""
-    orders = _read(spark, sf_dir, "orders")
-    keyed = orders.withColumn(
-        "sample_key", F.md5(F.col("o_orderkey").cast("string").cast("binary"))
-    )
-    return keyed.orderBy("sample_key").limit(100).select("o_orderkey", "sample_key")
-
-
-def q_semi_join(spark, sf_dir):
-    """J6: membership via left-semi join."""
-    orders = _read(spark, sf_dir, "orders")
-    rich = _read(spark, sf_dir, "customer").filter(F.col("c_acctbal") > 9000.0)
-    return orders.join(rich, orders["o_custkey"] == rich["c_custkey"], "left_semi").select(
-        "o_orderkey", "o_custkey"
-    )
-
-
-def q_union_all(spark, sf_dir):
-    """U1/U2: union-all of heterogeneous sources with a source tag."""
-    cust = _read(spark, sf_dir, "customer").select(
-        F.col("c_name").alias("name"), F.lit("customer").alias("src")
-    )
-    supp = _read(spark, sf_dir, "supplier").select(
-        F.col("s_name").alias("name"), F.lit("supplier").alias("src")
-    )
-    return cust.unionByName(supp)
-
-
+@oracle("""
+    select r.r_name as region, n.n_name as nation,
+           count(*) as n_orders,
+           cast(sum(cast(o.o_totalprice as decimal(20,6))) as double) as revenue
+    from orders o
+    join customer c on o.o_custkey = c.c_custkey
+    join nation n on c.c_nationkey = n.n_nationkey
+    join region r on n.n_regionkey = r.r_regionkey
+    group by r.r_name, n.n_name
+""")
 def q_revenue_by_nation(spark, sf_dir):
     """Multi-join rollup: customer ⨝ orders ⨝ nation ⨝ region, revenue and
     order counts per (region, nation) — broadcast dims, one hash agg."""
@@ -636,6 +1501,13 @@ def q_revenue_by_nation(spark, sf_dir):
     )
 
 
+@oracle("""
+    select strftime(date_trunc('month', o_orderdate), '%Y-%m') as month,
+           count(*) as n_orders,
+           cast(sum(cast(o_totalprice as decimal(20,6))) as double) as revenue,
+           count(distinct o_custkey) as n_customers
+    from orders group by 1
+""")
 def q_monthly_orders(spark, sf_dir):
     """Time-bucketed rollup: orders per month with exact revenue."""
     from socialmapper_spark.operators.census import dsum
@@ -655,37 +1527,152 @@ def q_monthly_orders(spark, sf_dir):
     )
 
 
-# --- training-data pipeline ops over documents/embeddings --------------------
+@oracle(lambda s: f"""
+    select query_id, vec_id, cosine, rank
+    from read_parquet('{s.text}/golden_lsh_ann.parquet')
+""")
+def q_lsh_ann(spark, sf_dir):
+    """LSH-bucketed approximate NN (multi-probe Hamming-1), exact rerank."""
+    from socialmapper_spark.fixtures import COSINE_K, COSINE_QUERY_IDS
+    from socialmapper_spark.operators.similarity import lsh_ann_topk
 
-def q_repetition_stats(spark, sf_dir):
-    """Gopher-style intra-doc repetition ratios (dup unigram/2-gram/
-    3-gram shares), pure Catalyst."""
-    from socialmapper_spark.functions.text import repetition_cols
+    out = lsh_ann_topk(
+        spark, _read(spark, sf_dir, "embeddings"), COSINE_QUERY_IDS, COSINE_K
+    )
+    return out.withColumn("query_id", F.col("query_id").cast("long"))
 
-    rc = repetition_cols(F.col("text"))
-    return _read(spark, sf_dir, "documents").select(
-        "doc_id",
-        rc["dup_word_ratio"].alias("dup_word_ratio"),
-        rc["dup_2gram_ratio"].alias("dup_2gram_ratio"),
-        rc["dup_3gram_ratio"].alias("dup_3gram_ratio"),
+
+@oracle(lambda s: f"""
+    select query_id, vec_id, cosine, rank
+    from read_parquet('{s.text}/golden_ivf_ann.parquet')
+""")
+def q_ivf_ann(spark, sf_dir):
+    """IVF ANN: k-means coarse quantizer + nprobe inverted-list rerank."""
+    from socialmapper_spark.fixtures import COSINE_K, COSINE_QUERY_IDS
+    from socialmapper_spark.operators.similarity import ivf_ann_topk
+
+    out = ivf_ann_topk(
+        spark, _read(spark, sf_dir, "embeddings"), COSINE_QUERY_IDS, COSINE_K
+    )
+    return out.withColumn("query_id", F.col("query_id").cast("long"))
+
+
+@oracle(lambda s: f"""
+    select doc_id, simhash from read_parquet('{s.text}/golden_simhash.parquet')
+""")
+def q_simhash(spark, sf_dir):
+    """64-bit SimHash per document (Arrow-vectorized UDF)."""
+    from socialmapper_spark.operators.dedup import simhash_docs
+
+    return simhash_docs(_read(spark, sf_dir, "documents"))
+
+
+@oracle("""
+    select md5(lower(regexp_replace(trim(text), '\\s+', ' ', 'g'))) as fingerprint,
+           min(doc_id) as keep_doc_id, count(*) as n_copies
+    from documents
+    group by 1
+""")
+def q_exact_dedup(spark, sf_dir):
+    """Exact dedup via md5 fingerprint: keep min doc_id per fingerprint."""
+    from socialmapper_spark.functions.text import doc_fingerprint
+
+    docs = _read(spark, sf_dir, "documents")
+    fp = docs.select("doc_id", doc_fingerprint(F.col("text")).alias("fingerprint"))
+    return fp.groupBy("fingerprint").agg(
+        F.min("doc_id").alias("keep_doc_id"), F.count("*").alias("n_copies")
     )
 
 
-_STRATA_RATES = {"en": 0.5, "es": 1.0, "fr": 0.25}
+@oracle("""
+    select strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') as hour,
+           event_type, count(*) as n_events,
+           cast(sum(cast(value as decimal(20,6))) as double) as total_value,
+           count(distinct user_id) as n_users
+    from events group by 1, 2
+""")
+def q_event_windows(spark, sf_dir):
+    """Tumbling 1-hour rollup per event type (batch plan)."""
+    from socialmapper_spark.operators.events import window_rollup
+
+    return window_rollup(_read(spark, sf_dir, "events"))
 
 
-def q_stratified_sample(spark, sf_dir):
-    """Language-rebalancing sampler: deterministic md5-threshold keep
-    decision per (lang stratum, url key)."""
-    from socialmapper_spark.functions.text import stratified_keep
+@oracle(q_event_windows.oracle)
+def q_event_windows_stream(spark, sf_dir):
+    """Structured Streaming twin of event_windows (watermark + window,
+    availableNow drain) — must produce identical rows to the batch plan."""
+    from socialmapper_spark.operators.events import window_rollup_stream
+    from socialmapper_spark.streaming import parquet_stream
 
-    return _crawl(spark, sf_dir).select(
-        "url",
-        "lang",
-        stratified_keep(F.col("lang"), F.col("url"), _STRATA_RATES).alias("keep"),
+    return window_rollup_stream(parquet_stream(spark, sf_dir, "events.parquet"))
+
+
+@oracle(lambda s: f"""
+    select doc_id, fingerprint
+    from read_parquet('{s.text}/golden_winnow.parquet')
+""")
+def q_winnow_fingerprints(spark, sf_dir):
+    """Winnowing document fingerprints (rolling-hash k-gram window
+    minima), pure Catalyst."""
+    from socialmapper_spark.operators.dedup import winnow_fingerprints
+
+    return winnow_fingerprints(_read(spark, sf_dir, "documents"))
+
+
+@oracle(lambda s: f"""
+    with w as (
+        select doc_id, string_split(text, ' ') as words
+        from documents
+    ),
+    s as (
+        select doc_id, cast(i as integer) as span_idx,
+               array_to_string(words[i*10+1 : i*10+10], ' ') as span_text
+        from w, unnest(range(cast(ceil(len(words)/10.0) as bigint))) as t(i)
+    ),
+    f as (
+        select doc_id, span_idx, span_text,
+               row_number() over (partition by span_text
+                                  order by doc_id, span_idx) as rn
+        from s
+    ),
+    k as (select doc_id, span_idx, span_text from f where rn = 1),
+    c as (
+        select doc_id, count(*) as n_kept,
+               string_agg(span_text, ' ' order by span_idx) as text_clean
+        from k group by doc_id
     )
+    select w.doc_id,
+           cast(ceil(len(words)/10.0) as bigint) as n_spans,
+           coalesce(c.n_kept, 0) as n_kept,
+           coalesce(c.text_clean, '') as text_clean
+    from w left join c using (doc_id)
+""")
+def q_dedup_spans(spark, sf_dir):
+    """C4-style span dedup: consecutive 10-word spans, global
+    first-occurrence survives, text reassembled in doc order."""
+    from socialmapper_spark.operators.dedup import dedup_spans
+
+    return dedup_spans(_read(spark, sf_dir, "documents"))
 
 
+@oracle(lambda s: f"""
+    with m as (
+        select doc_id,
+               case when substr(md5(text), 1, 1) in ('0','1','2','3')
+                      then text || ' contact user' || cast(doc_id as varchar)
+                           || '@example.com'
+                    when substr(md5(text), 1, 1) in ('4','5','6','7')
+                      then text || ' from 10.0.0.'
+                           || cast(doc_id % 250 as varchar)
+                    when substr(md5(text), 1, 1) in ('8','9','a','b')
+                      then text || ' call +1 (555) 123-'
+                           || lpad(cast(doc_id % 10000 as varchar), 4, '0')
+                    else text end as text
+        from documents
+    )
+    select doc_id, {_pii_sql()} from m
+""")
 def q_pii_scrub(spark, sf_dir):
     """PII scrub gate: inject synthetic emails/IPs/phones into fixture
     docs deterministically (md5-branch harness, same construction in the
@@ -732,446 +1719,22 @@ def q_pii_scrub(spark, sf_dir):
     )
 
 
-def q_doc_stats(spark, sf_dir):
-    """Token counting + quality scoring (pure Catalyst)."""
-    from socialmapper_spark.functions.text import bpe_token_count, quality_score_cols, token_count
-
-    docs = _read(spark, sf_dir, "documents")
-    qc = quality_score_cols(F.col("text"))
-    return docs.select(
-        "doc_id",
-        token_count(F.col("text")).alias("n_tokens"),
-        bpe_token_count(F.col("text")).alias("n_bpe_tokens"),
-        qc["alpha_ratio"].alias("alpha_ratio"),
-        qc["avg_word_len"].alias("avg_word_len"),
-        qc["quality_score"].alias("quality_score"),
-    )
-
-
-def q_language_id(spark, sf_dir):
-    """Heuristic language ID over documents."""
-    from socialmapper_spark.functions.text import language_id
-
-    docs = _read(spark, sf_dir, "documents")
-    return docs.select("doc_id", language_id(F.col("text")).alias("lang_pred"))
-
-
-def q_exact_dedup(spark, sf_dir):
-    """Exact dedup via md5 fingerprint: keep min doc_id per fingerprint."""
-    from socialmapper_spark.functions.text import doc_fingerprint
-
-    docs = _read(spark, sf_dir, "documents")
-    fp = docs.select("doc_id", doc_fingerprint(F.col("text")).alias("fingerprint"))
-    return fp.groupBy("fingerprint").agg(
-        F.min("doc_id").alias("keep_doc_id"), F.count("*").alias("n_copies")
-    )
-
-
-def q_minhash_pairs(spark, sf_dir):
-    """MinHash+LSH near-dup candidate pairs over documents."""
-    from socialmapper_spark.operators.dedup import near_dup_pairs_minhash
-
-    return near_dup_pairs_minhash(_read(spark, sf_dir, "documents"))
-
-
-def q_jaccard_verified(spark, sf_dir):
-    """LSH candidates verified by exact shingle-set Jaccard ≥ 0.3."""
-    from socialmapper_spark.operators.dedup import jaccard_verify, near_dup_pairs_minhash
-
-    docs = _read(spark, sf_dir, "documents")
-    pairs = near_dup_pairs_minhash(docs)
-    return jaccard_verify(docs, pairs, threshold=0.3)
-
-
-def q_simhash(spark, sf_dir):
-    """64-bit SimHash per document (Arrow-vectorized UDF)."""
-    from socialmapper_spark.operators.dedup import simhash_docs
-
-    return simhash_docs(_read(spark, sf_dir, "documents"))
-
-
-def q_dedup_spans(spark, sf_dir):
-    """C4-style span dedup: consecutive 10-word spans, global
-    first-occurrence survives, text reassembled in doc order."""
-    from socialmapper_spark.operators.dedup import dedup_spans
-
-    return dedup_spans(_read(spark, sf_dir, "documents"))
-
-
-def q_simhash_pairs(spark, sf_dir):
-    """SimHash near-dup pairs, Hamming ≤ 3 via pigeonhole-exact 4×16-bit
-    banding (lossless prune — oracle is the brute-force all-pairs SQL)."""
-    from socialmapper_spark.operators.dedup import near_dup_pairs_simhash
-
-    return near_dup_pairs_simhash(_read(spark, sf_dir, "documents"))
-
-
-def q_cosine_topk(spark, sf_dir):
-    """Exact brute-force cosine top-10 for 5 query vectors (Catalyst fold)."""
-    from socialmapper_spark.fixtures import COSINE_K, COSINE_QUERY_IDS
-    from socialmapper_spark.operators.similarity import cosine_topk
-
-    out = cosine_topk(
-        spark, _read(spark, sf_dir, "embeddings"), COSINE_QUERY_IDS, COSINE_K
-    )
-    return out.withColumn("query_id", F.col("query_id").cast("long"))
-
-
-def q_winnow(spark, sf_dir):
-    """Winnowing document fingerprints (rolling-hash k-gram window
-    minima), pure Catalyst."""
-    from socialmapper_spark.operators.dedup import winnow_fingerprints
-
-    return winnow_fingerprints(_read(spark, sf_dir, "documents"))
-
-
-def q_winnow_pairs(spark, sf_dir):
-    """Substring-level near-dup candidates: pairs sharing ≥2 winnowing
-    fingerprints through bounded buckets, with the shared count."""
-    from socialmapper_spark.operators.dedup import near_dup_pairs_winnow
-
-    return near_dup_pairs_winnow(_read(spark, sf_dir, "documents"), min_shared=2)
-
-
-def q_cosine_topk_many(spark, sf_dir):
-    """Many-query cosine top-k: one scan + broadcast query matrix +
-    partition-local heaps — must equal the per-query-branch plan."""
-    from socialmapper_spark.fixtures import COSINE_K, COSINE_QUERY_IDS
-    from socialmapper_spark.operators.similarity import cosine_topk_many
-
-    out = cosine_topk_many(
-        spark, _read(spark, sf_dir, "embeddings"), COSINE_QUERY_IDS, COSINE_K
-    )
-    return out.withColumn("query_id", F.col("query_id").cast("long"))
-
-
-def q_lsh_ann(spark, sf_dir):
-    """LSH-bucketed approximate NN (multi-probe Hamming-1), exact rerank."""
-    from socialmapper_spark.fixtures import COSINE_K, COSINE_QUERY_IDS
-    from socialmapper_spark.operators.similarity import lsh_ann_topk
-
-    out = lsh_ann_topk(
-        spark, _read(spark, sf_dir, "embeddings"), COSINE_QUERY_IDS, COSINE_K
-    )
-    return out.withColumn("query_id", F.col("query_id").cast("long"))
-
-
-def q_ivf_ann(spark, sf_dir):
-    """IVF ANN: k-means coarse quantizer + nprobe inverted-list rerank."""
-    from socialmapper_spark.fixtures import COSINE_K, COSINE_QUERY_IDS
-    from socialmapper_spark.operators.similarity import ivf_ann_topk
-
-    out = ivf_ann_topk(
-        spark, _read(spark, sf_dir, "embeddings"), COSINE_QUERY_IDS, COSINE_K
-    )
-    return out.withColumn("query_id", F.col("query_id").cast("long"))
-
-
-def q_embedding_dup(spark, sf_dir):
-    """Embedding-cosine near-dup pairs: banded multi-table hyperplane LSH
-    (4 tables × 8 bits) + hot-bucket cap + exact fold-cosine verify."""
-    from socialmapper_spark.operators.similarity import embedding_near_dup_pairs
-
-    return embedding_near_dup_pairs(spark, _read(spark, sf_dir, "embeddings"))
-
-
-def q_lsh_ann_many(spark, sf_dir):
-    """Many-query LSH ANN: one scan + shared heap kernel with per-query
-    bucket masks — same rows as q_lsh_ann, O(1) plan size in |Q|."""
-    from socialmapper_spark.fixtures import COSINE_K, COSINE_QUERY_IDS
-    from socialmapper_spark.operators.similarity import lsh_ann_topk_many
-
-    out = lsh_ann_topk_many(
-        spark, _read(spark, sf_dir, "embeddings"), COSINE_QUERY_IDS, COSINE_K
-    )
-    return out.withColumn("query_id", F.col("query_id").cast("long"))
-
-
-def q_ivf_ann_many(spark, sf_dir):
-    """Many-query IVF ANN: one scan over the probed lists + shared heap
-    kernel with per-query list masks — same rows as q_ivf_ann."""
-    from socialmapper_spark.fixtures import COSINE_K, COSINE_QUERY_IDS
-    from socialmapper_spark.operators.similarity import ivf_ann_topk_many
-
-    out = ivf_ann_topk_many(
-        spark, _read(spark, sf_dir, "embeddings"), COSINE_QUERY_IDS, COSINE_K
-    )
-    return out.withColumn("query_id", F.col("query_id").cast("long"))
-
-
-def q_embedding_quantize(spark, sf_dir):
-    """Symmetric int8 max-abs quantization of the embeddings table, with
-    per-vector reconstruction-error audit — floor-based rounding so the
-    codes are bit-reproducible across Spark and DuckDB.
-
-    Registry projection serializes the int8 codes as a comma-joined
-    string (the mentions_str pattern above): the driver's pandas
-    canonicalizer cannot sort/hash an array<int> column (r4's only red
-    row was exactly this, not a value mismatch)."""
-    from socialmapper_spark.operators.similarity import quantize_embeddings
-
-    out = quantize_embeddings(_read(spark, sf_dir, "embeddings"))
-    return out.select(
-        "vec_id",
-        "scale",
-        F.array_join(F.transform("q", lambda x: x.cast("string")), ",").alias(
-            "q_str"
-        ),
-        "max_abs_err",
-    )
-
-
-def q_dedup_groups(spark, sf_dir):
-    """Near-dup GROUPS: minhash candidates → jaccard verify → iterative
-    connected components → (doc_id, group_id, is_canonical)."""
-    from socialmapper_spark.operators.dedup import (
-        dedup_groups,
-        jaccard_verify,
-        near_dup_pairs_minhash,
-    )
-
-    docs = _read(spark, sf_dir, "documents")
-    pairs = near_dup_pairs_minhash(docs)
-    verified = jaccard_verify(docs, pairs, threshold=0.3).select("doc_a", "doc_b")
-    return dedup_groups(verified, docs=docs)
-
-
-def q_binary_metadata(spark, sf_dir):
-    """Multimodal plumbing: typed metadata from an opaque binary column
-    via mapInPandas (decode stubbed deterministically)."""
-    from socialmapper_spark.operators.multimodal import binary_metadata
-
-    return binary_metadata(_read_geo(spark, sf_dir, "pages"))
-
-
-def q_zcta_prefix(spark, sf_dir):
-    """S6: prefix-selected ZCTA boundary rows for a state (the engine twin
-    of zcta_service.get_zctas_for_state's prefix fetch)."""
-    from socialmapper_spark.functions.zcta import zctas_for_state
-
-    polys = _read_geo(spark, sf_dir, "polygons")
-    return zctas_for_state(polys, "37").select("poly_id", "GEOID", "STATE")
-
-
-def q_zcta_assignments(spark, sf_dir):
-    """S6: pages assigned to the state's ZCTAs — prefix fetch then the
-    two-phase PIP join (reference flow: fetch boundaries, then points_in_
-    polygon via the geocoder adapters)."""
-    from socialmapper_spark.functions.zcta import zctas_for_state
-    from socialmapper_spark.pipeline import page_assignments
-
-    zctas = zctas_for_state(_read_geo(spark, sf_dir, "polygons"), "37")
-    out = page_assignments(spark, _read_geo(spark, sf_dir, "pages"), zctas)
-    return out.select("url", "poly_id", "GEOID")
-
-
-def q_zcta_cleanse(spark, sf_dir):
-    """S6: ZCTA-level sentinel cleansing (zcta_service.py:352-359 — same
-    rules as block groups, applied to the ZCTA census table)."""
-    from socialmapper_spark.functions.scalar import cleanse_census_value
-
-    cl = _read_geo(spark, sf_dir, "census_zcta_long")
-    return cl.select(
-        "geoid", "variable_code",
-        cleanse_census_value(F.col("variable_code"), F.col("value")).alias("value_clean"),
-    )
-
-
-def q_variable_summary(spark, sf_dir):
-    """P7: demographic summary requested by human-readable variable names,
-    including the calculated percent_without_vehicle expansion."""
-    from socialmapper_spark.operators.census import demographic_summary, pivot_census
-
-    wide = pivot_census(_read_geo(spark, sf_dir, "census_long"))
-    return demographic_summary(
-        wide,
-        ["total_population", "median_household_income", "percent_without_vehicle"],
-    )
-
-
-def q_tag_filter(spark, sf_dir):
-    """S1: POI tag filter over the map-typed tags column (the engine twin
-    of the Overpass tag query: tags[key] == value)."""
-    from socialmapper_spark.sources.custom_coords import read_custom_coordinates
-
-    pois = read_custom_coordinates(spark, f"{_geo(sf_dir)}/custom_coords.csv")
-    return pois.filter(F.col("tags")["city"] == "Durham").select(
-        "id", "lat", "lon", F.col("tags")["city"].alias("city")
-    )
-
-
-def q_speed_clamp(spark, sf_dir):
-    """F15: travel-mode speed validation clamp (travel_modes.py:41-43),
-    mode derived deterministically from the event value."""
-    from socialmapper_spark.functions.travel import clamp_speed_col
-
-    ev = _read(spark, sf_dir, "events")
-    mode = (
-        F.when(F.col("value") < 8.0, F.lit("walk"))
-        .when(F.col("value") < 40.0, F.lit("bike"))
-        .otherwise(F.lit("drive"))
-    )
-    return ev.select(
-        "event_id",
-        mode.alias("travel_mode"),
-        F.col("value").alias("requested_kmh"),
-        clamp_speed_col(mode, F.col("value")).alias("speed_kmh"),
-    )
-
-
-def q_geometry_quarantine(spark, sf_dir):
-    """P4: geometry validity filter — the fixture polygons (all valid)
-    unioned with three injected broken rows; returns per-bucket counts."""
-    from socialmapper_spark.operators.spatial_join import validate_geometries
-    from socialmapper_spark.session import local_frame
-
-    polys = _read_geo(spark, sf_dir, "polygons").select("poly_id", "geometry_wkb")
-    broken = local_frame(
-        spark,
-        [
-            ("bad_null", None),
-            ("bad_truncated", b"\x01\x03\x00\x00"),
-            ("bad_degenerate", bytes.fromhex(
-                # Polygon with a 2-point ring
-                "0103000000010000000200000000000000000000000000000000000000"
-                "000000000000f03f000000000000f03f"
-            )),
-        ],
-        "poly_id string, geometry_wkb binary",
-    )
-    valid, invalid = validate_geometries(polys.unionByName(broken))
-    return valid.select(F.lit("valid").alias("bucket"), "poly_id").unionByName(
-        invalid.select(F.lit("invalid").alias("bucket"), "poly_id")
-    )
-
-
-def q_neighbor_states(spark, sf_dir):
-    """Neighbors API: polygons in states adjacent to South Carolina ('45'
-    → NC + GA; fixture has NC rows) via the broadcast adjacency filter."""
-    from socialmapper_spark.functions.neighbors import filter_to_neighboring_states
-
-    polys = _read_geo(spark, sf_dir, "polygons")
-    return (
-        filter_to_neighboring_states(polys, "45")
-        .groupBy("STATE", "kind")
-        .agg(F.count("*").alias("n"))
-    )
-
-
-def q_poi_bbox(spark, sf_dir):
-    """F5: buffered bounding box over the valid POI set."""
-    from socialmapper_spark.functions.bbox import poi_bounding_box
-
-    pois = _read_geo(spark, sf_dir, "pois").filter(F.col("lat") <= 90.0)
-    return poi_bounding_box(pois, buffer_km=5.0)
-
-
-def q_cluster_bbox(spark, sf_dir):
-    """F6: adaptive per-cluster network bboxes (cluster = r5 cell)."""
-    from socialmapper_spark.functions.bbox import cluster_network_bboxes
-    from socialmapper_spark.geo.cells import cell_col
-
-    pois = (
-        _read_geo(spark, sf_dir, "pois")
-        .filter(F.col("lat") <= 90.0)
-        .withColumn("cluster", cell_col(F.col("lat"), F.col("lon"), 5))
-    )
-    return cluster_network_bboxes(pois, "cluster", travel_time_minutes=15, buffer_km=2.0)
-
-
-def _wide(spark, sf_dir):
-    from socialmapper_spark.operators.census import pivot_census
-
-    return pivot_census(_read_geo(spark, sf_dir, "census_long"))
-
-
-def q_std_mean_bins(spark, sf_dir):
-    """F16 std_mean: cuts at mean ± {1,2}·std plus max."""
-    from socialmapper_spark.operators.classify import std_mean_bins
-
-    return std_mean_bins(_wide(spark, sf_dir))
-
-
-def q_percentile_bins(spark, sf_dir):
-    """F16 percentiles: cuts at [1,10,50,90,99,100] exact percentiles."""
-    from socialmapper_spark.operators.classify import percentile_bins
-
-    return percentile_bins(_wide(spark, sf_dir))
-
-
-def q_box_plot_bins(spark, sf_dir):
-    """F16 box_plot: quartiles ± 1.5·IQR fences."""
-    from socialmapper_spark.operators.classify import box_plot_bins
-
-    return box_plot_bins(_wide(spark, sf_dir))
-
-
-def q_defined_interval_bins(spark, sf_dir):
-    """F16 defined_interval — the reference resolves it to quantiles
-    (chloropleth.py:146-149)."""
-    from socialmapper_spark.operators.classify import defined_interval_bins
-
-    return defined_interval_bins(_wide(spark, sf_dir))
-
-
-def q_maximum_breaks_bins(spark, sf_dir):
-    """F16 maximum_breaks: midpoints of the 4 largest sorted-value gaps."""
-    from socialmapper_spark.operators.classify import maximum_breaks_bins
-
-    return maximum_breaks_bins(_wide(spark, sf_dir))
-
-
-def q_head_tail_bins(spark, sf_dir):
-    """F16 head_tail_breaks: iterated mean splits (golden-parquet oracle)."""
-    from socialmapper_spark.operators.classify import head_tail_bins
-
-    return head_tail_bins(_wide(spark, sf_dir))
-
-
-def q_fisher_jenks_bins(spark, sf_dir):
-    """F16 fisher_jenks: exact 1-D DP classification (golden oracle)."""
-    from socialmapper_spark.operators.classify import fisher_jenks_bins
-
-    return fisher_jenks_bins(_wide(spark, sf_dir))
-
-
-def q_jenks_caspall_bins(spark, sf_dir):
-    """F16 jenks_caspall: deterministic mean-reassignment (golden oracle)."""
-    from socialmapper_spark.operators.classify import jenks_caspall_bins
-
-    return jenks_caspall_bins(_wide(spark, sf_dir))
-
-
-def q_natural_breaks_bins(spark, sf_dir):
-    """F16 natural_breaks: deterministic 1-D k-means (golden oracle)."""
-    from socialmapper_spark.operators.classify import natural_breaks_bins
-
-    return natural_breaks_bins(_wide(spark, sf_dir))
-
-
-def q_max_p_bins(spark, sf_dir):
-    """F16 max_p_classifier (13/13): deterministic exact-L1-DP twin of
-    mapclassify's randomized MaxP (golden oracle)."""
-    from socialmapper_spark.operators.classify import max_p_bins
-
-    return max_p_bins(_wide(spark, sf_dir))
-
-
-def _crawl(spark, sf_dir):
-    from socialmapper_spark.fixtures import ensure_crawl_fixture
-
-    d = ensure_crawl_fixture(sf_dir)
-    return spark.read.parquet(str(d / "crawl_pages.parquet"))
-
-
-def _crawl_stream(spark, sf_dir):
-    from socialmapper_spark.fixtures import ensure_crawl_fixture
-    from socialmapper_spark.streaming import parquet_stream
-
-    d = ensure_crawl_fixture(sf_dir)
-    return parquet_stream(spark, str(d), "crawl_pages.parquet")
-
-
+@oracle(lambda s: f"""
+    -- order-by mirrors Spark's max(struct(ts_us, md5(text), lang,
+    -- text)) IN FULL: lang/text tiebreaks included so rows tying
+    -- on (ts, text-hash) still pick one deterministic winner in
+    -- both engines (same total order, never nondeterministic)
+    select url, epoch_us(warc_ts) as warc_ts_us, lang, text, n_snapshots
+    from (
+      select url, warc_ts, lang, text,
+             row_number() over (
+               partition by url
+               order by warc_ts desc, md5(text) desc,
+                        lang desc, text desc) as rn,
+             count(*) over (partition by url) as n_snapshots
+      from read_parquet('{s.geo}/crawl_pages.parquet'))
+    where rn = 1
+""")
 def q_snapshot_dedup(spark, sf_dir):
     """Latest-crawl-wins dedup over the multi-snapshot crawl table
     (struct-max groupBy — map-side partial agg, no window sort)."""
@@ -1180,6 +1743,44 @@ def q_snapshot_dedup(spark, sf_dir):
     return snapshot_dedup(_crawl(spark, sf_dir))
 
 
+@oracle(lambda s: f"""
+    select a.doc_id as doc_a, b.doc_id as doc_b,
+           cast(bit_count(xor(a.simhash, b.simhash)) as integer) as hamming
+    from read_parquet('{s.text}/golden_simhash.parquet') a
+    join read_parquet('{s.text}/golden_simhash.parquet') b
+      on a.doc_id < b.doc_id
+    where bit_count(xor(a.simhash, b.simhash)) <= 3
+""")
+def q_simhash_pairs(spark, sf_dir):
+    """SimHash near-dup pairs, Hamming ≤ 3 via pigeonhole-exact 4×16-bit
+    banding (lossless prune — oracle is the brute-force all-pairs SQL)."""
+    from socialmapper_spark.operators.dedup import near_dup_pairs_simhash
+
+    return near_dup_pairs_simhash(_read(spark, sf_dir, "documents"))
+
+
+@oracle(lambda s: f"""
+    select vec_a, vec_b, cosine
+    from read_parquet('{s.text}/golden_embedding_dup.parquet')
+""")
+def q_embedding_dup(spark, sf_dir):
+    """Embedding-cosine near-dup pairs: banded multi-table hyperplane LSH
+    (4 tables × 8 bits) + hot-bucket cap + exact fold-cosine verify."""
+    from socialmapper_spark.operators.similarity import embedding_near_dup_pairs
+
+    return embedding_near_dup_pairs(spark, _read(spark, sf_dir, "embeddings"))
+
+
+@oracle(lambda s: f"""
+    select regexp_extract(url, '://(?:[^/@?#]*@)?([^/:?#]+)', 1) as host,
+           count(*) as n_pages,
+           count(distinct url) as n_urls,
+           max(epoch_us(warc_ts)) as latest_ts_us,
+           round(avg(case when lang = 'en' then 1.0 else 0.0 end), 6)
+             as en_share
+    from read_parquet('{s.geo}/crawl_pages.parquet')
+    group by 1
+""")
 def q_host_stats(spark, sf_dir):
     """Per-host crawl rollup (authority extraction + one hash agg)."""
     from socialmapper_spark.operators.web import host_stats
@@ -1187,6 +1788,14 @@ def q_host_stats(spark, sf_dir):
     return host_stats(_crawl(spark, sf_dir))
 
 
+@oracle(lambda s: f"""
+    select strftime(date_trunc('day', warc_ts), '%Y-%m-%d') as day,
+           regexp_extract(url, '://(?:[^/@?#]*@)?([^/:?#]+)', 1) as host,
+           count(*) as n_pages,
+           cast(sum(case when lang = 'en' then 1 else 0 end) as bigint) as n_en
+    from read_parquet('{s.geo}/crawl_pages.parquet')
+    group by 1, 2
+""")
 def q_host_daily(spark, sf_dir):
     """Per-(day, host) crawl volume (batch plan)."""
     from socialmapper_spark.operators.web import host_daily
@@ -1194,6 +1803,7 @@ def q_host_daily(spark, sf_dir):
     return host_daily(_crawl(spark, sf_dir))
 
 
+@oracle(q_host_daily.oracle)
 def q_host_daily_stream(spark, sf_dir):
     """Structured Streaming twin of host_daily (watermark + tumbling
     window, availableNow drain) — identical rows to the batch plan."""
@@ -1202,6 +1812,13 @@ def q_host_daily_stream(spark, sf_dir):
     return host_daily_stream(_crawl_stream(spark, sf_dir))
 
 
+@oracle(lambda s: f"""
+    select url,
+           regexp_replace(decode(html), '<[^>]+>', '', 'g') as extracted,
+           regexp_replace(decode(html), '<[^>]+>', '', 'g') = text
+             as matches_text
+    from read_parquet('{s.geo}/crawl_pages.parquet')
+""")
 def q_html_extract(spark, sf_dir):
     """html binary → text extraction with the byte-identical per-url
     invariant surfaced as a checked column (input-hint contract)."""
@@ -1210,6 +1827,20 @@ def q_html_extract(spark, sf_dir):
     return extract_text(_crawl(spark, sf_dir))
 
 
+@oracle(lambda s: f"""
+    with m as (
+        select url,
+               case when substr(md5(url), 1, 1) in ('0','1','2','3')
+                      then upper(substr(url, 1, 12)) || substr(url, 13)
+                    when substr(md5(url), 1, 1) in ('4','5','6','7')
+                      then regexp_replace(url, '://([^/]+)', '://\\1:443')
+                    when substr(md5(url), 1, 1) in ('8','9','a','b')
+                      then url || '?utm_source=feed&b=2&a=1#frag'
+                    else url || '/' end as messy
+        from read_parquet('{s.geo}/crawl_pages.parquet')
+    )
+    select url, messy, {_canonical_url_sql('messy')} as canonical from m
+""")
 def q_url_canonical(spark, sf_dir):
     """URL canonicalization gate: deterministically mess up the fixture
     urls (case / default port / tracking params+fragment / trailing
@@ -1239,6 +1870,7 @@ def q_url_canonical(spark, sf_dir):
     )
 
 
+@oracle(q_admission_gate_stream.oracle)
 def q_admission_gate(spark, sf_dir):
     """Composite quality gate (language / length / words / digit
     density), thresholds picked so each rule fires on fixture rows."""
@@ -1252,6 +1884,31 @@ def q_admission_gate(spark, sf_dir):
     )
 
 
+@oracle(lambda s: f"""
+    with bl as (
+        select * from (values ('host3.example.org'),
+                              ('host13.example.org'),
+                              ('blocked.net')) t(domain)
+    ),
+    p as (
+        select url,
+               regexp_extract(url, '://(?:[^/@?#]*@)?([^/:?#]+)', 1) as host
+        from read_parquet('{s.geo}/crawl_pages.parquet')
+    ),
+    e as (
+        select url, host,
+               unnest(list_transform(
+                   range(len(string_split(host, '.'))),
+                   i -> array_to_string(string_split(host, '.')[i+1:], '.')
+               )) as suffix
+        from p
+    )
+    select url, host,
+           (max(case when suffix in (select domain from bl)
+                     then struct_pack(l := length(suffix), e := suffix)
+                end)).e as blocked_by
+    from e group by url, host
+""")
 def q_blocklist(spark, sf_dir):
     """Domain-blocklist decision per crawl page: suffix-chain explode +
     broadcast join; blocked_by = most specific matching entry."""
@@ -1266,6 +1923,20 @@ def q_blocklist(spark, sf_dir):
     return blocklist_filter(_crawl(spark, sf_dir), bl)
 
 
+@oracle(lambda s: f"""
+    with u as (
+        select distinct url from read_parquet('{s.geo}/crawl_pages.parquet')
+    ),
+    r as (
+        select url,
+               regexp_extract(url, '://(?:[^/@?#]*@)?([^/:?#]+)', 1) as host,
+               row_number() over (
+                 partition by regexp_extract(url, '://(?:[^/@?#]*@)?([^/:?#]+)', 1)
+                 order by md5(url), url) as host_rank
+        from u
+    )
+    select url, host, host_rank from r where host_rank <= 100
+""")
 def q_host_cap(spark, sf_dir):
     """C4-style per-host contribution cap (k=100) over the distinct url
     set, deterministic (md5(url), url) keep order."""
@@ -1274,12 +1945,778 @@ def q_host_cap(spark, sf_dir):
     return per_host_cap(_crawl(spark, sf_dir).select("url").distinct(), k=100)
 
 
-def q_unigram_familiarity(spark, sf_dir):
-    """Corpus-unigram LM quality score (extension surface — the CCNet-style
-    perplexity-filter tier kept in exactly-rounded arithmetic so the
-    cross-engine hash is exact; operators/lm.py docstring). Each document
-    scores the occurrence-weighted mean corpus probability of its tokens."""
-    return unigram_familiarity_frame(_read(spark, sf_dir, "documents"))
+@oracle(lambda s: f"""
+    select url, lang, {_stratified_sql()} as keep
+    from read_parquet('{s.geo}/crawl_pages.parquet')
+""")
+def q_stratified_sample(spark, sf_dir):
+    """Language-rebalancing sampler: deterministic md5-threshold keep
+    decision per (lang stratum, url key)."""
+    from socialmapper_spark.functions.text import stratified_keep
+
+    return _crawl(spark, sf_dir).select(
+        "url",
+        "lang",
+        stratified_keep(F.col("lang"), F.col("url"), _STRATA_RATES).alias("keep"),
+    )
+
+
+@oracle(lambda s: f"""
+    select doc_id, {_language_id_sql_twin()} as lang_pred
+    from documents
+""")
+def q_language_id(spark, sf_dir):
+    """Heuristic language ID over documents."""
+    from socialmapper_spark.functions.text import language_id
+
+    docs = _read(spark, sf_dir, "documents")
+    return docs.select("doc_id", language_id(F.col("text")).alias("lang_pred"))
+
+
+@oracle(q_lsh_ann.oracle)
+def q_lsh_ann_many(spark, sf_dir):
+    """Many-query LSH ANN: one scan + shared heap kernel with per-query
+    bucket masks — same rows as q_lsh_ann, O(1) plan size in |Q|."""
+    from socialmapper_spark.fixtures import COSINE_K, COSINE_QUERY_IDS
+    from socialmapper_spark.operators.similarity import lsh_ann_topk_many
+
+    out = lsh_ann_topk_many(
+        spark, _read(spark, sf_dir, "embeddings"), COSINE_QUERY_IDS, COSINE_K
+    )
+    return out.withColumn("query_id", F.col("query_id").cast("long"))
+
+
+@oracle(q_ivf_ann.oracle)
+def q_ivf_ann_many(spark, sf_dir):
+    """Many-query IVF ANN: one scan over the probed lists + shared heap
+    kernel with per-query list masks — same rows as q_ivf_ann."""
+    from socialmapper_spark.fixtures import COSINE_K, COSINE_QUERY_IDS
+    from socialmapper_spark.operators.similarity import ivf_ann_topk_many
+
+    out = ivf_ann_topk_many(
+        spark, _read(spark, sf_dir, "embeddings"), COSINE_QUERY_IDS, COSINE_K
+    )
+    return out.withColumn("query_id", F.col("query_id").cast("long"))
+
+
+@oracle(lambda s: f"""
+    select url, cast(t.frame_idx as int) as frame_idx,
+           md5(md5(decode(html)) || ':' || cast(t.frame_idx as varchar)) as frame_md5
+    from read_parquet('{s.geo}/pages.parquet')
+    cross join (select unnest(range(4)) as frame_idx) t
+""")
+def q_frame_sample(spark, sf_dir):
+    """Multimodal: deterministic frame sampling (one→many mapInPandas)."""
+    from socialmapper_spark.operators.multimodal import frame_sample
+
+    return frame_sample(_read_geo(spark, sf_dir, "pages"), n_frames=4)
+
+
+@oracle(lambda s: f"""
+    select poly_id,
+           lpad(STATE, 2, '0') || lpad(COUNTY, 3, '0')
+             || lpad(TRACT, 6, '0') || lpad(BLKGRP, 1, '0') as geoid_built,
+           (lpad(STATE, 2, '0') || lpad(COUNTY, 3, '0')
+             || lpad(TRACT, 6, '0') || lpad(BLKGRP, 1, '0')) = GEOID as matches
+    from read_parquet('{s.geo}/polygons.parquet') where kind = 'blockgroup'
+""")
+def q_geoid_build(spark, sf_dir):
+    """F10 (build direction): assemble zero-padded GEOIDs from components."""
+    from socialmapper_spark.functions.scalar import geoid_build
+
+    polys = _read_geo(spark, sf_dir, "polygons").filter(F.col("kind") == "blockgroup")
+    return polys.select(
+        "poly_id",
+        geoid_build(
+            F.col("STATE"), F.col("COUNTY"), F.col("TRACT"), F.col("BLKGRP")
+        ).alias("geoid_built"),
+        (geoid_build(
+            F.col("STATE"), F.col("COUNTY"), F.col("TRACT"), F.col("BLKGRP")
+        ) == F.col("GEOID")).alias("matches"),
+    )
+
+
+@oracle(lambda s: f"""
+    select poly_id, GEOID, STATE
+    from read_parquet('{s.geo}/polygons.parquet')
+    where kind = 'zcta' and (GEOID like '27%' or GEOID like '28%')
+""")
+def q_zcta_prefix(spark, sf_dir):
+    """S6: prefix-selected ZCTA boundary rows for a state (the engine twin
+    of zcta_service.get_zctas_for_state's prefix fetch)."""
+    from socialmapper_spark.functions.zcta import zctas_for_state
+
+    polys = _read_geo(spark, sf_dir, "polygons")
+    return zctas_for_state(polys, "37").select("poly_id", "GEOID", "STATE")
+
+
+@oracle(lambda s: f"""
+    select url, poly_id, GEOID
+    from read_parquet('{s.geo}/golden_assignments.parquet')
+    where kind = 'zcta' and (GEOID like '27%' or GEOID like '28%')
+""")
+def q_zcta_assignments(spark, sf_dir):
+    """S6: pages assigned to the state's ZCTAs — prefix fetch then the
+    two-phase PIP join (reference flow: fetch boundaries, then points_in_
+    polygon via the geocoder adapters)."""
+    from socialmapper_spark.functions.zcta import zctas_for_state
+    from socialmapper_spark.pipeline import page_assignments
+
+    zctas = zctas_for_state(_read_geo(spark, sf_dir, "polygons"), "37")
+    out = page_assignments(spark, _read_geo(spark, sf_dir, "pages"), zctas)
+    return out.select("url", "poly_id", "GEOID")
+
+
+@oracle(lambda s: f"""
+    select geoid, variable_code, {_CLEANSE_SQL} as value_clean
+    from read_parquet('{s.geo}/census_zcta_long.parquet')
+""")
+def q_zcta_cleanse(spark, sf_dir):
+    """S6: ZCTA-level sentinel cleansing (zcta_service.py:352-359 — same
+    rules as block groups, applied to the ZCTA census table)."""
+    from socialmapper_spark.functions.scalar import cleanse_census_value
+
+    cl = _read_geo(spark, sf_dir, "census_zcta_long")
+    return cl.select(
+        "geoid", "variable_code",
+        cleanse_census_value(F.col("variable_code"), F.col("value")).alias("value_clean"),
+    )
+
+
+@oracle(lambda s: f"""
+    select cast(sum(cast(B01003_001E as decimal(20,6))) as double) as B01003_001E,
+           cast(sum(cast(B19013_001E as decimal(20,6))) as double)
+               / count(B19013_001E) as B19013_001E,
+           cast(sum(cast(B25044_003E as decimal(20,6)))
+                + sum(cast(B25044_010E as decimal(20,6))) as double)
+               as percent_without_vehicle
+    from ({s.wide})
+""")
+def q_variable_summary(spark, sf_dir):
+    """P7: demographic summary requested by human-readable variable names,
+    including the calculated percent_without_vehicle expansion."""
+    from socialmapper_spark.operators.census import demographic_summary, pivot_census
+
+    wide = pivot_census(_read_geo(spark, sf_dir, "census_long"))
+    return demographic_summary(
+        wide,
+        ["total_population", "median_household_income", "percent_without_vehicle"],
+    )
+
+
+@oracle(lambda s: f"""
+    select GEOID, poi_id, distance_km, distance_miles
+    from read_parquet('{s.geo}/golden_centroid_knn.parquet')
+""")
+def q_centroid_nearest_poi(spark, sf_dir):
+    """J3 (the reference's actual shape): distance from each block-group
+    CENTROID to its nearest POI, min Euclidean km in EPSG:5070."""
+    from socialmapper_spark.fixtures import ensure_geo_extras
+    from socialmapper_spark.operators.knn import knn_join
+    from socialmapper_spark.operators.stats import unit_centroids
+
+    ensure_geo_extras(sf_dir)
+    cents = unit_centroids(_read_geo(spark, sf_dir, "polygons"))
+    pois = _read_geo(spark, sf_dir, "pois").filter(F.col("lat") <= 90.0)
+    out = knn_join(spark, cents, pois, k=1, strategy="broadcast", id_col="GEOID")
+    return out.select("GEOID", "poi_id", "distance_km", "distance_miles")
+
+
+@oracle(lambda s: f"""
+    select cast(sum(cast(B01003_001E as decimal(20,6))) as double) as B01003_001E,
+           cast(sum(cast(B19013_001E as decimal(20,6))) as double)
+               / count(B19013_001E) as B19013_001E,
+           cast(sum(cast(B01002_001E as decimal(20,6))) as double) as B01002_001E,
+           cast(sum(cast(B25044_003E as decimal(20,6))) as double) as B25044_003E,
+           cast(sum(cast(B25044_010E as decimal(20,6))) as double) as B25044_010E
+    from ({s.wide})
+""")
+def q_demographic_summary(spark, sf_dir):
+    """A1: sum/mean dispatch over the cleansed wide census frame."""
+    from socialmapper_spark.operators.census import demographic_summary, pivot_census
+
+    wide = pivot_census(_read_geo(spark, sf_dir, "census_long"))
+    return demographic_summary(
+        wide, ["B01003_001E", "B19013_001E", "B01002_001E", "B25044_003E", "B25044_010E"]
+    )
+
+
+@oracle(q_defined_interval_bins.oracle)
+def q_quantile_bins(spark, sf_dir):
+    """F16: quantile classification binning (ntile) over median income."""
+    from socialmapper_spark.operators.census import pivot_census
+    from socialmapper_spark.operators.stats import quantile_bins
+
+    wide = pivot_census(_read_geo(spark, sf_dir, "census_long"))
+    return quantile_bins(wide, "B19013_001E", k=5)
+
+
+@oracle(lambda s: s.wide)
+def q_census_pivot(spark, sf_dir):
+    """J4: long → wide pivot with cleansing."""
+    from socialmapper_spark.operators.census import pivot_census
+
+    return pivot_census(_read_geo(spark, sf_dir, "census_long"))
+
+
+@oracle(lambda s: f"""
+    with vals as (
+        select geoid, B19013_001E as value from ({s.wide})
+        where B19013_001E is not null
+    ), bounds as (
+        select min(value) as lo, max(value) as hi from vals
+    )
+    select geoid, value,
+           case when hi = lo then 1
+                else least(
+                    cast(floor((value - lo) / ((hi - lo) / 5.0)) as int) + 1,
+                    5)
+           end as bin
+    from vals, bounds
+""")
+def q_equal_interval_bins(spark, sf_dir):
+    """F16 (second scheme): equal-interval classification over income."""
+    from socialmapper_spark.operators.census import pivot_census
+    from socialmapper_spark.operators.stats import equal_interval_bins
+
+    wide = pivot_census(_read_geo(spark, sf_dir, "census_long"))
+    return equal_interval_bins(wide, "B19013_001E", k=5)
+
+
+@oracle(lambda s: s.cleansed)
+def q_census_cleanse(spark, sf_dir):
+    """P3 sentinel cleansing (exact reference rules)."""
+    from socialmapper_spark.functions.scalar import cleanse_census_value
+
+    cl = _read_geo(spark, sf_dir, "census_long")
+    return cl.select(
+        "geoid", "variable_code",
+        cleanse_census_value(F.col("variable_code"), F.col("value")).alias("value_clean"),
+    )
+
+
+@oracle(lambda s: f"""
+    select GEOID,
+           substr(GEOID, 1, 2) as state_fips,
+           substr(GEOID, 3, 3) as county_fips,
+           substr(GEOID, 6, 6) as tract,
+           substr(GEOID, 12, 1) as block_group
+    from read_parquet('{s.geo}/polygons.parquet') where kind = 'blockgroup'
+""")
+def q_geoid_components(spark, sf_dir):
+    """F10: GEOID split into hierarchy components."""
+    from socialmapper_spark.functions.scalar import geoid_split
+
+    polys = _read_geo(spark, sf_dir, "polygons").filter(F.col("kind") == "blockgroup")
+    parts = geoid_split(F.col("GEOID"))
+    return polys.select(
+        "GEOID",
+        parts["state_fips"].alias("state_fips"),
+        parts["county_fips"].alias("county_fips"),
+        parts["tract"].alias("tract"),
+        parts["block_group"].alias("block_group"),
+    )
+
+
+@oracle(lambda s: f"""
+    select url, lat, lon
+    from read_parquet('{s.geo}/golden_geoparsed.parquet')
+    where lat between 33.7 and 36.6 and lon between -84.4 and -75.3
+""")
+def q_state_bounds(spark, sf_dir):
+    """S2/F14: hard-coded state bbox filter over geoparsed pages."""
+    from socialmapper_spark.functions.scalar import state_bounds_filter
+    from socialmapper_spark.pipeline import geoparse_pages
+
+    geop = geoparse_pages(_read_geo(spark, sf_dir, "pages")).filter(
+        F.col("lat").isNotNull()
+    )
+    return state_bounds_filter(geop, "NC").select("url", "lat", "lon")
+
+
+@oracle(lambda s: f"""
+    select a.GEOID,
+           min(k.distance_miles) as distance_miles,
+           arg_min(k.poi_id, k.url) as first_poi_id
+    from read_parquet('{s.geo}/golden_assignments.parquet') a
+    join read_parquet('{s.geo}/golden_knn.parquet') k using (url)
+    where a.kind = 'blockgroup'
+    group by a.GEOID
+""")
+def q_dedup_units(spark, sf_dir):
+    """A2: dedup group-by with min/first agg rules over PIP+kNN output."""
+    from socialmapper_spark.operators.census import dedup_units
+    from socialmapper_spark.operators.knn import knn_join
+    from socialmapper_spark.pipeline import geoparse_pages, page_assignments
+
+    assigns = page_assignments(
+        spark, _read_geo(spark, sf_dir, "pages"), _read_geo(spark, sf_dir, "polygons")
+    ).filter(F.col("kind") == "blockgroup")
+    geop = geoparse_pages(_read_geo(spark, sf_dir, "pages"))
+    pois = _read_geo(spark, sf_dir, "pois").filter(F.col("lat") <= 90.0)
+    knn = knn_join(spark, geop, pois, k=1, strategy="broadcast")
+    units = assigns.select("url", "GEOID").join(knn, "url")
+    return dedup_units(
+        units,
+        keys=["GEOID"],
+        min_cols=["distance_miles"],
+        first_cols=["poi_id"],
+        order_col="url",
+    ).withColumnRenamed("poi_id", "first_poi_id")
+
+
+@oracle(lambda s: f"""
+    select id, lat, lon from read_parquet('{s.geo}/pois.parquet')
+    where not (lat is not null and lon is not null
+               and lat between -90 and 90 and lon between -180 and 180)
+""")
+def q_coordinate_quarantine(spark, sf_dir):
+    """P1: invalid-coordinate quarantine (returns the rejected rows)."""
+    from socialmapper_spark.functions.scalar import validate_coordinates
+
+    pois = _read_geo(spark, sf_dir, "pois")
+    _, bad = validate_coordinates(pois)
+    return bad.select("id", "lat", "lon")
+
+
+@oracle("""
+    select l_returnflag, l_linestatus,
+           cast(sum(cast(l_quantity as decimal(20,6))) as double) as sum_qty,
+           cast(sum(cast(l_extendedprice as decimal(20,6))) as double) as sum_base_price,
+           cast(sum(cast(l_quantity as decimal(20,6))) as double)
+               / count(l_quantity) as avg_qty,
+           cast(sum(cast(l_discount as decimal(20,6))) as double)
+               / count(l_discount) as avg_disc,
+           count(*) as count_order
+    from lineitem
+    where l_shipdate <= timestamp '1998-09-02'
+    group by l_returnflag, l_linestatus
+""")
+def q_pricing_summary(spark, sf_dir):
+    """A-family hash aggregate (TPC-H Q1 shape) with exact decimal sums."""
+    from socialmapper_spark.operators.census import dmean, dsum
+
+    li = _read(spark, sf_dir, "lineitem").filter(
+        F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp")
+    )
+    return (
+        li.groupBy("l_returnflag", "l_linestatus")
+        .agg(
+            dsum("l_quantity").alias("sum_qty"),
+            dsum("l_extendedprice").alias("sum_base_price"),
+            dmean("l_quantity").alias("avg_qty"),
+            dmean("l_discount").alias("avg_disc"),
+            F.count("*").alias("count_order"),
+        )
+        .orderBy("l_returnflag", "l_linestatus")
+    )
+
+
+@oracle("""
+    select n_name, c_mktsegment, count(*) as n_orders,
+           cast(sum(cast(o_totalprice as decimal(20,6))) as double) as revenue
+    from orders
+    join customer on o_custkey = c_custkey
+    join nation on c_nationkey = n_nationkey
+    group by n_name, c_mktsegment
+""")
+def q_market_join(spark, sf_dir):
+    """Broadcast equi-join chain: customer ⨝ orders ⨝ nation."""
+    from socialmapper_spark.operators.census import dsum
+
+    cust = _read(spark, sf_dir, "customer")
+    orders = _read(spark, sf_dir, "orders")
+    nation = _read(spark, sf_dir, "nation")
+    return (
+        orders.join(cust, orders["o_custkey"] == cust["c_custkey"])
+        .join(F.broadcast(nation), cust["c_nationkey"] == nation["n_nationkey"])
+        .groupBy("n_name", "c_mktsegment")
+        .agg(
+            F.count("*").alias("n_orders"),
+            dsum("o_totalprice").alias("revenue"),
+        )
+    )
+
+
+@oracle("""
+    with rev as (
+        select c_mktsegment, c_custkey,
+               cast(sum(cast(o_totalprice as decimal(20,6))) as double) as revenue
+        from orders join customer on o_custkey = c_custkey
+        group by c_mktsegment, c_custkey
+    )
+    select c_mktsegment, c_custkey, revenue, rank from (
+        select *, row_number() over (
+            partition by c_mktsegment order by revenue desc, c_custkey asc
+        ) as rank
+        from rev
+    ) where rank <= 3
+""")
+def q_top_customers(spark, sf_dir):
+    """Window top-k: top 3 customers by revenue per market segment."""
+    from pyspark.sql import Window
+    from socialmapper_spark.operators.census import dsum
+
+    cust = _read(spark, sf_dir, "customer")
+    orders = _read(spark, sf_dir, "orders")
+    rev = (
+        orders.join(cust, orders["o_custkey"] == cust["c_custkey"])
+        .groupBy("c_mktsegment", "c_custkey")
+        .agg(dsum("o_totalprice").alias("revenue"))
+    )
+    w = Window.partitionBy("c_mktsegment").orderBy(
+        F.col("revenue").desc(), F.col("c_custkey").asc()
+    )
+    return (
+        rev.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= 3)
+        .select("c_mktsegment", "c_custkey", "revenue", "rank")
+    )
+
+
+@oracle("""
+    select o_orderkey, md5(cast(o_orderkey as varchar)) as sample_key
+    from orders
+    order by sample_key limit 100
+""")
+def q_deterministic_sample(spark, sf_dir):
+    """T1: seeded/deterministic sampling — md5-keyed order + limit."""
+    orders = _read(spark, sf_dir, "orders")
+    keyed = orders.withColumn(
+        "sample_key", F.md5(F.col("o_orderkey").cast("string").cast("binary"))
+    )
+    return keyed.orderBy("sample_key").limit(100).select("o_orderkey", "sample_key")
+
+
+@oracle("""
+    select o_orderkey, o_custkey from orders
+    where o_custkey in (select c_custkey from customer where c_acctbal > 9000.0)
+""")
+def q_semi_join(spark, sf_dir):
+    """J6: membership via left-semi join."""
+    orders = _read(spark, sf_dir, "orders")
+    rich = _read(spark, sf_dir, "customer").filter(F.col("c_acctbal") > 9000.0)
+    return orders.join(rich, orders["o_custkey"] == rich["c_custkey"], "left_semi").select(
+        "o_orderkey", "o_custkey"
+    )
+
+
+@oracle("""
+    select c_name as name, 'customer' as src from customer
+    union all
+    select s_name as name, 'supplier' as src from supplier
+""")
+def q_union_all(spark, sf_dir):
+    """U1/U2: union-all of heterogeneous sources with a source tag."""
+    cust = _read(spark, sf_dir, "customer").select(
+        F.col("c_name").alias("name"), F.lit("customer").alias("src")
+    )
+    supp = _read(spark, sf_dir, "supplier").select(
+        F.col("s_name").alias("name"), F.lit("supplier").alias("src")
+    )
+    return cust.unionByName(supp)
+
+
+@oracle(lambda s: f"""
+    select doc_id,
+           case when trim(text) = '' then 0
+                else len(regexp_split_to_array(trim(text), '\\s+')) end as n_tokens,
+           len(regexp_extract_all(text, '{TOKEN_RE_SQL}')) as n_bpe_tokens,
+           case when length(text) > 0
+                then cast(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) as double)
+                     / length(text) else 0.0 end as alpha_ratio,
+           case when (case when trim(text)='' then 0
+                      else len(regexp_split_to_array(trim(text),'\\s+')) end) > 0
+                then cast(length(text) as double)
+                     / (case when trim(text)='' then 0
+                        else len(regexp_split_to_array(trim(text),'\\s+')) end)
+                else 0.0 end as avg_word_len,
+           least(1.0, greatest(0.0,
+               (case when length(text) > 0
+                     then cast(length(regexp_replace(text,'[^A-Za-z]','','g')) as double)
+                          / length(text) else 0.0 end) * 0.7
+               + least((case when trim(text)='' then 0
+                        else len(regexp_split_to_array(trim(text),'\\s+')) end)
+                       / 100.0, 1.0) * 0.3
+               - (case when length(text) > 0
+                       then cast(length(regexp_replace(text,'[^.,;:!?]','','g')) as double)
+                            / length(text) else 0.0 end) * 0.5
+           )) as quality_score
+    from documents
+""")
+def q_doc_stats(spark, sf_dir):
+    """Token counting + quality scoring (pure Catalyst)."""
+    from socialmapper_spark.functions.text import bpe_token_count, quality_score_cols, token_count
+
+    docs = _read(spark, sf_dir, "documents")
+    qc = quality_score_cols(F.col("text"))
+    return docs.select(
+        "doc_id",
+        token_count(F.col("text")).alias("n_tokens"),
+        bpe_token_count(F.col("text")).alias("n_bpe_tokens"),
+        qc["alpha_ratio"].alias("alpha_ratio"),
+        qc["avg_word_len"].alias("avg_word_len"),
+        qc["quality_score"].alias("quality_score"),
+    )
+
+
+@oracle(q_cosine_topk_many.oracle)
+def q_cosine_topk(spark, sf_dir):
+    """Exact brute-force cosine top-10 for 5 query vectors (Catalyst fold)."""
+    from socialmapper_spark.fixtures import COSINE_K, COSINE_QUERY_IDS
+    from socialmapper_spark.operators.similarity import cosine_topk
+
+    out = cosine_topk(
+        spark, _read(spark, sf_dir, "embeddings"), COSINE_QUERY_IDS, COSINE_K
+    )
+    return out.withColumn("query_id", F.col("query_id").cast("long"))
+
+
+@oracle(lambda s: f"""
+    select url,
+           octet_length(html) as byte_len,
+           md5(decode(html)) as content_md5,
+           cast(64 + cast(('0x' || substr(md5(decode(html)),1,4)) as bigint) % 1920
+                as int) as fake_width,
+           cast(64 + cast(('0x' || substr(md5(decode(html)),5,4)) as bigint) % 1080
+                as int) as fake_height
+    from read_parquet('{s.geo}/pages.parquet')
+""")
+def q_binary_metadata(spark, sf_dir):
+    """Multimodal plumbing: typed metadata from an opaque binary column
+    via mapInPandas (decode stubbed deterministically)."""
+    from socialmapper_spark.operators.multimodal import binary_metadata
+
+    return binary_metadata(_read_geo(spark, sf_dir, "pages"))
+
+
+@oracle(lambda s: f"""
+    select url, poi_id, distance_km, distance_miles, knn_rank
+    from read_parquet('{s.geo}/golden_knn3.parquet')
+""")
+def q_knn_topk(spark, sf_dir):
+    """T4: general k nearest (k=3) via window top-k over broadcast candidates."""
+    from socialmapper_spark.operators.knn import knn_join
+    from socialmapper_spark.pipeline import geoparse_pages
+
+    geop = geoparse_pages(_read_geo(spark, sf_dir, "pages"))
+    pois = _read_geo(spark, sf_dir, "pois").filter(F.col("lat") <= 90.0)
+    out = knn_join(spark, geop, pois, k=3, strategy="broadcast")
+    return out.select("url", "poi_id", "distance_km", "distance_miles", "knn_rank")
+
+
+@oracle(lambda s: f"""
+    select travel_time_minutes, travel_mode, n_isochrones, total_area_km2
+    from read_parquet('{s.geo}/golden_area.parquet')
+""")
+def q_isochrone_area(spark, sf_dir):
+    """A3: equal-area km² per travel-time band (shoelace in EPSG:5070)."""
+    from socialmapper_spark.operators.stats import isochrone_area
+
+    return isochrone_area(_read_geo(spark, sf_dir, "polygons"))
+
+
+@oracle(lambda s: f"""
+    with sizes as (
+        select {_CELL_SQL_R7} as cell, count(*) as cluster_size
+        from read_parquet('{s.geo}/golden_geoparsed.parquet')
+        where lat is not null group by 1
+    )
+    select count(*) as n_clusters,
+           cast(sum(cast(cluster_size as decimal(20,6))) as double) as total_points,
+           cast(sum(cast(cluster_size as decimal(20,6))) as double)
+               / count(cluster_size) as mean_cluster_size,
+           max(cluster_size) as max_cluster_size,
+           min(cluster_size) as min_cluster_size
+    from sizes
+""")
+def q_cluster_metrics(spark, sf_dir):
+    """A4: cluster-size metrics with the H3 cell as the cluster key."""
+    from socialmapper_spark.operators.stats import cluster_metrics
+    from socialmapper_spark.pipeline import geoparse_pages
+
+    return cluster_metrics(geoparse_pages(_read_geo(spark, sf_dir, "pages")))
+
+
+@oracle(lambda s: f"""
+    select variable_code, count(*) as n_total, count(value_clean) as n_valid,
+           count(*) - count(value_clean) as n_null,
+           cast(count(*) - count(value_clean) as double) / count(*) as null_rate
+    from ({s.cleansed}) group by variable_code
+""")
+def q_null_rate(spark, sf_dir):
+    """A5: per-variable valid/null counts after sentinel cleansing."""
+    from socialmapper_spark.operators.stats import null_rate_stats
+
+    return null_rate_stats(_read_geo(spark, sf_dir, "census_long"))
+
+
+@oracle(lambda s: f"""
+    select substr(GEOID, 1, 2) as state_fips, substr(GEOID, 1, 5) as state_county,
+           count(*) as n_units, count(distinct GEOID) as n_distinct_geoids
+    from read_parquet('{s.geo}/polygons.parquet') where kind = 'blockgroup'
+    group by 1, 2
+""")
+def q_geoid_prefix(spark, sf_dir):
+    """A6: GEOID state/state+county prefix grouping (the batching/salt key)."""
+    from socialmapper_spark.operators.stats import geoid_prefix_groups
+
+    polys = _read_geo(spark, sf_dir, "polygons").filter(F.col("kind") == "blockgroup")
+    return geoid_prefix_groups(polys)
+
+
+@oracle(lambda s: f"""
+    select id, coalesce(name, 'Custom POI ' || id) as name,
+           'custom' as type,
+           cast(latitude as double) as lat, cast(lng as double) as lon,
+           'city=' || city || '|rank=' || cast("rank" as varchar) as tags_str
+    from read_csv('{s.geo}/custom_coords.csv', header = true)
+    where latitude is not null and lng is not null
+""")
+def q_custom_coords(spark, sf_dir):
+    """S3: schema-tolerant custom coordinates reader (lat/latitude/y etc.)."""
+    from socialmapper_spark.fixtures import ensure_geo_extras
+    from socialmapper_spark.sources import read_custom_coordinates
+
+    geo = str(ensure_geo_extras(sf_dir))
+    out = read_custom_coordinates(spark, f"{geo}/custom_coords.csv")
+    tags_str = F.array_join(
+        F.transform(
+            F.array_sort(F.map_entries("tags")),
+            lambda e: F.concat(e["key"], F.lit("="), e["value"]),
+        ),
+        "|",
+    )
+    return out.select("id", "name", "type", "lat", "lon", tags_str.alias("tags_str"))
+
+
+@oracle(lambda s: f"""
+    select id,
+           case when length(id) % 3 = 0 then 'NC'
+                when length(id) % 3 = 1 then '37'
+                else 'north carolina' end as state,
+           'North Carolina' as state_name, 'NC' as state_abbr,
+           '37' as state_fips
+    from read_parquet('{s.geo}/pois.parquet')
+""")
+def q_state_normalize(spark, sf_dir):
+    """P6: state name/abbr/FIPS normalization via broadcast dim join."""
+    from socialmapper_spark.functions.states import normalize_state
+
+    pois = _read_geo(spark, sf_dir, "pois")
+    # exercise all three alias formats deterministically per row
+    aliased = pois.select(
+        "id",
+        F.when(F.length("id") % 3 == 0, F.lit("NC"))
+        .when(F.length("id") % 3 == 1, F.lit("37"))
+        .otherwise(F.lit("north carolina"))
+        .alias("state"),
+    )
+    out = normalize_state(spark, aliased, "state")
+    return out.select("id", "state", "state_name", "state_abbr", "state_fips")
+
+
+@oracle(lambda s: f"""
+    select distinct substr(GEOID, 1, 2) as state_fips,
+           substr(GEOID, 3, 3) as county_fips
+    from read_parquet('{s.geo}/golden_assignments.parquet')
+    where kind = 'blockgroup'
+""")
+def q_counties_from_pages(spark, sf_dir):
+    """J7: distinct (state, county) containing any geoparsed page."""
+    from socialmapper_spark.functions.scalar import geoid_split
+    from socialmapper_spark.pipeline import page_assignments
+
+    assigns = page_assignments(
+        spark, _read_geo(spark, sf_dir, "pages"), _read_geo(spark, sf_dir, "polygons")
+    ).filter(F.col("kind") == "blockgroup")
+    parts = geoid_split(F.col("GEOID"))
+    return (
+        assigns.select(
+            parts["state_fips"].alias("state_fips"),
+            parts["county_fips"].alias("county_fips"),
+        )
+        .distinct()
+        .orderBy("state_fips", "county_fips")
+    )
+
+
+@oracle(lambda s: f"""
+    select GEOID, p.poi_id, p.poi_name
+    from read_parquet('{s.geo}/polygons.parquet'),
+         (select id as poi_id, name as poi_name
+          from read_parquet('{s.geo}/pois.parquet')
+          where lat <= 90.0 order by id limit 1) p
+    where kind = 'blockgroup'
+""")
+def q_poi_broadcast(spark, sf_dir):
+    """J5: first-POI metadata broadcast onto every block-group unit."""
+    pois = _read_geo(spark, sf_dir, "pois").filter(F.col("lat") <= 90.0)
+    first_poi = pois.orderBy("id").limit(1).select(
+        F.col("id").alias("poi_id"), F.col("name").alias("poi_name")
+    )
+    units = _read_geo(spark, sf_dir, "polygons").filter(
+        F.col("kind") == "blockgroup"
+    ).select("GEOID")
+    return units.crossJoin(F.broadcast(first_poi))
+
+
+@oracle("""
+    select event_id,
+           json_extract_string(props, '$.k') as k_val,
+           json_extract_string(props, '$.missing') as missing_val
+    from events
+""")
+def q_event_props(spark, sf_dir):
+    """F17: JSON payload extraction (get_json_object over the props column,
+    mirroring the reference's POI tags parse, extraction.py:59-62)."""
+    ev = _read(spark, sf_dir, "events")
+    return ev.select(
+        "event_id",
+        F.get_json_object(F.col("props"), "$.k").alias("k_val"),
+        F.get_json_object(F.col("props"), "$.missing").alias("missing_val"),
+    )
+
+
+@oracle(lambda s: f"""
+    select GEOID, lat, lon from read_parquet('{s.geo}/golden_centroids.parquet')
+""")
+def q_unit_centroids(spark, sf_dir):
+    """F7: block-group centroids (EPSG:5070 shoelace → back to 4326)."""
+    from socialmapper_spark.fixtures import ensure_geo_extras
+    from socialmapper_spark.operators.stats import unit_centroids
+
+    ensure_geo_extras(sf_dir)
+    out = unit_centroids(_read_geo(spark, sf_dir, "polygons"))
+    return out.select("GEOID", "lat", "lon")
+
+
+# ---------------------------------------------------------------------------
+# helpers shared by the entries: Spark side
+# ---------------------------------------------------------------------------
+
+_STRATA_RATES = {"en": 0.5, "es": 1.0, "fr": 0.25}
+
+
+def _wide(spark, sf_dir):
+    from socialmapper_spark.operators.census import pivot_census
+
+    return pivot_census(_read_geo(spark, sf_dir, "census_long"))
+
+
+def _crawl(spark, sf_dir):
+    from socialmapper_spark.fixtures import ensure_crawl_fixture
+
+    d = ensure_crawl_fixture(sf_dir)
+    return spark.read.parquet(str(d / "crawl_pages.parquet"))
+
+
+def _crawl_stream(spark, sf_dir):
+    from socialmapper_spark.fixtures import ensure_crawl_fixture
+    from socialmapper_spark.streaming import parquet_stream
+
+    d = ensure_crawl_fixture(sf_dir)
+    return parquet_stream(spark, str(d), "crawl_pages.parquet")
 
 
 def unigram_familiarity_frame(docs: DataFrame) -> DataFrame:
@@ -1288,169 +2725,6 @@ def unigram_familiarity_frame(docs: DataFrame) -> DataFrame:
     from socialmapper_spark.operators.lm import unigram_familiarity
 
     return unigram_familiarity(docs)
-
-
-def q_bigram_familiarity(spark, sf_dir):
-    """The n=2 rung of the familiarity ladder: word-bigram corpus
-    probability — catches word-salad whose individual words are all
-    common (operators/lm.py docstring). Same exactly-rounded
-    arithmetic; docs with <2 words drop out (both engines)."""
-    from socialmapper_spark.operators.lm import unigram_familiarity
-
-    return unigram_familiarity(_read(spark, sf_dir, "documents"), n=2)
-
-
-def q_decontaminate(spark, sf_dir):
-    """Benchmark decontamination: flag docs sharing any exact 8-gram
-    with the (deterministically chosen) benchmark subset."""
-    from socialmapper_spark.operators.dedup import decontaminate
-
-    docs = _read(spark, sf_dir, "documents")
-    bench = docs.filter(F.col("doc_id") % 97 == 0)
-    return decontaminate(docs, bench)
-
-
-def q_decontaminate_bloom(spark, sf_dir):
-    """Bloom-filter decontamination (the 100 TB screen): same benchmark
-    subset as q_decontaminate; broadcasts ≤ m occupied long bit
-    positions instead of the gram strings. Cross-engine-deterministic
-    md5-60 probes, so the DuckDB twin reproduces even the false
-    positives exactly."""
-    from socialmapper_spark.operators.dedup import decontaminate_bloom
-
-    docs = _read(spark, sf_dir, "documents")
-    bench = docs.filter(F.col("doc_id") % 97 == 0)
-    return decontaminate_bloom(docs, bench)
-
-
-def q_host_pagerank(spark, sf_dir):
-    """Host-graph PageRank (crawl-frontier prioritization): edges are
-    derived deterministically from the crawl table — each distinct url
-    on host h links to host (item*31+7) mod 16 — then ranked with 5
-    fixed-point integer PageRank rounds (operators/graph.py). All-int64
-    update rule, so the DuckDB unrolled-CTE twin is bit-identical."""
-    from socialmapper_spark.fixtures import ensure_crawl_fixture
-    from socialmapper_spark.operators.graph import pagerank
-    from socialmapper_spark.operators.web import page_host
-
-    g = ensure_crawl_fixture(sf_dir)
-    pages = spark.read.parquet(f"{g}/crawl_pages.parquet")
-    item = F.regexp_extract("url", "/item/([0-9]+)", 1).cast("long")
-    edges = pages.select("url").distinct().select(
-        page_host(F.col("url")).alias("src"),
-        F.concat(
-            F.lit("host"),
-            F.pmod(item * 31 + 7, F.lit(16)).cast("string"),
-            F.lit(".example.org"),
-        ).alias("dst"),
-    )
-    return pagerank(edges).withColumnRenamed("node", "host")
-
-
-def q_item_pagerank(spark, sf_dir):
-    """Page-level PageRank at meaningful graph size (~66k nodes at
-    sf0.1 vs 16 hosts in host_pagerank): each distinct crawl item i
-    emits two deterministic out-edges into a 4096-hub space
-    ((i*31+7) mod 4096 and (i*131+29) mod 4096) — a skewed in-degree
-    link graph (few hub pages absorb most links, the web norm). Same
-    integer update rule; the DuckDB twin unrolls the same 5 rounds."""
-    from socialmapper_spark.fixtures import ensure_crawl_fixture
-    from socialmapper_spark.operators.graph import pagerank
-
-    g = ensure_crawl_fixture(sf_dir)
-    pages = spark.read.parquet(f"{g}/crawl_pages.parquet")
-    item = F.regexp_extract("url", "/item/([0-9]+)", 1).cast("long")
-    edges = (
-        pages.select(item.alias("i"))
-        .distinct()
-        .select(
-            "i",
-            F.explode(
-                F.array(
-                    F.pmod(F.col("i") * 31 + 7, F.lit(4096)),
-                    F.pmod(F.col("i") * 131 + 29, F.lit(4096)),
-                )
-            ).alias("d"),
-        )
-        .select(
-            F.concat(F.lit("i"), F.col("i").cast("string")).alias("src"),
-            F.concat(F.lit("i"), F.col("d").cast("string")).alias("dst"),
-        )
-    )
-    return pagerank(edges).withColumnRenamed("node", "item")
-
-
-def q_hll_snapshots(spark, sf_dir):
-    """Per-host distinct-snapshot cardinality via the deterministic
-    HyperLogLog sketch (operators/sketch.py, p=8 → 256 registers,
-    rse ~6.5%): key = snapshot text (~940 distinct per host at sf0.01,
-    load ≈ 3.7·m — inside raw-HLL's accurate regime). The register
-    build is one map-side-combinable max keyed (host, idx); the DuckDB
-    twin (hll_sql, generated beside the operator) reproduces hash,
-    registers, and the single-IEEE-division estimate bit-exactly."""
-    from socialmapper_spark.fixtures import ensure_crawl_fixture
-    from socialmapper_spark.operators.sketch import hll_cardinality
-    from socialmapper_spark.operators.web import page_host
-
-    g = ensure_crawl_fixture(sf_dir)
-    pages = spark.read.parquet(f"{g}/crawl_pages.parquet")
-    return hll_cardinality(
-        pages.select(page_host(F.col("url")).alias("host"), "text"),
-        "text",
-        ("host",),
-        p=8,
-    ).orderBy("host")
-
-
-def q_cms_host_snapshots(spark, sf_dir):
-    """Per-host snapshot frequency via a 4×2048 count-min sketch
-    (operators/sketch.py): the sketch is ONE combinable integer sum
-    bounded at d·w counter rows however large the crawl, broadcast to
-    the probe join. Estimates are exact-or-over by construction; with
-    16 hosts vs 8192 counters, collisions are improbable and the
-    estimates equal the exact counts — the DuckDB twin (cms_sql) is
-    bit-exact either way."""
-    from socialmapper_spark.fixtures import ensure_crawl_fixture
-    from socialmapper_spark.operators.sketch import cms_counts
-    from socialmapper_spark.operators.web import page_host
-
-    g = ensure_crawl_fixture(sf_dir)
-    pages = spark.read.parquet(f"{g}/crawl_pages.parquet")
-    return cms_counts(
-        pages.select(page_host(F.col("url")).alias("host")), "host"
-    ).orderBy("host")
-
-
-def q_admission_gate_stream(spark, sf_dir):
-    """Streaming twin of the admission gate (stateless append mode) —
-    row-equal to batch, checked against the SAME SQL oracle."""
-    from socialmapper_spark.operators.web import admission_gate
-    from socialmapper_spark.streaming import drain
-
-    gated = admission_gate(
-        _crawl_stream(spark, sf_dir),
-        min_chars=122,
-        min_words=23,
-        max_digit_ratio=0.05,
-    )
-    return drain(gated, "append")
-
-
-def q_host_top_terms(spark, sf_dir):
-    """Top-5 host-characteristic terms (tf / document-frequency score —
-    IEEE-division-exact across engines)."""
-    from socialmapper_spark.operators.web import host_top_terms
-
-    return host_top_terms(_crawl(spark, sf_dir))
-
-
-def q_crawl_curation(spark, sf_dir):
-    """End-to-end crawl curation — the composition a 100-TB pipeline
-    actually runs, as ONE plan: latest-snapshot dedup → quality
-    admission gate → domain blocklist → per-host cap → canonical key.
-    Every stage is the registry operator; the oracle composes their SQL
-    twins stage-for-stage."""
-    return crawl_curation_frame(spark, _crawl(spark, sf_dir))
 
 
 def crawl_curation_frame(spark, crawl: DataFrame) -> DataFrame:
@@ -1489,62 +2763,6 @@ def crawl_curation_frame(spark, crawl: DataFrame) -> DataFrame:
 _CURATION_MIN_QUALITY = 0.7
 _CURATION_MAX_DUP3 = 0.05
 _CURATION_RATES = {"en": 0.75}
-
-
-def q_corpus_curation(spark, sf_dir):
-    """End-to-end DOCUMENT curation — the text-side twin of
-    q_crawl_curation, as ONE plan: language gate → quality-score gate →
-    repetition gate → benchmark decontamination → deterministic
-    language-stratified sampling → PII scrub of the survivors. Emits
-    every doc with its first-failing-stage reason (admission_gate's
-    audit convention), so the whole funnel is hash-checkable. Every
-    stage is a registry operator; the oracle composes their SQL twins
-    stage-for-stage. Scale shape: ALL text-derived columns (gates,
-    language id, sampling decision, scrub) compute in ONE scan-side
-    projection that drops raw text before the single doc_id-keyed join
-    with the decontamination flags (benchmark grams broadcast; per-doc
-    count agg) — so text-gate expressions evaluate once per row and only
-    the output's scrubbed text crosses the exchange. Deliberately NOT
-    split into filter-then-join: a filter on a computed column gets the
-    alias SUBSTITUTED into the predicate by Catalyst's pushdown
-    (PushDownPredicates rewrites through Project), re-inlining the whole
-    language/quality/repetition tree into the filter — measured 40×
-    slower (8.7 s vs 0.2 s at sf0.1) with codegen falling over the
-    method-size cliff; the join-everything shape keeps each expensive
-    alias referenced ≥2 times, which CollapseProject refuses to inline.
-    Zero Python nodes."""
-    return corpus_curation_frame(_read(spark, sf_dir, "documents"))
-
-
-def q_corpus_curation_lm(spark, sf_dir):
-    """The curation funnel composed with the LM quality scorer: every
-    doc's first-failing-stage reason PLUS its corpus-unigram familiarity
-    and a fixed-threshold LM gate (`familiarity >= 1e-4` — a literal so
-    the boolean is bit-reproducible; real pipelines pick the threshold
-    from a held-out calibration). One doc_id-keyed join of two
-    already-oracled plans; the oracle composes their SQL twins as
-    subqueries. The documents scan is shared lineage but evaluated per
-    branch (funnel projection vs LM explode — different column sets, so
-    a shared persist would trade a narrow scan for a wide cache; the
-    funnel side persists nothing, the LM side keeps its (doc, token)
-    cache)."""
-    from socialmapper_spark.operators.lm import unigram_familiarity
-
-    docs = _read(spark, sf_dir, "documents")
-    funnel = corpus_curation_frame(docs)
-    lm_full = unigram_familiarity(docs)
-    # the caches attribute lives on the returned object — grab it BEFORE
-    # any further transformation (the r4 host_top_terms advice)
-    caches = getattr(lm_full, "__spark_graft_caches__", None)
-    lm = lm_full.select("doc_id", "familiarity")
-    out = funnel.join(lm, "doc_id", "left")
-    out = out.withColumn(
-        "lm_pass",
-        F.coalesce(F.col("familiarity") >= F.lit(1e-4), F.lit(False)),
-    )
-    if caches:
-        out.__spark_graft_caches__ = caches
-    return out
 
 
 def corpus_curation_frame(docs):
@@ -1594,55 +2812,6 @@ def corpus_curation_frame(docs):
     )
 
 
-def q_crawl_enrich_stream(spark, sf_dir):
-    """Stream-static dimension join: streaming crawl pages enriched with
-    the batch-computed per-host rollup (broadcast static side, stateless
-    append) — must be row-equal to the equivalent batch join."""
-    from socialmapper_spark.operators.web import crawl_enrich, host_stats
-    from socialmapper_spark.streaming import drain
-
-    dim = host_stats(_crawl(spark, sf_dir))
-    return drain(crawl_enrich(_crawl_stream(spark, sf_dir), dim), "append")
-
-
-def q_snapshot_dedup_stream(spark, sf_dir):
-    """Streaming first-seen-wins url admission gate
-    (dropDuplicatesWithinWatermark). Which physical row is 'first' is
-    micro-batch-order-dependent, so the payload columns (warc_ts, lang)
-    are engine-chosen; the DETERMINISTIC contract is the admitted url
-    set — every url emitted exactly once inside the watermark horizon
-    (fixture snapshots span 4 days << the 30-day horizon). The registry
-    projects exactly that set so a SQL oracle (distinct url) can
-    hash-check it; the per-row payload invariants stay pytest-pinned
-    (tests assert every emitted row exists in the input)."""
-    from socialmapper_spark.operators.web import snapshot_dedup_stream
-
-    return snapshot_dedup_stream(_crawl_stream(spark, sf_dir)).select("url")
-
-
-def q_asof_join(spark, sf_dir):
-    """Temporal as-of join (extension surface — the reference pipeline is a
-    single batch snapshot with no temporal axis): every event picks the
-    most recent purchase-snapshot for its user (``snap_ts <= ts``,
-    inclusive, standard ASOF semantics — the DuckDB oracle runs a native
-    ``ASOF LEFT JOIN``). Default compact strategy: snapshot-array
-    dimension + a higher-order-function probe, O(snapshots per key) per
-    left row (operators/temporal.py docstring has the measured regimes).
-
-    Timestamps are projected as unix micros: both engines read the same
-    parquet int64, so the cross-engine hash is exact."""
-    return asof_join_frame(_read(spark, sf_dir, "events"))
-
-
-def q_asof_join_union(spark, sf_dir):
-    """The as-of join's ``strategy="union"`` form (union-then-window, the
-    faster one on keys with many snapshots and many left rows) on the
-    same inputs and projection as ``asof_join``; shares that entry's
-    DuckDB ``ASOF LEFT JOIN`` oracle, so strategy equivalence is
-    driver-checkable."""
-    return asof_join_frame(_read(spark, sf_dir, "events"), strategy="union")
-
-
 def asof_join_frame(events: DataFrame, strategy: str = "compact") -> DataFrame:
     """asof_join over a caller-provided events frame — split out so
     bench.py can thread a repartitioned frame in (events.parquet ships as
@@ -1672,16 +2841,6 @@ def asof_join_frame(events: DataFrame, strategy: str = "compact") -> DataFrame:
     )
 
 
-def q_interval_join(spark, sf_dir):
-    """Temporal interval-containment join (extension surface): events
-    attributed to 45-minute campaign windows of the same event_type
-    (start inclusive, end exclusive). The naive range theta-join lowers
-    to BroadcastNestedLoopJoin; this operator buckets time so Catalyst
-    gets an equi-join key (operators/temporal.py docstring — plan
-    asserted NestedLoop-free in tests/test_temporal.py)."""
-    return interval_join_frame(_read(spark, sf_dir, "events"))
-
-
 def interval_join_frame(events: DataFrame) -> DataFrame:
     """interval_join over a caller-provided events frame (see
     asof_join_frame for why the frame is threaded in)."""
@@ -1709,205 +2868,8 @@ def interval_join_frame(events: DataFrame) -> DataFrame:
     )
 
 
-def q_interval_overlap(spark, sf_dir):
-    """Interval-OVERLAP join (extension surface): two event-derived
-    interval sets (30-min and 45-min windows of the same event_type)
-    paired wherever they overlap, end-exclusive. Both sides
-    bucket-replicate into an equi-join and the pair dedup happens
-    plan-side in the overlap-start bucket — no NestedLoop, no distinct
-    (operators/temporal.py interval_overlap_join docstring; the naive
-    range theta-join is a BroadcastNestedLoopJoin and the naive bucket
-    dedup a second wide shuffle)."""
-    events = _read(spark, sf_dir, "events")
-    from socialmapper_spark.operators.temporal import interval_overlap_join
-
-    a = events.filter(F.col("event_id") % 50 == 0).select(
-        F.col("event_id").alias("a_id"),
-        "event_type",
-        F.col("ts").alias("a_start"),
-        (F.col("ts") + F.expr("INTERVAL 30 MINUTES")).alias("a_end"),
-    )
-    b = events.filter(F.col("event_id") % 70 == 0).select(
-        F.col("event_id").alias("b_id"),
-        F.col("event_type").alias("event_type_b"),
-        F.col("ts").alias("b_start"),
-        (F.col("ts") + F.expr("INTERVAL 45 MINUTES")).alias("b_end"),
-    ).withColumnRenamed("event_type_b", "event_type")
-    out = interval_overlap_join(
-        a, b,
-        left_start="a_start", left_end="a_end",
-        right_start="b_start", right_end="b_end",
-        on=["event_type"], bucket_seconds=1800,
-    )
-    return out.select(
-        "a_id",
-        "b_id",
-        "event_type",
-        F.unix_micros(F.col("a_start").cast("timestamp")).alias("a_start_us"),
-        F.unix_micros(F.col("b_start").cast("timestamp")).alias("b_start_us"),
-    )
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Registry order matters: the driver's CORRECTNESS gate evaluates the
-    FIRST 50 entries only, so the newest / this-round-changed operators sit
-    up front; long-multiply-verified entries (TPC-H relational set, r1-green
-    basics) rotate to the back where the local oracle replica
-    (scripts/check_correctness.py) still covers them every round.
-
-    ROTATION POLICY (pinned after the r3 review): (1) the flagship core
-    (pip/knn/flagship + geoparse, the headline operators) holds permanent
-    in-gate slots; (2) every entry whose Spark plan OR oracle SQL changed
-    this round goes in-gate; (3) entries that have never had a driver row
-    go in-gate before anything rotates back in; (4) remaining slots are
-    filled oldest-driver-row-first; multi-round-green entries (the
-    classification-bin family, TPC-H basics) rotate out first. The local
-    replica covers 100% of the registry every round regardless
-    (CORRECTNESS_LOCAL_r{{N}}.txt), so rotation only changes WHICH rows
-    the driver re-proves, never what is verified."""
-    return {
-        # flagship core (permanent in-gate slots — headline semantics)
-        "pip_assignments": q_pip_assignments,
-        "knn_nearest": q_knn_nearest,
-        "knn_kring": q_knn_kring,
-        "flagship_demographics": q_flagship,
-        "geoparse": q_geoparse,
-        # never-driver-green entries (rotation rule 3): the r4 red row's
-        # fix and the newly-oracled stream projection — both must prove
-        "embedding_quantize": q_embedding_quantize,
-        "snapshot_dedup_stream": q_snapshot_dedup_stream,
-        # r5-new temporal joins (rotation rule 3: no driver row yet)
-        "asof_join": q_asof_join,
-        "asof_join_union": q_asof_join_union,
-        "interval_join": q_interval_join,
-        "interval_overlap": q_interval_overlap,
-        "salted_cell_counts": q_salted_cell_counts,
-        # r5 n-gram rewrite (slice+array_join) changed these plans AFTER
-        # the last rotation -> fresh driver rows needed (rotation rule 2)
-        "minhash_pairs": q_minhash_pairs,
-        "jaccard_verified": q_jaccard_verified,
-        "repetition_stats": q_repetition_stats,
-        "decontaminate": q_decontaminate,
-        # r5-new Bloom decontamination (rotation rule 3: no driver row yet)
-        "decontaminate_bloom": q_decontaminate_bloom,
-        # r5-new host-graph PageRank (rotation rule 3: no driver row yet)
-        "host_pagerank": q_host_pagerank,
-        "item_pagerank": q_item_pagerank,
-        # r5-new mergeable sketches (rotation rule 3: no driver row yet)
-        "hll_snapshots": q_hll_snapshots,
-        "cms_host_snapshots": q_cms_host_snapshots,
-        # r5-new LM quality scorer (rotation rule 3: no driver row yet)
-        "unigram_familiarity": q_unigram_familiarity,
-        "bigram_familiarity": q_bigram_familiarity,
-        # r5-changed plans (rotation rule 2): exact-integer raster decode,
-        # chunked-lineage module, CC convergence contracts, curation refactor
-        "rasterize": q_rasterize,
-        "focal_stats": q_focal_stats,
-        "downsample": q_downsample,
-        "zonal_stats": q_zonal_stats,
-        "polygon_burn": q_polygon_burn,
-        "vectorize_hotspots": q_vectorize_hotspots,
-        "lineage_stats": q_lineage_stats,
-        "dedup_groups": q_dedup_groups,
-        "corpus_curation": q_corpus_curation,
-        "corpus_curation_lm": q_corpus_curation_lm,
-        # entries with exactly one driver-green round (rotation rule 3)
-        "crawl_curation": q_crawl_curation,
-        "host_top_terms": q_host_top_terms,
-        "admission_gate_stream": q_admission_gate_stream,
-        "winnow_pairs": q_winnow_pairs,
-        "crawl_enrich_stream": q_crawl_enrich_stream,
-        "tag_filter": q_tag_filter,
-        "speed_clamp": q_speed_clamp,
-        "geometry_quarantine": q_geometry_quarantine,
-        "neighbor_states": q_neighbor_states,
-        "poi_bbox": q_poi_bbox,
-        "cluster_bbox": q_cluster_bbox,
-        "cosine_topk_many": q_cosine_topk_many,
-        "std_mean_bins": q_std_mean_bins,
-        "percentile_bins": q_percentile_bins,
-        "box_plot_bins": q_box_plot_bins,
-        "defined_interval_bins": q_defined_interval_bins,
-        "maximum_breaks_bins": q_maximum_breaks_bins,
-        "head_tail_bins": q_head_tail_bins,
-        "fisher_jenks_bins": q_fisher_jenks_bins,
-        # --- 50-row driver gate ends here; below: multiply-verified
-        # entries (driver-green in >=2 rounds, implementation unchanged)
-        # still checked by the local oracle replica every round ---
-        "natural_breaks_bins": q_natural_breaks_bins,
-        "jenks_caspall_bins": q_jenks_caspall_bins,
-        "max_p_bins": q_max_p_bins,
-        "event_sessions": q_event_sessions,
-        "event_sessions_stream": q_event_sessions_stream,
-        "revenue_by_nation": q_revenue_by_nation,
-        "monthly_orders": q_monthly_orders,
-        # remaining slots: oldest driver row first (rotation rule 4)
-        "lsh_ann": q_lsh_ann,
-        "ivf_ann": q_ivf_ann,
-        "simhash": q_simhash,
-        "exact_dedup": q_exact_dedup,
-        "event_windows": q_event_windows,
-        "event_windows_stream": q_event_windows_stream,
-        "winnow_fingerprints": q_winnow,
-        "dedup_spans": q_dedup_spans,
-        "pii_scrub": q_pii_scrub,
-        "snapshot_dedup": q_snapshot_dedup,
-        "simhash_pairs": q_simhash_pairs,
-        "embedding_dup": q_embedding_dup,
-        "host_stats": q_host_stats,
-        "host_daily": q_host_daily,
-        "host_daily_stream": q_host_daily_stream,
-        "html_extract": q_html_extract,
-        "url_canonical": q_url_canonical,
-        "admission_gate": q_admission_gate,
-        "blocklist": q_blocklist,
-        "host_cap": q_host_cap,
-        "stratified_sample": q_stratified_sample,
-        "language_id": q_language_id,
-        "lsh_ann_many": q_lsh_ann_many,
-        "ivf_ann_many": q_ivf_ann_many,
-        "frame_sample": q_frame_sample,
-        "geoid_build": q_geoid_build,
-        "zcta_prefix": q_zcta_prefix,
-        "zcta_assignments": q_zcta_assignments,
-        "zcta_cleanse": q_zcta_cleanse,
-        "variable_summary": q_variable_summary,
-        "centroid_nearest_poi": q_centroid_nearest_poi,
-        "demographic_summary": q_demographic_summary,
-        "quantile_bins": q_quantile_bins,
-        "census_pivot": q_census_pivot,
-        "equal_interval_bins": q_equal_interval_bins,
-        "census_cleanse": q_census_cleanse,
-        "geoid_components": q_geoid_components,
-        "state_bounds": q_state_bounds,
-        "dedup_units": q_dedup_units,
-        "coordinate_quarantine": q_coordinate_quarantine,
-        "pricing_summary": q_pricing_summary,
-        "market_join": q_market_join,
-        "top_customers": q_top_customers,
-        "deterministic_sample": q_deterministic_sample,
-        "semi_join": q_semi_join,
-        "union_all": q_union_all,
-        "doc_stats": q_doc_stats,
-        "cosine_topk": q_cosine_topk,
-        "binary_metadata": q_binary_metadata,
-        "knn_topk": q_knn_topk,
-        "isochrone_area": q_isochrone_area,
-        "cluster_metrics": q_cluster_metrics,
-        "null_rate": q_null_rate,
-        "geoid_prefix": q_geoid_prefix,
-        "custom_coords": q_custom_coords,
-        "state_normalize": q_state_normalize,
-        "counties_from_pages": q_counties_from_pages,
-        "poi_broadcast": q_poi_broadcast,
-        "event_props": q_event_props,
-        "unit_centroids": q_unit_centroids,
-    }
-
-
 # ---------------------------------------------------------------------------
-# oracles — DuckDB SQL twins (run at sf0.01; geo fixtures referenced by
-# absolute path, TPC-H tables by their pre-registered view names)
+# helpers shared by the oracles: DuckDB side
 # ---------------------------------------------------------------------------
 
 _CELL_SQL_R7 = (
@@ -1921,6 +2883,7 @@ _CELL_SQL_R9 = (
     "+ least(greatest(cast(floor((lat+90.0)/0.0054931640625) as bigint),0),32767)"
 )
 
+
 _CLEANSE_SQL = """
     case
       when value is null then null
@@ -1931,1128 +2894,6 @@ _CLEANSE_SQL = """
       when value < -100000 then null
       else value
     end
-"""
-
-
-def oracle_sql() -> dict[str, str]:
-    # make sure the sf0.01 fixtures + goldens exist before DuckDB reads them
-    from socialmapper_spark.fixtures import (
-        ensure_crawl_fixture,
-        ensure_geo_extras,
-        ensure_text_goldens,
-    )
-    from socialmapper_spark.operators.lm import unigram_familiarity_sql
-
-    _geo("/root/testdata/sf0.01")
-    ensure_geo_extras("/root/testdata/sf0.01")
-    ensure_crawl_fixture("/root/testdata/sf0.01")
-    tg = str(ensure_text_goldens("/root/testdata/sf0.01"))
-    g = GEO_SF01
-    cleansed = f"""
-        select geoid, variable_code, {_CLEANSE_SQL} as value_clean
-        from read_parquet('{g}/census_long.parquet')
-    """
-    wide = f"""
-        select geoid,
-               max(case when variable_code='B01003_001E' then value_clean end) as B01003_001E,
-               max(case when variable_code='B19013_001E' then value_clean end) as B19013_001E,
-               max(case when variable_code='B01002_001E' then value_clean end) as B01002_001E,
-               max(case when variable_code='B25044_003E' then value_clean end) as B25044_003E,
-               max(case when variable_code='B25044_010E' then value_clean end) as B25044_010E
-        from ({cleansed}) group by geoid
-    """
-    oracles = {
-        "asof_join": """
-            with snaps as (
-              select user_id, ts as snap_ts, max(value) as snap_value
-              from events where event_type = 'purchase' group by 1, 2
-            )
-            select e.event_id, e.user_id, epoch_us(e.ts) as ts_us,
-                   epoch_us(s.snap_ts) as snap_us, s.snap_value
-            from events e asof left join snaps s
-              on e.user_id = s.user_id and e.ts >= s.snap_ts
-        """,
-        # strategy equivalence: the union-then-window fallback must produce
-        # the exact rows the compact strategy does, so it shares the oracle
-        "asof_join_union": """
-            with snaps as (
-              select user_id, ts as snap_ts, max(value) as snap_value
-              from events where event_type = 'purchase' group by 1, 2
-            )
-            select e.event_id, e.user_id, epoch_us(e.ts) as ts_us,
-                   epoch_us(s.snap_ts) as snap_us, s.snap_value
-            from events e asof left join snaps s
-              on e.user_id = s.user_id and e.ts >= s.snap_ts
-        """,
-        "interval_join": """
-            with ivals as (
-              select event_id as interval_id, event_type, ts as start_ts,
-                     ts + interval 45 minute as end_ts
-              from events where event_id % 100 = 0
-            )
-            select e.event_id, i.interval_id, e.event_type,
-                   epoch_us(e.ts) as ts_us, epoch_us(i.start_ts) as start_us
-            from events e join ivals i
-              on e.event_type = i.event_type
-             and e.ts >= i.start_ts and e.ts < i.end_ts
-        """,
-        "interval_overlap": """
-            with a as (
-              select event_id as a_id, event_type, ts as a_start,
-                     ts + interval 30 minute as a_end
-              from events where event_id % 50 = 0
-            ), b as (
-              select event_id as b_id, event_type, ts as b_start,
-                     ts + interval 45 minute as b_end
-              from events where event_id % 70 = 0
-            )
-            select a.a_id, b.b_id, a.event_type,
-                   epoch_us(a.a_start) as a_start_us,
-                   epoch_us(b.b_start) as b_start_us
-            from a join b
-              on a.event_type = b.event_type
-             and a.a_start < b.b_end and b.b_start < a.a_end
-        """,
-        "geoparse": f"""
-            select url, lat, lon,
-                   coalesce(array_to_string(mentions, '|'), '') as mentions_str,
-                   case when lat is null then null else {_CELL_SQL_R7} end as cell_r7,
-                   case when lat is null then null else {_CELL_SQL_R9} end as cell_r9
-            from read_parquet('{g}/golden_geoparsed.parquet')
-        """,
-        "pip_assignments": f"""
-            select url, poly_id, GEOID, kind
-            from read_parquet('{g}/golden_assignments.parquet')
-        """,
-        "knn_nearest": f"""
-            select url, poi_id, distance_km, distance_miles
-            from read_parquet('{g}/golden_knn.parquet')
-        """,
-        "knn_kring": f"""
-            select url, poi_id, distance_km, distance_miles
-            from read_parquet('{g}/golden_knn.parquet')
-        """,
-        "flagship_demographics": f"""
-            with iso as (
-                select a.url, a.poly_id as iso_id, 15 as travel_time_minutes
-                from read_parquet('{g}/golden_assignments.parquet') a
-                where a.kind = 'isochrone'
-            ), bg as (
-                select url, GEOID as bg_geoid
-                from read_parquet('{g}/golden_assignments.parquet')
-                where kind = 'blockgroup'
-            ), pairs as (
-                select iso.iso_id, iso.travel_time_minutes, iso.url, bg.bg_geoid
-                from iso join bg using (url)
-            ), iso_bgs as (
-                select distinct iso_id, travel_time_minutes, bg_geoid from pairs
-            ), page_counts as (
-                select iso_id, count(distinct url) as n_pages from pairs group by iso_id
-            ), wide as ({wide})
-            select b.iso_id, b.travel_time_minutes,
-                   p.n_pages,
-                   count(distinct b.bg_geoid) as n_block_groups,
-                   cast(sum(cast(w.B01003_001E as decimal(20,6))) as double) as total_population,
-                   cast(sum(cast(w.B19013_001E as decimal(20,6))) as double)
-                       / count(w.B19013_001E) as median_household_income
-            from iso_bgs b
-            left join wide w on b.bg_geoid = w.geoid
-            join page_counts p on b.iso_id = p.iso_id
-            group by b.iso_id, b.travel_time_minutes, p.n_pages
-        """,
-        "census_cleanse": cleansed,
-        "census_pivot": wide,
-        "geoid_components": f"""
-            select GEOID,
-                   substr(GEOID, 1, 2) as state_fips,
-                   substr(GEOID, 3, 3) as county_fips,
-                   substr(GEOID, 6, 6) as tract,
-                   substr(GEOID, 12, 1) as block_group
-            from read_parquet('{g}/polygons.parquet') where kind = 'blockgroup'
-        """,
-        "state_bounds": f"""
-            select url, lat, lon
-            from read_parquet('{g}/golden_geoparsed.parquet')
-            where lat between 33.7 and 36.6 and lon between -84.4 and -75.3
-        """,
-        "dedup_units": f"""
-            select a.GEOID,
-                   min(k.distance_miles) as distance_miles,
-                   arg_min(k.poi_id, k.url) as first_poi_id
-            from read_parquet('{g}/golden_assignments.parquet') a
-            join read_parquet('{g}/golden_knn.parquet') k using (url)
-            where a.kind = 'blockgroup'
-            group by a.GEOID
-        """,
-        "demographic_summary": f"""
-            select cast(sum(cast(B01003_001E as decimal(20,6))) as double) as B01003_001E,
-                   cast(sum(cast(B19013_001E as decimal(20,6))) as double)
-                       / count(B19013_001E) as B19013_001E,
-                   cast(sum(cast(B01002_001E as decimal(20,6))) as double) as B01002_001E,
-                   cast(sum(cast(B25044_003E as decimal(20,6))) as double) as B25044_003E,
-                   cast(sum(cast(B25044_010E as decimal(20,6))) as double) as B25044_010E
-            from ({wide})
-        """,
-        "coordinate_quarantine": f"""
-            select id, lat, lon from read_parquet('{g}/pois.parquet')
-            where not (lat is not null and lon is not null
-                       and lat between -90 and 90 and lon between -180 and 180)
-        """,
-        "pricing_summary": """
-            select l_returnflag, l_linestatus,
-                   cast(sum(cast(l_quantity as decimal(20,6))) as double) as sum_qty,
-                   cast(sum(cast(l_extendedprice as decimal(20,6))) as double) as sum_base_price,
-                   cast(sum(cast(l_quantity as decimal(20,6))) as double)
-                       / count(l_quantity) as avg_qty,
-                   cast(sum(cast(l_discount as decimal(20,6))) as double)
-                       / count(l_discount) as avg_disc,
-                   count(*) as count_order
-            from lineitem
-            where l_shipdate <= timestamp '1998-09-02'
-            group by l_returnflag, l_linestatus
-        """,
-        "market_join": """
-            select n_name, c_mktsegment, count(*) as n_orders,
-                   cast(sum(cast(o_totalprice as decimal(20,6))) as double) as revenue
-            from orders
-            join customer on o_custkey = c_custkey
-            join nation on c_nationkey = n_nationkey
-            group by n_name, c_mktsegment
-        """,
-        "top_customers": """
-            with rev as (
-                select c_mktsegment, c_custkey,
-                       cast(sum(cast(o_totalprice as decimal(20,6))) as double) as revenue
-                from orders join customer on o_custkey = c_custkey
-                group by c_mktsegment, c_custkey
-            )
-            select c_mktsegment, c_custkey, revenue, rank from (
-                select *, row_number() over (
-                    partition by c_mktsegment order by revenue desc, c_custkey asc
-                ) as rank
-                from rev
-            ) where rank <= 3
-        """,
-        "deterministic_sample": """
-            select o_orderkey, md5(cast(o_orderkey as varchar)) as sample_key
-            from orders
-            order by sample_key limit 100
-        """,
-        "semi_join": """
-            select o_orderkey, o_custkey from orders
-            where o_custkey in (select c_custkey from customer where c_acctbal > 9000.0)
-        """,
-        "union_all": """
-            select c_name as name, 'customer' as src from customer
-            union all
-            select s_name as name, 'supplier' as src from supplier
-        """,
-        "doc_stats": f"""
-            select doc_id,
-                   case when trim(text) = '' then 0
-                        else len(regexp_split_to_array(trim(text), '\\s+')) end as n_tokens,
-                   len(regexp_extract_all(text, '{TOKEN_RE_SQL}')) as n_bpe_tokens,
-                   case when length(text) > 0
-                        then cast(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) as double)
-                             / length(text) else 0.0 end as alpha_ratio,
-                   case when (case when trim(text)='' then 0
-                              else len(regexp_split_to_array(trim(text),'\\s+')) end) > 0
-                        then cast(length(text) as double)
-                             / (case when trim(text)='' then 0
-                                else len(regexp_split_to_array(trim(text),'\\s+')) end)
-                        else 0.0 end as avg_word_len,
-                   least(1.0, greatest(0.0,
-                       (case when length(text) > 0
-                             then cast(length(regexp_replace(text,'[^A-Za-z]','','g')) as double)
-                                  / length(text) else 0.0 end) * 0.7
-                       + least((case when trim(text)='' then 0
-                                else len(regexp_split_to_array(trim(text),'\\s+')) end)
-                               / 100.0, 1.0) * 0.3
-                       - (case when length(text) > 0
-                               then cast(length(regexp_replace(text,'[^.,;:!?]','','g')) as double)
-                                    / length(text) else 0.0 end) * 0.5
-                   )) as quality_score
-            from documents
-        """,
-        "language_id": f"""
-            select doc_id, {_language_id_sql_twin()} as lang_pred
-            from documents
-        """,
-        "exact_dedup": """
-            select md5(lower(regexp_replace(trim(text), '\\s+', ' ', 'g'))) as fingerprint,
-                   min(doc_id) as keep_doc_id, count(*) as n_copies
-            from documents
-            group by 1
-        """,
-        "minhash_pairs": f"""
-            select doc_a, doc_b from read_parquet('{tg}/golden_minhash_pairs.parquet')
-        """,
-        "jaccard_verified": f"""
-            select doc_a, doc_b, jaccard
-            from read_parquet('{tg}/golden_jaccard.parquet')
-        """,
-        "dedup_spans": f"""
-            with w as (
-                select doc_id, string_split(text, ' ') as words
-                from documents
-            ),
-            s as (
-                select doc_id, cast(i as integer) as span_idx,
-                       array_to_string(words[i*10+1 : i*10+10], ' ') as span_text
-                from w, unnest(range(cast(ceil(len(words)/10.0) as bigint))) as t(i)
-            ),
-            f as (
-                select doc_id, span_idx, span_text,
-                       row_number() over (partition by span_text
-                                          order by doc_id, span_idx) as rn
-                from s
-            ),
-            k as (select doc_id, span_idx, span_text from f where rn = 1),
-            c as (
-                select doc_id, count(*) as n_kept,
-                       string_agg(span_text, ' ' order by span_idx) as text_clean
-                from k group by doc_id
-            )
-            select w.doc_id,
-                   cast(ceil(len(words)/10.0) as bigint) as n_spans,
-                   coalesce(c.n_kept, 0) as n_kept,
-                   coalesce(c.text_clean, '') as text_clean
-            from w left join c using (doc_id)
-        """,
-        "simhash_pairs": f"""
-            select a.doc_id as doc_a, b.doc_id as doc_b,
-                   cast(bit_count(xor(a.simhash, b.simhash)) as integer) as hamming
-            from read_parquet('{tg}/golden_simhash.parquet') a
-            join read_parquet('{tg}/golden_simhash.parquet') b
-              on a.doc_id < b.doc_id
-            where bit_count(xor(a.simhash, b.simhash)) <= 3
-        """,
-        "simhash": f"""
-            select doc_id, simhash from read_parquet('{tg}/golden_simhash.parquet')
-        """,
-        "cosine_topk": f"""
-            select query_id, vec_id, cosine, rank
-            from read_parquet('{tg}/golden_cosine_topk.parquet')
-        """,
-        "cosine_topk_many": f"""
-            select query_id, vec_id, cosine, rank
-            from read_parquet('{tg}/golden_cosine_topk.parquet')
-        """,
-        "winnow_fingerprints": f"""
-            select doc_id, fingerprint
-            from read_parquet('{tg}/golden_winnow.parquet')
-        """,
-        "winnow_pairs": f"""
-            -- same bucket-bounded pairing as the Spark plan: only
-            -- fingerprints shared by 2..1000 docs generate pairs, then
-            -- pairs need >= 2 shared fingerprints (min_shared=2)
-            with f as (
-                select doc_id, fingerprint
-                from read_parquet('{tg}/golden_winnow.parquet')
-            ),
-            ok as (
-                select fingerprint from f
-                group by fingerprint having count(*) between 2 and 1000
-            ),
-            p as (
-                select a.doc_id as doc_a, b.doc_id as doc_b,
-                       cast(count(*) as bigint) as n_shared
-                from f a
-                join f b using (fingerprint)
-                join ok using (fingerprint)
-                where a.doc_id < b.doc_id
-                group by 1, 2
-            )
-            select doc_a, doc_b, n_shared from p where n_shared >= 2
-        """,
-        "snapshot_dedup": f"""
-            -- order-by mirrors Spark's max(struct(ts_us, md5(text), lang,
-            -- text)) IN FULL: lang/text tiebreaks included so rows tying
-            -- on (ts, text-hash) still pick one deterministic winner in
-            -- both engines (same total order, never nondeterministic)
-            select url, epoch_us(warc_ts) as warc_ts_us, lang, text, n_snapshots
-            from (
-              select url, warc_ts, lang, text,
-                     row_number() over (
-                       partition by url
-                       order by warc_ts desc, md5(text) desc,
-                                lang desc, text desc) as rn,
-                     count(*) over (partition by url) as n_snapshots
-              from read_parquet('{g}/crawl_pages.parquet'))
-            where rn = 1
-        """,
-        "snapshot_dedup_stream": f"""
-            -- deterministic projection of the streaming admission gate:
-            -- one row per admitted url (payload columns are micro-batch-
-            -- order-chosen and stay pytest-pinned; see q_snapshot_dedup_stream)
-            select url
-            from read_parquet('{g}/crawl_pages.parquet')
-            group by url
-        """,
-        "host_stats": f"""
-            select regexp_extract(url, '://(?:[^/@?#]*@)?([^/:?#]+)', 1) as host,
-                   count(*) as n_pages,
-                   count(distinct url) as n_urls,
-                   max(epoch_us(warc_ts)) as latest_ts_us,
-                   round(avg(case when lang = 'en' then 1.0 else 0.0 end), 6)
-                     as en_share
-            from read_parquet('{g}/crawl_pages.parquet')
-            group by 1
-        """,
-        "host_daily": _HOST_DAILY_SQL.format(g=g),
-        "host_daily_stream": _HOST_DAILY_SQL.format(g=g),
-        "crawl_enrich_stream": f"""
-            -- batch twin of the stream-static dimension join
-            with hs as (
-                select regexp_extract(url, '://(?:[^/@?#]*@)?([^/:?#]+)', 1)
-                         as host,
-                       count(*) as n_pages,
-                       count(distinct url) as n_urls,
-                       max(epoch_us(warc_ts)) as latest_ts_us,
-                       round(avg(case when lang = 'en' then 1.0 else 0.0 end), 6)
-                         as en_share
-                from read_parquet('{g}/crawl_pages.parquet')
-                group by 1
-            )
-            select p.host, p.url, p.warc_ts_us,
-                   hs.n_pages, hs.n_urls, hs.latest_ts_us, hs.en_share
-            from (
-                select url, epoch_us(warc_ts) as warc_ts_us,
-                       regexp_extract(url, '://(?:[^/@?#]*@)?([^/:?#]+)', 1)
-                         as host
-                from read_parquet('{g}/crawl_pages.parquet')
-            ) p join hs using (host)
-        """,
-        "html_extract": f"""
-            select url,
-                   regexp_replace(decode(html), '<[^>]+>', '', 'g') as extracted,
-                   regexp_replace(decode(html), '<[^>]+>', '', 'g') = text
-                     as matches_text
-            from read_parquet('{g}/crawl_pages.parquet')
-        """,
-        "repetition_stats": f"""
-            select doc_id, {_repetition_sql()}
-            from documents
-        """,
-        "host_top_terms": f"""
-            with words as (
-                select regexp_extract(url, '://(?:[^/@?#]*@)?([^/:?#]+)', 1) as host,
-                       unnest(string_split(text, ' ')) as word
-                from read_parquet('{g}/crawl_pages.parquet')
-            ),
-            w as (select host, word from words where length(word) >= 4),
-            tf as (select host, word, count(*) as tf from w group by 1, 2),
-            dfh as (select word, count(distinct host) as dfh from w group by 1),
-            scored as (
-                select tf.host, tf.word, tf.tf, dfh.dfh,
-                       cast(tf.tf as double) / dfh.dfh as score
-                from tf join dfh using (word)
-            )
-            select host, word, tf, dfh, score, term_rank from (
-                select *, row_number() over (
-                    partition by host order by score desc, word asc) as term_rank
-                from scored)
-            where term_rank <= 5
-        """,
-        "crawl_curation": f"""
-            with d as (
-                select url, lang, text from (
-                    select url, lang, text,
-                           row_number() over (
-                             partition by url
-                             order by warc_ts desc, md5(text) desc,
-                                      lang desc, text desc) as rn
-                    from read_parquet('{g}/crawl_pages.parquet'))
-                where rn = 1
-            ),
-            kept as (
-                select url from ({{gate}}) where keep
-            ),
-            hosts as (
-                select url,
-                       regexp_extract(url, '://(?:[^/@?#]*@)?([^/:?#]+)', 1) as host
-                from d
-            ),
-            e as (
-                select url, host,
-                       unnest(list_transform(
-                           range(len(string_split(host, '.'))),
-                           i -> array_to_string(string_split(host, '.')[i+1:], '.')
-                       )) as suffix
-                from hosts
-            ),
-            unblocked as (
-                select url from e
-                group by url, host
-                having max(case when suffix in
-                    ('host3.example.org', 'host13.example.org') then 1 end) is null
-            ),
-            admitted as (
-                select hosts.url, hosts.host
-                from hosts join kept using (url) join unblocked using (url)
-            ),
-            r as (
-                select url, host,
-                       row_number() over (
-                         partition by host order by md5(url), url) as host_rank
-                from admitted
-            )
-            select url, host, host_rank, {{canon}} as canonical
-            from r where host_rank <= 50
-        """.format(gate=_admission_gate_sql("d"), canon=_canonical_url_sql("url")),
-        "corpus_curation": f"""
-            -- stage-for-stage composition of the registry twins:
-            -- language_id + quality + repetition + decontaminate +
-            -- stratified sampling + pii scrub (same constants as the
-            -- Spark plan in q_corpus_curation)
-            with bg as (
-                select distinct unnest({_grams8_sql()}) as g
-                from documents where doc_id % 97 = 0
-            ),
-            dg as (
-                select doc_id, unnest(list_distinct({_grams8_sql()})) as g
-                from documents
-            ),
-            h as (
-                select doc_id, count(*) as n
-                from dg join bg using (g) group by doc_id
-            ),
-            cont as (
-                select d.doc_id, coalesce(h.n, 0) > 0 as contaminated
-                from documents d left join h using (doc_id)
-            ),
-            rep as (select doc_id, {_repetition_sql()} from documents),
-            base as (
-                select d.doc_id,
-                       d.text,
-                       {_language_id_sql_twin()} as lang_pred,
-                       {_quality_sql()} as quality_score,
-                       rep.dup_3gram_ratio as dup3,
-                       cont.contaminated
-                from documents d
-                join rep using (doc_id)
-                join cont using (doc_id)
-            ),
-            dec as (
-                select *,
-                       case when lang_pred <> 'en' then 'non_allowed_lang'
-                            when quality_score < {_CURATION_MIN_QUALITY}
-                              then 'low_quality'
-                            when dup3 > {_CURATION_MAX_DUP3} then 'repetitive'
-                            when contaminated then 'contaminated'
-                            when not ({_curation_sample_sql()})
-                              then 'sampled_out'
-                            else 'ok' end as reason
-                from base
-            )
-            select doc_id, lang_pred, quality_score, reason,
-                   reason = 'ok' as keep,
-                   case when reason = 'ok' then {_pii_scrub_sql()} end
-                     as text_final
-            from dec
-        """,
-        "stratified_sample": f"""
-            select url, lang, {_stratified_sql()} as keep
-            from read_parquet('{g}/crawl_pages.parquet')
-        """,
-        "pii_scrub": f"""
-            with m as (
-                select doc_id,
-                       case when substr(md5(text), 1, 1) in ('0','1','2','3')
-                              then text || ' contact user' || cast(doc_id as varchar)
-                                   || '@example.com'
-                            when substr(md5(text), 1, 1) in ('4','5','6','7')
-                              then text || ' from 10.0.0.'
-                                   || cast(doc_id % 250 as varchar)
-                            when substr(md5(text), 1, 1) in ('8','9','a','b')
-                              then text || ' call +1 (555) 123-'
-                                   || lpad(cast(doc_id % 10000 as varchar), 4, '0')
-                            else text end as text
-                from documents
-            )
-            select doc_id, {_pii_sql()} from m
-        """,
-        "host_cap": f"""
-            with u as (
-                select distinct url from read_parquet('{g}/crawl_pages.parquet')
-            ),
-            r as (
-                select url,
-                       regexp_extract(url, '://(?:[^/@?#]*@)?([^/:?#]+)', 1) as host,
-                       row_number() over (
-                         partition by regexp_extract(url, '://(?:[^/@?#]*@)?([^/:?#]+)', 1)
-                         order by md5(url), url) as host_rank
-                from u
-            )
-            select url, host, host_rank from r where host_rank <= 100
-        """,
-        "unigram_familiarity": unigram_familiarity_sql(),
-        "bigram_familiarity": unigram_familiarity_sql(n=2),
-        "decontaminate": f"""
-            with bg as (
-                select distinct unnest({_grams8_sql()}) as g
-                from documents where doc_id % 97 = 0
-            ),
-            dg as (
-                select doc_id, unnest(list_distinct({_grams8_sql()})) as g
-                from documents
-            ),
-            h as (
-                select doc_id, count(*) as n
-                from dg join bg using (g) group by doc_id
-            )
-            select d.doc_id,
-                   cast(coalesce(h.n, 0) as bigint) as n_hit_grams,
-                   coalesce(h.n, 0) > 0 as contaminated
-            from documents d left join h using (doc_id)
-        """,
-        "decontaminate_bloom": _decontaminate_bloom_sql(),
-        "host_pagerank": _host_pagerank_sql(g),
-        "item_pagerank": _item_pagerank_sql(g),
-        "hll_snapshots": _hll_snapshots_sql(g),
-        "cms_host_snapshots": _cms_host_snapshots_sql(g),
-        "blocklist": f"""
-            with bl as (
-                select * from (values ('host3.example.org'),
-                                      ('host13.example.org'),
-                                      ('blocked.net')) t(domain)
-            ),
-            p as (
-                select url,
-                       regexp_extract(url, '://(?:[^/@?#]*@)?([^/:?#]+)', 1) as host
-                from read_parquet('{g}/crawl_pages.parquet')
-            ),
-            e as (
-                select url, host,
-                       unnest(list_transform(
-                           range(len(string_split(host, '.'))),
-                           i -> array_to_string(string_split(host, '.')[i+1:], '.')
-                       )) as suffix
-                from p
-            )
-            select url, host,
-                   (max(case when suffix in (select domain from bl)
-                             then struct_pack(l := length(suffix), e := suffix)
-                        end)).e as blocked_by
-            from e group by url, host
-        """,
-        "admission_gate": _admission_gate_sql(
-            f"read_parquet('{g}/crawl_pages.parquet')"
-        ),
-        "admission_gate_stream": _admission_gate_sql(
-            f"read_parquet('{g}/crawl_pages.parquet')"
-        ),
-        "url_canonical": f"""
-            with m as (
-                select url,
-                       case when substr(md5(url), 1, 1) in ('0','1','2','3')
-                              then upper(substr(url, 1, 12)) || substr(url, 13)
-                            when substr(md5(url), 1, 1) in ('4','5','6','7')
-                              then regexp_replace(url, '://([^/]+)', '://\\1:443')
-                            when substr(md5(url), 1, 1) in ('8','9','a','b')
-                              then url || '?utm_source=feed&b=2&a=1#frag'
-                            else url || '/' end as messy
-                from read_parquet('{g}/crawl_pages.parquet')
-            )
-            select url, messy, {{canon}} as canonical from m
-        """.format(canon=_canonical_url_sql("messy")),
-        "lsh_ann": f"""
-            select query_id, vec_id, cosine, rank
-            from read_parquet('{tg}/golden_lsh_ann.parquet')
-        """,
-        "binary_metadata": f"""
-            select url,
-                   octet_length(html) as byte_len,
-                   md5(decode(html)) as content_md5,
-                   cast(64 + cast(('0x' || substr(md5(decode(html)),1,4)) as bigint) % 1920
-                        as int) as fake_width,
-                   cast(64 + cast(('0x' || substr(md5(decode(html)),5,4)) as bigint) % 1080
-                        as int) as fake_height
-            from read_parquet('{g}/pages.parquet')
-        """,
-        "ivf_ann": f"""
-            select query_id, vec_id, cosine, rank
-            from read_parquet('{tg}/golden_ivf_ann.parquet')
-        """,
-        "embedding_dup": f"""
-            select vec_a, vec_b, cosine
-            from read_parquet('{tg}/golden_embedding_dup.parquet')
-        """,
-        "embedding_quantize": _embedding_quantize_sql(),
-        "lsh_ann_many": f"""
-            select query_id, vec_id, cosine, rank
-            from read_parquet('{tg}/golden_lsh_ann.parquet')
-        """,
-        "ivf_ann_many": f"""
-            select query_id, vec_id, cosine, rank
-            from read_parquet('{tg}/golden_ivf_ann.parquet')
-        """,
-        "dedup_groups": f"""
-            select doc_id, group_id, is_canonical
-            from read_parquet('{tg}/golden_dedup_groups.parquet')
-        """,
-        "knn_topk": f"""
-            select url, poi_id, distance_km, distance_miles, knn_rank
-            from read_parquet('{g}/golden_knn3.parquet')
-        """,
-        "isochrone_area": f"""
-            select travel_time_minutes, travel_mode, n_isochrones, total_area_km2
-            from read_parquet('{g}/golden_area.parquet')
-        """,
-        "cluster_metrics": f"""
-            with sizes as (
-                select {_CELL_SQL_R7} as cell, count(*) as cluster_size
-                from read_parquet('{g}/golden_geoparsed.parquet')
-                where lat is not null group by 1
-            )
-            select count(*) as n_clusters,
-                   cast(sum(cast(cluster_size as decimal(20,6))) as double) as total_points,
-                   cast(sum(cast(cluster_size as decimal(20,6))) as double)
-                       / count(cluster_size) as mean_cluster_size,
-                   max(cluster_size) as max_cluster_size,
-                   min(cluster_size) as min_cluster_size
-            from sizes
-        """,
-        "null_rate": f"""
-            select variable_code, count(*) as n_total, count(value_clean) as n_valid,
-                   count(*) - count(value_clean) as n_null,
-                   cast(count(*) - count(value_clean) as double) / count(*) as null_rate
-            from ({cleansed}) group by variable_code
-        """,
-        "geoid_prefix": f"""
-            select substr(GEOID, 1, 2) as state_fips, substr(GEOID, 1, 5) as state_county,
-                   count(*) as n_units, count(distinct GEOID) as n_distinct_geoids
-            from read_parquet('{g}/polygons.parquet') where kind = 'blockgroup'
-            group by 1, 2
-        """,
-        "quantile_bins": f"""
-            select geoid, B19013_001E as value,
-                   ntile(5) over (order by B19013_001E asc, geoid asc) as bin
-            from ({wide}) where B19013_001E is not null
-        """,
-        "equal_interval_bins": f"""
-            with vals as (
-                select geoid, B19013_001E as value from ({wide})
-                where B19013_001E is not null
-            ), bounds as (
-                select min(value) as lo, max(value) as hi from vals
-            )
-            select geoid, value,
-                   case when hi = lo then 1
-                        else least(
-                            cast(floor((value - lo) / ((hi - lo) / 5.0)) as int) + 1,
-                            5)
-                   end as bin
-            from vals, bounds
-        """,
-        "custom_coords": f"""
-            select id, coalesce(name, 'Custom POI ' || id) as name,
-                   'custom' as type,
-                   cast(latitude as double) as lat, cast(lng as double) as lon,
-                   'city=' || city || '|rank=' || cast("rank" as varchar) as tags_str
-            from read_csv('{g}/custom_coords.csv', header = true)
-            where latitude is not null and lng is not null
-        """,
-        "state_normalize": f"""
-            select id,
-                   case when length(id) % 3 = 0 then 'NC'
-                        when length(id) % 3 = 1 then '37'
-                        else 'north carolina' end as state,
-                   'North Carolina' as state_name, 'NC' as state_abbr,
-                   '37' as state_fips
-            from read_parquet('{g}/pois.parquet')
-        """,
-        "counties_from_pages": f"""
-            select distinct substr(GEOID, 1, 2) as state_fips,
-                   substr(GEOID, 3, 3) as county_fips
-            from read_parquet('{g}/golden_assignments.parquet')
-            where kind = 'blockgroup'
-        """,
-        "poi_broadcast": f"""
-            select GEOID, p.poi_id, p.poi_name
-            from read_parquet('{g}/polygons.parquet'),
-                 (select id as poi_id, name as poi_name
-                  from read_parquet('{g}/pois.parquet')
-                  where lat <= 90.0 order by id limit 1) p
-            where kind = 'blockgroup'
-        """,
-        "unit_centroids": f"""
-            select GEOID, lat, lon from read_parquet('{g}/golden_centroids.parquet')
-        """,
-        "centroid_nearest_poi": f"""
-            select GEOID, poi_id, distance_km, distance_miles
-            from read_parquet('{g}/golden_centroid_knn.parquet')
-        """,
-        "frame_sample": f"""
-            select url, cast(t.frame_idx as int) as frame_idx,
-                   md5(md5(decode(html)) || ':' || cast(t.frame_idx as varchar)) as frame_md5
-            from read_parquet('{g}/pages.parquet')
-            cross join (select unnest(range(4)) as frame_idx) t
-        """,
-        "geoid_build": f"""
-            select poly_id,
-                   lpad(STATE, 2, '0') || lpad(COUNTY, 3, '0')
-                     || lpad(TRACT, 6, '0') || lpad(BLKGRP, 1, '0') as geoid_built,
-                   (lpad(STATE, 2, '0') || lpad(COUNTY, 3, '0')
-                     || lpad(TRACT, 6, '0') || lpad(BLKGRP, 1, '0')) = GEOID as matches
-            from read_parquet('{g}/polygons.parquet') where kind = 'blockgroup'
-        """,
-        "rasterize": f"""
-            with px as (
-                select cast(floor((lon+180.0)/0.0054931640625) as bigint) % 65536 as ix,
-                       least(greatest(cast(floor((lat+90.0)/0.0054931640625) as bigint),0),32767) as iy,
-                       count(*) as value
-                from read_parquet('{g}/golden_geoparsed.parquet')
-                where lat is not null
-                group by 1, 2
-            )
-            select 4*288230376151711744 + (ix//32)*536870912 + (iy//32) as tile_id,
-                   cast(iy % 32 as int) as px_row,
-                   cast(ix % 32 as int) as px_col,
-                   value
-            from px
-        """,
-        "focal_stats": f"""
-            -- 3x3 zero-padded focal sum/mean over the r9 pixel grid:
-            -- lon wraps (double-mod keeps jx nonnegative), lat clamps
-            -- (off-grid rows drop); sums cast to bigint (DuckDB sum()
-            -- is HUGEINT) so the value hash matches Spark's long
-            with px as (
-                select cast(floor((lon+180.0)/0.0054931640625) as bigint) % 65536 as ix,
-                       least(greatest(cast(floor((lat+90.0)/0.0054931640625) as bigint),0),32767) as iy,
-                       count(*) as value
-                from read_parquet('{g}/golden_geoparsed.parquet')
-                where lat is not null
-                group by 1, 2
-            ),
-            o as (
-                select dx, dy
-                from (values (-1), (0), (1)) a(dx), (values (-1), (0), (1)) b(dy)
-            ),
-            c as (
-                select ((ix + dx) % 65536 + 65536) % 65536 as jx,
-                       iy + dy as jy, value
-                from px, o
-                where iy + dy >= 0 and iy + dy < 32768
-            )
-            select cast(9 as bigint)*288230376151711744
-                     + jx*536870912 + jy as cell,
-                   cast(sum(value) as bigint) as focal_sum,
-                   cast(count(*) as bigint) as focal_n,
-                   cast(sum(value) as bigint) / 9.0 as focal_mean
-            from c group by jx, jy
-        """,
-        "zonal_stats": f"""
-            select poly_id, GEOID, kind, n_pixels, total_value, mean_value
-            from read_parquet('{g}/golden_zonal.parquet')
-        """,
-        "polygon_burn": f"""
-            select cell, poly_id from read_parquet('{g}/golden_burn.parquet')
-        """,
-        "downsample": f"""
-            -- independent derivation: rasterize DIRECTLY at r7 (the
-            -- Spark side aggregates the r9 raster up — the power-of-two
-            -- hierarchy makes the two computations provably equal)
-            with px as (
-                select cast(floor((lon+180.0)/0.02197265625) as bigint) % 16384 as ix,
-                       least(greatest(cast(floor((lat+90.0)/0.02197265625) as bigint),0),8191) as iy,
-                       count(*) as value
-                from read_parquet('{g}/golden_geoparsed.parquet')
-                where lat is not null
-                group by 1, 2
-            )
-            select cast(4 as bigint)*288230376151711744
-                     + (ix//8)*536870912 + (iy//8) as tile_id,
-                   cast(iy % 8 as int) as px_row,
-                   cast(ix % 8 as int) as px_col,
-                   cast(value as bigint) as value
-            from px
-        """,
-        "vectorize_hotspots": f"""
-            with px as (
-                select cast(floor((lon+180.0)/0.0054931640625) as bigint) % 65536 as ix,
-                       least(greatest(cast(floor((lat+90.0)/0.0054931640625) as bigint),0),32767) as iy,
-                       count(*) as value
-                from read_parquet('{g}/golden_geoparsed.parquet')
-                where lat is not null
-                group by 1, 2
-            )
-            select 9*288230376151711744 + ix*536870912 + iy as cell,
-                   value,
-                   cast(iy as double)*0.0054931640625 - 90.0 as lat_min,
-                   (cast(iy as double)*0.0054931640625 - 90.0) + 0.0054931640625 as lat_max,
-                   cast(ix as double)*0.0054931640625 - 180.0 as lon_min,
-                   (cast(ix as double)*0.0054931640625 - 180.0) + 0.0054931640625 as lon_max
-            from px where value >= 50
-        """,
-        "event_props": """
-            select event_id,
-                   json_extract_string(props, '$.k') as k_val,
-                   json_extract_string(props, '$.missing') as missing_val
-            from events
-        """,
-        "lineage_stats": f"""
-            with a as (
-                select asg.url, asg.poly_id, {_CELL_SQL_R9} as cell_r9
-                from read_parquet('{g}/golden_assignments.parquet') asg
-                join read_parquet('{g}/golden_geoparsed.parquet') gp
-                  on asg.url = gp.url
-            ),
-            b as (
-                select *,
-                       cast(cast(('0x' || substr(md5('0:' || url), 1, 15))
-                                 as bigint) % 32 as int) as bucket
-                from a
-            )
-            select 'assign' as stage, bucket,
-                   count(*) as row_count,
-                   bit_xor(cast(('0x' || substr(md5('0:' || url || chr(31)
-                                                    || poly_id), 1, 15))
-                                as bigint)) as checksum,
-                   min(cell_r9) as cell_min, max(cell_r9) as cell_max
-            from b group by bucket
-        """,
-        "zcta_prefix": f"""
-            select poly_id, GEOID, STATE
-            from read_parquet('{g}/polygons.parquet')
-            where kind = 'zcta' and (GEOID like '27%' or GEOID like '28%')
-        """,
-        "zcta_assignments": f"""
-            select url, poly_id, GEOID
-            from read_parquet('{g}/golden_assignments.parquet')
-            where kind = 'zcta' and (GEOID like '27%' or GEOID like '28%')
-        """,
-        "zcta_cleanse": f"""
-            select geoid, variable_code, {_CLEANSE_SQL} as value_clean
-            from read_parquet('{g}/census_zcta_long.parquet')
-        """,
-        "variable_summary": f"""
-            select cast(sum(cast(B01003_001E as decimal(20,6))) as double) as B01003_001E,
-                   cast(sum(cast(B19013_001E as decimal(20,6))) as double)
-                       / count(B19013_001E) as B19013_001E,
-                   cast(sum(cast(B25044_003E as decimal(20,6)))
-                        + sum(cast(B25044_010E as decimal(20,6))) as double)
-                       as percent_without_vehicle
-            from ({wide})
-        """,
-        "tag_filter": f"""
-            select id, cast(latitude as double) as lat, cast(lng as double) as lon,
-                   city
-            from read_csv('{g}/custom_coords.csv', header = true)
-            where latitude is not null and lng is not null and city = 'Durham'
-        """,
-        "speed_clamp": """
-            select event_id,
-                   case when value < 8.0 then 'walk'
-                        when value < 40.0 then 'bike'
-                        else 'drive' end as travel_mode,
-                   value as requested_kmh,
-                   case when value < 8.0 then greatest(3.0, least(value, 7.0))
-                        when value < 40.0 then greatest(8.0, least(value, 30.0))
-                        else greatest(20.0, least(value, 130.0)) end as speed_kmh
-            from events
-        """,
-        "geometry_quarantine": f"""
-            select 'valid' as bucket, poly_id
-            from read_parquet('{g}/polygons.parquet')
-            union all
-            select 'invalid' as bucket, poly_id
-            from (values ('bad_null'), ('bad_truncated'), ('bad_degenerate')) t(poly_id)
-        """,
-        "neighbor_states": f"""
-            select STATE, kind, count(*) as n
-            from read_parquet('{g}/polygons.parquet')
-            where STATE in ('13', '37')
-            group by STATE, kind
-        """,
-        "poi_bbox": f"""
-            select min(lat) - 5.0/111.0 as min_lat,
-                   min(lon) - 5.0/111.0 as min_lon,
-                   max(lat) + 5.0/111.0 as max_lat,
-                   max(lon) + 5.0/111.0 as max_lon
-            from read_parquet('{g}/pois.parquet')
-            where lat <= 90.0 and lat is not null and lon is not null
-        """,
-        "cluster_bbox": f"""
-            with p as (
-                select lat, lon,
-                       cast(5 as bigint)*288230376151711744
-                       + (cast(floor((lon+180.0)/0.087890625) as bigint) % 4096)*536870912
-                       + least(greatest(cast(floor((lat+90.0)/0.087890625) as bigint),0),2047)
-                         as cluster
-                from read_parquet('{g}/pois.parquet')
-                where lat <= 90.0 and lat is not null and lon is not null
-            ), grp as (
-                select cluster, count(*) as n_pois,
-                       min(lat) as lat0, min(lon) as lon0,
-                       max(lat) as lat1, max(lon) as lon1
-                from p group by cluster
-            )
-            select cluster, n_pois,
-                   lat0 - (2.0 + cast(15 as double)/15.0 + cast(n_pois as double)/10.0)/111.0 as min_lat,
-                   lon0 - (2.0 + cast(15 as double)/15.0 + cast(n_pois as double)/10.0)/111.0 as min_lon,
-                   lat1 + (2.0 + cast(15 as double)/15.0 + cast(n_pois as double)/10.0)/111.0 as max_lat,
-                   lon1 + (2.0 + cast(15 as double)/15.0 + cast(n_pois as double)/10.0)/111.0 as max_lon
-            from grp
-        """,
-        "std_mean_bins": f"""
-            with v as (select geoid, B19013_001E as value from ({wide})
-                       where B19013_001E is not null),
-            st as (select cast(sum(cast(value as decimal(20,6))) as double) as s,
-                          cast(sum(cast(round(value*value, 6) as decimal(30,6))) as double) as s2,
-                          count(*) as n, max(value) as mx from v),
-            c as (select s/n as m, sqrt(greatest(s2/n - (s/n)*(s/n), 0.0)) as sd, mx from st)
-            select geoid, value,
-                   least(1 + cast(value > m - 2*sd as int) + cast(value > m - sd as int)
-                           + cast(value > m + sd as int) + cast(value > m + 2*sd as int),
-                         case when mx > m + 2*sd then 5 else 4 end) as bin
-            from v, c
-        """,
-        "percentile_bins": f"""
-            with v as (select geoid, B19013_001E as value from ({wide})
-                       where B19013_001E is not null),
-            q as (select quantile_cont(value, [0.01,0.10,0.50,0.90,0.99,1.00]) as qs from v)
-            select geoid, value,
-                   least(1 + cast(value > qs[1] as int) + cast(value > qs[2] as int)
-                           + cast(value > qs[3] as int) + cast(value > qs[4] as int)
-                           + cast(value > qs[5] as int) + cast(value > qs[6] as int),
-                         6) as bin
-            from v, q
-        """,
-        "box_plot_bins": f"""
-            with v as (select geoid, B19013_001E as value from ({wide})
-                       where B19013_001E is not null),
-            q as (select quantile_cont(value, [0.25,0.50,0.75]) as qs, max(value) as mx from v),
-            c as (select qs[1] - 1.5*(qs[3]-qs[1]) as c1, qs[1] as c2, qs[2] as c3,
-                         qs[3] as c4, qs[3] + 1.5*(qs[3]-qs[1]) as c5, mx from q)
-            select geoid, value,
-                   least(1 + cast(value > c1 as int) + cast(value > c2 as int)
-                           + cast(value > c3 as int) + cast(value > c4 as int)
-                           + cast(value > c5 as int)
-                           + case when mx > c5 then cast(value > mx as int) else 0 end,
-                         case when mx > c5 then 6 else 5 end) as bin
-            from v, c
-        """,
-        "defined_interval_bins": f"""
-            select geoid, B19013_001E as value,
-                   ntile(5) over (order by B19013_001E asc, geoid asc) as bin
-            from ({wide}) where B19013_001E is not null
-        """,
-        "maximum_breaks_bins": f"""
-            with v as (select geoid, B19013_001E as value from ({wide})
-                       where B19013_001E is not null),
-            d as (select distinct value from v),
-            g as (select value, lag(value) over (order by value) as prev from d),
-            topg as (select (value + prev)/2.0 as mid from g where prev is not null
-                     order by (value - prev) desc, value desc limit 4),
-            c as (select list(mid order by mid) || [(select max(value) from v)] as cs
-                  from topg)
-            select geoid, value,
-                   least(1 + len(list_filter(cs, x -> value > x)), len(cs)) as bin
-            from v, c
-        """,
-        "head_tail_bins": f"""
-            select geoid, value, bin from read_parquet('{g}/golden_classify.parquet')
-            where scheme = 'head_tail'
-        """,
-        "fisher_jenks_bins": f"""
-            select geoid, value, bin from read_parquet('{g}/golden_classify.parquet')
-            where scheme = 'fisher_jenks'
-        """,
-        "natural_breaks_bins": f"""
-            select geoid, value, bin from read_parquet('{g}/golden_classify.parquet')
-            where scheme = 'natural_breaks'
-        """,
-        "jenks_caspall_bins": f"""
-            select geoid, value, bin from read_parquet('{g}/golden_classify.parquet')
-            where scheme = 'jenks_caspall'
-        """,
-        "max_p_bins": f"""
-            select geoid, value, bin from read_parquet('{g}/golden_classify.parquet')
-            where scheme = 'max_p'
-        """,
-        "revenue_by_nation": """
-            select r.r_name as region, n.n_name as nation,
-                   count(*) as n_orders,
-                   cast(sum(cast(o.o_totalprice as decimal(20,6))) as double) as revenue
-            from orders o
-            join customer c on o.o_custkey = c.c_custkey
-            join nation n on c.c_nationkey = n.n_nationkey
-            join region r on n.n_regionkey = r.r_regionkey
-            group by r.r_name, n.n_name
-        """,
-        "monthly_orders": """
-            select strftime(date_trunc('month', o_orderdate), '%Y-%m') as month,
-                   count(*) as n_orders,
-                   cast(sum(cast(o_totalprice as decimal(20,6))) as double) as revenue,
-                   count(distinct o_custkey) as n_customers
-            from orders group by 1
-        """,
-        "event_windows": _EVENT_WINDOWS_SQL,
-        "event_windows_stream": _EVENT_WINDOWS_SQL,
-        "event_sessions_stream": _EVENT_SESSIONS_SQL,
-        "event_sessions": _EVENT_SESSIONS_SQL,
-        # salted two-phase agg must be indistinguishable from a plain
-        # GROUP BY — the oracle IS the unsalted query
-        "salted_cell_counts": f"""
-            select {_CELL_SQL_R7} as cell_r7, count(*) as n_rows
-            from read_parquet('{g}/golden_geoparsed.parquet')
-            where lat is not null
-            group by 1
-        """,
-    }
-    # compositions that reuse other entries' twins as subqueries
-    oracles["corpus_curation_lm"] = f"""
-        select f.*, l.familiarity,
-               coalesce(l.familiarity >= 1e-4, false) as lm_pass
-        from ({oracles["corpus_curation"]}) f
-        left join ({oracles["unigram_familiarity"]}) l using (doc_id)
-    """
-    return oracles
-
-
-_EVENT_SESSIONS_SQL = """
-            with e as (
-                select user_id, event_id, ts, value, epoch_us(ts) as us from events
-            ), f as (
-                select *,
-                       case when lag(us) over w is null then 1
-                            when us - lag(us) over w > 1800000000 then 1
-                            else 0 end as new_s
-                from e
-                window w as (partition by user_id order by ts, event_id)
-            ), g as (
-                select *,
-                       sum(new_s) over (
-                           partition by user_id order by ts, event_id
-                           rows between unbounded preceding and current row
-                       ) as session_seq
-                from f
-            )
-            select user_id, cast(session_seq as bigint) as session_seq,
-                   strftime(min(ts), '%Y-%m-%d %H:%M:%S.%f') as session_start,
-                   strftime(max(ts), '%Y-%m-%d %H:%M:%S.%f') as session_end,
-                   count(*) as n_events,
-                   cast(sum(cast(value as decimal(20,6))) as double) as total_value
-            from g group by user_id, session_seq
-        """
-
-_HOST_DAILY_SQL = """
-    select strftime(date_trunc('day', warc_ts), '%Y-%m-%d') as day,
-           regexp_extract(url, '://(?:[^/@?#]*@)?([^/:?#]+)', 1) as host,
-           count(*) as n_pages,
-           cast(sum(case when lang = 'en' then 1 else 0 end) as bigint) as n_en
-    from read_parquet('{g}/crawl_pages.parquet')
-    group by 1, 2
-"""
-
-
-_EVENT_WINDOWS_SQL = """
-    select strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') as hour,
-           event_type, count(*) as n_events,
-           cast(sum(cast(value as decimal(20,6))) as double) as total_value,
-           count(distinct user_id) as n_users
-    from events group by 1, 2
 """
 
 
@@ -3282,3 +3123,10 @@ def _curation_sample_sql() -> str:
     return stratified_keep_sql(
         "lang_pred", "cast(doc_id as varchar)", _CURATION_RATES
     )
+
+
+def _familiarity_sql(n: int = 1) -> str:
+    """DuckDB twin of operators.lm.unigram_familiarity (n-gram order n)."""
+    from socialmapper_spark.operators.lm import unigram_familiarity_sql
+
+    return unigram_familiarity_sql(n=n)

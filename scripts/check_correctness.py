@@ -1,16 +1,20 @@
 """Local replica of the driver's correctness gate.
 
-Runs every ``queries()`` entry at sf0.01 on Spark and its ``oracle_sql()``
-twin on DuckDB (views pre-registered like the driver does), then compares
-row count, column names, and order-insensitive values (sorted rows,
-columns sorted by name, doubles compared exactly by repr — the engine is
-designed to be bit-identical to the oracle).
+Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin on
+DuckDB at one scale, then compares row count, column names, and
+order-insensitive values (sorted rows, columns sorted by name, doubles
+compared exactly by repr — the engine is designed to be bit-identical to
+the oracle). ``--sf DIR`` (default sf0.01) sets the scale of all three
+inputs together: the TPC-H views (registered over DIR like the driver
+does), the ``sf_dir`` each query reads, and the fixtures and goldens
+``oracle_sql(DIR)`` reads.
 
-Usage: python scripts/check_correctness.py [query ...]
+Usage: python scripts/check_correctness.py [--sf DIR] [query ...]
 """
 
 from __future__ import annotations
 
+import argparse
 import math
 import pathlib
 import sys
@@ -19,7 +23,6 @@ import duckdb
 
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
-SF_DIR = "/root/testdata/sf0.01"
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings",
@@ -44,7 +47,7 @@ def norm(v):
     return repr(v)
 
 
-def main(selected: list[str]) -> int:
+def main(sf_dir: str, selected: list[str]) -> int:
     import os as _os
 
     _os.environ.setdefault("SPARK_GRAFT_MAX_PARTITION_BYTES", str(1 * 1024 * 1024))
@@ -58,16 +61,16 @@ def main(selected: list[str]) -> int:
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
-            f"create view {t} as select * from read_parquet('{SF_DIR}/{t}.parquet')"
+            f"create view {t} as select * from read_parquet('{sf_dir}/{t}.parquet')"
         )
 
     qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
+    oracles = entrymod.oracle_sql(sf_dir)
     names = selected or list(qs)
     failures = 0
     for name in names:
         try:
-            sdf = qs[name](spark, SF_DIR)
+            sdf = qs[name](spark, sf_dir)
             spark_rows = sdf.collect()
             # drop any persist() handles the operator attached (kring kNN,
             # host_top_terms) — a 100+-entry run would otherwise accrete
@@ -77,9 +80,6 @@ def main(selected: list[str]) -> int:
             got = sorted(
                 tuple(norm(row[c]) for c in sorted(spark_cols)) for row in spark_rows
             )
-            if name not in oracles:
-                print(f"  {name}: NO ORACLE (rows={len(got)})")
-                continue
             res = con.execute(oracles[name])
             oracle_cols = [d[0] for d in res.description]
             # fetch via Arrow like the driver's hasher does — this surfaces
@@ -124,4 +124,8 @@ def main(selected: list[str]) -> int:
 
 
 if __name__ == "__main__":
-    raise SystemExit(main(sys.argv[1:]))
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--sf", default="/root/testdata/sf0.01", help="scale directory")
+    ap.add_argument("queries", nargs="*", help="entries to check (default: all)")
+    args = ap.parse_args()
+    raise SystemExit(main(args.sf, args.queries))

@@ -28,8 +28,6 @@ from socialmapper_spark.operators.raster import (  # noqa: F401
     vectorize_threshold,
 )
 from socialmapper_spark.operators.skew import (  # noqa: F401
-    cell_histogram,
-    salted_agg_by_key,
     salted_count_by_key,
     salted_join,
 )

@@ -65,13 +65,23 @@ def pagerank(
     comparable within one run, not probabilities.
 
     Scale shape: parallel edges consolidate once into (src, dst, w) +
-    a per-src out-weight — both map-side-combinable aggs; each iteration
-    is ONE hash join of the static weighted-edge table with the rank
-    table (keyed src) and ONE integer sum keyed dst. The rank table is
-    |nodes| rows (tiny next to the corpus: ~1e8 hosts for 1e12 pages);
-    the edge table is the big side and never moves after its first
-    shuffle — co-partition both on the join key upstream (bucketed
-    write) and every round is shuffle-local on the edge side. Plans are
+    a per-src out-weight — both map-side-combinable aggs — and the
+    weighted-edge table is persisted, hash-partitioned on src by the
+    join that builds it. Each iteration is ONE join of that table with
+    the rank table (keyed src), ONE integer sum keyed dst, and a left
+    join of the sums back onto the node list. The rank table is |nodes|
+    rows (tiny next to the corpus: ~1e8 hosts for 1e12 pages). Executed
+    plan of one round (sf0.01 item graph, local[4], 8 shuffle
+    partitions): with the rank table under
+    ``spark.sql.autoBroadcastJoinThreshold`` the round is the cached edge
+    scan ⋈ a BroadcastExchange of the ranks, one ``Exchange
+    hashpartitioning(dst)`` for the sum, and a BroadcastExchange of the
+    sums into the node-list join, so the edge side never moves. With
+    broadcast off (threshold -1) both joins are sort-merge joins; the
+    cached edge table and node list still do not move (their cached
+    partitioning satisfies the joins), and each round adds an
+    ``Exchange hashpartitioning(node)`` of the rank table to the
+    ``Exchange hashpartitioning(dst)`` of the sums. Plans are
     truncated with an eager localCheckpoint every ``checkpoint_interval``
     rounds (the GraphX checkpointInterval tradeoff: longer intervals cut
     job-boundary latency — measured 1.18× wall on the 60k-node item graph

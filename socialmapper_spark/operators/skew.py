@@ -1,21 +1,17 @@
-"""Explicit skew handling: hot-cell histogram, salted aggregation, salted
-join (SURVEY.md §4 O13; north_rule: "salted hash joins on H3 cell keys
+"""Explicit skew handling: salted aggregation and salted join (SURVEY.md
+§4 O13; north_rule: "salted hash joins on H3 cell keys
 ... explicit repartitioning on cell prefix to break hot-cell skew").
 
 Dense urban tiles concentrate most of a Common-Crawl-style corpus into a
 handful of H3 cells (the synthetic fixtures put 70% of rows in 3 cells by
-construction). Three tools:
+construction). Two tools:
 
-- :func:`cell_histogram` — the pre-pass: per-cell row counts and the hot
-  set above a threshold. At production scale this runs on a sample or is
-  read from table statistics; the result is tiny (one row per cell).
-- :func:`salted_count_by_key` / :func:`salted_agg_by_key` — two-phase
-  aggregation: stage 1 aggregates on (key, salt) so a hot key's rows
-  spread over ``n_salts`` reducers, stage 2 merges the per-salt partials
-  on the key alone (now at most ``n_salts`` rows per key). For algebraic
-  aggregates (count/sum/min/max) the merge is exact; results are
-  salt-count invariant (pinned by tests at several n_salts — the
-  invariance SURVEY.md §5.4 requires).
+- :func:`salted_count_by_key` — two-phase count (the registry's
+  ``salted_cell_counts``): stage 1 counts on (key, salt) so a hot key's
+  rows spread over ``n_salts`` reducers, stage 2 sums the per-salt
+  partials on the key alone (now at most ``n_salts`` rows per key). The
+  merge is exact, so results are salt-count invariant (pinned by tests
+  at several n_salts — the invariance SURVEY.md §5.4 requires).
 - :func:`salted_join` — skewed equi-join: the big side gets a random-but-
   deterministic salt from a row key, the small side is replicated across
   all salts (an explicit generalized broadcast), and the join key becomes
@@ -43,25 +39,6 @@ def salt_col(key: Column, n_salts: int) -> Column:
     return F.pmod(F.xxhash64(key), F.lit(n_salts)).cast("int")
 
 
-def cell_histogram(
-    df: DataFrame, cell_col_name: str = "cell_r7", hot_threshold: int | None = None
-) -> DataFrame:
-    """Per-cell row counts, optionally filtered to the hot set.
-
-    The aggregation itself is skew-tolerant: count has map-side partial
-    aggregation, so each task contributes one row per distinct cell it
-    sees regardless of how many rows the cell holds.
-    """
-    hist = (
-        df.filter(F.col(cell_col_name).isNotNull())
-        .groupBy(cell_col_name)
-        .agg(F.count("*").alias("n_rows"))
-    )
-    if hot_threshold is not None:
-        hist = hist.filter(F.col("n_rows") >= hot_threshold)
-    return hist
-
-
 def salted_count_by_key(
     df: DataFrame, key_col: str, n_salts: int = DEFAULT_SALTS, salt_src: str | None = None
 ) -> DataFrame:
@@ -78,38 +55,6 @@ def salted_count_by_key(
         .agg(F.count("*").alias("__partial"))
     )
     return stage1.groupBy(key_col).agg(F.sum("__partial").alias("n_rows"))
-
-
-def salted_agg_by_key(
-    df: DataFrame,
-    key_col: str,
-    salt_src: str,
-    n_salts: int = DEFAULT_SALTS,
-    sums: list[str] | None = None,
-    mins: list[str] | None = None,
-    maxs: list[str] | None = None,
-) -> DataFrame:
-    """Two-phase salted aggregation for algebraic aggregates.
-
-    Output columns: ``n_rows`` plus ``sum_<c>`` / ``min_<c>`` / ``max_<c>``
-    per requested column. Exact and salt-count invariant (sum merges by
-    sum, min by min, max by max; all associative+commutative).
-    """
-    sums, mins, maxs = sums or [], mins or [], maxs or []
-    p1 = [F.count("*").alias("__n")]
-    p1 += [F.sum(c).alias(f"__s_{c}") for c in sums]
-    p1 += [F.min(c).alias(f"__mn_{c}") for c in mins]
-    p1 += [F.max(c).alias(f"__mx_{c}") for c in maxs]
-    stage1 = (
-        df.withColumn("__salt", salt_col(F.col(salt_src).cast("string"), n_salts))
-        .groupBy(key_col, "__salt")
-        .agg(*p1)
-    )
-    p2 = [F.sum("__n").alias("n_rows")]
-    p2 += [F.sum(f"__s_{c}").alias(f"sum_{c}") for c in sums]
-    p2 += [F.min(f"__mn_{c}").alias(f"min_{c}") for c in mins]
-    p2 += [F.max(f"__mx_{c}").alias(f"max_{c}") for c in maxs]
-    return stage1.groupBy(key_col).agg(*p2)
 
 
 def salted_join(

@@ -270,9 +270,10 @@ def test_driver_gate_entries_all_have_oracles():
     every one of them must carry an oracle_sql twin (a gate slot spent
     on a rows-only check is wasted verification surface). Pins the
     registry composition against accidental reorders."""
+    import pathlib
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
     import __spark_entry__ as e
 
     keys = list(e.queries())

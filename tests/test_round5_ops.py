@@ -87,9 +87,10 @@ def test_registry_quantize_entry_has_no_complex_columns(spark):
     """The r4 driver red row was an array<int> output column the pandas
     canonicalizer cannot hash; pin that the registry projection (and by
     extension the sweep invariant) stays flat-typed."""
+    import pathlib
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
     import __spark_entry__ as em
     from pyspark.sql.types import ArrayType, MapType, StructType
 
