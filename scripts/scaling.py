@@ -331,8 +331,7 @@ WORKLOADS = {w.name: w for w in [
     Workload("flagship", "BENCH_SCALING.json", flagship_job, 1, "pages",
              "flagship pipeline (geoparse -> cells -> two-phase PIP -> census "
              "pivot -> per-url rollup) on replicated geo pages.",
-             extra=lambda pair, sec, counts: {
-                 "metric": "scaling_efficiency_%d_to_%d" % pair, "cores": list(pair)}),
+             extra=lambda pair, sec, counts: {"metric": "scaling_efficiency_%d_to_%d" % pair}),
     Workload("pip", "BENCH_SCALING_PIP.json", pip_job, 2, "pages",
              "two-phase PIP join alone (cell prefilter -> Catalyst ray-cast "
              "refine), replicated pages against the fixed polygon table.",
@@ -389,6 +388,7 @@ def summarize(w: Workload, pair: tuple[int, int], best: dict) -> dict:
         "raw_efficiency": round(raw, 3),
         "host_ceiling_efficiency": round(ceiling, 3),
         "normalized_efficiency": round(raw / ceiling, 3),
+        "cores": list(pair),
     }
     out.update({f"{w.name}_sec_{s}": t for s, t in sec.items()})
     if "parts" in best[w.name][big]:

@@ -55,8 +55,12 @@ _ES_FILLER = "el informe de la zona describe los servicios que una comunidad nec
 
 
 def sf_name_from_dir(sf_dir: str) -> str:
+    """The scale a driver sf dir names; any other name raises, since its
+    tables would be checked against another scale's fixtures."""
     name = pathlib.Path(sf_dir).name
-    return name if name in PAGE_COUNTS else "sf0.01"
+    if name not in PAGE_COUNTS:
+        raise ValueError(f"{sf_dir}: unknown scale {name!r}; known scales: {', '.join(PAGE_COUNTS)}")
+    return name
 
 
 def geo_dir_for(sf_dir: str) -> pathlib.Path:

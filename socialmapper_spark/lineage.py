@@ -22,11 +22,13 @@ pytest suite pins).
 
 from __future__ import annotations
 
+import json
 import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from socialmapper_spark.session import local_frame
 
@@ -34,6 +36,8 @@ LINEAGE_SCHEMA = (
     "stage string, bucket int, cell_min long, cell_max long, "
     "row_count long, checksum long, status string, committed_at double"
 )
+# the stage's schema beside its output; Spark skips files named "_*"
+SCHEMA_FILE = "_stage_schema.json"
 
 
 def with_bucket(
@@ -154,7 +158,9 @@ def run_stage_with_lineage(
        are rebalanced by bucket first, so each bucket lands as one file,
        not one per upstream task; AQE coalesces small buckets into few
        write tasks and splits one larger than its advisory partition
-       size into files of about that size
+       size into files of about that size. On a local filesystem the
+       stage's schema goes beside them as ``_stage_schema.json``, for
+       :func:`verify_lineage`
     4. collect per-bucket stats from the data as written, append them
        as lineage rows (one file per commit)
 
@@ -200,6 +206,9 @@ def run_stage_with_lineage(
                 .option("partitionOverwriteMode", "dynamic")
                 .parquet(out_path)
             )
+            if os.path.isdir(out_path):  # elsewhere (s3://...) verify infers it
+                with open(os.path.join(out_path, SCHEMA_FILE), "w") as f:
+                    f.write(todo.schema.json())
             # certify what landed, not what we meant to write; the given
             # schema reads a chunk that landed no rows as empty
             written = spark.read.schema(todo.schema).parquet(out_path).filter(
@@ -220,8 +229,15 @@ def verify_lineage(
     spark: SparkSession, out_path: str, lineage_path: str, stage: str,
     checksum_cols: list[str], cell_col: str | None = None,
 ) -> bool:
-    """Recompute checksums from the output table and compare to lineage."""
-    data = spark.read.parquet(out_path)
+    """Recompute checksums from the output table and compare to lineage.
+    The table is read with the schema the stage wrote beside it, so no
+    job lists its footers first; without that file it is inferred."""
+    schema = os.path.join(out_path, SCHEMA_FILE)
+    reader = spark.read
+    if os.path.exists(schema):
+        with open(schema) as f:
+            reader = reader.schema(StructType.fromJson(json.load(f)))
+    data = reader.parquet(out_path)
     fresh = bucket_stats(data, stage, checksum_cols, cell_col).select(
         "bucket", "row_count", "checksum"
     )

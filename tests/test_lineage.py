@@ -250,3 +250,36 @@ def test_verify_lineage_flags_tampered_output(spark, workdir):
     assert not verify_lineage(spark, out, lin, *args)
     shutil.rmtree(one)
     assert not verify_lineage(spark, out, lin, *args)
+
+
+def _stage_names(spark, group: str, fn) -> list[str]:
+    """Names of the stages of the jobs ``fn`` runs under job group ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    jobs = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(group)]
+    return [tracker.getStageInfo(s).name for j in jobs for s in j.stageIds if tracker.getStageInfo(s)]
+
+
+def test_verify_reads_with_the_stage_schema(spark, workdir):
+    """The stage writes its schema beside the output, so verify reads the
+    table without a footer-listing job; with the file gone it infers the
+    schema (one ``parquet at`` job) and still verifies."""
+    df = _source(spark)
+    out, lin = str(workdir / "out"), str(workdir / "lineage")
+    args = ("geoparse", ["url", "cell_r7"], "cell_r7")
+    run_stage_with_lineage(spark, df, "geoparse", "url", ["url", "cell_r7"], out, lin,
+                           n_buckets=8, cell_col="cell_r7")
+    sidecar = pathlib.Path(out) / "_stage_schema.json"
+    assert sidecar.is_file()
+    assert spark.read.parquet(out).count() == df.count()  # Spark skips the file
+    with_schema = _stage_names(spark, "verify-schema", lambda: verify_lineage(spark, out, lin, *args))
+    assert with_schema and not [n for n in with_schema if n.startswith("parquet at")], with_schema
+    sidecar.unlink()
+    inferred = _stage_names(spark, "verify-infer", lambda: verify_lineage(spark, out, lin, *args))
+    assert [n for n in inferred if n.startswith("parquet at")], inferred
+    assert verify_lineage(spark, out, lin, *args)

@@ -40,6 +40,15 @@ def test_oracles_follow_the_scale(names):
     assert "data/sf0.001/golden_minhash_pairs.parquet" in oracles["minhash_pairs"]
 
 
+def test_unknown_scale_dir_raises():
+    """A dir named after no known scale fails loudly, instead of being
+    checked against another scale's fixtures."""
+    from socialmapper_spark.fixtures import geo_dir_for
+
+    with pytest.raises(ValueError, match=r"/tmp/sf_edge.*'sf_edge'.*sf0\.001, sf0\.01, sf0\.1"):
+        geo_dir_for("/tmp/sf_edge")
+
+
 def test_manifest_rows_are_the_registry(names):
     text = (ROOT / "CORRECTNESS_MANIFEST.md").read_text()
     rows = re.findall(r"^\| \d+ \| ([a-z0-9_]+) \|", text, re.M)

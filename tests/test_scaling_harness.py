@@ -44,6 +44,7 @@ def test_summary_keys_match_committed_json(name):
     assert out["host_ceiling_efficiency"] == 0.5
     assert out["value"] == out["normalized_efficiency"] == 1.0
     assert out["metric"].endswith("scaling_efficiency_8_to_32")
+    assert out["cores"] == [8, 32]
 
 
 def test_every_scaling_json_has_one_producing_row():
