@@ -16,13 +16,13 @@ every start; ``get_spark`` starts it from a JDK class-data-sharing
 archive instead, which memory-maps them and halves the start. The
 archive lives in the per-user cache (``$XDG_CACHE_HOME``, else
 ``~/.cache``) as ``socialmapper_spark/cds/<key>.jsa``; the key hashes the
-JDK's ``release`` file, each jar's name, size and mtime, and the conf
-dir. With no archive for its key, a session has its JVM write one as it
+JDK's ``release`` file and each jar's name, size and mtime. With no archive for its key, a session has its JVM write one as it
 exits (a one-time cost: a slower start, then some 10-15 s of writing
 while the process exits), and the file is promoted to the keyed
 path only when that JVM exited with code 0: the JVM dies of SIGBUS on a
 truncated archive rather than falling back. A session whose JVM still
-fails to start on an archive deletes it and starts without one.
+fails to start on an archive starts without one, and deletes the archive
+once that start succeeds.
 ``-Xshare:off`` in ``spark.driver.extraJavaOptions`` turns this off, and
 so does setting ``spark.driver.defaultJavaOptions``, which carries the
 archive flag. CDS refuses a classpath that holds a non-empty directory,
@@ -103,10 +103,11 @@ def get_spark(
         if archive is None or e.getCondition() != "JAVA_GATEWAY_EXITED":
             raise
         log.warning("the driver JVM did not start with %s; starting it without", archive.java_options)
+        spark = _launch(app_name, master, conf, None)
+        # only a JVM that starts without the archive shows the archive was at fault
         if archive.dump is None:
             archive.path.unlink(missing_ok=True)
         archive = None
-        spark = _launch(app_name, master, conf, None)
     if archive is not None and archive.dump is not None:
         _dumps.append((SparkContext._gateway.proc, archive))
     return spark
@@ -117,7 +118,8 @@ def _launch(app_name: str, master: str, conf: dict[str, str], archive: ClassArch
     if archive is None:
         return builder.getOrCreate()
     saved = os.environ.get("SPARK_CONF_DIR")
-    os.environ["SPARK_CONF_DIR"] = str(archive.conf_dir)
+    # the empty conf dir beside the archives
+    os.environ["SPARK_CONF_DIR"] = str(archive.path.parent / "conf")
     try:
         return builder.config("spark.driver.defaultJavaOptions", archive.java_options).getOrCreate()
     finally:
@@ -135,11 +137,9 @@ def _launch(app_name: str, master: str, conf: dict[str, str], archive: ClassArch
 class ClassArchive:
     """A driver launch with a class archive: ``path`` is the keyed
     archive, mapped when ``dump`` is None; otherwise the JVM writes a new
-    one to ``dump`` as it exits. ``conf_dir`` is the empty conf dir the
-    launch uses."""
+    one to ``dump`` as it exits."""
 
     path: pathlib.Path
-    conf_dir: pathlib.Path
     dump: pathlib.Path | None = None
 
     @property
@@ -155,14 +155,14 @@ def archive_dir() -> pathlib.Path:
     return pathlib.Path(cache) / "socialmapper_spark" / "cds"
 
 
-def archive_key(java_home: pathlib.Path, jars: pathlib.Path, conf_dir: pathlib.Path) -> str:
-    """What the archive depends on: the JDK build, the jar set and the
-    classpath's conf dir."""
+def archive_key(java_home: pathlib.Path, jars: pathlib.Path) -> str:
+    """What the archive depends on: the JDK build and the jar set. The
+    classpath's other entry, the empty conf dir, sits beside the archive,
+    so the archive's own location fixes it."""
     h = hashlib.sha256((java_home / "release").read_bytes())
     for jar in sorted(jars.glob("*.jar")):
         st = jar.stat()
         h.update(f"{jar.name}\0{st.st_size}\0{st.st_mtime_ns}\n".encode())
-    h.update(str(conf_dir).encode())
     return h.hexdigest()[:20]
 
 
@@ -185,20 +185,19 @@ def class_archive(conf: dict[str, str]) -> ClassArchive | None:
         log.info("no driver class archive: %s", why)
         return None
     root = archive_dir()
-    conf_dir = root / "conf"
     try:
-        key = archive_key(_java_home(), spark_home / "jars", conf_dir)
-        conf_dir.mkdir(parents=True, exist_ok=True)
+        key = archive_key(_java_home(), spark_home / "jars")
+        (root / "conf").mkdir(parents=True, exist_ok=True)
     except OSError as e:
         log.info("no driver class archive: %s", e)
         return None
     path = root / f"{key}.jsa"
     if path.is_file():
-        return ClassArchive(path, conf_dir)
+        return ClassArchive(path)
     for tmp in root.glob("*.jsa.*"):  # dumps whose writer is gone never finished
         if tmp.suffix[1:].isdigit() and not _alive(int(tmp.suffix[1:])):
             tmp.unlink(missing_ok=True)
-    return ClassArchive(path, conf_dir, root / f"{key}.jsa.{os.getpid()}")
+    return ClassArchive(path, root / f"{key}.jsa.{os.getpid()}")
 
 
 def _java_home() -> pathlib.Path:

@@ -9,11 +9,14 @@ import sys
 
 import pytest
 from pyspark import SparkContext
+from pyspark.errors import PySparkRuntimeError
 from pyspark.sql import SparkSession
 
 from socialmapper_spark import session
 
 ROOT = pathlib.Path(__file__).resolve().parents[1]
+# each adds to the driver's classpath, which rules the archive out
+CLASSPATH_VARS = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")
 
 
 @pytest.fixture()
@@ -24,8 +27,10 @@ def cache(tmp_path, monkeypatch):
     (conf / "spark-defaults.conf.template").write_text("# spark.master local\n")
     monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "cache"))
     monkeypatch.setenv("SPARK_CONF_DIR", str(conf))
-    for var in ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH"):
+    for var in CLASSPATH_VARS:
         monkeypatch.delenv(var, raising=False)
+    # the conftest session may itself be dumping an archive
+    monkeypatch.setattr(session, "_dumps", [])
     return session.archive_dir()
 
 
@@ -34,7 +39,8 @@ def test_key_miss_dumps_at_exit(cache):
     assert a.dump == cache / f"{a.path.name}.{os.getpid()}"
     assert a.java_options.startswith(f"-XX:ArchiveClassesAtExit={a.dump} ")
     assert not a.path.exists()
-    assert a.conf_dir.is_dir() and not list(a.conf_dir.iterdir())
+    conf_dir = a.path.parent / "conf"
+    assert conf_dir.is_dir() and not list(conf_dir.iterdir())
 
 
 def test_existing_archive_is_mapped(cache):
@@ -72,10 +78,44 @@ def test_launch_swaps_the_conf_dir_only_around_the_gateway(cache, launches):
     a.path.write_bytes(b"archive")
     session.get_spark(master="local[1]", extra_conf={"spark.driver.memory": "1g"})
     env, options = launches[0]
-    assert env == str(a.conf_dir)
+    assert env == str(a.path.parent / "conf")
     assert options["spark.driver.defaultJavaOptions"] == f"-XX:SharedArchiveFile={a.path}"
     assert options["spark.driver.memory"] == "1g"
     assert os.environ["SPARK_CONF_DIR"] == real
+
+
+def _gateway_exits(monkeypatch, fails: int) -> list[str]:
+    """Fake launches whose first ``fails`` JVMs exit before the gateway
+    is up; returns each launch's java options."""
+    seen = []
+
+    def get_or_create(self):
+        seen.append(self._options.get("spark.driver.defaultJavaOptions"))
+        if len(seen) <= fails:
+            raise PySparkRuntimeError(errorClass="JAVA_GATEWAY_EXITED", messageParameters={})
+
+    monkeypatch.setattr(SparkContext, "_gateway", None)
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", get_or_create)
+    return seen
+
+
+def test_archive_that_fails_the_start_is_deleted_after_a_start_without_it(cache, monkeypatch):
+    seen = _gateway_exits(monkeypatch, fails=1)
+    path = session.class_archive({}).path
+    path.write_bytes(b"archive")
+    session.get_spark(master="local[1]")
+    assert seen == [f"-XX:SharedArchiveFile={path}", None]
+    assert not path.exists()
+
+
+def test_archive_is_kept_when_the_start_without_it_fails_too(cache, monkeypatch):
+    seen = _gateway_exits(monkeypatch, fails=2)
+    path = session.class_archive({}).path
+    path.write_bytes(b"archive")
+    with pytest.raises(PySparkRuntimeError):
+        session.get_spark(master="local[1]")
+    assert seen == [f"-XX:SharedArchiveFile={path}", None]
+    assert path.read_bytes() == b"archive"
 
 
 @pytest.mark.parametrize("conf", [
@@ -129,8 +169,9 @@ def test_truncated_archive_still_starts_a_session(tmp_path):
     as its JVM exits; the second finds it cut to 5 MB."""
     conf = tmp_path / "conf"
     conf.mkdir()
-    env = {**os.environ, "XDG_CACHE_HOME": str(tmp_path / "cache"), "SPARK_CONF_DIR": str(conf),
-           "SPARK_GRAFT_DRIVER_MEM": "1g", "PYTHONPATH": str(ROOT)}
+    env = {k: v for k, v in os.environ.items() if k not in CLASSPATH_VARS}
+    env.update(XDG_CACHE_HOME=str(tmp_path / "cache"), SPARK_CONF_DIR=str(conf),
+               SPARK_GRAFT_DRIVER_MEM="1g", PYTHONPATH=str(ROOT))
 
     def child() -> subprocess.CompletedProcess:
         run = subprocess.run([sys.executable, "-c", CHILD], env=env, cwd=tmp_path,
