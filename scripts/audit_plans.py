@@ -42,14 +42,8 @@ SF_DIR = "/root/testdata/sf0.01"
 
 # entry -> (allowed node kinds, why Python/NLJ is the right plan there)
 WHITELIST: dict[str, tuple[set[str], str]] = {
-    # vectorized Arrow UDFs over the POLYGON table (thousands of rows,
-    # never the page/doc side): validity, area, centroid. The PIP polygon
-    # index is built on the driver and plans as local tables, so no entry
-    # is whitelisted for it.
-    "isochrone_area": ({"ArrowEvalPython"}, "shoelace area over WKB polygons"),
-    "unit_centroids": ({"ArrowEvalPython"}, "polygon centroid over WKB"),
-    "geometry_quarantine": ({"ArrowEvalPython"},
-                            "WKB validity parse over the polygon table"),
+    # (polygon-side work — the PIP index, validity, area, centroid — runs
+    # on the driver and plans as local tables, so no entry is listed for it)
     # simhash needs per-doc token hashing with bit accumulation — a
     # vectorized numpy kernel; no Catalyst expression computes it
     "simhash": ({"ArrowEvalPython"}, "64-bit simhash numpy kernel"),
@@ -76,7 +70,7 @@ WHITELIST: dict[str, tuple[set[str], str]] = {
                   "probe-side Albers UDF + exactness-preserving brute-force fallback "
                   "(broadcast candidates; strategy='auto' caps the POI side)"),
     "centroid_nearest_poi": ({"BroadcastNestedLoopJoin", "ArrowEvalPython"},
-                             "centroid UDF + probe-side Albers UDF + broadcast join"),
+                             "probe-side Albers UDF + broadcast brute-force join"),
     "cluster_metrics": ({"BroadcastNestedLoopJoin"},
                         "one-row bounds frame broadcast-crossed"),
     "equal_interval_bins": ({"BroadcastNestedLoopJoin"},

@@ -28,7 +28,12 @@ from socialmapper_spark.geo.albers import albers5070_forward
 from socialmapper_spark.geo.geoparse import GAZETTEER, geoparse_py
 from socialmapper_spark.geo.hull import convex_hull
 from socialmapper_spark.geo.pip import points_in_polygon
-from socialmapper_spark.geo.wkb import polygon_to_wkb, wkb_to_rings
+from socialmapper_spark.geo.wkb import (
+    polygon_measures,
+    polygon_to_wkb,
+    wkb_ring_table,
+    wkb_to_rings,
+)
 from socialmapper_spark.functions.scalar import KM_TO_MILES
 
 FIXTURE_VERSION = "v7"
@@ -728,13 +733,14 @@ def _round_half_up(x: float, places: int) -> float:
     return float(Decimal(repr(x)).quantize(Decimal(f"1e-{places}"), ROUND_HALF_UP))
 
 
-GEO_EXTRA_VERSION = "x9"
+GEO_EXTRA_VERSION = "x10"
 
 
 def ensure_geo_extras(sf_dir: str) -> pathlib.Path:
     """Extra goldens + fixture inputs for the extended operator set:
-    golden_knn3 (brute-force top-3 per page), golden_area (pure-Python
-    shoelace twin of A3), custom_coords.csv (S3 tolerant-reader input).
+    golden_knn3 (brute-force top-3 per page), golden_area and
+    golden_centroids (A3/F7 from the engine's shared polygon kernel),
+    custom_coords.csv (S3 tolerant-reader input).
     Cached behind a version marker like the main fixtures."""
     out = geo_dir_for(sf_dir)
     marker = out / f".extras_{GEO_EXTRA_VERSION}"
@@ -784,14 +790,14 @@ def ensure_geo_extras(sf_dir: str) -> pathlib.Path:
     )
 
     # --- golden_area: shoelace over isochrone WKB -------------------------
-    # per-polygon numeric kernel SHARED with the engine (operators.stats.
-    # polygon_area_km2) per the repo twin convention — a sequential-loop
-    # twin can flip the last bit vs numpy's blocked np.dot summation and
-    # break the bit-exact golden near a rounding boundary. The golden's
-    # independence lives in the orchestration (grouping, Decimal exact
-    # accumulation, ordering), not the per-ring float kernel.
-    from socialmapper_spark.operators.stats import polygon_area_km2
-
+    # the per-polygon kernel is SHARED with the engine (geo.wkb.
+    # polygon_measures) per the repo twin convention: on coordinates of
+    # ~1.5e6 m the shoelace cancels ~8 digits, so any other summation
+    # order can flip a rounded digit. A polygon's measures do not depend on
+    # its table position (pinned by a test), so the poly_id order here and
+    # the engine's scan order give the same bits. The golden's independence
+    # lives in the orchestration (DuckDB read, grouping, Decimal exact
+    # accumulation), not the per-ring float kernel.
     polys = duckdb.sql(
         f"select travel_time_minutes, travel_mode, geometry_wkb "
         f"from read_parquet('{out}/polygons.parquet') where kind = 'isochrone' "
@@ -800,11 +806,10 @@ def ensure_geo_extras(sf_dir: str) -> pathlib.Path:
     from collections import defaultdict
     from decimal import Decimal
 
+    iso_area = polygon_measures(wkb_ring_table([bytes(r[2]) for r in polys]))[0]
     groups: dict[tuple, list[Decimal]] = defaultdict(list)
-    for tt, tm, wkb in polys:
-        groups[(tt, tm)].append(
-            Decimal(repr(_round_half_up(polygon_area_km2(bytes(wkb)), 6)))
-        )
+    for (tt, tm, _), area in zip(polys, iso_area):
+        groups[(tt, tm)].append(Decimal(repr(_round_half_up(float(area), 6))))
     area_rows = [
         (tt, tm, len(vals), float(sum(vals))) for (tt, tm), vals in sorted(groups.items())
     ]
@@ -821,24 +826,19 @@ def ensure_geo_extras(sf_dir: str) -> pathlib.Path:
     )
 
     # --- golden_centroids + golden_centroid_knn: F7 twin ------------------
-    # centroid kernel SHARED with the engine (operators.stats.
-    # polygon_centroid_4326 — same np.sum accumulation, inverse-projection
-    # and 9 dp rounding), then brute-force nearest POI from the ROUNDED
-    # centroid (mirroring the engine's two-stage path exactly). Same
-    # shared-kernel rationale as golden_area above.
-    from socialmapper_spark.operators.stats import polygon_centroid_4326
-
+    # centroid from the same shared kernel (geo.wkb.polygon_measures),
+    # rounded half-up to 9 dp as the engine rounds, then brute-force
+    # nearest POI from the ROUNDED centroid (mirroring the engine's
+    # two-stage path exactly). Same shared-kernel rationale as golden_area.
     bg = duckdb.sql(
-        f"select poly_id, GEOID, geometry_wkb "
+        f"select GEOID, geometry_wkb "
         f"from read_parquet('{out}/polygons.parquet') where kind = 'blockgroup' "
         "order by poly_id"
     ).fetchall()
-    c_geoid, c_lat, c_lon = [], [], []
-    for _pid, geoid, wkb in bg:
-        la, lo = polygon_centroid_4326(bytes(wkb))
-        c_geoid.append(geoid)
-        c_lat.append(la)
-        c_lon.append(lo)
+    c_geoid = [r[0] for r in bg]
+    _, bg_lat, bg_lon = polygon_measures(wkb_ring_table([bytes(r[1]) for r in bg]))
+    c_lat = [_round_half_up(float(v), 9) for v in bg_lat]
+    c_lon = [_round_half_up(float(v), 9) for v in bg_lon]
     pq.write_table(
         pa.table(
             {

@@ -62,7 +62,7 @@ def simplify_ring(ring: np.ndarray, tol: float) -> np.ndarray:
     independently. tol is in the ring's coordinate units (degrees here).
     """
     ring = np.asarray(ring, dtype=np.float64)
-    if np.array_equal(ring[0], ring[-1]):
+    if len(ring) and np.array_equal(ring[0], ring[-1]):
         ring = ring[:-1]
     n = ring.shape[0]
     if tol <= 0.0 or n <= 4:

@@ -5,7 +5,9 @@ Geometry travels through the engine as a WKB ``binary`` column (SURVEY.md
 DuckDB-spatial / Sedona if a user brings real block-group shapefiles.
 Only Polygon (type 3) and MultiPolygon (type 6) are needed; shapely is
 not installed, so this is a small struct codec. A whole column decodes
-into one :class:`RingTable` of flat arrays for vectorized work.
+into one :class:`RingTable` of flat arrays for vectorized work, and
+:func:`polygon_measures` computes every polygon's area and centroid from
+one in a single pass.
 """
 
 from __future__ import annotations
@@ -15,6 +17,8 @@ from dataclasses import dataclass
 from typing import Sequence
 
 import numpy as np
+
+from socialmapper_spark.geo.albers import albers5070_forward, albers5070_inverse
 
 _WKB_POLYGON = 3
 _WKB_MULTIPOLYGON = 6
@@ -40,7 +44,9 @@ class RingTable:
     """The rings of many polygons in flat arrays, in table order: polygon,
     then member, then ring. Ring ``r`` owns vertices
     ``xy[start[r]:start[r + 1]]`` and belongs to polygon ``poly[r]``;
-    ``exterior[r]`` marks the first ring of each member."""
+    ``exterior[r]`` marks the first ring of each member. A member with no
+    rings, or a MultiPolygon with no members, holds one empty exterior
+    ring, so every polygon owns at least one ring."""
 
     xy: np.ndarray
     start: np.ndarray
@@ -104,6 +110,8 @@ def _ring_spans(buf: bytes) -> list[list[tuple[int, int]]]:
             rings.append((off + 4, n_pts))
             off += 4 + n_pts * 16
         members.append(rings)
+    if off > len(buf):
+        raise ValueError("truncated WKB")
     return members
 
 
@@ -131,8 +139,8 @@ def wkb_ring_table(wkbs: Sequence[bytes]) -> RingTable:
     poly: list[int] = []
     exterior: list[bool] = []
     for p, buf in enumerate(wkbs):
-        for rings in _ring_spans(buf):
-            for r, (off, n) in enumerate(rings):
+        for rings in _ring_spans(buf) or [[]]:
+            for r, (off, n) in enumerate(rings or [(0, 0)]):
                 chunks.append(buf[off : off + n * 16])
                 counts.append(n)
                 poly.append(p)
@@ -143,3 +151,45 @@ def wkb_ring_table(wkbs: Sequence[bytes]) -> RingTable:
     return RingTable(
         xy, start, np.asarray(poly, dtype=np.int64), np.asarray(exterior, dtype=bool)
     )
+
+
+def polygon_measures(rings: RingTable) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Each polygon's EPSG:5070 area in km² and area-weighted centroid as
+    (lat, lon) degrees — the reference's ``to_crs(5070).area / 1e6``
+    (api/client.py:292-301) and ``to_crs(5070).centroid`` back to 4326
+    (distance/__init__.py:133-138) over a whole table in one pass.
+
+    Every vertex is projected once; the shoelace terms of each ring edge
+    (a vertex and its :meth:`RingTable.successor`) are summed per ring
+    with ``np.add.reduceat``, and the rings of a polygon combine in table
+    order with ``np.bincount``: exteriors add their absolute area, holes
+    subtract it. A ring's sums depend only on its own vertices and a
+    polygon's only on its own rings, so a polygon's measures are the same
+    bits wherever it sits in the table. Rings of zero area add nothing to
+    the centroid; where a polygon's signed area sums to 0 its centroid is
+    NaN.
+    """
+    x, y = albers5070_forward(rings.xy[:, 1], rings.xy[:, 0])
+    nxt = rings.successor()
+    cross = x * y[nxt] - x[nxt] * y
+    n = np.diff(rings.start)
+    full = n > 0
+
+    def per_ring(v: np.ndarray) -> np.ndarray:
+        out = np.zeros(len(n))
+        if full.any():
+            out[full] = np.add.reduceat(v, rings.start[:-1][full])
+        return out
+
+    a = per_ring(cross) / 2.0
+    w = np.where(rings.exterior, np.abs(a), -np.abs(a))
+    area = np.bincount(rings.poly, w) / 1e6
+    some = a != 0.0
+    with np.errstate(divide="ignore", invalid="ignore"):
+        cx = np.where(some, per_ring((x + x[nxt]) * cross) / (6.0 * a) * w, 0.0)
+        cy = np.where(some, per_ring((y + y[nxt]) * cross) / (6.0 * a) * w, 0.0)
+        sa = np.bincount(rings.poly, np.where(some, w, 0.0))
+        none = sa == 0.0
+        lat, lon = albers5070_inverse(np.where(none, np.nan, np.bincount(rings.poly, cx) / sa),
+                                      np.where(none, np.nan, np.bincount(rings.poly, cy) / sa))
+    return area, lat, lon

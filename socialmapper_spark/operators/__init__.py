@@ -14,7 +14,6 @@ from socialmapper_spark.operators.stats import (  # noqa: F401
     geoid_prefix_groups,
     isochrone_area,
     null_rate_stats,
-    polygon_area_km2,
     quantile_bins,
 )
 from socialmapper_spark.operators.census import (  # noqa: F401
@@ -27,10 +26,7 @@ from socialmapper_spark.operators.raster import (  # noqa: F401
     tile_arrays,
     vectorize_threshold,
 )
-from socialmapper_spark.operators.skew import (  # noqa: F401
-    salted_count_by_key,
-    salted_join,
-)
+from socialmapper_spark.operators.skew import salted_count_by_key  # noqa: F401
 from socialmapper_spark.operators.similarity import (  # noqa: F401
     cosine_topk,
     embedding_near_dup_pairs,

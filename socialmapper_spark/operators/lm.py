@@ -38,8 +38,8 @@ Scale design (100 TB):
   stopword skew never reaches a shuffle. A dictionary too big to
   broadcast (100M+ terms at web scale) plans as a shuffled join, and its
   hot stopword keys are AQE's skew-split case (AQE is on repo-wide,
-  session.py; the skew drill, SKEW_DRILL.json, measures it). The join
-  is not salted: on the sf0.1 documents salting lost 9 of 10
+  session.py; it beat a hand-salted join on a hot-key join at local[4],
+  CHANGES.md). The join is not salted: on the sf0.1 documents salting lost 9 of 10
   alternating pairs for unigrams and 26 of 40 for bigrams;
 - the corpus total is a ONE-ROW aggregate attached via
   broadcast(cross-join), the whitelisted one-row-frame pattern

@@ -48,19 +48,18 @@ nationwide-sized table of 240k block-group squares preps in about 6 s
 
 from __future__ import annotations
 
+import struct
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StructType
 
 from socialmapper_spark.geo.cells import cell_col, ring_cover_cells
 from socialmapper_spark.geo.simplify import simplify_rings
-from socialmapper_spark.geo.wkb import wkb_ring_table, wkb_to_rings
+from socialmapper_spark.geo.wkb import wkb_ring_table
 
 PREFILTER_RES = 7
 
@@ -159,29 +158,12 @@ def pip_refine_expr(edges: F.Column, lon: F.Column, lat: F.Column) -> F.Column:
     )
 
 
-def _make_geom_valid_udf():
-    @pandas_udf("boolean")
-    def geom_valid(wkb: pd.Series) -> pd.Series:
-        out = np.zeros(len(wkb), dtype=bool)
-        for i, b in enumerate(wkb):
-            if b is None:
-                continue
-            try:
-                polys = wkb_to_rings(bytes(b))
-            except Exception:  # malformed WKB: struct errors, bad lengths
-                continue
-            ok = len(polys) > 0
-            for rings in polys:
-                if not rings or rings[0].shape[0] < 3:
-                    ok = False
-                    break
-                if not all(np.isfinite(r).all() for r in rings):
-                    ok = False
-                    break
-            out[i] = ok
-        return pd.Series(out)
-
-    return geom_valid
+def _parses(buf: bytes | None) -> bool:
+    try:
+        wkb_ring_table([buf])
+    except (TypeError, ValueError, struct.error):  # NULL, bad header, truncated
+        return False
+    return True
 
 
 def validate_geometries(
@@ -192,14 +174,34 @@ def validate_geometries(
     Reference drops null/invalid geometries before the spatial join
     (block_group_service.py:230-236 ``geometry.notna() & geometry.is_valid``,
     same in zcta_service.py:246-252). Without GEOS, 'valid' here means:
-    non-null, parseable WKB, every member polygon has a ≥3-vertex exterior,
-    and all coordinates finite — the failure modes that would crash or
-    silently mis-assign ``wkb_to_rings``/ray-casting downstream. Invalid
-    rows are *returned*, not dropped silently (the quarantine convention
-    of P1 coordinate validation).
+    non-null, parseable WKB, at least one member, every member polygon has
+    a ≥3-vertex exterior, and all coordinates finite — the failure modes
+    that would crash or silently mis-assign the ring parse/ray-casting
+    downstream. Invalid rows are *returned*, not dropped silently (the
+    quarantine convention of P1 coordinate validation).
+
+    The call runs one job: ``toArrow`` collects the table through the JVM,
+    one ``wkb_ring_table`` parse and one vectorized test decide every row,
+    and both sides come back as Arrow-built ``LocalTableScan``s with the
+    input's schema. Only when the whole-table parse fails is each row's
+    header walked alone, to find the rows that do not parse.
     """
-    ok = _make_geom_valid_udf()(F.col(geometry_col))
-    return polygons.filter(ok), polygons.filter(~ok)
+    table = polygons.toArrow()
+    wkbs = table.column(geometry_col).to_pylist()
+    try:
+        rings, parsed = wkb_ring_table(wkbs), np.ones(len(wkbs), dtype=bool)
+    except (TypeError, ValueError, struct.error):
+        parsed = np.array([_parses(b) for b in wkbs], dtype=bool)
+        rings = wkb_ring_table([b for b, p in zip(wkbs, parsed) if p])
+    n, m = np.diff(rings.start), int(parsed.sum())
+    short = np.bincount(rings.poly, rings.exterior & (n < 3), minlength=m)
+    owner = np.repeat(rings.poly, n)
+    nonfinite = np.bincount(owner, ~np.isfinite(rings.xy).all(axis=1), minlength=m)
+    ok = parsed.copy()
+    ok[parsed] = short + nonfinite == 0
+    spark = polygons.sparkSession
+    return (spark.createDataFrame(table.filter(pa.array(ok)), polygons.schema),
+            spark.createDataFrame(table.filter(pa.array(~ok)), polygons.schema))
 
 
 def add_cells(df: DataFrame, lat="lat", lon="lon", resolutions=(7, 8, 9)) -> DataFrame:

@@ -1,125 +1,85 @@
 """Statistics / geometry-measure operators (SURVEY.md §2.4 A3-A6, §2.8 F16).
 
 A3 isochrone area, A4 cluster metrics, A5 per-variable null-rate stats,
-A6 GEOID prefix grouping, F16 quantile binning. All except the geometry
-area are pure Catalyst (hash aggregates / one window); the area runs the
-projected shoelace inside a vectorized pandas UDF over WKB — the same
-pattern the reference uses via GeoPandas ``to_crs(5070).area``
-(/root/reference/socialmapper/api/client.py:292-301).
+A6 GEOID prefix grouping, F7 polygon centroids, F16 quantile binning. All
+except the geometry measures are pure Catalyst (hash aggregates / one
+window). Area and centroid read the polygon table once on the driver
+(``toArrow``) and measure every polygon in one vectorized numpy pass,
+``geo.wkb.polygon_measures`` — the reference likewise computes both as one
+GeoSeries operation over the whole table (``to_crs(5070).area``, the
+reference's socialmapper/api/client.py:292-301). The polygon table is
+small; the page side never reaches the driver.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from socialmapper_spark.functions.scalar import cleanse_census_value
-from socialmapper_spark.geo.albers import albers5070_forward
-from socialmapper_spark.geo.wkb import wkb_to_rings
+from socialmapper_spark.geo.wkb import polygon_measures, wkb_ring_table
 from socialmapper_spark.operators.census import dmean, dsum
 from socialmapper_spark.session import local_frame
 
 
-def polygon_area_km2(wkb: bytes) -> float:
-    """Equal-area (EPSG:5070) polygon area in km² — numpy shoelace.
+def _measured(polygons: DataFrame, keep: list[str]) -> DataFrame:
+    """``polygons``' ``keep`` columns plus each polygon's ``area_km2`` and
+    centroid ``lat``/``lon`` (see :func:`unit_centroids`), as an
+    Arrow-built ``LocalTableScan``. Runs one job when called: a JVM
+    ``toArrow`` collect of the WKB, then one numpy pass on the driver."""
+    from socialmapper_spark.fixtures import _round_half_up  # slow to import
 
-    Mirrors the reference's ``to_crs(epsg=5070) ... geometry.area / 1e6``
-    (api/client.py:297-301): exterior rings add, holes subtract.
-    """
-    total = 0.0
-    for rings in wkb_to_rings(bytes(wkb)):
-        for i, ring in enumerate(rings):
-            x, y = albers5070_forward(ring[:, 1], ring[:, 0])
-            if not (x[0] == x[-1] and y[0] == y[-1]):
-                x = np.append(x, x[0])
-                y = np.append(y, y[0])
-            shoelace = 0.5 * abs(np.dot(x[:-1], y[1:]) - np.dot(x[1:], y[:-1]))
-            total += shoelace if i == 0 else -shoelace
-    return total / 1e6
+    def rounded(v: np.ndarray) -> pa.Array:
+        return pa.array([None if np.isnan(d) else _round_half_up(float(d), 9) for d in v],
+                        pa.float64())
 
-
-def _area_udf():
-    @pandas_udf("double")
-    def area_km2(wkb: pd.Series) -> pd.Series:
-        return pd.Series([polygon_area_km2(b) for b in wkb], dtype=np.float64)
-
-    return area_km2
-
-
-def polygon_centroid_4326(wkb: bytes) -> tuple[float, float]:
-    """F7: area-weighted polygon centroid computed in EPSG:5070, converted
-    back to (lat, lon) degrees — the reference's block-group centroid step
-    (/root/reference/socialmapper/distance/__init__.py:133-138:
-    ``to_crs(5070).geometry.centroid`` then back to 4326).
-
-    Standard shoelace centroid per ring; holes and MultiPolygon members
-    combine by signed area weight. Output rounded to 9 dp (≈0.1 mm) so
-    downstream exact-parity comparisons are representation-stable.
-    """
-    from socialmapper_spark.geo.albers import albers5070_inverse
-
-    sx = sy = sa = 0.0
-    for rings in wkb_to_rings(bytes(wkb)):
-        for i, ring in enumerate(rings):
-            x, y = albers5070_forward(ring[:, 1], ring[:, 0])
-            if not (x[0] == x[-1] and y[0] == y[-1]):
-                x = np.append(x, x[0])
-                y = np.append(y, y[0])
-            cross = x[:-1] * y[1:] - x[1:] * y[:-1]
-            a = float(np.sum(cross)) / 2.0
-            if a == 0.0:
-                continue
-            cx = float(np.sum((x[:-1] + x[1:]) * cross)) / (6.0 * a)
-            cy = float(np.sum((y[:-1] + y[1:]) * cross)) / (6.0 * a)
-            w = abs(a) if i == 0 else -abs(a)
-            sx += cx * w
-            sy += cy * w
-            sa += w
-    lat, lon = albers5070_inverse(sx / sa, sy / sa)
-    from socialmapper_spark.fixtures import _round_half_up
-
-    return _round_half_up(float(lat), 9), _round_half_up(float(lon), 9)
+    table = polygons.select(*keep, "geometry_wkb").toArrow()
+    area, lat, lon = polygon_measures(wkb_ring_table(table.column("geometry_wkb").to_pylist()))
+    table = pa.table([*table.select(keep).columns, pa.array(area), rounded(lat), rounded(lon)],
+                     names=[*keep, "area_km2", "lat", "lon"])
+    schema = StructType([polygons.schema[c] for c in keep]
+                        + [StructField(c, DoubleType()) for c in ("area_km2", "lat", "lon")])
+    return polygons.sparkSession.createDataFrame(table, schema)
 
 
 def unit_centroids(polygons: DataFrame, kind: str | None = "blockgroup") -> DataFrame:
-    """(poly_id, GEOID, lat, lon) — centroid per polygon via a vectorized
-    pandas UDF over the WKB column (the polygon side is small; this runs
-    once per polygon, not per page)."""
+    """F7: (poly_id, GEOID, lat, lon) — each polygon's area-weighted
+    centroid, computed in EPSG:5070 and converted back to degrees (the
+    reference's block-group centroid step, socialmapper/distance/
+    __init__.py:133-138: ``to_crs(5070).geometry.centroid`` then back to
+    4326). Holes and MultiPolygon members combine by signed area
+    weight; lat/lon are rounded half-up to 9 dp (≈0.1 mm) so exact-parity
+    comparisons are representation-stable.
 
-    @pandas_udf("struct<lat:double,lon:double>")
-    def centroid(wkb: pd.Series) -> pd.DataFrame:
-        pts = [polygon_centroid_4326(b) for b in wkb]
-        return pd.DataFrame({"lat": [p[0] for p in pts], "lon": [p[1] for p in pts]})
-
+    ``lat``/``lon`` are NULL where the centroid is undefined: the
+    polygon's signed projected area sums to 0 (say, collinear vertices, or
+    a hole identical to its exterior), or a coordinate is NaN.
+    ``knn_join`` drops such rows. The call runs one job (see
+    :func:`_measured`); the returned frame is a local table.
+    """
     df = polygons if kind is None else polygons.filter(F.col("kind") == kind)
-    return df.select(
-        "poly_id", "GEOID", centroid(F.col("geometry_wkb")).alias("__c")
-    ).select("poly_id", "GEOID", F.col("__c.lat").alias("lat"), F.col("__c.lon").alias("lon"))
+    return _measured(df, ["poly_id", "GEOID"]).drop("area_km2")
 
 
 def isochrone_area(polygons: DataFrame) -> DataFrame:
     """A3: total equal-area km² per isochrone band (travel time + mode).
 
     Reference: sum of per-isochrone areas in EPSG:5070 / 1e6
-    (api/client.py:292-301). Rounded to 9 decimals so the value hash is
-    stable against accumulation order (the per-polygon areas themselves
-    are deterministic; only the final sum could reorder — dsum on the
-    rounded per-row value makes it exact).
+    (api/client.py:292-301). The per-polygon areas come from one driver
+    pass over the isochrones (the call runs one job, see
+    :func:`_measured`) and are rounded to 6 dp in Spark, so each is
+    exactly representable in ``dsum``'s decimal(20,6) accumulator
+    (≈ 1 m² resolution — ample) and the band total is independent of
+    accumulation order.
     """
-    per_poly = polygons.filter(F.col("kind") == "isochrone").select(
-        "poly_id",
-        "travel_time_minutes",
-        "travel_mode",
-        # 6 dp so the per-row value is exactly representable in dsum's
-        # decimal(20,6) accumulator (≈ 1 m² resolution — ample)
-        F.round(_area_udf()(F.col("geometry_wkb")), 6).alias("area_km2"),
-    )
+    iso = polygons.filter(F.col("kind") == "isochrone")
+    per_poly = _measured(iso, ["travel_time_minutes", "travel_mode"])
     return per_poly.groupBy("travel_time_minutes", "travel_mode").agg(
         F.count("*").alias("n_isochrones"),
-        dsum("area_km2").alias("total_area_km2"),
+        dsum(F.round("area_km2", 6)).alias("total_area_km2"),
     )
 
 

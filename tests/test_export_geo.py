@@ -19,13 +19,12 @@ def test_albers_inverse_roundtrip():
 
 
 def test_polygon_centroid_square():
-    from socialmapper_spark.geo.wkb import polygon_to_wkb
-    from socialmapper_spark.operators.stats import polygon_centroid_4326
+    from socialmapper_spark.geo.wkb import polygon_measures, polygon_to_wkb, wkb_ring_table
 
     # a small square: projected centroid ≈ geographic center (well within
     # 1e-4 deg for a 0.02° box)
     ring = np.array([[-78.62, 35.50], [-78.60, 35.50], [-78.60, 35.52], [-78.62, 35.52]])
-    lat, lon = polygon_centroid_4326(polygon_to_wkb([ring]))
+    _, (lat,), (lon,) = polygon_measures(wkb_ring_table([polygon_to_wkb([ring])]))
     assert lat == pytest.approx(35.51, abs=1e-4)
     assert lon == pytest.approx(-78.61, abs=1e-4)
 
@@ -46,6 +45,54 @@ def test_unit_centroids_inside_cells(spark, geo_small):
         lon_max, lat_max = rings.max(axis=0)
         assert lat_min < r["lat"] < lat_max
         assert lon_min < r["lon"] < lon_max
+
+
+def test_polygon_measures_independent_of_table_order(geo_small):
+    """A polygon's measures are the same bits whether it is measured in
+    the whole table, alone, or in the reversed table — what lets the
+    engine (parquet order) and the goldens (poly_id order) share the
+    kernel."""
+    import pyarrow.parquet as pq
+
+    from socialmapper_spark.geo.wkb import polygon_measures, polygon_to_wkb, wkb_ring_table
+
+    outer = np.array([[-79.0, 35.0], [-78.8, 35.0], [-78.8, 35.2], [-79.0, 35.2]])
+    hole = np.array([[-78.95, 35.05], [-78.85, 35.05], [-78.85, 35.15], [-78.95, 35.15]])
+    member = polygon_to_wkb([outer + [0.5, 0.3]])
+    multi = b"\x01\x06\x00\x00\x00\x02\x00\x00\x00" + polygon_to_wkb([outer, hole]) + member
+    wkbs = pq.read_table(f"{geo_small}/polygons.parquet").column("geometry_wkb").to_pylist()
+    wkbs += [polygon_to_wkb([outer, hole]), multi]
+    whole = np.stack(polygon_measures(wkb_ring_table(wkbs)), axis=1)
+    reversed_ = np.stack(polygon_measures(wkb_ring_table(wkbs[::-1])), axis=1)[::-1]
+    alone = np.concatenate([np.stack(polygon_measures(wkb_ring_table([b])), axis=1) for b in wkbs])
+    assert len(whole) == len(wkbs) and np.isfinite(whole).all()
+    assert whole.tobytes() == reversed_.tobytes() == alone.tobytes()
+
+
+def test_zero_area_centroid_is_null(spark):
+    """A polygon whose signed projected area sums to 0 has no centroid:
+    lat/lon come back NULL (not a ZeroDivisionError in a Python worker),
+    and the centroid-to-POI join drops the row."""
+    from socialmapper_spark.geo.wkb import polygon_to_wkb
+    from socialmapper_spark.operators.knn import knn_join
+    from socialmapper_spark.operators.stats import unit_centroids
+
+    square = np.array([[-78.62, 35.50], [-78.60, 35.50], [-78.60, 35.52], [-78.62, 35.52]])
+    meridian = np.array([[-96.0, 35.0], [-96.0, 35.1], [-96.0, 35.2]])
+    polys = spark.createDataFrame(
+        [
+            ("ok", "g_ok", "blockgroup", polygon_to_wkb([square])),
+            ("meridian", "g_meridian", "blockgroup", polygon_to_wkb([meridian])),
+            ("filled_hole", "g_filled", "blockgroup", polygon_to_wkb([square, square])),
+        ],
+        "poly_id string, GEOID string, kind string, geometry_wkb binary",
+    )
+    cents = {r["poly_id"]: (r["lat"], r["lon"]) for r in unit_centroids(polys).collect()}
+    assert cents["meridian"] == cents["filled_hole"] == (None, None)
+    assert cents["ok"][0] == pytest.approx(35.51, abs=1e-4)
+    pois = spark.createDataFrame([("p1", 35.5, -78.6)], "id string, lat double, lon double")
+    near = knn_join(spark, unit_centroids(polys), pois, k=1, strategy="broadcast", id_col="GEOID")
+    assert [r["GEOID"] for r in near.collect()] == ["g_ok"]
 
 
 def test_prepare_export_columns(spark):

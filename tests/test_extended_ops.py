@@ -63,13 +63,18 @@ def test_state_normalize_all_formats(spark):
 
 # --- A3 area -----------------------------------------------------------------
 
+def _area_km2(wkb: bytes) -> float:
+    from socialmapper_spark.geo.wkb import polygon_measures, wkb_ring_table
+
+    return polygon_measures(wkb_ring_table([wkb]))[0][0]
+
+
 def test_polygon_area_shoelace():
     from socialmapper_spark.geo.albers import albers5070_forward
     from socialmapper_spark.geo.wkb import polygon_to_wkb
-    from socialmapper_spark.operators.stats import polygon_area_km2
 
     ring = np.array([[-79.0, 35.0], [-78.9, 35.0], [-78.9, 35.1], [-79.0, 35.1]])
-    got = polygon_area_km2(polygon_to_wkb([ring]))
+    got = _area_km2(polygon_to_wkb([ring]))
     # independent cross-product shoelace on the projected ring
     x, y = albers5070_forward(ring[:, 1], ring[:, 0])
     x = np.append(x, x[0]); y = np.append(y, y[0])
@@ -84,13 +89,12 @@ def test_polygon_area_shoelace():
 
 def test_polygon_area_with_hole():
     from socialmapper_spark.geo.wkb import polygon_to_wkb
-    from socialmapper_spark.operators.stats import polygon_area_km2
 
     outer = np.array([[-79.0, 35.0], [-78.8, 35.0], [-78.8, 35.2], [-79.0, 35.2]])
     hole = np.array([[-78.95, 35.05], [-78.85, 35.05], [-78.85, 35.15], [-78.95, 35.15]])
-    full = polygon_area_km2(polygon_to_wkb([outer]))
-    holed = polygon_area_km2(polygon_to_wkb([outer, hole]))
-    inner = polygon_area_km2(polygon_to_wkb([hole]))
+    full = _area_km2(polygon_to_wkb([outer]))
+    holed = _area_km2(polygon_to_wkb([outer, hole]))
+    inner = _area_km2(polygon_to_wkb([hole]))
     assert holed == pytest.approx(full - inner, rel=1e-9)
 
 
@@ -474,12 +478,20 @@ def test_speed_clamp_matches_reference_rule(spark):
 # --- P4 geometry validity ----------------------------------------------------
 
 def test_validate_geometries_quarantine(spark):
+    import struct
+
     import numpy as np
 
     from socialmapper_spark.geo.wkb import polygon_to_wkb
     from socialmapper_spark.operators.spatial_join import validate_geometries
 
-    good = polygon_to_wkb([np.array([[0.0, 0.0], [1.0, 0.0], [0.5, 1.0]])])
+    def multi(*members):
+        return struct.pack("<BII", 1, 6, len(members)) + b"".join(members)
+
+    tri = np.array([[0.0, 0.0], [1.0, 0.0], [0.5, 1.0]])
+    good = polygon_to_wkb([tri])
+    square = np.array([[2.0, 0.0], [4.0, 0.0], [4.0, 2.0], [2.0, 2.0]])
+    hole = np.array([[2.5, 0.5], [3.5, 0.5], [3.5, 1.5], [2.5, 1.5]])
     degenerate = bytes.fromhex(
         "0103000000010000000200000000000000000000000000000000000000"
         "000000000000f03f000000000000f03f"
@@ -487,20 +499,34 @@ def test_validate_geometries_quarantine(spark):
     nan_ring = polygon_to_wkb(
         [np.array([[0.0, 0.0], [float("nan"), 0.0], [0.5, 1.0]])]
     )
+    nan_hole = polygon_to_wkb([square, hole * [1.0, float("nan")]])
+    inf_coord = polygon_to_wkb([np.array([[0.0, 0.0], [float("inf"), 0.0], [0.5, -float("inf")]])])
+    closed = np.vstack([tri, tri[:1]])
+    big_endian = struct.pack(">BIII", 0, 3, 1, len(closed)) + closed.astype(">f8").tobytes()
     df = spark.createDataFrame(
         [
             ("ok", bytearray(good)),
+            ("multi_ok", bytearray(multi(good, polygon_to_wkb([square, hole])))),
             ("null_geom", None),
             ("truncated", bytearray(b"\x01\x06\x00")),
             ("two_point_ring", bytearray(degenerate)),
             ("nan_coord", bytearray(nan_ring)),
+            ("no_members", bytearray(multi())),
+            ("member_no_rings", bytearray(multi(good, struct.pack("<BII", 1, 3, 0)))),
+            ("nan_in_hole", bytearray(nan_hole)),
+            ("inf_coord", bytearray(inf_coord)),
+            ("second_member_two_points", bytearray(multi(good, degenerate))),
+            ("point", bytearray(struct.pack("<BIdd", 1, 1, 0.0, 0.0))),
+            ("big_endian", bytearray(big_endian)),
         ],
         "poly_id string, geometry_wkb binary",
     )
     valid, invalid = validate_geometries(df)
-    assert {r["poly_id"] for r in valid.collect()} == {"ok"}
+    assert {r["poly_id"] for r in valid.collect()} == {"ok", "multi_ok"}
     assert {r["poly_id"] for r in invalid.collect()} == {
-        "null_geom", "truncated", "two_point_ring", "nan_coord",
+        "null_geom", "truncated", "two_point_ring", "nan_coord", "no_members",
+        "member_no_rings", "nan_in_hole", "inf_coord", "second_member_two_points",
+        "point", "big_endian",
     }
 
 

@@ -1,4 +1,4 @@
-"""Tests for explicit skew handling (salted agg/join, salt invariance)
+"""Tests for explicit skew handling (salted aggregation, salt invariance)
 and the Iceberg-or-parquet table source."""
 
 import pytest
@@ -41,24 +41,6 @@ def test_salted_agg_salt_invariance(spark, skewed):
         rows = salted_count_by_key(skewed, "cell", n_salts=n_salts, salt_src="row_id").collect()
         results.append({r["cell"]: r["n_rows"] for r in rows})
     assert results[0] == results[1] == results[2]
-
-
-def test_salted_join_matches_plain(spark, skewed):
-    from socialmapper_spark.operators.skew import salted_join
-
-    dim = spark.createDataFrame(
-        [(111, "hot"), (201, "cold_a"), (202, "cold_b")], "cell long, label string"
-    )
-    plain = skewed.join(dim, "cell").groupBy("label").count().collect()
-    salted = (
-        salted_join(skewed, dim, "cell", salt_src="row_id", n_salts=8)
-        .groupBy("label")
-        .count()
-        .collect()
-    )
-    assert {(r["label"], r["count"]) for r in plain} == {
-        (r["label"], r["count"]) for r in salted
-    }
 
 
 def test_pages_table_roundtrip_parquet(spark, geo_small, tmp_path):

@@ -21,7 +21,7 @@ from socialmapper_spark.geo.cells import (
     ring_cover_cells,
 )
 from socialmapper_spark.geo.pip import points_in_polygon
-from socialmapper_spark.geo.simplify import simplify_polygon, simplify_ring
+from socialmapper_spark.geo.simplify import simplify_polygon, simplify_ring, simplify_rings
 from socialmapper_spark.geo.wkb import polygon_to_wkb, wkb_ring_table
 from socialmapper_spark.operators.spatial_join import prepare_polygons, spatial_join
 
@@ -173,6 +173,21 @@ class TestTableCover:
     def test_empty_table(self):
         owner, cover = ring_cover_cells(wkb_ring_table([]), 7)
         assert len(owner) == len(cover) == 0
+
+    def test_empty_and_truncated_wkb(self):
+        """An empty MultiPolygon parses to one empty exterior ring, which
+        the cover skips and the simplify keeps; truncated coordinates
+        raise instead of shifting the rings of the polygons after them."""
+        import struct
+
+        good = _multipolygon_wkb(_SHAPES["sub_cell"])
+        table = wkb_ring_table([struct.pack("<BII", 1, 6, 0), good])
+        assert table.poly.tolist() == [0, 1] and table.start[1] == 0
+        owner, _ = ring_cover_cells(table.opened(), 7)
+        assert set(owner.tolist()) == {1}
+        assert simplify_rings(table, 0.001).poly.tolist() == [0, 1]
+        with pytest.raises(ValueError, match="truncated"):
+            wkb_ring_table([good[:-16], good])
 
 
 @pytest.fixture(scope="module")
