@@ -1267,12 +1267,12 @@ def q_cluster_bbox(spark, sf_dir):
     from read_parquet('{s.text}/golden_cosine_topk.parquet')
 """)
 def q_cosine_topk_many(spark, sf_dir):
-    """Many-query cosine top-k: one scan + broadcast query matrix +
-    partition-local heaps — must equal the per-query-branch plan."""
+    """Exact cosine top-k for several queries: one scan + broadcast query
+    matrix + partition-local exact cuts."""
     from socialmapper_spark.fixtures import COSINE_K, COSINE_QUERY_IDS
-    from socialmapper_spark.operators.similarity import cosine_topk_many
+    from socialmapper_spark.operators.similarity import cosine_topk
 
-    out = cosine_topk_many(
+    out = cosine_topk(
         spark, _read(spark, sf_dir, "embeddings"), COSINE_QUERY_IDS, COSINE_K
     )
     return out.withColumn("query_id", F.col("query_id").cast("long"))
@@ -1973,32 +1973,6 @@ def q_language_id(spark, sf_dir):
     return docs.select("doc_id", language_id(F.col("text")).alias("lang_pred"))
 
 
-@oracle(q_lsh_ann.oracle)
-def q_lsh_ann_many(spark, sf_dir):
-    """Many-query LSH ANN: one scan + shared heap kernel with per-query
-    bucket masks — same rows as q_lsh_ann, O(1) plan size in |Q|."""
-    from socialmapper_spark.fixtures import COSINE_K, COSINE_QUERY_IDS
-    from socialmapper_spark.operators.similarity import lsh_ann_topk_many
-
-    out = lsh_ann_topk_many(
-        spark, _read(spark, sf_dir, "embeddings"), COSINE_QUERY_IDS, COSINE_K
-    )
-    return out.withColumn("query_id", F.col("query_id").cast("long"))
-
-
-@oracle(q_ivf_ann.oracle)
-def q_ivf_ann_many(spark, sf_dir):
-    """Many-query IVF ANN: one scan over the probed lists + shared heap
-    kernel with per-query list masks — same rows as q_ivf_ann."""
-    from socialmapper_spark.fixtures import COSINE_K, COSINE_QUERY_IDS
-    from socialmapper_spark.operators.similarity import ivf_ann_topk_many
-
-    out = ivf_ann_topk_many(
-        spark, _read(spark, sf_dir, "embeddings"), COSINE_QUERY_IDS, COSINE_K
-    )
-    return out.withColumn("query_id", F.col("query_id").cast("long"))
-
-
 @oracle(lambda s: f"""
     select url, cast(t.frame_idx as int) as frame_idx,
            md5(md5(decode(html)) || ':' || cast(t.frame_idx as varchar)) as frame_md5
@@ -2458,18 +2432,6 @@ def q_doc_stats(spark, sf_dir):
         qc["avg_word_len"].alias("avg_word_len"),
         qc["quality_score"].alias("quality_score"),
     )
-
-
-@oracle(q_cosine_topk_many.oracle)
-def q_cosine_topk(spark, sf_dir):
-    """Exact brute-force cosine top-10 for 5 query vectors (Catalyst fold)."""
-    from socialmapper_spark.fixtures import COSINE_K, COSINE_QUERY_IDS
-    from socialmapper_spark.operators.similarity import cosine_topk
-
-    out = cosine_topk(
-        spark, _read(spark, sf_dir, "embeddings"), COSINE_QUERY_IDS, COSINE_K
-    )
-    return out.withColumn("query_id", F.col("query_id").cast("long"))
 
 
 @oracle(lambda s: f"""

@@ -91,18 +91,16 @@ WHITELIST: dict[str, tuple[set[str], str]] = {
     "dedup_units": ({"ArrowEvalPython", "BroadcastNestedLoopJoin"},
                     "kNN probe-side Albers/parity upstream"),
     # ANN family: vectorized hyperplane/IVF assignment pandas_udfs
-    # (similarity.py:383,482,759 — embedding-batch Arrow kernels) and the
-    # shared per-partition top-k HEAP kernel for the _many forms
-    # (similarity.py:326 mapInPandas — O(1) plan size in |Q|)
-    "lsh_ann": ({"ArrowEvalPython"}, "hyperplane bucket-hash Arrow kernel"),
-    "ivf_ann": ({"ArrowEvalPython"}, "IVF cell-assignment Arrow kernel"),
+    # (similarity.lsh_buckets, ivf_ann_topk's list_id, lsh_band_keys —
+    # embedding-batch Arrow kernels) and the one per-partition top-k heap
+    # kernel (similarity._heap_topk mapInPandas — O(1) plan size in |Q|)
+    "lsh_ann": ({"ArrowEvalPython", "MapInPandas"},
+                "assignment kernel + per-partition heap kernel"),
+    "ivf_ann": ({"ArrowEvalPython", "MapInPandas"},
+                "assignment kernel + per-partition heap kernel"),
     "embedding_dup": ({"ArrowEvalPython"},
                       "multi-table hyperplane LSH Arrow kernel"),
     "cosine_topk_many": ({"MapInPandas"}, "per-partition top-k heap kernel"),
-    "lsh_ann_many": ({"ArrowEvalPython", "MapInPandas"},
-                     "hyperplane hash + per-partition heap kernel"),
-    "ivf_ann_many": ({"ArrowEvalPython", "MapInPandas"},
-                     "IVF assignment + per-partition heap kernel"),
 }
 
 PY_ROWS_SCAN = "Scan ExistingRDD (Python rows)"

@@ -17,6 +17,7 @@ invalidates stale caches when generation logic changes.
 
 from __future__ import annotations
 
+import math
 import pathlib
 import re as _re
 
@@ -418,7 +419,7 @@ def _write_goldens(out, urls, texts, polys, pois):
 # ---------------------------------------------------------------------------
 
 TEXT_ROOT = DATA_ROOT / "text"
-TEXT_GOLDEN_VERSION = "v6"
+TEXT_GOLDEN_VERSION = "v7"
 COSINE_QUERY_IDS = [0, 1, 2, 3, 4]
 COSINE_K = 10
 
@@ -470,17 +471,103 @@ def _shingle_set_py(text: str) -> set[str]:
     return {norm}
 
 
-def ensure_text_goldens(sf_dir: str) -> pathlib.Path:
-    """Goldens for minhash pairs / jaccard / simhash / cosine / lsh-ann over
-    the driver's documents+embeddings tables at ``sf_dir``."""
-    import duckdb
+def _fold_dot(a, b) -> float:
+    """Dimension-sequential float64 dot — the engine's accumulation order."""
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc = acc + x * y
+    return acc
 
-    from socialmapper_spark.operators.dedup import simhash64_py
+
+def cosine_topk_py(
+    vecs: dict[int, list[float]],
+    query_ids: list[int],
+    k: int,
+    allowed: dict[int, set[int]] | None = None,
+) -> list[tuple[int, int, float, int]]:
+    """Pure-Python twin of the three similarity searches
+    (``operators.similarity``): (query_id, vec_id, cosine, rank) rows.
+
+    The candidates of query q are every other vector, or only those in
+    ``allowed[q]`` (the LSH/IVF probe sets, :func:`lsh_probe_sets` /
+    :func:`ivf_probe_sets`). The cosine is the sequential fold over the
+    numpy query norm, rounded HALF_UP to 9 dp like Spark's round; ranks
+    order it descending, ties by ascending vec_id. A candidate with a
+    non-finite cosine is skipped; a query whose norm is 0 or not finite
+    raises ValueError.
+    """
+    rows = []
+    for qid in query_ids:
+        q = vecs[qid]
+        qn = float(np.sqrt(np.dot(q, q)))
+        if not 0.0 < qn < math.inf:
+            raise ValueError(f"query vector {qid} has zero or non-finite norm")
+        scored = []
+        for vid, v in vecs.items():
+            if vid == qid or (allowed is not None and vid not in allowed[qid]):
+                continue
+            den = math.sqrt(_fold_dot(v, v)) * qn
+            cos = _fold_dot(v, q) / den if den else math.nan
+            if math.isfinite(cos):
+                scored.append((_round_half_up(cos, 9), vid))
+        scored.sort(key=lambda t: (-t[0], t[1]))
+        rows += [(qid, vid, cos, r) for r, (cos, vid) in enumerate(scored[:k], 1)]
+    return rows
+
+
+def lsh_probe_sets(
+    vecs: dict[int, list[float]], query_ids: list[int]
+) -> dict[int, set[int]]:
+    """Per query, the ids in its LSH bucket or at Hamming distance 1."""
     from socialmapper_spark.operators.similarity import (
         LSH_BITS,
         _planes,
         lsh_bucket_py,
     )
+
+    planes = _planes(len(vecs[query_ids[0]]))
+    bucket_of = {vid: lsh_bucket_py(np.array(v), planes) for vid, v in vecs.items()}
+    out = {}
+    for qid in query_ids:
+        qb = bucket_of[qid]
+        probe = {qb} | {qb ^ (1 << i) for i in range(LSH_BITS)}
+        out[qid] = {vid for vid, b in bucket_of.items() if b in probe}
+    return out
+
+
+def ivf_probe_sets(
+    vecs: dict[int, list[float]], query_ids: list[int]
+) -> dict[int, set[int]]:
+    """Per query, the ids in its IVF_NPROBE nearest inverted lists — the
+    engine's coarse quantizer (shared driver-prep code) trained on the
+    id-ordered corpus, full-matrix assignment with 6-dp-rounded scores
+    (batch-shape independent by construction)."""
+    from socialmapper_spark.operators.similarity import (
+        IVF_NPROBE,
+        ivf_assignment_scores,
+        train_ivf_centroids,
+    )
+
+    ids = sorted(vecs)
+    mat = np.array([vecs[v] for v in ids], dtype=np.float64)
+    cent = train_ivf_centroids(mat)
+    assign = np.argmin(ivf_assignment_scores(mat, cent), axis=1)
+    out = {}
+    for qid in query_ids:
+        q = np.array(vecs[qid], dtype=np.float64)
+        qscores = ivf_assignment_scores(q[None, :], cent)[0]
+        probe = set(np.argsort(qscores, kind="stable")[:IVF_NPROBE].tolist())
+        out[qid] = {vid for vid, a in zip(ids, assign.tolist()) if a in probe}
+    return out
+
+
+def ensure_text_goldens(sf_dir: str) -> pathlib.Path:
+    """Goldens for minhash pairs / jaccard / simhash / cosine / lsh-ann /
+    ivf-ann over the driver's documents+embeddings tables at ``sf_dir``."""
+    import duckdb
+
+    from socialmapper_spark.operators.dedup import simhash64_py
+    from socialmapper_spark.operators.similarity import _planes
 
     name = pathlib.Path(sf_dir).name
     out = TEXT_ROOT / name
@@ -561,52 +648,19 @@ def ensure_text_goldens(sf_dir: str) -> pathlib.Path:
         out / "golden_simhash.parquet",
     )
 
-    # cosine top-k (exact) and LSH-ANN top-k — sequential-fold float64,
-    # mirroring the Catalyst aggregate() expression order exactly
+    # cosine top-k: exact, LSH-probed and IVF-probed — one twin
     embs = duckdb.sql(
         f"select vec_id, embedding from read_parquet('{sf_dir}/embeddings.parquet') order by vec_id"
     ).fetchall()
     vecs = {vid: [float(np.float32(x)) for x in v] for vid, v in embs}
-
-    def fold_dot(a, b):
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc = acc + x * y
-        return acc
-
-    def fold_norm(a):
-        acc = 0.0
-        for x in a:
-            acc = acc + x * x
-        return acc ** 0.5
-
     dim = len(next(iter(vecs.values())))
-    planes = _planes(dim, LSH_BITS)
-    bucket_of = {vid: lsh_bucket_py(np.array(v), planes) for vid, v in vecs.items()}
-
-    exact_rows, ann_rows = [], []
-    for qid in COSINE_QUERY_IDS:
-        q = vecs[qid]
-        qn = float(np.sqrt(np.dot(np.array(q), np.array(q))))
-        scored = []
-        for vid, v in vecs.items():
-            if vid == qid:
-                continue
-            cos = round(fold_dot(v, q) / (fold_norm(v) * qn), 9)
-            scored.append((vid, cos))
-        scored.sort(key=lambda t: (-t[1], t[0]))
-        for rank, (vid, cos) in enumerate(scored[:COSINE_K], 1):
-            exact_rows.append((qid, vid, cos, rank))
-        qb = bucket_of[qid]
-        probe = {qb} | {qb ^ (1 << i) for i in range(LSH_BITS)}
-        cand = [(vid, cos) for (vid, cos) in scored if bucket_of[vid] in probe]
-        for rank, (vid, cos) in enumerate(cand[:COSINE_K], 1):
-            ann_rows.append((qid, vid, cos, rank))
-
-    for fname, rows in [
-        ("golden_cosine_topk.parquet", exact_rows),
-        ("golden_lsh_ann.parquet", ann_rows),
+    qids = COSINE_QUERY_IDS
+    for fname, allowed in [
+        ("golden_cosine_topk.parquet", None),
+        ("golden_lsh_ann.parquet", lsh_probe_sets(vecs, qids)),
+        ("golden_ivf_ann.parquet", ivf_probe_sets(vecs, qids)),
     ]:
+        rows = cosine_topk_py(vecs, qids, COSINE_K, allowed)
         pq.write_table(
             pa.table(
                 {
@@ -618,48 +672,6 @@ def ensure_text_goldens(sf_dir: str) -> pathlib.Path:
             ),
             out / fname,
         )
-    # IVF-ANN twin: identical coarse quantizer (shared driver-prep code),
-    # full-matrix assignment with 6-dp-rounded scores (batch-shape
-    # independent by construction), fold-exact cosine rerank
-    from socialmapper_spark.operators.similarity import (
-        IVF_NPROBE,
-        ivf_assignment_scores,
-        train_ivf_centroids,
-    )
-
-    ids_sorted = sorted(vecs)
-    mat = np.array([vecs[v] for v in ids_sorted], dtype=np.float64)
-    cent = train_ivf_centroids(mat)
-    assign = np.argmin(ivf_assignment_scores(mat, cent), axis=1)
-    list_of = {vid: int(assign[i]) for i, vid in enumerate(ids_sorted)}
-    ivf_rows = []
-    for qid in COSINE_QUERY_IDS:
-        q = np.array(vecs[qid], dtype=np.float64)
-        qscores = ivf_assignment_scores(q[None, :], cent)[0]
-        probe = {int(c) for c in np.argsort(qscores, kind="stable")[:IVF_NPROBE]}
-        qn = float(np.sqrt(q @ q))  # engine computes the query norm via np.dot
-        scored = []
-        for vid in ids_sorted:
-            if vid == qid or list_of[vid] not in probe:
-                continue
-            cos = _round_half_up(
-                fold_dot(vecs[vid], vecs[qid]) / (fold_norm(vecs[vid]) * qn), 9
-            )
-            scored.append((vid, cos))
-        scored.sort(key=lambda t: (-t[1], t[0]))
-        for rank, (vid, cos) in enumerate(scored[:COSINE_K], 1):
-            ivf_rows.append((qid, vid, cos, rank))
-    pq.write_table(
-        pa.table(
-            {
-                "query_id": pa.array([r[0] for r in ivf_rows], pa.int64()),
-                "vec_id": pa.array([r[1] for r in ivf_rows], pa.int64()),
-                "cosine": pa.array([r[2] for r in ivf_rows], pa.float64()),
-                "rank": pa.array([r[3] for r in ivf_rows], pa.int32()),
-            }
-        ),
-        out / "golden_ivf_ann.parquet",
-    )
 
     # embedding-cosine near-dup pairs: banded multi-table LSH (pairs that
     # share a full r-bit sign key in ANY of the B tables, hot buckets
@@ -690,7 +702,8 @@ def ensure_text_goldens(sf_dir: str) -> pathlib.Path:
     dup_rows = []
     for a_id, b_id in sorted(cand_pairs):
         a, b = vecs[a_id], vecs[b_id]
-        cos = _round_half_up(fold_dot(a, b) / (fold_norm(a) * fold_norm(b)), 9)
+        den = math.sqrt(_fold_dot(a, a)) * math.sqrt(_fold_dot(b, b))
+        cos = _round_half_up(_fold_dot(a, b) / den, 9)
         if cos >= NEAR_DUP_THRESHOLD:
             dup_rows.append((a_id, b_id, cos))
     pq.write_table(

@@ -1,41 +1,36 @@
 """Similarity search over embedding columns (build mandate: ANN).
 
-Two paths over ``embeddings(vec_id, embedding: array<float>, label)``:
+Three searches over ``embeddings(vec_id, embedding: array<float>, label)``,
+all answered by one kernel (:func:`_heap_topk`):
 
-- :func:`cosine_topk` — exact brute-force top-k per query vector. Query
-  vectors are collected driver-side (queries are few), shipped as plan
-  literals, and similarity is a pure Catalyst fold
-  (``aggregate(zip_with(...))``) — JVM-side, codegen, no UDF. The scan
-  side is never shuffled; top-k is a map-side-combinable min(struct) per
-  query. This is the parity baseline.
-- :func:`lsh_buckets` / :func:`lsh_ann_topk` — the scale path: seeded
-  random-hyperplane LSH (sign bits → bucket id) computed by a vectorized
-  Arrow UDF; candidates are vectors in the same bucket as the query
-  (multi-probe: plus all buckets at Hamming distance 1), then exact
-  rerank. Deterministic (fixed seed), so the pytest suite checks recall
-  against the exact path.
+- :func:`cosine_topk` — exact brute-force top-k per query vector.
+- :func:`lsh_ann_topk` — seeded random-hyperplane LSH (sign bits → bucket
+  id, a vectorized Arrow UDF); a query's candidates are the vectors in its
+  bucket and in the LSH_BITS buckets at Hamming distance 1 (multi-probe).
+- :func:`ivf_ann_topk` — a k-means coarse quantizer splits the corpus into
+  IVF_NLIST inverted lists; a query's candidates are the vectors in its
+  IVF_NPROBE nearest lists.
+
+Query vectors are collected driver-side (queries are few) and broadcast as
+one matrix; the kernel is one scan, one mapInPandas and a per-query window,
+so the plan size is O(1) in the number of queries. Within its candidate set
+each search is exact: it returns the rows of the pure-Python twin
+``fixtures.cosine_topk_py`` that builds the goldens and that the tests
+compare against.
 """
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Decimal
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 LSH_BITS = 12
 LSH_SEED = 42
-
-
-def _dot_expr(vec_col: F.Column, q: list[float]) -> F.Column:
-    """Catalyst dot product of a column vector with a literal query."""
-    lit_q = F.array(*[F.lit(float(v)) for v in q])
-    return F.aggregate(
-        F.zip_with(vec_col, lit_q, lambda a, b: a.cast("double") * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
 
 
 def _norm_expr(vec_col: F.Column) -> F.Column:
@@ -165,169 +160,92 @@ def cosine_topk(
 ) -> DataFrame:
     """Exact brute-force cosine top-k: (query_id, vec_id, cosine, rank).
 
-    Self-matches are excluded. cosine is rounded to 9 dp to absorb
-    accumulation-order differences vs oracles (well above double noise,
-    well below any real similarity gap).
-    """
-    qrows = {
-        qid: [float(x) for x in v]
-        for qid, v in _collect_queries(embeddings, query_ids, id_col, vec_col).items()
-    }
-    per_query = []
-    for qid in query_ids:
-        q = qrows[qid]
-        qn = float(np.sqrt(np.dot(np.array(q, dtype=np.float64), np.array(q, dtype=np.float64))))
-        cos = _dot_expr(F.col(vec_col), q) / (_norm_expr(F.col(vec_col)) * F.lit(qn))
-        scored = embeddings.filter(F.col(id_col) != qid).select(
-            F.lit(qid).alias("query_id"),
-            F.col(id_col).alias("vec_id_m"),
-            F.round(cos, 9).alias("cosine"),
-        )
-        per_query.append(scored)
-    allq = per_query[0]
-    for s in per_query[1:]:
-        allq = allq.unionByName(s)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id_m").asc()
-    )
-    return (
-        allq.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col("vec_id_m").alias("vec_id"), "cosine", "rank")
-    )
-
-
-def cosine_topk_many(
-    spark: SparkSession,
-    embeddings: DataFrame,
-    query_ids: list[int],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    margin: int = 8,
-) -> DataFrame:
-    """Many-query form of :func:`cosine_topk`: ONE scan, a broadcast
-    query matrix, and per-partition top-(k+margin) heaps — plan size is
-    O(1) in the number of queries (the literal-per-query form unions one
-    scan branch per query, fine at 5, wrong at 5 000).
-
-    Bit-parity with :func:`cosine_topk`: the Arrow kernel accumulates
-    dot/norm dimension-sequentially (the exact fold order of the Catalyst
-    ``aggregate`` expression) and applies the same HALF_UP 9 dp rounding,
-    so emitted cosines are identical; only a >``margin``-way tie inside
-    5e-10 at the k boundary could reorder the cut (documented, unpinned
-    — random embeddings never get there).
-
-    Scale shape: scan → narrow mapInPandas (no shuffle) → shuffle of
-    ≤ partitions·|Q|·(k+margin) candidate rows → per-query window.
+    ``cosine`` is rounded HALF_UP to 9 dp (Spark's ``round``) and ``rank``
+    orders it descending, ties by ascending vec_id. Self-matches and
+    candidates whose cosine is not finite (a zero-norm or NaN vector) are
+    never returned. A query id missing from ``id_col``, or one whose
+    vector has norm 0 or a non-finite norm, raises ValueError naming it.
     """
     qrows = _collect_queries(embeddings, query_ids, id_col, vec_col)
-    return _heap_topk_many(
-        spark, embeddings.select(id_col, vec_col), list(query_ids), qrows,
-        k, margin, id_col, vec_col,
-    )
+    return _heap_topk(spark, embeddings, qrows, k, id_col, vec_col)
 
 
-def _heap_topk_many(
+def _heap_topk(
     spark: SparkSession,
     candidates: DataFrame,
-    query_ids: list[int],
     qrows: dict[int, np.ndarray],
     k: int,
-    margin: int,
     id_col: str,
     vec_col: str,
     key_col: str | None = None,
-    probes: dict[int, frozenset] | None = None,
+    probes: dict[int, list[int]] | None = None,
 ) -> DataFrame:
-    """The shared many-query heap kernel: ONE scan of ``candidates``, a
-    broadcast query matrix, per-partition top-(k+margin) pools, then a
-    per-query window for the final cut. Plan size is O(1) in |Q|.
+    """The one search kernel: ONE scan of ``candidates``, a broadcast
+    query matrix, a per-partition :func:`_topk_cut` per query, then a
+    per-query window for the final rank. Plan size is O(1) in |Q|.
 
-    With ``key_col``/``probes`` set (the pruned ANN forms), a row is a
-    candidate for query q only when its key ∈ probes[q] — the per-query
-    bucket/list restriction applied INSIDE the one scan instead of as one
-    filtered plan branch per query. The caller pre-filters the scan to
-    the union of all probe keys so partition pruning still applies.
+    With ``key_col``/``probes`` set (the ANN searches), a row is a
+    candidate for query q only when its key is in probes[q] — applied
+    INSIDE the one scan, which is pre-filtered to the union of all probe
+    keys so partition pruning still applies.
 
-    Bit-parity with the per-query Catalyst forms: dot/norm accumulate
-    dimension-sequentially (the exact fold order of the ``aggregate``
-    expression) and the same HALF_UP 9 dp rounding is applied, so emitted
-    cosines are identical; only a >``margin``-way tie inside 5e-10 at the
-    k boundary could reorder the cut (documented, unpinned — real
-    embeddings never get there).
+    Dot products and norms accumulate dimension-sequentially in float64
+    and the query norm is numpy's dot, the twin's arithmetic, so emitted
+    cosines are bit-identical to it.
     """
-    from decimal import ROUND_HALF_UP, Decimal
-
-    qmat = np.stack([qrows[qid] for qid in query_ids])  # (Q, D)
-    # np.dot per query — the exact qn arithmetic of cosine_topk/the golden
-    qns = np.array(
-        [float(np.sqrt(np.dot(qrows[qid], qrows[qid]))) for qid in query_ids]
-    )
-    probe_sets = (
-        [probes[qid] for qid in query_ids] if probes is not None else None
-    )
-    bc = spark.sparkContext.broadcast((list(query_ids), qmat, qns, probe_sets))
-    keep = k + margin
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
+    qids = list(qrows)
+    qmat = np.stack([qrows[qid] for qid in qids])  # (Q, D)
+    qns = np.array([np.sqrt(np.dot(q, q)) for q in qmat])
+    keys = None
+    if probes is not None:
+        keys = [np.asarray(probes[qid]) for qid in qids]
+        union = sorted({key for qid in qids for key in probes[qid]})
+        candidates = candidates.filter(F.col(key_col).isin(union))
+    bc = spark.sparkContext.broadcast((qids, qmat, qns, keys))
     q9 = Decimal("0.000000001")
-    cols = [id_col, vec_col] + ([key_col] if key_col else [])
 
     def gen(batches):
-        b_qids, b_qmat, b_qns, b_probes = bc.value
-        nq, dim = b_qmat.shape
-        # per-query candidate pools for this partition
-        pool_cos: list[list[float]] = [[] for _ in range(nq)]
-        pool_ids: list[list[int]] = [[] for _ in range(nq)]
+        b_qids, b_qmat, b_qns, b_keys = bc.value
+        pools = [[] for _ in b_qids]  # per query: (cosines, ids) survivors
         for pdf in batches:
             if len(pdf) == 0:  # empty partitions yield empty batches
                 continue
             ids = pdf[id_col].to_numpy()
-            keys = pdf[key_col].to_numpy() if b_probes is not None else None
             mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            # dimension-sequential accumulation == the Catalyst fold order
-            acc = np.zeros((mat.shape[0], nq))
-            nrm = np.zeros(mat.shape[0])
-            for d in range(dim):
-                acc += mat[:, d : d + 1] * b_qmat[None, :, d][0]
+            acc = np.zeros((len(ids), len(b_qids)))
+            nrm = np.zeros(len(ids))
+            for d in range(mat.shape[1]):
+                acc += mat[:, d : d + 1] * b_qmat[:, d]
                 nrm += mat[:, d] * mat[:, d]
-            cos = acc / (np.sqrt(nrm)[:, None] * b_qns[None, :])
+            with np.errstate(divide="ignore", invalid="ignore"):
+                cos = acc / (np.sqrt(nrm)[:, None] * b_qns)
+            row_keys = pdf[key_col].to_numpy() if b_keys is not None else None
             for j, qid in enumerate(b_qids):
-                cj = cos[:, j]
-                mask = ids != qid
-                if b_probes is not None:
-                    pj = b_probes[j]
-                    mask &= np.array([kk in pj for kk in keys])
-                cj, idj = cj[mask], ids[mask]
-                if len(cj) > keep:
-                    # lexsort keeps the (cosine desc, vec_id asc) boundary
-                    # tie-break identical to the final window's ordering
-                    part = np.lexsort((idj, -cj))[:keep]
-                    cj, idj = cj[part], idj[part]
-                pool_cos[j].extend(cj.tolist())
-                pool_ids[j].extend(int(v) for v in idj)
+                mask = (ids != qid) & np.isfinite(cos[:, j])
+                if b_keys is not None:
+                    mask &= np.isin(row_keys, b_keys[j])
+                pools[j].append(_topk_cut(cos[mask, j], ids[mask], k))
         rows = []
-        for j, qid in enumerate(b_qids):
-            cj = np.array(pool_cos[j])
-            idj = np.array(pool_ids[j])
-            if len(cj) == 0:
+        for qid, pool in zip(b_qids, pools):
+            if not pool:
                 continue
-            order = np.lexsort((idj, -cj))[:keep]
-            for i in order:
-                # same rounding as Spark's round(col, 9): BigDecimal on the
-                # shortest double repr, HALF_UP — only on survivors (cheap)
-                c = float(
-                    Decimal(repr(float(cj[i]))).quantize(q9, ROUND_HALF_UP)
-                )
-                rows.append((qid, int(idj[i]), c))
+            cj, idj = _topk_cut(
+                np.concatenate([c for c, _ in pool]),
+                np.concatenate([i for _, i in pool]),
+                k,
+            )
+            # Spark's round(col, 9): BigDecimal on the shortest repr, HALF_UP
+            rows += [
+                (qid, int(i), float(Decimal(repr(float(c))).quantize(q9, ROUND_HALF_UP)))
+                for c, i in zip(cj, idj)
+            ]
         yield pd.DataFrame(rows, columns=["query_id", "vec_id", "cosine"])
 
-    cand = candidates.select(*cols).mapInPandas(
-        gen, "query_id long, vec_id long, cosine double"
-    )
-    from pyspark.sql import Window
-
+    cand = candidates.select(
+        id_col, vec_col, *([key_col] if key_col else [])
+    ).mapInPandas(gen, "query_id long, vec_id long, cosine double")
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("vec_id").asc()
     )
@@ -338,25 +256,51 @@ def _heap_topk_many(
     )
 
 
-def _planes(dim: int, bits: int = LSH_BITS, seed: int = LSH_SEED) -> np.ndarray:
+def _topk_cut(
+    cos: np.ndarray, ids: np.ndarray, k: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """The rows that can still make the top k: every row whose cosine is
+    at least the k-th largest minus 2e-9. A row more than 1e-9 below k
+    others rounds (9 dp, error ≤ 5e-10 each) strictly below all of them,
+    so the cut never drops a row of the rounded top k, however many
+    near-ties sit at the boundary."""
+    if len(cos) <= k:
+        return cos, ids
+    kth = np.partition(cos, len(cos) - k)[len(cos) - k]
+    keep = cos >= kth - 2e-9
+    return cos[keep], ids[keep]
+
+
+def _planes(width: int, bits: int = LSH_BITS, seed: int = LSH_SEED) -> np.ndarray:
+    """(bits, width) seeded standard-normal hyperplanes."""
     rng = np.random.default_rng(seed)
-    return rng.standard_normal((bits, dim))
+    return rng.standard_normal((bits, width))
 
 
 def _collect_queries(
     embeddings: DataFrame, query_ids: list[int], id_col: str, vec_col: str
 ) -> dict[int, np.ndarray]:
-    """Collect the |Q| query vectors once (bounded — queries are few).
-    Shared by every ANN entry point so a caller composing two paths pays
-    one collection, not two."""
-    qrows = {
+    """Collect the |Q| query vectors once (bounded — queries are few), in
+    ``query_ids`` order. Raises ValueError naming every id that is missing
+    or whose vector norm is 0 or not finite (its cosine is undefined)."""
+    if not query_ids:
+        raise ValueError("query_ids is empty")
+    found = {
         r[id_col]: np.array(list(r[vec_col]), dtype=np.float64)
         for r in embeddings.filter(F.col(id_col).isin(query_ids)).collect()
     }
-    missing = [qid for qid in query_ids if qid not in qrows]
+    missing = [qid for qid in query_ids if qid not in found]
     if missing:
         raise ValueError(f"query ids not found in {id_col}: {missing}")
-    return qrows
+    degenerate = [
+        qid for qid in query_ids
+        if not 0.0 < np.sqrt(np.dot(found[qid], found[qid])) < np.inf
+    ]
+    if degenerate:
+        raise ValueError(
+            f"query vectors with zero or non-finite norm in {id_col}: {degenerate}"
+        )
+    return {qid: found[qid] for qid in query_ids}
 
 
 def lsh_bucket_py(vec: np.ndarray, planes: np.ndarray) -> int:
@@ -371,13 +315,11 @@ def lsh_bucket_py(vec: np.ndarray, planes: np.ndarray) -> int:
 def lsh_buckets(
     spark: SparkSession,
     embeddings: DataFrame,
-    dim: int,
-    id_col: str = "vec_id",
+    planes: np.ndarray,
     vec_col: str = "embedding",
-    bits: int = LSH_BITS,
 ) -> DataFrame:
-    """Adds ``bucket`` int column via seeded hyperplane LSH (Arrow UDF)."""
-    planes = _planes(dim, bits)
+    """Adds ``bucket`` int column: the sign bits of the vector against
+    each row of ``planes`` (see :func:`_planes`), via an Arrow UDF."""
     bc = spark.sparkContext.broadcast(planes)
 
     @pandas_udf("int")
@@ -388,6 +330,30 @@ def lsh_buckets(
         return pd.Series((signs @ weights).astype(np.int32))
 
     return embeddings.withColumn("bucket", bucket(F.col(vec_col)))
+
+
+def lsh_ann_topk(
+    spark: SparkSession,
+    embeddings: DataFrame,
+    query_ids: list[int],
+    k: int = 10,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Approximate top-k: exact rerank within the query's LSH bucket and
+    all LSH_BITS buckets at Hamming distance 1 (multi-probe). Output and
+    its rules are :func:`cosine_topk`'s over that candidate set; recall vs
+    the exact search is what tests pin."""
+    qrows = _collect_queries(embeddings, query_ids, id_col, vec_col)
+    planes = _planes(len(next(iter(qrows.values()))))
+    probes = {}
+    for qid, q in qrows.items():
+        qb = lsh_bucket_py(q, planes)
+        probes[qid] = [qb] + [qb ^ (1 << i) for i in range(LSH_BITS)]
+    bucketed = lsh_buckets(spark, embeddings, planes, vec_col)
+    return _heap_topk(
+        spark, bucketed, qrows, k, id_col, vec_col, "bucket", probes
+    )
 
 
 IVF_NLIST = 16
@@ -433,9 +399,7 @@ def ivf_assignment_scores(mat: np.ndarray, cent: np.ndarray) -> np.ndarray:
     return np.round(d2, 6)
 
 
-def _ivf_train(
-    embeddings: DataFrame, nlist: int, id_col: str, vec_col: str
-) -> np.ndarray:
+def _ivf_train(embeddings: DataFrame, id_col: str, vec_col: str) -> np.ndarray:
     """Bounded, count-free training collect: deterministic hash-ordered
     top-IVF_TRAIN_CAP (TakeOrdered — a distributed heap, no full sort, no
     separate ``count()`` action to size a modulus). Collected rows are
@@ -452,7 +416,7 @@ def _ivf_train(
     )
     rows.sort(key=lambda r: r[id_col])
     train = np.array([list(r[vec_col]) for r in rows], dtype=np.float64)
-    return train_ivf_centroids(train, nlist)
+    return train_ivf_centroids(train)
 
 
 def ivf_ann_topk(
@@ -460,23 +424,28 @@ def ivf_ann_topk(
     embeddings: DataFrame,
     query_ids: list[int],
     k: int = 10,
-    nlist: int = IVF_NLIST,
-    nprobe: int = IVF_NPROBE,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """IVF approximate top-k: coarse k-means quantizer partitions the
-    corpus into nlist inverted lists; each query exact-reranks only the
-    nprobe nearest lists. Output schema matches :func:`cosine_topk`.
+    """IVF approximate top-k: a coarse k-means quantizer partitions the
+    corpus into IVF_NLIST inverted lists; each query exact-reranks only
+    its IVF_NPROBE nearest lists. Output and its rules are
+    :func:`cosine_topk`'s over that candidate set.
 
     Scale shape: training samples ≤ IVF_TRAIN_CAP rows driver-side (hash
     sample — deterministic under repartitioning); assignment is one
-    vectorized Arrow UDF pass (narrow); the probe filter prunes the scan
-    to ~nprobe/nlist of the corpus per query before the Catalyst-fold
-    rerank. The list id doubles as a partition/bucket key at 100 TB scale
-    (write the table clustered by it and probing prunes whole files).
+    vectorized Arrow UDF pass (narrow); the scan is pruned to the union of
+    the probed lists before the kernel. The list id doubles as a
+    partition/bucket key at 100 TB scale (write the table clustered by it
+    and probing prunes whole files).
     """
-    cent = _ivf_train(embeddings, nlist, id_col, vec_col)
+    qrows = _collect_queries(embeddings, query_ids, id_col, vec_col)
+    cent = _ivf_train(embeddings, id_col, vec_col)
+    probes = {
+        qid: np.argsort(ivf_assignment_scores(q[None, :], cent)[0], kind="stable")
+        .tolist()[:IVF_NPROBE]
+        for qid, q in qrows.items()
+    }
     bc = spark.sparkContext.broadcast(cent)
 
     @pandas_udf("int")
@@ -486,38 +455,8 @@ def ivf_ann_topk(
         return pd.Series(np.argmin(scores, axis=1).astype(np.int32))
 
     listed = embeddings.withColumn("ivf_list", list_id(F.col(vec_col)))
-
-    qrows = _collect_queries(embeddings, query_ids, id_col, vec_col)
-    per_query = []
-    for qid in query_ids:
-        q = qrows[qid]
-        qscores = ivf_assignment_scores(q[None, :], cent)[0]
-        probe = [int(c) for c in np.argsort(qscores, kind="stable")[:nprobe]]
-        qn = float(np.sqrt(q @ q))
-        cos = _dot_expr(F.col(vec_col), [float(x) for x in q]) / (
-            _norm_expr(F.col(vec_col)) * F.lit(qn)
-        )
-        per_query.append(
-            listed.filter(F.col("ivf_list").isin(probe))
-            .filter(F.col(id_col) != qid)
-            .select(
-                F.lit(qid).alias("query_id"),
-                F.col(id_col).alias("vec_id_m"),
-                F.round(cos, 9).alias("cosine"),
-            )
-        )
-    allq = per_query[0]
-    for s in per_query[1:]:
-        allq = allq.unionByName(s)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id_m").asc()
-    )
-    return (
-        allq.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col("vec_id_m").alias("vec_id"), "cosine", "rank")
+    return _heap_topk(
+        spark, listed, qrows, k, id_col, vec_col, "ivf_list", probes
     )
 
 
@@ -528,7 +467,7 @@ NEAR_DUP_BAND_BITS = 8  # r sign bits per table → 256 buckets/table
 NEAR_DUP_MAX_BUCKET = 1000  # hot-bucket cap (same guard as MinHash bands)
 
 
-def _pair_dot_expr(a: F.Column, b: F.Column) -> F.Column:
+def _fold_dot(a: F.Column, b: F.Column) -> F.Column:
     """Catalyst dot product of two array columns (sequential fold)."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
@@ -549,17 +488,16 @@ def band_keys_py(vec: np.ndarray, planes: np.ndarray, tables: int, bits: int) ->
 def lsh_band_keys(
     spark: SparkSession,
     embeddings: DataFrame,
-    dim: int,
+    planes: np.ndarray,
+    bits: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    tables: int = NEAR_DUP_TABLES,
-    bits: int = NEAR_DUP_BAND_BITS,
-    seed: int = LSH_SEED,
 ) -> DataFrame:
-    """(id, band_idx, band_key) — one row per hyperplane table, the
-    sign-bit analog of :func:`dedup.minhash_bands`. One Arrow-batched
-    matrix multiply per batch; the explode is narrow (tables ≤ 8)."""
-    planes = _planes(dim, tables * bits, seed)
+    """(id, band_idx, band_key) — one row per hyperplane table of ``bits``
+    consecutive rows of ``planes``, the sign-bit analog of
+    :func:`dedup.minhash_bands`. One Arrow-batched matrix multiply per
+    batch; the explode is narrow (tables ≤ 8)."""
+    tables = len(planes) // bits
     bc = spark.sparkContext.broadcast(planes)
 
     @pandas_udf("array<int>")
@@ -618,7 +556,7 @@ def embedding_near_dup_pairs(
 
     dim = len(embeddings.select(vec_col).first()[0])
     bands = lsh_band_keys(
-        spark, embeddings, dim, id_col, vec_col, tables, bits
+        spark, embeddings, _planes(dim, tables * bits), bits, id_col, vec_col
     )
     sized = bands.groupBy("band_idx", "band_key").agg(
         F.collect_list(id_col).alias("ids"), F.count("*").alias("n")
@@ -639,140 +577,11 @@ def embedding_near_dup_pairs(
         F.col(id_col).alias("vec_b"), F.col(vec_col).alias("__emb_b")
     )
     pairs = cand.join(a, "vec_a").join(b, "vec_b")
-    cos = _pair_dot_expr(F.col("__emb_a"), F.col("__emb_b")) / (
+    cos = _fold_dot(F.col("__emb_a"), F.col("__emb_b")) / (
         _norm_expr(F.col("__emb_a")) * _norm_expr(F.col("__emb_b"))
     )
     return (
         pairs.withColumn("cosine", F.round(cos, 9))
         .filter(F.col("cosine") >= F.lit(threshold))
         .select("vec_a", "vec_b", "cosine")
-    )
-
-
-def lsh_ann_topk(
-    spark: SparkSession,
-    embeddings: DataFrame,
-    query_ids: list[int],
-    k: int = 10,
-    dim: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bits: int = LSH_BITS,
-) -> DataFrame:
-    """Approximate top-k: exact rerank within the query's LSH bucket and
-    all buckets at Hamming distance 1 (multi-probe). Output schema matches
-    :func:`cosine_topk`; rows may differ (approximation) — recall vs the
-    exact path is what tests pin."""
-    if dim is None:
-        dim = len(embeddings.select(vec_col).first()[0])
-    planes = _planes(dim, bits)
-    bucketed = lsh_buckets(spark, embeddings, dim, id_col, vec_col, bits)
-
-    qrows = _collect_queries(embeddings, query_ids, id_col, vec_col)
-    per_query = []
-    for qid in query_ids:
-        q = qrows[qid]
-        qb = lsh_bucket_py(q, planes)
-        probe = [qb] + [qb ^ (1 << i) for i in range(bits)]
-        qn = float(np.sqrt(q @ q))
-        cos = _dot_expr(F.col(vec_col), [float(x) for x in q]) / (
-            _norm_expr(F.col(vec_col)) * F.lit(qn)
-        )
-        scored = (
-            bucketed.filter(F.col("bucket").isin(probe))
-            .filter(F.col(id_col) != qid)
-            .select(
-                F.lit(qid).alias("query_id"),
-                F.col(id_col).alias("vec_id_m"),
-                F.round(cos, 9).alias("cosine"),
-            )
-        )
-        per_query.append(scored)
-    allq = per_query[0]
-    for s in per_query[1:]:
-        allq = allq.unionByName(s)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id_m").asc()
-    )
-    return (
-        allq.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col("vec_id_m").alias("vec_id"), "cosine", "rank")
-    )
-
-
-def lsh_ann_topk_many(
-    spark: SparkSession,
-    embeddings: DataFrame,
-    query_ids: list[int],
-    k: int = 10,
-    dim: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bits: int = LSH_BITS,
-    margin: int = 8,
-) -> DataFrame:
-    """Many-query form of :func:`lsh_ann_topk`: the per-query probe sets
-    still prune which rows count for which query, but the plan is ONE
-    scan filtered to the UNION of all probe buckets feeding the shared
-    heap kernel (``_heap_topk_many``) with a per-query bucket mask — no
-    per-query plan branch, so 5 000 queries cost the same plan as 5.
-    Emits the exact rows of the per-query form (same probes, fold-order
-    cosine, HALF_UP rounding)."""
-    if dim is None:
-        dim = len(embeddings.select(vec_col).first()[0])
-    planes = _planes(dim, bits)
-    bucketed = lsh_buckets(spark, embeddings, dim, id_col, vec_col, bits)
-    qrows = _collect_queries(embeddings, query_ids, id_col, vec_col)
-    probes = {}
-    for qid in query_ids:
-        qb = lsh_bucket_py(qrows[qid], planes)
-        probes[qid] = frozenset([qb] + [qb ^ (1 << i) for i in range(bits)])
-    union_probe = sorted(set().union(*probes.values())) if probes else []
-    pruned = bucketed.filter(F.col("bucket").isin(union_probe))
-    return _heap_topk_many(
-        spark, pruned, list(query_ids), qrows, k, margin, id_col, vec_col,
-        key_col="bucket", probes=probes,
-    )
-
-
-def ivf_ann_topk_many(
-    spark: SparkSession,
-    embeddings: DataFrame,
-    query_ids: list[int],
-    k: int = 10,
-    nlist: int = IVF_NLIST,
-    nprobe: int = IVF_NPROBE,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    margin: int = 8,
-) -> DataFrame:
-    """Many-query form of :func:`ivf_ann_topk`: same coarse quantizer and
-    per-query nprobe lists, but one scan (union of all probed lists) into
-    the shared heap kernel with a per-query list mask instead of one plan
-    branch per query. Emits the exact rows of the per-query form."""
-    cent = _ivf_train(embeddings, nlist, id_col, vec_col)
-    bc = spark.sparkContext.broadcast(cent)
-
-    @pandas_udf("int")
-    def list_id(v: pd.Series) -> pd.Series:
-        mat = np.stack(v.to_numpy())
-        scores = ivf_assignment_scores(mat, bc.value)
-        return pd.Series(np.argmin(scores, axis=1).astype(np.int32))
-
-    listed = embeddings.withColumn("ivf_list", list_id(F.col(vec_col)))
-    qrows = _collect_queries(embeddings, query_ids, id_col, vec_col)
-    probes = {}
-    for qid in query_ids:
-        qscores = ivf_assignment_scores(qrows[qid][None, :], cent)[0]
-        probes[qid] = frozenset(
-            int(c) for c in np.argsort(qscores, kind="stable")[:nprobe]
-        )
-    union_probe = sorted(set().union(*probes.values())) if probes else []
-    pruned = listed.filter(F.col("ivf_list").isin(union_probe))
-    return _heap_topk_many(
-        spark, pruned, list(query_ids), qrows, k, margin, id_col, vec_col,
-        key_col="ivf_list", probes=probes,
     )

@@ -240,16 +240,18 @@ def test_embedding_near_dup_hot_bucket_cap_bounds_pairs(spark):
 
 
 def test_ivf_ann_recall_vs_exact(spark):
-    from socialmapper_spark.operators.similarity import cosine_topk, ivf_ann_topk
+    from socialmapper_spark.fixtures import cosine_topk_py
+    from socialmapper_spark.operators.similarity import ivf_ann_topk
 
     emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
     qids = [0, 1, 2]
-    exact = cosine_topk(spark, emb, qids, k=10).collect()
+    vecs = {r["vec_id"]: list(r["embedding"]) for r in emb.collect()}
+    exact = cosine_topk_py(vecs, qids, 10)
     approx = ivf_ann_topk(spark, emb, qids, k=10).collect()
-    exact_set = {(r["query_id"], r["vec_id"]) for r in exact}
+    exact_set = {(q, v) for q, v, _, _ in exact}
     approx_set = {(r["query_id"], r["vec_id"]) for r in approx}
-    # every approx hit carries the same cosine the exact path computed
-    exact_cos = {(r["query_id"], r["vec_id"]): r["cosine"] for r in exact}
+    # every approx hit carries the same cosine the exact twin computed
+    exact_cos = {(q, v): c for q, v, c, _ in exact}
     for r in approx:
         key = (r["query_id"], r["vec_id"])
         if key in exact_cos:

@@ -1,49 +1,102 @@
-"""Round-3 additions: many-query ANN kernels, near-dup groups, bounded
+"""Round-3 additions: similarity searches, near-dup groups, bounded
 classifier histograms, max_p, and the md5 lineage twin."""
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from socialmapper_spark.fixtures import cosine_topk_py, ivf_probe_sets, lsh_probe_sets
+from socialmapper_spark.operators.similarity import (
+    cosine_topk,
+    ivf_ann_topk,
+    lsh_ann_topk,
+)
+
 SF_SMALL = "/root/testdata/sf0.001"
 
 
-# --- many-query ANN forms ----------------------------------------------------
+# --- similarity searches vs the pure-Python twin ---------------------------
 
-def test_lsh_ann_many_equals_per_query_form(spark):
-    from socialmapper_spark.operators.similarity import lsh_ann_topk, lsh_ann_topk_many
-
-    emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
-    qids = [0, 1, 2, 3, 4]
-    a = {tuple(r) for r in lsh_ann_topk(spark, emb, qids, k=10).collect()}
-    b = {tuple(r) for r in lsh_ann_topk_many(spark, emb, qids, k=10).collect()}
-    assert a == b and len(a) > 0
+SEARCHES = {
+    "cosine": (cosine_topk, lambda vecs, qids: None),
+    "lsh": (lsh_ann_topk, lsh_probe_sets),
+    "ivf": (ivf_ann_topk, ivf_probe_sets),
+}
+EMB_SCHEMA = "vec_id long, embedding array<float>"
 
 
-def test_ivf_ann_many_equals_per_query_form(spark):
-    from socialmapper_spark.operators.similarity import ivf_ann_topk, ivf_ann_topk_many
+def _search_input(spark, name):
+    """(embeddings, query ids, k) of one twin-comparison input."""
+    if name == "sf0.001":  # more queries than the golden pins
+        emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
+        return emb, list(range(12)), 5
+    if name == "empty_partitions":  # more partitions than rows
+        emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
+        return emb.filter(F.col("vec_id") < 20).repartition(50), [0, 1, 2], 4
+    if name == "near_tie":
+        # 20 candidates in one partition whose cosines all round to 1.0 at
+        # 9 dp: the lowest id wins, whatever their unrounded order
+        rows = [(0, [1.0, 0.0, 0.0, 0.0])] + [
+            (i, [1.0, 3e-5 * (1 - (i - 1) / 20), 0.0, 0.0]) for i in range(1, 21)
+        ]
+        return spark.createDataFrame(rows, EMB_SCHEMA).coalesce(1), [0], 1
+    # zero_norm: a zero-norm candidate has no cosine
+    rows = [(0, [1.0, 0.0]), (1, [0.0, 0.0]), (2, [0.5, 0.5]), (3, [0.0, 1.0])]
+    return spark.createDataFrame(rows, EMB_SCHEMA).coalesce(1), [0], 3
 
-    emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
-    qids = [0, 1, 2, 3, 4]
-    a = {tuple(r) for r in ivf_ann_topk(spark, emb, qids, k=10).collect()}
-    b = {tuple(r) for r in ivf_ann_topk_many(spark, emb, qids, k=10).collect()}
-    assert a == b and len(a) > 0
+
+@pytest.mark.parametrize(
+    "name", ["sf0.001", "empty_partitions", "near_tie", "zero_norm"]
+)
+@pytest.mark.parametrize("search", sorted(SEARCHES))
+def test_search_equals_twin(spark, search, name):
+    """Every search returns exactly the twin's rows over its candidate
+    set: the per-partition cut keeps every near-tie, empty batches are
+    skipped, and a candidate with a non-finite cosine never appears."""
+    emb, qids, k = _search_input(spark, name)
+    fn, probe_sets = SEARCHES[search]
+    vecs = {r["vec_id"]: list(r["embedding"]) for r in emb.collect()}
+    want = sorted(cosine_topk_py(vecs, qids, k, probe_sets(vecs, qids)))
+    got = sorted(tuple(r) for r in fn(spark, emb, qids, k=k).collect())
+    assert got == want
+    if search == "cosine" and name == "near_tie":
+        assert got == [(0, 1, 1.0, 1)]
+    if search == "cosine" and name == "zero_norm":
+        assert got == [(0, 2, 0.707106781, 1), (0, 3, 0.0, 2)]
+    if search == "cosine" and name == "sf0.001":
+        assert len(got) == len(qids) * k
 
 
-def test_lsh_ann_many_plan_is_one_scan_at_500_queries(spark):
-    """500 query vectors must NOT produce 500 plan branches: the many-
-    query form is one scan + one mapInPandas regardless of |Q|."""
-    from socialmapper_spark.operators.similarity import lsh_ann_topk_many
+@pytest.mark.parametrize("search", sorted(SEARCHES))
+def test_degenerate_query_vector_raises(spark, search):
+    """A query vector with norm 0 or a non-finite norm has no cosine: the
+    driver refuses it by id instead of emitting NULL-cosine rows. An empty
+    query list and k < 1 fail as loudly."""
+    rows = [(0, [0.0, 0.0]), (1, [1.0, 0.0]), (2, [float("nan"), 1.0]), (3, [0.0, 1.0])]
+    emb = spark.createDataFrame(rows, EMB_SCHEMA)
+    with pytest.raises(ValueError, match=r"non-finite norm.*\[0, 2\]"):
+        SEARCHES[search][0](spark, emb, [0, 2, 1], k=2)
+    with pytest.raises(ValueError, match="non-finite norm"):
+        cosine_topk_py(dict(rows), [0], 2)
+    with pytest.raises(ValueError, match="query_ids is empty"):
+        SEARCHES[search][0](spark, emb, [], k=2)
+    with pytest.raises(ValueError, match="k must be >= 1"):
+        SEARCHES[search][0](spark, emb, [1], k=0)
 
+
+@pytest.mark.parametrize("search", sorted(SEARCHES))
+def test_search_plan_is_one_scan_at_500_queries(spark, search):
+    """500 query vectors must NOT produce 500 plan branches: every search
+    is one scan + one mapInPandas regardless of |Q|."""
     emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
     n = emb.count()
     qids = list(range(min(500, n)))
-    out = lsh_ann_topk_many(spark, emb, qids, k=3)
+    out = SEARCHES[search][0](spark, emb, qids, k=3)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Scan parquet") == 1
     assert plan.count("FlatMapGroupsInPandas") + plan.count("MapInPandas") <= 2
-    # and it answers most queries (a probe set can legitimately be empty
-    # when the query's bucket neighborhood holds no other vectors)
+    # and it answers most queries (an ANN probe set can legitimately be
+    # empty when the query's neighborhood holds no other vectors)
     answered = {r["query_id"] for r in out.select("query_id").distinct().collect()}
     assert answered <= set(qids)
     assert len(answered) >= 0.7 * len(qids)

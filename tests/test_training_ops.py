@@ -318,18 +318,6 @@ def test_simhash_batch_equals_scalar_twin():
     assert np.array_equal(got, exp)
 
 
-def test_cosine_topk_many_equals_per_query_form(spark):
-    """The one-scan broadcast-matrix form must reproduce the per-query
-    plan exactly — more queries than the oracle pin uses."""
-    from socialmapper_spark.operators.similarity import cosine_topk, cosine_topk_many
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    qids = [r["vec_id"] for r in emb.select("vec_id").orderBy("vec_id").limit(12).collect()]
-    a = {tuple(r) for r in cosine_topk(spark, emb, qids, k=5).collect()}
-    b = {tuple(r) for r in cosine_topk_many(spark, emb, qids, k=5).collect()}
-    assert a == b and len(a) == 12 * 5
-
-
 def test_winnow_guarantee_and_parity(spark):
     """Catalyst winnowing == scalar twin, and the winnowing guarantee
     holds: docs sharing a substring of >= k+w-1 chars share >= 1
@@ -360,22 +348,6 @@ def test_winnow_guarantee_and_parity(spark):
     assert got[0] & got[1]          # winnowing guarantee
     assert not (got[2] & got[0])    # disjoint docs don't collide
     assert got[4] == got[5]         # normalization twin of minhash's
-
-
-def test_cosine_topk_many_with_empty_partitions(spark):
-    """Empty Arrow batches (more partitions than rows) must not crash the
-    partition-local kernel."""
-    from socialmapper_spark.operators.similarity import cosine_topk, cosine_topk_many
-
-    emb = (
-        spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        .limit(20)
-        .repartition(50)
-    )
-    qids = [r["vec_id"] for r in emb.select("vec_id").orderBy("vec_id").limit(3).collect()]
-    a = {tuple(r) for r in cosine_topk_many(spark, emb, qids, k=4).collect()}
-    b = {tuple(r) for r in cosine_topk(spark, emb, qids, k=4).collect()}
-    assert a == b and len(a) == 12
 
 
 def test_bloom_decontaminate_superset_of_exact(spark, docs):
