@@ -29,6 +29,8 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent))
 
+from socialmapper_spark.geo.cells import cell_ixy_sql, encode_ixy_sql  # noqa: E402
+
 
 def _geo(sf_dir: str) -> str:
     from socialmapper_spark.fixtures import geo_dir_for
@@ -216,8 +218,8 @@ def q_flagship_demographics(spark, sf_dir):
 @oracle(lambda s: f"""
     select url, lat, lon,
            coalesce(array_to_string(mentions, '|'), '') as mentions_str,
-           case when lat is null then null else {_CELL_SQL_R7} end as cell_r7,
-           case when lat is null then null else {_CELL_SQL_R9} end as cell_r9
+           case when lat is null then null else {_cell_sql(7)} end as cell_r7,
+           case when lat is null then null else {_cell_sql(9)} end as cell_r9
     from read_parquet('{s.geo}/golden_geoparsed.parquet')
 """)
 def q_geoparse(spark, sf_dir):
@@ -393,7 +395,7 @@ def q_interval_overlap(spark, sf_dir):
 
 
 @oracle(lambda s: f"""
-    select {_CELL_SQL_R7} as cell_r7, count(*) as n_rows
+    select {_cell_sql(7)} as cell_r7, count(*) as n_rows
     from read_parquet('{s.geo}/golden_geoparsed.parquet')
     where lat is not null
     group by 1
@@ -622,15 +624,8 @@ def q_bigram_familiarity(spark, sf_dir):
 
 
 @oracle(lambda s: f"""
-    with px as (
-        select cast(floor((lon+180.0)/0.0054931640625) as bigint) % 65536 as ix,
-               least(greatest(cast(floor((lat+90.0)/0.0054931640625) as bigint),0),32767) as iy,
-               count(*) as value
-        from read_parquet('{s.geo}/golden_geoparsed.parquet')
-        where lat is not null
-        group by 1, 2
-    )
-    select 4*288230376151711744 + (ix//32)*536870912 + (iy//32) as tile_id,
+    with px as ({_pixel_counts_sql(s.geo, 9)})
+    select {encode_ixy_sql(4, "ix//32", "iy//32")} as tile_id,
            cast(iy % 32 as int) as px_row,
            cast(ix % 32 as int) as px_col,
            value
@@ -651,14 +646,7 @@ def q_rasterize(spark, sf_dir):
     -- lon wraps (double-mod keeps jx nonnegative), lat clamps
     -- (off-grid rows drop); sums cast to bigint (DuckDB sum()
     -- is HUGEINT) so the value hash matches Spark's long
-    with px as (
-        select cast(floor((lon+180.0)/0.0054931640625) as bigint) % 65536 as ix,
-               least(greatest(cast(floor((lat+90.0)/0.0054931640625) as bigint),0),32767) as iy,
-               count(*) as value
-        from read_parquet('{s.geo}/golden_geoparsed.parquet')
-        where lat is not null
-        group by 1, 2
-    ),
+    with px as ({_pixel_counts_sql(s.geo, 9)}),
     o as (
         select dx, dy
         from (values (-1), (0), (1)) a(dx), (values (-1), (0), (1)) b(dy)
@@ -669,8 +657,7 @@ def q_rasterize(spark, sf_dir):
         from px, o
         where iy + dy >= 0 and iy + dy < 32768
     )
-    select cast(9 as bigint)*288230376151711744
-             + jx*536870912 + jy as cell,
+    select {encode_ixy_sql(9, "jx", "jy")} as cell,
            cast(sum(value) as bigint) as focal_sum,
            cast(count(*) as bigint) as focal_n,
            cast(sum(value) as bigint) / 9.0 as focal_mean
@@ -691,16 +678,8 @@ def q_focal_stats(spark, sf_dir):
     -- independent derivation: rasterize DIRECTLY at r7 (the
     -- Spark side aggregates the r9 raster up — the power-of-two
     -- hierarchy makes the two computations provably equal)
-    with px as (
-        select cast(floor((lon+180.0)/0.02197265625) as bigint) % 16384 as ix,
-               least(greatest(cast(floor((lat+90.0)/0.02197265625) as bigint),0),8191) as iy,
-               count(*) as value
-        from read_parquet('{s.geo}/golden_geoparsed.parquet')
-        where lat is not null
-        group by 1, 2
-    )
-    select cast(4 as bigint)*288230376151711744
-             + (ix//8)*536870912 + (iy//8) as tile_id,
+    with px as ({_pixel_counts_sql(s.geo, 7)})
+    select {encode_ixy_sql(4, "ix//8", "iy//8")} as tile_id,
            cast(iy % 8 as int) as px_row,
            cast(ix % 8 as int) as px_col,
            cast(value as bigint) as value
@@ -749,15 +728,8 @@ def q_polygon_burn(spark, sf_dir):
 
 
 @oracle(lambda s: f"""
-    with px as (
-        select cast(floor((lon+180.0)/0.0054931640625) as bigint) % 65536 as ix,
-               least(greatest(cast(floor((lat+90.0)/0.0054931640625) as bigint),0),32767) as iy,
-               count(*) as value
-        from read_parquet('{s.geo}/golden_geoparsed.parquet')
-        where lat is not null
-        group by 1, 2
-    )
-    select 9*288230376151711744 + ix*536870912 + iy as cell,
+    with px as ({_pixel_counts_sql(s.geo, 9)})
+    select {encode_ixy_sql(9, "ix", "iy")} as cell,
            value,
            cast(iy as double)*0.0054931640625 - 90.0 as lat_min,
            (cast(iy as double)*0.0054931640625 - 90.0) + 0.0054931640625 as lat_max,
@@ -777,7 +749,7 @@ def q_vectorize_hotspots(spark, sf_dir):
 
 @oracle(lambda s: f"""
     with a as (
-        select asg.url, asg.poly_id, {_CELL_SQL_R9} as cell_r9
+        select asg.url, asg.poly_id, {_cell_sql(9)} as cell_r9
         from read_parquet('{s.geo}/golden_assignments.parquet') asg
         join read_parquet('{s.geo}/golden_geoparsed.parquet') gp
           on asg.url = gp.url
@@ -1229,11 +1201,7 @@ def q_poi_bbox(spark, sf_dir):
 
 @oracle(lambda s: f"""
     with p as (
-        select lat, lon,
-               cast(5 as bigint)*288230376151711744
-               + (cast(floor((lon+180.0)/0.087890625) as bigint) % 4096)*536870912
-               + least(greatest(cast(floor((lat+90.0)/0.087890625) as bigint),0),2047)
-                 as cluster
+        select lat, lon, {_cell_sql(5)} as cluster
         from read_parquet('{s.geo}/pois.parquet')
         where lat <= 90.0 and lat is not null and lon is not null
     ), grp as (
@@ -2480,7 +2448,7 @@ def q_isochrone_area(spark, sf_dir):
 
 @oracle(lambda s: f"""
     with sizes as (
-        select {_CELL_SQL_R7} as cell, count(*) as cluster_size
+        select {_cell_sql(7)} as cell, count(*) as cluster_size
         from read_parquet('{s.geo}/golden_geoparsed.parquet')
         where lat is not null group by 1
     )
@@ -2834,16 +2802,20 @@ def interval_join_frame(events: DataFrame) -> DataFrame:
 # helpers shared by the oracles: DuckDB side
 # ---------------------------------------------------------------------------
 
-_CELL_SQL_R7 = (
-    "cast(7 as bigint)*288230376151711744 "
-    "+ (cast(floor((lon+180.0)/0.02197265625) as bigint) % 16384)*536870912 "
-    "+ least(greatest(cast(floor((lat+90.0)/0.02197265625) as bigint),0),8191)"
-)
-_CELL_SQL_R9 = (
-    "cast(9 as bigint)*288230376151711744 "
-    "+ (cast(floor((lon+180.0)/0.0054931640625) as bigint) % 65536)*536870912 "
-    "+ least(greatest(cast(floor((lat+90.0)/0.0054931640625) as bigint),0),32767)"
-)
+def _cell_sql(res: int) -> str:
+    """DuckDB twin of ``cell_col(lat, lon, res)`` over a row's lat/lon."""
+    return encode_ixy_sql(res, *cell_ixy_sql("lat", "lon", res))
+
+
+def _pixel_counts_sql(geo: str, res: int) -> str:
+    """(ix, iy, value): golden geoparsed page counts per resolution-``res``
+    grid index, the pixel table the raster twins start from."""
+    ix, iy = cell_ixy_sql("lat", "lon", res)
+    return f"""
+        select {ix} as ix, {iy} as iy, count(*) as value
+        from read_parquet('{geo}/golden_geoparsed.parquet')
+        where lat is not null
+        group by 1, 2"""
 
 
 _CLEANSE_SQL = """

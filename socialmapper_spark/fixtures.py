@@ -992,7 +992,7 @@ def ensure_geo_extras(sf_dir: str) -> pathlib.Path:
     # engine's Catalyst expression.
     from collections import Counter
 
-    from socialmapper_spark.geo.cells import cell_size_deg
+    from socialmapper_spark.geo.cells import cell_ixy_np, cell_size_deg, encode_ixy
     from socialmapper_spark.geo.wkb import wkb_to_rings
 
     zsize = cell_size_deg(9)
@@ -1003,8 +1003,7 @@ def ensure_geo_extras(sf_dir: str) -> pathlib.Path:
     ).fetchall()
     zla = np.array([r[0] for r in gl])
     zlo = np.array([r[1] for r in gl])
-    zix = (np.floor((zlo + 180.0) / zsize).astype(np.int64)) % (1 << 16)
-    ziy = np.clip(np.floor((zla + 90.0) / zsize).astype(np.int64), 0, (1 << 15) - 1)
+    zix, ziy = cell_ixy_np(zla, zlo, 9)
     for ij in zip(zix.tolist(), ziy.tolist()):
         zcells[ij] += 1
     zkeys = sorted(zcells)
@@ -1055,18 +1054,13 @@ def ensure_geo_extras(sf_dir: str) -> pathlib.Path:
     # Independent orchestration vs the engine (bbox enumeration instead of
     # cover-children); same center arithmetic and the same even-odd ring
     # fold, so the refined sets must be identical.
-    bix0 = lambda lo: int(np.floor((lo + 180.0) / zsize))
-    biy = lambda la: int(np.floor((la + 90.0) / zsize))
     brows = {"cell": [], "poly_id": []}
     for pid, _geoid, _kind, wkb in zpolys:
         members = wkb_to_rings(bytes(wkb))
         allv = np.vstack([r for m in members for r in m])
-        jx = np.arange(bix0(allv[:, 0].min()), bix0(allv[:, 0].max()) + 1)
-        jy = np.arange(
-            max(biy(allv[:, 1].min()), 0),
-            min(biy(allv[:, 1].max()), (1 << 15) - 1) + 1,
-        )
-        gx, gy = np.meshgrid(jx, jy, indexing="ij")
+        x0, y0 = cell_ixy_np(allv[:, 1].min(), allv[:, 0].min(), 9)
+        x1, y1 = cell_ixy_np(allv[:, 1].max(), allv[:, 0].max(), 9)
+        gx, gy = np.meshgrid(np.arange(x0, x1 + 1), np.arange(y0, y1 + 1), indexing="ij")
         gx, gy = gx.ravel(), gy.ravel()
         ccx = (gx + 0.5) * zsize - 180.0
         ccy = (gy + 0.5) * zsize - 90.0
@@ -1075,7 +1069,7 @@ def ensure_geo_extras(sf_dir: str) -> pathlib.Path:
             for ring in polyrings:
                 bmask ^= points_in_ring(ccx, ccy, ring)
         for x, y in zip(gx[bmask].tolist(), gy[bmask].tolist()):
-            brows["cell"].append(9 * (2**58) + x * (2**29) + y)
+            brows["cell"].append(encode_ixy(9, x, y))
             brows["poly_id"].append(pid)
     pq.write_table(
         pa.table(

@@ -78,8 +78,3 @@ def normalize_variables(variables: list[str]) -> list[str]:
 def code_to_name(census_code: str) -> str:
     """Reverse lookup for simple variables (variable_service.py:120-130)."""
     return _CODE_TO_NAME.get(census_code, census_code)
-
-
-def name_to_code(name: str) -> str | list[str]:
-    """variable_service.py:132-140."""
-    return VARIABLE_MAPPING.get(name.lower(), name)

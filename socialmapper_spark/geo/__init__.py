@@ -13,7 +13,6 @@ from socialmapper_spark.geo.cells import (  # noqa: F401
     cell_size_deg,
     cell_to_parent,
     cell_to_parent_col,
-    covering_cells,
     decode_cell,
     grid_disk,
 )

@@ -22,6 +22,20 @@ numpy twin are bit-identical by construction):
 Parent/child: one resolution step halves the cell edge, so the parent
 index is ``ix >> 1, iy >> 1`` — a pure arithmetic truncation that Catalyst
 evaluates JVM-side with no UDF.
+
+This module is the only one that knows the bit layout. Every other use
+builds on its three spellings of the codec, each an encode
+(lat/lon → ix, iy → id) and a decode (id → ix, iy):
+
+- Python ints and numpy arrays: :func:`decode_cell` / :func:`encode_ixy`,
+  :func:`cell_ixy_np` / :func:`cell_np` — the fixtures' goldens, the
+  driver-side polygon cover, perfbench's generator;
+- Catalyst: :func:`decode_cell_col` / :func:`encode_ixy_col`, with
+  :func:`cell_col`, :func:`grid_disk_col` and :func:`cell_to_parent_col`
+  on them — geoparse, the PIP prefilter, kNN rings, the raster operators,
+  the pages table's partition column;
+- DuckDB SQL: :func:`cell_ixy_sql` / :func:`encode_ixy_sql` — the oracle
+  twins in ``__spark_entry__.py``.
 """
 
 from __future__ import annotations
@@ -32,8 +46,9 @@ from pyspark.sql import functions as F
 
 from socialmapper_spark.geo.wkb import RingTable
 
+_IX_BITS = 29
 _R_SHIFT = 2**58
-_IX_SHIFT = 2**29
+_IX_SHIFT = 2**_IX_BITS
 MAX_RES = 22
 _CHUNK_VERTICES = 1 << 16  # ring_cover_cells' scratch-memory bound
 
@@ -57,13 +72,20 @@ def _ny(res: int) -> int:
 # numpy twin (oracle / golden generation / driver-side polygon prep)
 # ---------------------------------------------------------------------------
 
-def cell_np(lat, lon, res: int) -> np.ndarray:
-    """Vectorized cell id for float64 lat/lon arrays. Mirrors cell_col."""
+def cell_ixy_np(lat, lon, res: int) -> tuple[np.ndarray, np.ndarray]:
+    """Grid indices (ix, iy) for float64 lat/lon arrays: longitude wraps,
+    latitude clamps to the grid's rows."""
     size = cell_size_deg(res)
     lat = np.asarray(lat, dtype=np.float64)
     lon = np.asarray(lon, dtype=np.float64)
     ix = np.floor((lon + 180.0) / size).astype(np.int64) % _nx(res)
     iy = np.clip(np.floor((lat + 90.0) / size).astype(np.int64), 0, _ny(res) - 1)
+    return ix, iy
+
+
+def cell_np(lat, lon, res: int) -> np.ndarray:
+    """Vectorized cell id for float64 lat/lon arrays. Mirrors cell_col."""
+    ix, iy = cell_ixy_np(lat, lon, res)
     return np.int64(res) * _R_SHIFT + ix * _IX_SHIFT + iy
 
 
@@ -76,6 +98,7 @@ def decode_cell(cell: int) -> tuple[int, int, int]:
 
 
 def encode_ixy(res: int, ix: int, iy: int) -> int:
+    """(res, ix, iy) → cell id; ``ix`` wraps, ``iy`` must be on the grid."""
     return res * _R_SHIFT + (ix % _nx(res)) * _IX_SHIFT + iy
 
 
@@ -109,40 +132,13 @@ def grid_disk(cell: int, k: int) -> list[int]:
     fixed — callers must not rely on a particular order anyway.
     """
     res, ix, iy = decode_cell(cell)
-    nx, ny = _nx(res), _ny(res)
     out = []
     for dy in range(-k, k + 1):
         y = iy + dy
-        if y < 0 or y >= ny:
+        if y < 0 or y >= _ny(res):
             continue
-        for dx in range(-k, k + 1):
-            out.append(res * _R_SHIFT + ((ix + dx) % nx) * _IX_SHIFT + y)
+        out.extend(encode_ixy(res, ix + dx, y) for dx in range(-k, k + 1))
     return out
-
-
-def covering_cells(rings: list[np.ndarray], res: int) -> list[int]:
-    """Over-approximate cell cover of a polygon at resolution ``res``.
-
-    Returns every cell whose square intersects the polygon's bounding box.
-    Over-approximation is safe: phase 1 of the two-phase join must never
-    produce false negatives (SURVEY.md §4 O3); phase 2 (exact ray-casting
-    refine) removes false positives. ``rings`` is [exterior, holes...],
-    each an (n,2) float64 array of (lon, lat) vertices.
-    """
-    ext = np.asarray(rings[0], dtype=np.float64)
-    lon_min, lat_min = ext.min(axis=0)
-    lon_max, lat_max = ext.max(axis=0)
-    size = cell_size_deg(res)
-    ix0 = int(np.floor((lon_min + 180.0) / size))
-    ix1 = int(np.floor((lon_max + 180.0) / size))
-    iy0 = max(0, int(np.floor((lat_min + 90.0) / size)))
-    iy1 = min(_ny(res) - 1, int(np.floor((lat_max + 90.0) / size)))
-    nx = _nx(res)
-    return [
-        res * _R_SHIFT + (ix % nx) * _IX_SHIFT + iy
-        for iy in range(iy0, iy1 + 1)
-        for ix in range(ix0, ix1 + 1)
-    ]
 
 
 def _run_ranks(counts: np.ndarray) -> np.ndarray:
@@ -288,6 +284,26 @@ def polygon_cover_cells(polys: list[list[np.ndarray]], res: int) -> np.ndarray:
 # Spark column expressions (pure Catalyst — no UDF on the hot path)
 # ---------------------------------------------------------------------------
 
+def decode_cell_col(cell: Column) -> tuple[Column, Column]:
+    """(ix, iy) long columns of a cell id column — the Catalyst twin of
+    :func:`decode_cell`. Exact integer ops only: ``shiftright`` floors the
+    non-negative ``pmod`` remainder by 2^29, and since 2^58 is a multiple
+    of 2^29, ``cell % 2^29`` is ``iy``."""
+    ix = F.shiftright(F.pmod(cell, F.lit(_R_SHIFT)), _IX_BITS).cast("long")
+    iy = F.pmod(cell, F.lit(_IX_SHIFT)).cast("long")
+    return ix, iy
+
+
+def encode_ixy_col(res: int, ix: Column, iy: Column) -> Column:
+    """Cell id column from grid index columns already on the grid (no
+    wrap, unlike :func:`encode_ixy`)."""
+    return (
+        F.lit(res).cast("long") * F.lit(_R_SHIFT)
+        + ix.cast("long") * F.lit(_IX_SHIFT)
+        + iy.cast("long")
+    )
+
+
 def cell_col(lat: Column, lon: Column, res: int) -> Column:
     """Cell id as a pure column expression (whole-stage-codegen friendly).
 
@@ -300,11 +316,7 @@ def cell_col(lat: Column, lon: Column, res: int) -> Column:
         F.greatest(F.floor((lat + F.lit(90.0)) / F.lit(size)), F.lit(0)),
         F.lit(_ny(res) - 1),
     )
-    return (
-        F.lit(res).cast("long") * F.lit(_R_SHIFT)
-        + ix.cast("long") * F.lit(_IX_SHIFT)
-        + iy.cast("long")
-    )
+    return encode_ixy_col(res, ix, iy)
 
 
 def grid_disk_col(cell: Column, res: int, k: int) -> Column:
@@ -313,11 +325,8 @@ def grid_disk_col(cell: Column, res: int, k: int) -> Column:
     the poles drop out as filtered NULLs). Keeping the k-ring expansion
     inside the plan means a million-POI table explodes distributed on
     executors instead of in a driver loop."""
-    rem = F.pmod(cell, F.lit(_R_SHIFT))
-    ix = F.floor(rem / F.lit(_IX_SHIFT)).cast("long")
-    iy = (rem - ix * F.lit(_IX_SHIFT)).cast("long")
+    ix, iy = decode_cell_col(cell)
     ny = F.lit(_ny(res))
-    base = F.lit(res).cast("long") * F.lit(_R_SHIFT)
     arr = F.flatten(
         F.transform(
             F.sequence(F.lit(-k), F.lit(k)),
@@ -325,9 +334,7 @@ def grid_disk_col(cell: Column, res: int, k: int) -> Column:
                 F.sequence(F.lit(-k), F.lit(k)),
                 lambda dx: F.when(
                     ((iy + dy) >= 0) & ((iy + dy) < ny),
-                    base
-                    + F.pmod(ix + dx, F.lit(_nx(res))) * F.lit(_IX_SHIFT)
-                    + (iy + dy),
+                    encode_ixy_col(res, F.pmod(ix + dx, F.lit(_nx(res))), iy + dy),
                 ),
             ),
         )
@@ -338,11 +345,26 @@ def grid_disk_col(cell: Column, res: int, k: int) -> Column:
 def cell_to_parent_col(cell: Column, res: int, parent_res: int) -> Column:
     """Parent cell id as a column expression (res is statically known)."""
     dr = res - parent_res
-    rem = F.pmod(cell, F.lit(_R_SHIFT))
-    ix = F.floor(rem / F.lit(_IX_SHIFT)).cast("long")
-    iy = (rem - ix * F.lit(_IX_SHIFT)).cast("long")
-    return (
-        F.lit(parent_res).cast("long") * F.lit(_R_SHIFT)
-        + F.floor(ix / F.lit(1 << dr)).cast("long") * F.lit(_IX_SHIFT)
-        + F.floor(iy / F.lit(1 << dr)).cast("long")
-    )
+    ix, iy = decode_cell_col(cell)
+    return encode_ixy_col(parent_res, F.shiftright(ix, dr), F.shiftright(iy, dr))
+
+
+# ---------------------------------------------------------------------------
+# DuckDB SQL twins (the oracles in __spark_entry__.py)
+# ---------------------------------------------------------------------------
+
+def cell_ixy_sql(lat: str, lon: str, res: int) -> tuple[str, str]:
+    """DuckDB twin of :func:`cell_ixy_np` — (ix, iy) bigint expressions
+    over the SQL expressions ``lat``/``lon``. DuckDB's ``%`` truncates, so
+    the longitude wrap adds ``nx`` back before a second ``%``."""
+    size = cell_size_deg(res)
+    nx = _nx(res)
+    ix = f"((cast(floor(({lon}+180.0)/{size}) as bigint) % {nx} + {nx}) % {nx})"
+    iy = f"least(greatest(cast(floor(({lat}+90.0)/{size}) as bigint),0),{_ny(res) - 1})"
+    return ix, iy
+
+
+def encode_ixy_sql(res: int, ix: str, iy: str) -> str:
+    """DuckDB twin of :func:`encode_ixy_col`: bigint cell id from grid
+    index expressions already on the grid."""
+    return f"(cast({res} as bigint)*{_R_SHIFT} + ({ix})*{_IX_SHIFT} + ({iy}))"

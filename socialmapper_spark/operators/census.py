@@ -54,14 +54,6 @@ def pivot_census(census_long: DataFrame, variables: list[str] | None = None) -> 
     )
 
 
-def join_units_to_census(units: DataFrame, census_wide: DataFrame,
-                         geoid_col: str = "GEOID") -> DataFrame:
-    """units ⨝ census (left), reference pipeline/census.py:186-219."""
-    return units.join(
-        census_wide, units[geoid_col] == census_wide["geoid"], "left"
-    ).drop("geoid")
-
-
 def dedup_units(
     df: DataFrame,
     keys: list[str] | None = None,

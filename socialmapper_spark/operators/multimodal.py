@@ -45,16 +45,6 @@ def _fake_dims(digest_hex: str) -> tuple[int, int]:
 FRAME_SCHEMA = "url string, frame_idx int, frame_md5 string"
 
 
-def resize_image(data: bytes, width: int, height: int) -> bytes:
-    """Real resize — requires Pillow/opencv, absent in this container. The
-    Spark-side plumbing (binary in → binary out inside mapInPandas) is the
-    same as :func:`binary_metadata`; swap this in with a decoder wheel."""
-    raise NotImplementedError(
-        "image resize requires Pillow/opencv (not installed); the mapInPandas "
-        "plumbing is exercised via binary_metadata/frame_sample stubs"
-    )
-
-
 def frame_sample(
     df: DataFrame, n_frames: int = 4, id_col: str = "url", binary_col: str = "html"
 ) -> DataFrame:

@@ -20,6 +20,12 @@ counts or any per-cell aggregate.
   interop), i.e. hotspot extraction. Again pure Catalyst except the
   (optional) WKB bytes.
 
+Cell and tile ids are encoded and decoded only through the codec in
+``geo/cells.py`` (``decode_cell_col`` / ``encode_ixy_col``); this module
+owns just the tile → pixel offset (:func:`_pixel_ixy` and its inverse
+:func:`_tile_pixel`): a pixel's grid index is its tile's index times the
+tile side, plus its (px_col, px_row).
+
 Reference tie-in: the reference has no raster layer; its closest analog
 is the choropleth binning (visualization/chloropleth.py) which bins
 values over polygons. This operator family generalizes that to the cell
@@ -33,29 +39,34 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from socialmapper_spark.geo.cells import _IX_SHIFT, _R_SHIFT, cell_col, cell_size_deg
+from socialmapper_spark.geo.cells import (
+    cell_col,
+    cell_size_deg,
+    decode_cell_col,
+    encode_ixy_col,
+    grid_disk_col,
+)
 
 DEFAULT_RES = 9
 DEFAULT_TILE_RES = 4
 
 
-_IX_BITS = 29  # log2(_IX_SHIFT) — keep in sync with geo/cells.py
+def _pixel_ixy(res: int, tile_res: int) -> tuple[F.Column, F.Column]:
+    """Grid (ix, iy) at ``res`` of each pixel-table row."""
+    side = 1 << (res - tile_res)
+    tx, ty = decode_cell_col(F.col("tile_id"))
+    return tx * F.lit(side) + F.col("px_col"), ty * F.lit(side) + F.col("px_row")
 
 
-def _ix(cell: F.Column) -> F.Column:
-    """x-index from an encoded cell OR tile id (same bit layout:
-    res·2^58 + ix·2^29 + iy). Exact integer ops only — the previous
-    floor(rem / 2^29) evaluated in double, whose 53-bit mantissa can
-    misfloor once rem ≥ 2^53 (res ≥ 17; MAX_RES is 22). shiftright is
-    integer floor-division by 2^29 for the non-negative pmod remainder
-    (r4 ADVICE raster.py:108)."""
-    return F.shiftright(F.pmod(cell, F.lit(_R_SHIFT)), _IX_BITS).cast("long")
-
-
-def _iy(cell: F.Column) -> F.Column:
-    """y-index from an encoded cell or tile id — exact integer mod
-    (2^58 is a multiple of 2^29, so cell % 2^29 ≡ (cell % 2^58) % 2^29)."""
-    return F.pmod(cell, F.lit(_IX_SHIFT)).cast("long")
+def _tile_pixel(ix: F.Column, iy: F.Column, res: int, tile_res: int) -> list[F.Column]:
+    """(tile_id, px_row, px_col) columns of the pixel at grid (ix, iy)."""
+    dr = res - tile_res
+    side = F.lit(1 << dr)
+    return [
+        encode_ixy_col(tile_res, F.shiftright(ix, dr), F.shiftright(iy, dr)).alias("tile_id"),
+        F.pmod(iy, side).cast("int").alias("px_row"),
+        F.pmod(ix, side).cast("int").alias("px_col"),
+    ]
 
 
 def rasterize_counts(
@@ -70,22 +81,11 @@ def rasterize_counts(
     Output: (tile_id long, px_row int, px_col int, value long) — px_row/
     px_col are the pixel's offset within its 2^dr × 2^dr tile.
     """
-    dr = res - tile_res
-    side = 1 << dr
     pts = points.filter(F.col(lat).isNotNull() & F.col(lon).isNotNull())
     cells = pts.select(cell_col(F.col(lat), F.col(lon), res).alias("cell"))
     counts = cells.groupBy("cell").agg(F.count("*").alias("value"))
-    ix, iy = _ix(F.col("cell")), _iy(F.col("cell"))
-    tile = (
-        F.lit(tile_res).cast("long") * F.lit(_R_SHIFT)
-        + F.shiftright(ix, dr).cast("long") * F.lit(_IX_SHIFT)
-        + F.shiftright(iy, dr).cast("long")
-    )
     return counts.select(
-        tile.alias("tile_id"),
-        F.pmod(iy, F.lit(side)).cast("int").alias("px_row"),
-        F.pmod(ix, F.lit(side)).cast("int").alias("px_col"),
-        "value",
+        *_tile_pixel(*decode_cell_col(F.col("cell")), res, tile_res), "value"
     )
 
 
@@ -103,48 +103,25 @@ def focal_stats(
     Output: one row per cell RECEIVING any contribution (the 3×3
     dilation of the data support): ``(cell, focal_sum, focal_n,
     focal_mean)`` where focal_n counts the non-empty contributing
-    pixels. Grid topology matches the cell index: longitude wraps
-    (pmod), latitude clamps (off-grid rows drop — no wrap across the
-    poles).
+    pixels. The window is the cell's ``grid_disk_col`` k=1 disk, so the
+    topology is the cell index's: longitude wraps, off-grid rows drop
+    (no wrap across the poles).
 
     Scale shape (pure Catalyst): the 3×3 explode is a narrow 9× fan-out
     of the already-aggregated pixel table (tiny vs the corpus); the only
     shuffle is one map-side-combinable hash agg on the neighbor cell
     key. No Python, no window functions, no driver state.
     """
-    dr = res - tile_res
-    side = 1 << dr
-    nx, ny = 1 << (res + 7), 1 << (res + 6)
-    ix = _ix(F.col("tile_id")) * F.lit(side) + F.col("px_col")
-    iy = _iy(F.col("tile_id")) * F.lit(side) + F.col("px_row")
-    offsets = F.array(
-        *[
-            F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-            for dx in (-1, 0, 1)
-            for dy in (-1, 0, 1)
-        ]
-    )
-    fan = raster.select(
-        ix.alias("__ix"), iy.alias("__iy"), "value", F.explode(offsets).alias("o")
-    )
-    jx = F.pmod(F.col("__ix") + F.col("o.dx"), F.lit(nx))
-    jy = F.col("__iy") + F.col("o.dy")
-    contrib = fan.filter((jy >= 0) & (jy < ny)).select(
-        jx.alias("__jx"), jy.alias("__jy"), "value"
-    )
-    cell = (
-        F.lit(res).cast("long") * F.lit(_R_SHIFT)
-        + F.col("__jx").cast("long") * F.lit(_IX_SHIFT)
-        + F.col("__jy").cast("long")
-    )
+    pixel = encode_ixy_col(res, *_pixel_ixy(res, tile_res))
+    contrib = raster.select(F.explode(grid_disk_col(pixel, res, 1)).alias("cell"), "value")
     return (
-        contrib.groupBy("__jx", "__jy")
+        contrib.groupBy("cell")
         .agg(
             F.sum("value").alias("focal_sum"),
             F.count("*").cast("long").alias("focal_n"),
         )
         .select(
-            cell.alias("cell"),
+            "cell",
             "focal_sum",
             "focal_n",
             (F.col("focal_sum") / F.lit(9.0)).alias("focal_mean"),
@@ -177,26 +154,14 @@ def downsample_counts(
     if to_res < tile_res:
         raise ValueError(f"to_res {to_res} below tile_res {tile_res}")
     shift = res - to_res
-    dr = to_res - tile_res
-    side = 1 << dr
-    in_side = 1 << (res - tile_res)
-    ix = _ix(F.col("tile_id")) * F.lit(in_side) + F.col("px_col")
-    iy = _iy(F.col("tile_id")) * F.lit(in_side) + F.col("px_row")
+    ix, iy = _pixel_ixy(res, tile_res)
     parents = raster.select(
         F.shiftright(ix, shift).alias("__jx"),
         F.shiftright(iy, shift).alias("__jy"),
         "value",
     ).groupBy("__jx", "__jy").agg(F.sum("value").alias("value"))
-    tile = (
-        F.lit(tile_res).cast("long") * F.lit(_R_SHIFT)
-        + F.shiftright(F.col("__jx"), dr).cast("long") * F.lit(_IX_SHIFT)
-        + F.shiftright(F.col("__jy"), dr).cast("long")
-    )
     return parents.select(
-        tile.alias("tile_id"),
-        F.pmod(F.col("__jy"), F.lit(side)).cast("int").alias("px_row"),
-        F.pmod(F.col("__jx"), F.lit(side)).cast("int").alias("px_col"),
-        "value",
+        *_tile_pixel(F.col("__jx"), F.col("__jy"), to_res, tile_res), "value"
     )
 
 
@@ -222,7 +187,6 @@ def zonal_stats(
     the polygon index is built on the driver when this is called (one
     ``toArrow`` job over the polygon table, as in the flagship).
     """
-    from socialmapper_spark.geo.cells import cell_size_deg
     from socialmapper_spark.operators.spatial_join import (
         PREFILTER_RES,
         prepare_polygons,
@@ -230,9 +194,7 @@ def zonal_stats(
     )
 
     size = cell_size_deg(res)
-    in_side = 1 << (res - tile_res)
-    ix = _ix(F.col("tile_id")) * F.lit(in_side) + F.col("px_col")
-    iy = _iy(F.col("tile_id")) * F.lit(in_side) + F.col("px_row")
+    ix, iy = _pixel_ixy(res, tile_res)
     centers = raster.select(
         "value",
         ((ix.cast("double") + F.lit(0.5)) * F.lit(size) - F.lit(180.0)).alias("__lon"),
@@ -281,7 +243,6 @@ def rasterize_polygons(
     broadcast edge join; the corpus never participates. No shuffle of
     anything bigger than the burned cell set itself.
     """
-    from socialmapper_spark.geo.cells import cell_size_deg
     from socialmapper_spark.operators.spatial_join import (
         PREFILTER_RES,
         pip_refine_expr,
@@ -295,7 +256,7 @@ def rasterize_polygons(
     per_axis = 1 << steps
     size = cell_size_deg(res)
     index = prepare_polygons(spark, polygons, cover_res)
-    cix, ciy = _ix(F.col("cell")), _iy(F.col("cell"))
+    cix, ciy = decode_cell_col(F.col("cell"))
     kids = index.cells_df.select(
         "poly_id",
         (cix * F.lit(per_axis)).alias("__bx"),
@@ -312,11 +273,7 @@ def rasterize_polygons(
         kids.join(F.broadcast(index.geoms_df), "poly_id")
         .filter(pip_refine_expr(F.col("__edges"), lon_c, lat_c))
     )
-    cell = (
-        F.lit(res).cast("long") * F.lit(_R_SHIFT)
-        + F.col("__jx") * F.lit(_IX_SHIFT)
-        + F.col("__jy")
-    )
+    cell = encode_ixy_col(res, F.col("__jx"), F.col("__jy"))
     return hits.select(cell.alias("cell"), "poly_id")
 
 
@@ -357,16 +314,9 @@ def vectorize_threshold(
     cell-boundary coordinates (pure Catalyst); ``with_wkb`` adds the WKB
     polygon bytes for interop (Arrow UDF, off the comparison path).
     """
-    dr = res - tile_res
-    side = 1 << dr
     size = cell_size_deg(res)
-    ix = _ix(F.col("tile_id")) * F.lit(side) + F.col("px_col")
-    iy = _iy(F.col("tile_id")) * F.lit(side) + F.col("px_row")
-    cell = (
-        F.lit(res).cast("long") * F.lit(_R_SHIFT)
-        + ix.cast("long") * F.lit(_IX_SHIFT)
-        + iy.cast("long")
-    )
+    ix, iy = _pixel_ixy(res, tile_res)
+    cell = encode_ixy_col(res, ix, iy)
     lon_min = ix.cast("double") * F.lit(size) - F.lit(180.0)
     lat_min = iy.cast("double") * F.lit(size) - F.lit(90.0)
     out = raster.filter(F.col("value") >= threshold).select(

@@ -195,14 +195,6 @@ def canonical_url_sql(expr: str = "url") -> str:
     )
 
 
-def canonicalize_urls(pages: DataFrame, url_col: str = "url") -> DataFrame:
-    """(url, canonical) — the admission-gate key per page row."""
-    return pages.select(
-        F.col(url_col).alias("url"),
-        canonical_url(F.col(url_col)).alias("canonical"),
-    )
-
-
 def admission_gate(
     pages: DataFrame,
     text_col: str = "text",

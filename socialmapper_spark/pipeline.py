@@ -24,10 +24,10 @@ from socialmapper_spark.geo.geoparse import geoparse_cols, pair_strings
 from socialmapper_spark.operators.census import dmean, dsum, pivot_census
 from socialmapper_spark.operators.spatial_join import (
     PREFILTER_RES,
+    add_cells,
     prepare_polygons,
     spatial_join,
 )
-from socialmapper_spark.geo.cells import cell_col
 
 
 def geoparse_pages(pages: DataFrame) -> DataFrame:
@@ -45,11 +45,8 @@ def geoparse_pages(pages: DataFrame) -> DataFrame:
         F.inline(F.array(F.struct(raw_lat.alias("raw_lat"), raw_lon.alias("raw_lon")))),
     )
     g = geoparse_cols(F.col("text"), F.col("raw_lat"), F.col("raw_lon"))
-    out = extracted.select("url", "warc_ts", "lang",
-                           *[g[c].alias(c) for c in ("lat", "lon", "mentions")])
-    for r in (7, 8, 9):
-        out = out.withColumn(f"cell_r{r}", cell_col(F.col("lat"), F.col("lon"), r))
-    return out
+    return add_cells(extracted.select("url", "warc_ts", "lang",
+                                      *[g[c].alias(c) for c in ("lat", "lon", "mentions")]))
 
 
 def page_assignments(spark: SparkSession, pages: DataFrame, polygons: DataFrame) -> DataFrame:

@@ -91,30 +91,6 @@ def write_bucketed(
     writer.saveAsTable(table)
 
 
-def write_partitioned_by_cell_prefix(
-    df: DataFrame,
-    path: str,
-    cell_col: str = "cell_r9",
-    parent_res: int = 5,
-    cell_res: int = 9,
-    mode: str = "overwrite",
-) -> str:
-    """Directory-partition a cell-keyed table by the parent cell at a
-    coarse resolution: region-scoped readers (a state, a metro bbox)
-    then touch only the matching partitions — `PartitionFilters` in the
-    scan, zero bytes read elsewhere. Returns the partition column name."""
-    from socialmapper_spark.geo.cells import cell_to_parent_col
-
-    part_col = f"cell_r{parent_res}"
-    (
-        df.withColumn(part_col, cell_to_parent_col(F.col(cell_col), cell_res, parent_res))
-        .write.mode(mode)
-        .partitionBy(part_col)
-        .parquet(path)
-    )
-    return part_col
-
-
 def export_units_iceberg(df: DataFrame, table: str, mode: str = "overwrite") -> None:
     """Production sink: write to an Iceberg table (the north-rule target
     store). Uses the DataFrameWriterV2 API so partition evolution /

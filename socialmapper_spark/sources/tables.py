@@ -31,53 +31,30 @@ def iceberg_available(spark: SparkSession) -> bool:
         return False
 
 
-def iceberg_session_conf(warehouse: str) -> dict[str, str]:
-    """The extra_conf to pass to session.get_spark when the Iceberg jar is
-    present (spark-submit --packages org.apache.iceberg:iceberg-spark-runtime)."""
-    return {
-        f"spark.sql.catalog.{ICEBERG_CATALOG}": "org.apache.iceberg.spark.SparkCatalog",
-        f"spark.sql.catalog.{ICEBERG_CATALOG}.type": "hadoop",
-        f"spark.sql.catalog.{ICEBERG_CATALOG}.warehouse": warehouse,
-    }
-
-
-def write_pages_table(
-    df: DataFrame,
-    target: str,
-    spark: SparkSession | None = None,
-    partition_col: str = "cell_prefix",
-    cell_col_name: str = "cell_r7",
-    prefix_res: int = 4,
-    mode: str = "overwrite",
-) -> str:
-    """Write a geoparsed table partitioned by the cell prefix.
-
-    The partition column is the cell id coarsened to ``prefix_res`` —
-    coarse enough that partition counts stay bounded (4^res-ish over the
-    covered area), fine enough that a polygon-region query prunes most of
-    the table. Returns the backend used ('iceberg' or 'parquet').
+def write_pages_table(df: DataFrame, target: str) -> str:
+    """Write a geoparsed table partitioned by ``cell_prefix``, the res-4
+    parent of its ``cell_r7`` column — coarse enough that partition
+    counts stay bounded (4^res-ish over the covered area), fine enough
+    that a polygon-region query prunes most of the table. Returns the
+    backend used ('iceberg' or 'parquet').
     """
     from socialmapper_spark.geo.cells import cell_to_parent_col
 
-    out = df.withColumn(
-        partition_col,
-        cell_to_parent_col(F.col(cell_col_name), 7, prefix_res),
-    )
-    spark = spark or df.sparkSession
+    out = df.withColumn("cell_prefix", cell_to_parent_col(F.col("cell_r7"), 7, 4))
     if target.startswith("iceberg:"):
         ident = target[len("iceberg:"):]
-        if not iceberg_available(spark):
+        if not iceberg_available(df.sparkSession):
             raise RuntimeError(
                 "iceberg target requested but no Iceberg runtime jar on the "
                 "classpath; pass --packages org.apache.iceberg:iceberg-spark-runtime"
             )
         (
             out.writeTo(f"{ICEBERG_CATALOG}.{ident}")
-            .partitionedBy(F.col(partition_col))
+            .partitionedBy(F.col("cell_prefix"))
             .createOrReplace()
         )
         return "iceberg"
-    out.write.mode(mode).partitionBy(partition_col).parquet(target)
+    out.write.mode("overwrite").partitionBy("cell_prefix").parquet(target)
     return "parquet"
 
 

@@ -187,23 +187,21 @@ def test_bucketed_join_has_no_shuffle(spark, geo_small, tmp_path):
 
 
 def test_cell_prefix_partition_pruning(spark, geo_small, tmp_path):
-    """A region-scoped filter on the partition column must reach the scan
-    as a PartitionFilter (only matching directories read)."""
+    """A region-scoped filter on the pages table's partition column must
+    reach the scan as a PartitionFilter (only matching directories read)."""
     from socialmapper_spark.pipeline import geoparse_pages
-    from socialmapper_spark.sinks import write_partitioned_by_cell_prefix
+    from socialmapper_spark.sources.tables import read_pages_table, write_pages_table
 
     geop = geoparse_pages(spark.read.parquet(f"{geo_small}/pages.parquet")).filter(
         F.col("lat").isNotNull()
     )
-    out = str(tmp_path / "assign_part")
-    part_col = write_partitioned_by_cell_prefix(
-        geop.select("url", "cell_r9"), out, cell_col="cell_r9"
-    )
-    back = spark.read.parquet(out)
-    one = back.select(part_col).first()[part_col]
-    scan = back.filter(F.col(part_col) == one)
+    out = str(tmp_path / "pages_part")
+    write_pages_table(geop.select("url", "cell_r7"), out)
+    back = read_pages_table(spark, out)
+    one = back.select("cell_prefix").first()["cell_prefix"]
+    scan = back.filter(F.col("cell_prefix") == one)
     plan = scan._jdf.queryExecution().executedPlan().toString()
-    assert f"PartitionFilters: [isnotnull({part_col}" in plan or (
+    assert "PartitionFilters: [isnotnull(cell_prefix" in plan or (
         "PartitionFilters" in plan and str(one) in plan
     )
     n_all, n_one = back.count(), scan.count()

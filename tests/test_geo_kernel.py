@@ -11,7 +11,6 @@ from socialmapper_spark.geo import (
     cell_size_deg,
     cell_to_parent,
     convex_hull,
-    covering_cells,
     decode_cell,
     geoparse_py,
     grid_disk,
@@ -69,16 +68,6 @@ class TestCells:
     def test_pole_clamp(self):
         assert decode_cell(int(cell_np(90.0, 0.0, 7)))[2] == (1 << 13) - 1
         assert decode_cell(int(cell_np(-90.0, 0.0, 7)))[2] == 0
-
-    def test_covering_cells_superset(self):
-        ring = np.array([[-79.0, 35.5], [-78.9, 35.5], [-78.9, 35.6], [-79.0, 35.6]])
-        cover = set(covering_cells([ring], 7))
-        # every point inside the polygon must map to a covered cell
-        rng = np.random.default_rng(0)
-        lons = rng.uniform(-79.0, -78.9, 200)
-        lats = rng.uniform(35.5, 35.6, 200)
-        for c in cell_np(lats, lons, 7):
-            assert int(c) in cover
 
     def test_vectorized_matches_scalar(self):
         rng = np.random.default_rng(1)

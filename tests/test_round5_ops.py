@@ -152,28 +152,62 @@ def test_star_cc_converged_chain_matches_hashmin(spark):
     assert converged and rows(labels) == a and a[0] == (0, 0)
 
 
-# --- exact integer cell/tile decode (r4 ADVICE raster.py:108) ------------------
+# --- the Catalyst cell codec at MAX_RES ----------------------------------------
 
 def test_raster_decode_exact_at_high_res(spark):
-    """res ≥ 17 puts the in-resolution remainder past 2^53, where the old
-    double-division decode could misfloor; the shiftright/pmod decode must
-    be bit-exact against Python integer arithmetic at MAX_RES."""
-    from socialmapper_spark.geo.cells import _IX_SHIFT, _R_SHIFT
-    from socialmapper_spark.operators.raster import _ix, _iy
+    """Pins the exact Catalyst codec against the Python-int one at res 0,
+    9 and MAX_RES = 22, on adversarial indices. At res ≥ 17 the in-res
+    remainder passes 2^53, and the codec decodes with integer
+    shiftright/pmod. A double-division decode would not misfloor on this
+    grid either: the remainder converts to double within 16 and iy < 2^28
+    keeps rem / 2^29's fraction under 0.5. So this pins the exact codec,
+    not a past bug. Also runs grid_disk_col
+    (across the antimeridian and on the top row) and cell_to_parent_col
+    (22 → 17) at res 22 against their scalar twins."""
+    from socialmapper_spark.geo.cells import (
+        MAX_RES,
+        cell_to_parent,
+        cell_to_parent_col,
+        decode_cell,
+        decode_cell_col,
+        encode_ixy,
+        encode_ixy_col,
+        grid_disk,
+        grid_disk_col,
+    )
 
-    res = 22
-    nx = 1 << (res + 7)
-    # adversarial indices: max ix, ix patterns ending in all-ones/zeros,
-    # plus a dense band near the top of the x range
-    ixs = [nx - 1, nx - 2, (1 << 28) - 1, (1 << 28), 123456789, 0, 1]
-    iys = [(1 << 28) - 1, 7, 0, 268435455, 99999999, 1, 2]
-    rows = [
-        (int(res * _R_SHIFT + ix * _IX_SHIFT + iy), ix, iy)
-        for ix, iy in zip(ixs, iys)
-    ]
-    df = spark.createDataFrame(rows, "cell long, ix long, iy long")
+    rows = []
+    for res in (0, 9, MAX_RES):
+        nx, ny = 1 << (res + 7), 1 << (res + 6)
+        # max ix, ix patterns ending in all-ones/zeros, a dense band near
+        # the top of the x range, the top and bottom rows
+        ixs = [nx - 1, nx - 2, (1 << 28) - 1, 1 << 28, 123456789, 0, 1]
+        iys = [ny - 1, 7, 0, 268435455, 99999999, 1, ny - 2]
+        for ix, iy in zip(ixs, iys):
+            ix, iy = ix % nx, min(iy, ny - 1)
+            rows.append((res, encode_ixy(res, ix, iy), ix, iy))
+    df = spark.createDataFrame(rows, "res int, cell long, ix long, iy long")
+    gx, gy = decode_cell_col(F.col("cell"))
     got = df.select(
-        "ix", "iy", _ix(F.col("cell")).alias("gx"), _iy(F.col("cell")).alias("gy")
+        "res", "cell", "ix", "iy", gx.alias("gx"), gy.alias("gy"),
+        *[encode_ixy_col(r, F.col("ix"), F.col("iy")).alias(f"e{r}") for r in (0, 9, MAX_RES)],
     ).collect()
     for r in got:
-        assert r["gx"] == r["ix"] and r["gy"] == r["iy"], dict(r.asDict())
+        assert (r["gx"], r["gy"]) == (r["ix"], r["iy"]), dict(r.asDict())
+        assert decode_cell(r["cell"]) == (r["res"], r["ix"], r["iy"])
+        assert r[f"e{r['res']}"] == r["cell"]
+
+    res = MAX_RES
+    nx, ny = 1 << (res + 7), 1 << (res + 6)
+    probes = [encode_ixy(res, nx - 1, ny - 1), encode_ixy(res, 0, ny - 1),
+              encode_ixy(res, nx - 1, 0), encode_ixy(res, 123456789, 99999999)]
+    pdf = spark.createDataFrame([(c,) for c in probes], "cell long")
+    out = pdf.select(
+        "cell",
+        grid_disk_col(F.col("cell"), res, 1).alias("disk"),
+        cell_to_parent_col(F.col("cell"), res, 17).alias("parent"),
+    ).collect()
+    for r in out:
+        assert sorted(r["disk"]) == sorted(grid_disk(r["cell"], 1))
+        assert r["parent"] == cell_to_parent(r["cell"], 17)
+    assert {len(r["disk"]) for r in out} == {6, 9}  # top/bottom rows drop one row

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from socialmapper_spark.geo.cells import (
     cell_np,
-    covering_cells,
+    decode_cell,
     polygon_cover_cells,
     ring_cover_cells,
 )
@@ -87,9 +87,14 @@ class TestPolygonCover:
         dn = np.stack([-100.0 + t[::-1], 35.0 + t[::-1] - 0.002], axis=1)
         ring = np.concatenate([up, dn])
         tight = polygon_cover_cells([[ring]], 7)
-        loose = covering_cells([ring], 7)
-        assert len(tight) < len(loose) / 5
-        assert set(tight) <= set(loose)
+        # the bbox cover: every cell between the bbox corners' cells
+        (_, x0, y0), (_, x1, y1) = (
+            decode_cell(cell_np(ring[:, 1].min(), ring[:, 0].min(), 7)),
+            decode_cell(cell_np(ring[:, 1].max(), ring[:, 0].max(), 7)),
+        )
+        assert len(tight) < (x1 - x0 + 1) * (y1 - y0 + 1) / 5
+        for _, x, y in map(decode_cell, tight):
+            assert x0 <= x <= x1 and y0 <= y <= y1
 
     def test_cover_has_no_false_negatives(self):
         rng = np.random.default_rng(7)
