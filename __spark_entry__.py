@@ -1093,9 +1093,11 @@ def q_crawl_enrich_stream(spark, sf_dir):
 def q_tag_filter(spark, sf_dir):
     """S1: POI tag filter over the map-typed tags column (the engine twin
     of the Overpass tag query: tags[key] == value)."""
+    from socialmapper_spark.fixtures import ensure_geo_extras
     from socialmapper_spark.sources.custom_coords import read_custom_coordinates
 
-    pois = read_custom_coordinates(spark, f"{_geo(sf_dir)}/custom_coords.csv")
+    geo = str(ensure_geo_extras(sf_dir))
+    pois = read_custom_coordinates(spark, f"{geo}/custom_coords.csv")
     return pois.filter(F.col("tags")["city"] == "Durham").select(
         "id", "lat", "lon", F.col("tags")["city"].alias("city")
     )

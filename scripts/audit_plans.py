@@ -66,9 +66,9 @@ WHITELIST: dict[str, tuple[set[str], str]] = {
                     "broadcast brute-force parity path + probe-side Albers UDF"),
     "knn_topk": ({"BroadcastNestedLoopJoin", "ArrowEvalPython"},
                  "broadcast brute-force top-k parity path + probe-side Albers UDF"),
-    "knn_kring": ({"BroadcastNestedLoopJoin", "ArrowEvalPython"},
-                  "probe-side Albers UDF + exactness-preserving brute-force fallback "
-                  "(broadcast candidates; strategy='auto' caps the POI side)"),
+    # k=1 kring adds its fallback POIs by a broadcast HASH join (a key
+    # column that is NULL for covered points), so only the UDF remains
+    "knn_kring": ({"ArrowEvalPython"}, "probe-side Albers UDF"),
     "centroid_nearest_poi": ({"BroadcastNestedLoopJoin", "ArrowEvalPython"},
                              "probe-side Albers UDF + broadcast brute-force join"),
     "cluster_metrics": ({"BroadcastNestedLoopJoin"},

@@ -18,9 +18,13 @@ Two strategies, same results (tested equal):
   cell (pure-Catalyst ``grid_disk_col`` explode over the POI table's
   local scan — no driver loop over |POIs|·rings²); points equi-join that
   broadcast (cell → poi) table, compute exact distances on candidates
-  only, take per-point top-k. Points with no candidate in k rings fall
-  back to the broadcast path (exactness is never sacrificed — the ring
-  prune is an optimization, not an approximation).
+  only, take per-point top-k. Points whose rings hold no provably
+  nearest POI fall back to every POI (exactness is never sacrificed —
+  the ring prune is an optimization, not an approximation). At k=1 the
+  fallback rides the same pass: a hash join on a key that is NULL for
+  covered points adds every POI to the others, and a second min(struct)
+  per point, on the first one's partitioning, picks the winner: no
+  exchange of its own, and nothing cached.
 
 The POI side is prepared once on the driver when ``knn_join`` is called:
 a ``toArrow`` collect of (id, lat, lon), the Albers (x, y) and the ring
@@ -46,6 +50,15 @@ from socialmapper_spark.geo.cells import cell_col, cell_size_deg, grid_disk_col
 from socialmapper_spark.functions.scalar import KM_TO_MILES
 
 KNN_RES = 7  # candidate cell resolution (~2.2 km edge → ring 2 ≈ 5 km reach)
+
+
+def _distance_km(poi_x, poi_y):
+    """Euclidean EPSG:5070 distance in km from the probe's (__x, __y);
+    every strategy's distances come from this one expression, so they
+    agree bit for bit."""
+    dx = F.col("__x") - poi_x
+    dy = F.col("__y") - poi_y
+    return F.sqrt(dx * dx + dy * dy) / F.lit(1000.0)
 
 
 def _albers_udf():
@@ -142,13 +155,13 @@ def knn_join(
         # the expected POI count inside the capped, guard-provable disk is
         # < 2k, the exactness guard will fail for most points and nearly
         # the whole probe side rides the brute-force fallback — the ring
-        # machinery (explode, candidate join, stats, semi+anti joins)
-        # becomes pure overhead on top of the crossJoin it was meant to
-        # avoid. Emitting the broadcast plan directly is then the better
-        # physical strategy for the SAME exact semantics (cost-based
-        # selection, not an approximation). Dense corpora — the 100 TB
-        # design point where pruning pays — keep the true kring plan, as
-        # does any caller pinning `rings` explicitly.
+        # machinery (explode, candidate join, guard) becomes pure overhead
+        # on top of the brute force it was meant to avoid. Emitting the
+        # broadcast plan directly is then the better physical strategy for
+        # the SAME exact semantics (cost-based selection, not an
+        # approximation). Dense corpora — the 100 TB design point where
+        # pruning pays — keep the true kring plan, as does any caller
+        # pinning `rings` explicitly.
         rings = _auto_rings(n_pois, area_km2, mean_abs_lat, k)
         edge_km = (
             cell_size_deg(KNN_RES) * 110.57 * float(np.cos(np.deg2rad(mean_abs_lat)))
@@ -170,6 +183,15 @@ def knn_join(
     pts = pts.withColumn("__xy", _albers_udf()(F.col(lat), F.col(lon)))
     pts = pts.withColumn("__x", F.col("__xy.x")).withColumn("__y", F.col("__xy.y"))
 
+    # a top-1 aggregate's __best struct, unpacked to the output columns
+    best_cols = [
+        F.col(id_col),
+        F.col("__best.poi_id").alias("poi_id"),
+        F.col("__best.distance_km").alias("distance_km"),
+        (F.col("__best.distance_km") * F.lit(KM_TO_MILES)).alias("distance_miles"),
+        F.lit(1).alias("knn_rank"),
+    ]
+
     def finish(cand: DataFrame, keep_xy: bool = False) -> DataFrame:
         # if the caller threaded a "__plat" passthrough column (kring guard),
         # carry it through the aggregation so no join back to pts is needed;
@@ -177,9 +199,7 @@ def knn_join(
         # through, so the guard-failed rows can feed the brute-force fallback
         # directly — no join back to the probe side at all
         passthrough = "__plat" in cand.columns
-        dx = cand["__x"] - cand["poi_x"]
-        dy = cand["__y"] - cand["poi_y"]
-        cand = cand.withColumn("distance_km", F.sqrt(dx * dx + dy * dy) / F.lit(1000.0))
+        cand = cand.withColumn("distance_km", _distance_km(cand["poi_x"], cand["poi_y"]))
         if k == 1:
             # top-1 as min(struct): partial aggregation combines map-side,
             # so the shuffle carries one row per point instead of one per
@@ -197,13 +217,7 @@ def knn_join(
             if keep_xy:
                 aggs.extend([F.min("__x").alias("__x"), F.min("__y").alias("__y")])
             best = cand.groupBy(id_col).agg(*aggs)
-            cols = [
-                F.col(id_col),
-                F.col("__best.poi_id").alias("poi_id"),
-                F.col("__best.distance_km").alias("distance_km"),
-                (F.col("__best.distance_km") * F.lit(KM_TO_MILES)).alias("distance_miles"),
-                F.lit(1).alias("knn_rank"),
-            ]
+            cols = list(best_cols)
             if passthrough:
                 cols.append(F.col("__plat"))
             if keep_xy:
@@ -242,23 +256,17 @@ def knn_join(
     )
 
     # LEFT candidate join: points with no POI in their ring disk survive
-    # with an all-null candidate row instead of disappearing. That single
-    # change removes the two heaviest pieces of the old fallback plumbing —
-    # the probe side is consumed exactly ONCE (no pts.persist needed: the
-    # Arrow projection runs a single time inside this join's stage) and the
-    # fallback set falls out of `near` itself (no left-anti shuffle back
-    # against the full probe table). The probe's own projected (__x, __y)
-    # are threaded through the aggregation (keep_xy) so fallback rows carry
-    # their coordinates with them.
+    # with an all-null candidate row instead of disappearing, so the probe
+    # side is consumed exactly once (its Arrow projection runs a single
+    # time, inside this join's stage) and the fallback set falls out of
+    # `near` itself, with no anti join back against the probe table. The
+    # probe's projected (__x, __y) ride through the aggregation (keep_xy),
+    # so fallback rows carry their coordinates with them.
     pts_c = pts.withColumn("__cell", cell_col(F.col(lat), F.col(lon), KNN_RES)).withColumn(
         "__plat", F.col(lat)
     )
     cand = pts_c.join(F.broadcast(cells_df), pts_c["__cell"] == cells_df["cell"], "left")
-    # `near` feeds two consumers (covered + fallback split) — persist so the
-    # candidate join + top-k execute once. At cluster scale this is a
-    # spill-safe MEMORY_AND_DISK of the already-pruned candidate top-k,
-    # ~|points|·k rows, far smaller than the raw candidate set.
-    near = finish(cand, keep_xy=True).persist()
+    near = finish(cand, keep_xy=True)
 
     # exactness guard: the ring prune is only provably exact when the k-th
     # candidate distance is smaller than the minimum possible distance to
@@ -271,38 +279,59 @@ def knn_join(
         F.lit(rings * edge * 110000.0 * 0.9)
         * F.cos(F.radians(F.least(F.abs(F.col("__plat")) + F.lit(1.0), F.lit(89.0))))
     )
-    out_cols = [id_col, "poi_id", "distance_km", "distance_miles", "knn_rank"]
     if k == 1:
-        # top-1 fast path: `near` holds exactly one row per point, so the
-        # guard is a NARROW per-row filter — null distance (no candidate)
-        # makes `ok` false, not null, because isNotNull anchors the AND
+        # top-1: `near` holds exactly one row per point, so the guard is a
+        # narrow per-row test — null distance (no candidate) makes `ok`
+        # false, not null, because isNotNull anchors the AND. A point that
+        # fails it joins every POI on a key that is 1 on both sides; a
+        # covered point's key is NULL, so it matches nothing and keeps its
+        # one row. An equi-join plans as a broadcast hash join streaming
+        # `near`, which keeps the aggregation's id partitioning: the second
+        # min(struct) below needs no exchange, and `near` is read once.
         ok = F.col("distance_km").isNotNull() & (
             F.col("distance_km") * 1000.0 <= bound_m
         )
-        covered = near.filter(ok).select(*out_cols)
-        fb_pts = near.filter(~ok).select(id_col, "__x", "__y")
-    else:
-        stats = near.groupBy(id_col).agg(
-            F.count("poi_id").alias("__n"),  # count(col) skips the null row
-            F.max("distance_km").alias("__dk"),
-            F.min("__plat").alias("__plat"),
-            F.min("__x").alias("__x"),
-            F.min("__y").alias("__y"),
+        probe = near.withColumn("__fb", F.when(ok, F.lit(None)).otherwise(F.lit(1)))
+        every = poi_xy.toDF("__fpoi", "__fx", "__fy").withColumn("__fkey", F.lit(1))
+        both = probe.join(F.broadcast(every), probe["__fb"] == every["__fkey"], "left")
+        fb_best = F.struct(
+            _distance_km(F.col("__fx"), F.col("__fy")).alias("distance_km"),
+            F.col("__fpoi").alias("poi_id"),
         )
-        # fallback condition spelled null-safe: a candidate-less point has
-        # __n = 0 (count of nulls) and null __dk
-        fb = (F.col("__n") < k) | F.col("__dk").isNull() | (
-            F.col("__dk") * 1000.0 > bound_m
+        ring_best = F.struct("distance_km", "poi_id")
+        cand_best = F.when(F.col("__fpoi").isNull(), ring_best).otherwise(fb_best)
+        # a failed point with no valid POI at all keeps only its null row
+        return (
+            both.groupBy(id_col)
+            .agg(F.min(cand_best).alias("__best"))
+            .filter(F.col("__best.distance_km").isNotNull())
+            .select(*best_cols)
         )
-        missing = stats.filter(fb).select(id_col, "__x", "__y")
-        covered = (
-            near.filter(F.col("poi_id").isNotNull())
-            .join(missing.select(id_col), id_col, "left_anti")
-            .select(*out_cols)
-        )
-        fb_pts = missing
-    fallback = finish(fb_pts.crossJoin(F.broadcast(poi_xy)))
-    out = covered.unionByName(fallback)
+
+    # k > 1: `near` feeds two consumers (the guard's per-point stats and
+    # the covered rows) — persist so the candidate join + top-k execute
+    # once. At cluster scale this is a spill-safe MEMORY_AND_DISK of the
+    # already-pruned candidate top-k, ~|points|·k rows.
+    near = near.persist()
+    stats = near.groupBy(id_col).agg(
+        F.count("poi_id").alias("__n"),  # count(col) skips the null row
+        F.max("distance_km").alias("__dk"),
+        F.min("__plat").alias("__plat"),
+        F.min("__x").alias("__x"),
+        F.min("__y").alias("__y"),
+    )
+    # fallback condition spelled null-safe: a candidate-less point has
+    # __n = 0 (count of nulls) and null __dk
+    fb = (F.col("__n") < k) | F.col("__dk").isNull() | (
+        F.col("__dk") * 1000.0 > bound_m
+    )
+    missing = stats.filter(fb).select(id_col, "__x", "__y")
+    covered = (
+        near.filter(F.col("poi_id").isNotNull())
+        .join(missing.select(id_col), id_col, "left_anti")
+        .select(id_col, "poi_id", "distance_km", "distance_miles", "knn_rank")
+    )
+    out = covered.unionByName(finish(missing.crossJoin(F.broadcast(poi_xy))))
     # the persist above is consumed lazily by this returned plan, so the
     # operator cannot unpersist it itself; hand the caller the handle
     # (session.release_caches) for release after its terminal action

@@ -41,6 +41,30 @@ def test_custom_coords_missing_coords_raises(spark, tmp_path):
         read_custom_coordinates(spark, str(p))
 
 
+def test_tag_filter_builds_missing_extras(spark, geo_small, tmp_path, monkeypatch):
+    """The tag_filter entry reads custom_coords.csv, an extras file. On a
+    fixture dir holding only the base fixtures it builds the extras
+    itself, as its sibling custom_coords does, instead of failing with
+    PATH_NOT_FOUND until another entry has built them."""
+    import pathlib
+    import shutil
+
+    from socialmapper_spark import fixtures
+
+    fresh = tmp_path / "sf0.001"
+    shutil.copytree(geo_small, fresh)
+    for marker in fresh.glob(".extras_*"):
+        marker.unlink()
+    (fresh / "custom_coords.csv").unlink()
+    monkeypatch.setattr(fixtures, "geo_dir_for", lambda sf_dir: fresh)
+    monkeypatch.syspath_prepend(str(pathlib.Path(__file__).resolve().parents[1]))
+    import __spark_entry__ as e
+
+    rows = e.q_tag_filter(spark, "sf0.001").collect()
+    assert rows and {r["city"] for r in rows} == {"Durham"}
+    assert (fresh / "custom_coords.csv").exists()
+
+
 # --- P6 state normalization --------------------------------------------------
 
 def test_state_normalize_all_formats(spark):

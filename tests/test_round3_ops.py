@@ -296,7 +296,8 @@ def test_knn_kring_degrades_to_broadcast_on_sparse_pois(spark, geo_small):
 
 
 def test_knn_kring_caches_released_via_helper(spark, geo_small):
-    """kring persists intermediates consumed by the returned plan; the
+    """k=1 kring reads its per-point top-1 once, so it persists nothing;
+    k>1 persists intermediates consumed by the returned plan, and the
     attached handles + session.release_caches drop them after the
     caller's terminal action (the long-lived-session leak fix)."""
     from socialmapper_spark.operators.knn import knn_join
@@ -306,11 +307,14 @@ def test_knn_kring_caches_released_via_helper(spark, geo_small):
     pages = spark.read.parquet(f"{geo_small}/pages.parquet")
     pois = spark.read.parquet(f"{geo_small}/pois.parquet").filter(F.col("lat") <= 90)
     probes = geoparse_pages(pages).filter(F.col("lat").isNotNull()).limit(100)
-    out = knn_join(spark, probes, pois, k=1, strategy="kring", rings=3)
-    assert out.count() == 100
-    # one persist: the pruned per-point top-k (`near`); the POI side is a
-    # driver-built local table, and the probe side is single-consumer
-    # since the LEFT candidate join rework
+    top1 = knn_join(spark, probes, pois, k=1, strategy="kring", rings=3)
+    assert top1.count() == 100
+    assert release_caches(top1) == 0
+    out = knn_join(spark, probes, pois, k=2, strategy="kring", rings=3)
+    assert out.count() == 200
+    # one persist: the pruned per-point top-k (`near`), read by the guard's
+    # stats and by the covered rows; the POI side is a driver-built local
+    # table, and the probe side is single-consumer
     handles = getattr(out, "__spark_graft_caches__", [])
     assert len(handles) == 1 and all(h.is_cached for h in handles)
     assert release_caches(out) == 1

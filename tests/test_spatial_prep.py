@@ -361,6 +361,49 @@ def test_knn_kring_plan_stays_in_plan(spark, geo_small):
     assert "ExistingRDD" not in plan
     assert "BroadcastHashJoin" in plan
     assert "Generate explode" in plan  # the in-plan grid_disk expansion
+    # top-1 is one pass: the guard-failed points join every POI by a hash
+    # join and a second min(struct) on the same partitioning picks the
+    # winner — no cache, union, nested loop or third shuffle
+    out.collect()
+    nodes = list(_walk(spark, out._jdf.queryExecution().executedPlan()))
+    kinds = [_kind(n) for n in nodes]
+    for gone in ("InMemoryTableScanExec", "UnionExec", "BroadcastNestedLoopJoinExec"):
+        assert gone not in kinds
+    assert kinds.count("ArrowEvalPythonExec") == 1
+    shuffles = sorted(
+        re.match(r"Exchange hashpartitioning\(url#\d+, \d+\), (\w+)", n.simpleString(25)).group(1)
+        for n in nodes
+        if _kind(n) == "ShuffleExchangeExec"
+    )
+    assert shuffles == ["ENSURE_REQUIREMENTS", "REPARTITION_BY_COL"]
+
+
+def test_knn_kring_top1_fallback_is_exact(spark, geo_small):
+    """One ring over geo_small's few POIs leaves most points without a
+    provably nearest candidate, so they take the k=1 fallback. Its rows
+    equal the broadcast plan's, distances bit for bit, and a POI pair
+    sharing a location resolves by the (distance, poi_id) tie-break."""
+    from socialmapper_spark.operators.knn import knn_join
+    from socialmapper_spark.pipeline import geoparse_pages
+
+    pages = geoparse_pages(spark.read.parquet(f"{geo_small}/pages.parquet"))
+    pois = spark.read.parquet(f"{geo_small}/pois.parquet").filter(F.col("lat") <= 90)
+    # "!" sorts before every id, so the twin wins each tie it is in
+    twins = pois.withColumn("id", F.concat(F.lit("!"), F.col("id")))
+    pois = pois.unionByName(twins)
+
+    def rows(strategy, rings):
+        out = knn_join(spark, pages, pois, k=1, strategy=strategy, rings=rings)
+        return sorted(
+            (r["url"], r["poi_id"], r["distance_km"].hex(), r["distance_miles"].hex(), r["knn_rank"])
+            for r in out.collect()
+        )
+
+    got, want = rows("kring", 1), rows("broadcast", None)
+    assert got == want and len(got) > 1000
+    assert all(r[1].startswith("!") for r in got)
+    # past one ring's provable reach (~1.75 km here) the guard fails
+    assert sum(float.fromhex(r[2]) > 1.75 for r in got) > len(got) // 2
 
 
 def _walk(spark, node, seen=None):
