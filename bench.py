@@ -98,6 +98,16 @@ def main() -> None:
     # raster path import (vector→raster, pure Catalyst bit math)
     from socialmapper_spark.operators.raster import rasterize_counts
 
+    # connected components' long-chain regime: a 3001-node path whose ids
+    # are a seeded random permutation, as a JVM local table
+    import random
+
+    from socialmapper_spark.operators.dedup import dedup_groups
+    from socialmapper_spark.session import local_frame
+
+    path_ids = random.Random(11).sample(range(3001), 3001)
+    cc_path = local_frame(spark, list(zip(path_ids, path_ids[1:])), "doc_a long, doc_b long")
+
     bench_queries = [
         # flagship: full pipeline, collect() forces execution end to end
         ("flagship", lambda: flagship_query(spark, pages, polygons, census).collect()),
@@ -147,6 +157,12 @@ def main() -> None:
         # fine sink HERE: the per-round work is forced by the checkpoints
         # regardless of final-projection pruning.
         ("item_pagerank", lambda: entrymod.q_item_pagerank(spark, sf_dir).count()),
+        # connected components, both regimes: the near-dup pairs are tiny
+        # cliques (two plain hash-min rounds); the path needs the hooking
+        # and pointer-jumping rounds (O(log n)). Each round ends in an eager
+        # localCheckpoint, so the rounds run whatever the sink
+        ("dedup_groups", lambda: checksum_all(entrymod.q_dedup_groups(spark, sf_dir))),
+        ("cc_path", lambda: checksum_all(dedup_groups(cc_path))),
     ]
 
     # interleaved best-of-N: the sandbox host has 2-3x run-to-run noise, so

@@ -8,8 +8,11 @@ counts, so the extractor is a pure function of ``text`` with two
 implementations that agree bit-for-bit:
 
 - :func:`geoparse_cols` — pure Catalyst column expressions (regexp_extract
-  + array/map built-ins). This is the production path: JVM-side, inside
-  whole-stage codegen, zero Python.
+  + array/map built-ins). This is the production path: JVM-side, zero
+  Python. It does not run inside whole-stage codegen: ``mentions`` is an
+  ``F.filter`` lambda, so the ``Filter``/``Project`` above the pair
+  ``Generate`` are interpreted, with no ``*(n)`` stage (a codegen-able
+  ``array_except`` spelling measured no faster on the flagship).
 - :func:`pair_strings` — the two ``regexp_extract`` calls alone.
   ``lat``/``lon`` each inline them about ten times, and Catalyst
   copies the whole expression into every filter it pushes below the

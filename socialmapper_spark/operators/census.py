@@ -41,7 +41,10 @@ def pivot_census(census_long: DataFrame, variables: list[str] | None = None) -> 
 
     Reference: values cleansed per census_service.py:262-278 (P3), then
     merged wide by GEOID (pipeline/census.py:186-219, J4). Passing the
-    pivot value list keeps the plan static (no extra distinct scan).
+    pivot value list keeps the plan static (no extra distinct scan). A
+    repeated (geoid, variable_code) pair takes the max of its cleansed
+    values, whatever the input order, as the DuckDB twin's
+    ``max(case when ...)`` does.
     """
     variables = variables or DEFAULT_VARIABLES
     cleansed = census_long.withColumn(
@@ -50,7 +53,7 @@ def pivot_census(census_long: DataFrame, variables: list[str] | None = None) -> 
     return (
         cleansed.groupBy("geoid")
         .pivot("variable_code", variables)
-        .agg(F.first("value"))
+        .agg(F.max("value"))
     )
 
 

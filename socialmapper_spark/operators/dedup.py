@@ -390,36 +390,103 @@ def dedup_groups(
     """Connected-component grouping of verified near-dup pairs →
     ``(doc_id, group_id, is_canonical)`` — the keep/drop decision table a
     dedup pipeline actually consumes (pairs are only the intermediate).
-
-    Algorithm: iterative hash-to-min label propagation — every node's
-    label becomes the min(label) over itself and its neighbors, repeated
-    to a fixed point. Deterministic (labels are data values, never
-    partition-dependent), so results are salt/partitioning-invariant.
     group_id = the component's minimum doc_id; is_canonical marks the
     kept representative (the reference's dedup keeps min-id too,
-    operators/census.py A2).
+    operators/census.py A2). If ``docs`` is given, docs absent from any
+    pair come out as singleton groups (their own canonical).
 
-    Scale shape: each iteration is two hash joins + a map-side-combinable
-    min aggregate, all keyed on doc_id — no driver state beyond the 1-row
-    convergence count. Iterations = component diameter; near-dup
-    components are tiny dense cliques (diameter ≤ 2-3 — band-sharing is
-    near-transitive), so hash-min converges in 2-4 rounds and runs first.
-    Graphs with LONG CHAINS (diameter > ``max_iter``) are caught by
-    observation: if hash-min is still changing after ``max_iter`` rounds
-    its labels are discarded and alternating large-star/small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond")
-    runs on the same pairs — O(log n) rounds even on a path graph, same
-    join/agg shapes per round, identical output once converged, and a
-    RuntimeError if it too hits ``max_iter``. Measured (local[4]):
-    hash-min 1.32 s vs star 2.32 s median on the sf0.1 near-dup pairs,
-    so the common case never pays for star; on a 3001-node path the
-    fallback returns the one component in 17.5 s (hash-min alone stopped
-    at 2976 groups; star alone takes 7.5 s). If ``docs`` is given, docs absent from any pair come out as
-    singleton groups (their own canonical).
+    Algorithm: hash-to-min label propagation — each round every node's
+    label becomes the min over its own and its neighbors' labels, until a
+    round changes nothing. Near-dup components are tiny dense cliques
+    (band-sharing is near-transitive), so that fixed point comes in round
+    2. Hash-min alone needs diameter rounds on a long chain, so from round
+    3 on each round also hooks every old label onto the smallest new
+    label among the nodes that carried it (root hooking, Shiloach and
+    Vishkin 1982), then shortcuts ``label(u) ← min(label(u),
+    label(label(u)))`` (pointer jumping). A path then takes O(log n)
+    rounds whatever its id order. Each step moves a label to another node
+    of the same component, so the fixed point is the component minimum;
+    labels are data values, never partition-dependent, so results are
+    salt/partitioning-invariant. Hitting ``max_iter`` raises RuntimeError:
+    unconverged labels may split a component.
+
+    Scale shape: a round is two hash joins + a map-side-combinable min
+    aggregate keyed on doc_id (a hooking round adds one aggregate and two
+    joins) and a 1-row convergence count — no driver state. The sf0.1
+    near-dup pairs converge in 2 rounds; a 3001-node path takes 13 rounds
+    with increasing ids and 12-13 with seeded random ids (bench.py times
+    both as ``dedup_groups`` and ``cc_path``).
     """
-    labels, converged = _hashmin_labels(pairs, max_iter)
-    if not converged:
-        labels = _star_labels(pairs, max_iter)
+    spark = pairs.sparkSession
+    sym = (
+        pairs.select(F.col("doc_a").alias("node"), F.col("doc_b").alias("peer"))
+        .unionByName(
+            pairs.select(F.col("doc_b").alias("node"), F.col("doc_a").alias("peer"))
+        )
+        .distinct()
+        .persist()
+    )
+    labels = (
+        sym.select("node").distinct().withColumn("label", F.col("node"))
+        # eager localCheckpoint: materialize AND truncate the logical plan.
+        # Iterative self-joins double the lineage every round (labels feeds
+        # both join inputs) — with persist() alone the analyzer still walks
+        # the full 2^iter tree and a ~10-iteration chain blows the plan up.
+        # Checkpointing each round keeps the plan O(1) per round;
+        # superseded checkpoint blocks are dropped by Spark's
+        # ContextCleaner once the frame reference is released.
+        .localCheckpoint(eager=True)
+    )
+    changed = 1
+    for rnd in range(max_iter):
+        # alias-qualify both sides: labels descends from sym, so unqualified
+        # column refs would be flagged as an ambiguous self-join
+        nbr = (
+            sym.alias("e")
+            .join(labels.alias("l"), F.col("e.peer") == F.col("l.node"))
+            .select(F.col("e.node").alias("n"), F.col("l.label").alias("label"))
+            .groupBy("n")
+            .agg(F.min("label").alias("nbr_label"))
+        )
+        new = labels.alias("a").join(
+            nbr.alias("b"), F.col("a.node") == F.col("b.n"), "left"
+        ).select(
+            F.col("a.node").alias("node"),
+            F.col("a.label").alias("old"),
+            F.least("a.label", "b.nbr_label").alias("label"),
+        )
+        if rnd >= 2:
+            hooks = new.groupBy(F.col("old").alias("root")).agg(
+                F.min("label").alias("hook")
+            )
+            new = new.alias("a").join(
+                hooks.alias("h"), F.col("a.node") == F.col("h.root"), "left"
+            ).select("a.node", "a.old", F.least("a.label", "h.hook").alias("label"))
+            new = new.alias("a").join(
+                new.alias("b"), F.col("a.label") == F.col("b.node"), "left"
+            ).select("a.node", "a.old", F.least("a.label", "b.label").alias("label"))
+        new = new.localCheckpoint(eager=True)
+        if rnd >= 2:
+            # the checkpoint keeps its plan's size estimate, and the
+            # self-join above squares it every round until it overflows
+            # the optimizer's BigInt; a fresh scan of the same rows
+            # starts from the default estimate again
+            new = DataFrame(
+                spark._jsparkSession.createDataFrame(
+                    new._jdf.javaRDD(), new._jdf.schema()
+                ),
+                spark,
+            )
+        changed = new.filter(F.col("label") < F.col("old")).limit(1).count()
+        labels = new.drop("old")
+        if changed == 0:
+            break
+    sym.unpersist()
+    if changed:
+        raise RuntimeError(
+            f"connected components did not converge within {max_iter} "
+            f"rounds (labels still changing); raise max_iter"
+        )
     out = labels.select(
         F.col("node").alias(id_col),
         F.col("label").alias("group_id"),
@@ -439,156 +506,6 @@ def dedup_groups(
     # the returned plan reads the final localCheckpoint (fixed-point
     # content); its blocks are released when the frame reference drops
     return out
-
-
-def _hashmin_labels(pairs: DataFrame, max_iter: int) -> tuple[DataFrame, bool]:
-    """((node, label), converged) after at most ``max_iter`` rounds of
-    hash-to-min label propagation. Unconverged labels keep one row per
-    node but may split a component into several labels."""
-    sym = (
-        pairs.select(F.col("doc_a").alias("node"), F.col("doc_b").alias("peer"))
-        .unionByName(
-            pairs.select(F.col("doc_b").alias("node"), F.col("doc_a").alias("peer"))
-        )
-        .distinct()
-        .persist()
-    )
-    labels = (
-        sym.select("node").distinct().withColumn("label", F.col("node"))
-        # eager localCheckpoint: materialize AND truncate the logical plan.
-        # Iterative self-joins double the lineage every round (labels feeds
-        # both join inputs) — with persist() alone the analyzer still walks
-        # the full 2^iter tree and a ~10-iteration chain blows the plan up.
-        # Checkpointing each fixed-point state keeps the plan O(1) per
-        # iteration; superseded checkpoint blocks are dropped by Spark's
-        # ContextCleaner once the frame reference is released.
-        .localCheckpoint(eager=True)
-    )
-    converged = False
-    for _ in range(max_iter):
-        # alias-qualify both sides: labels descends from sym, so unqualified
-        # column refs would be flagged as an ambiguous self-join
-        nbr = (
-            sym.alias("e")
-            .join(labels.alias("l"), F.col("e.peer") == F.col("l.node"))
-            .select(F.col("e.node").alias("n"), F.col("l.label").alias("label"))
-            .groupBy("n")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        new = (
-            labels.alias("a")
-            .join(nbr.alias("b"), F.col("a.node") == F.col("b.n"), "left")
-            .select(
-                F.col("a.node").alias("node"),
-                F.least(
-                    F.col("a.label"), F.coalesce(F.col("b.nbr_label"), F.col("a.label"))
-                ).alias("label"),
-                (F.col("b.nbr_label") < F.col("a.label")).alias("__chg"),
-            )
-        ).localCheckpoint(eager=True)
-        changed = new.filter(F.col("__chg")).limit(1).count()
-        labels = new.drop("__chg")
-        if changed == 0:
-            converged = True
-            break
-    sym.unpersist()
-    return labels, converged
-
-
-def _star_labels(pairs: DataFrame, max_iter: int) -> DataFrame:
-    """(node, label) via alternating large-star/small-star rounds.
-
-    Each round: large-star links every neighbor v > u to u's component
-    minimum; small-star links every neighbor v < u (and u itself) to
-    that minimum. The edge set converges to disjoint stars rooted at
-    each component's min node in O(log n) rounds even on path graphs —
-    the long-chain case where hash-min needs diameter rounds. Per-round
-    cost is the same shape as hash-min's: one symmetrize/orient
-    projection, one min aggregate keyed on node, one join. Convergence
-    is detected by a (count, xor-of-row-hashes) checksum — one tiny agg
-    per round, no driver-side edge comparison. localCheckpoint per round
-    truncates the iterative plan exactly like the hash-min loop.
-    """
-    edges = (
-        pairs.select(
-            F.greatest("doc_a", "doc_b").alias("u"),
-            F.least("doc_a", "doc_b").alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-
-    def checksum(e: DataFrame) -> tuple:
-        # xor-fold of row hashes: order/partitioning-invariant, map-side
-        # combinable (the lineage.py checksum pattern)
-        r = e.select(F.xxhash64("u", "v").alias("h")).agg(
-            F.count("*").alias("n"),
-            F.coalesce(F.expr("bit_xor(h)"), F.lit(0).cast("long")).alias("x"),
-        ).collect()[0]
-        return (r["n"], r["x"])
-
-    prev = checksum(edges)
-    converged = False
-    for _ in range(max_iter):
-        # large-star: sym neighbors; m(u) = min(neighbors ∪ {u});
-        # link every v > u to m
-        sym = edges.select("u", "v").unionByName(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        mins = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
-        large = (
-            sym.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # small-star: edges already oriented u > v; m(u) = min smaller-
-        # neighbor; link u and every smaller neighbor to m
-        mins2 = large.groupBy("u").agg(F.min("v").alias("m"))
-        oriented = large.join(mins2, "u")
-        small = (
-            oriented.select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .unionByName(oriented.select("u", F.col("m").alias("v")))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        edges = small
-        cur = checksum(edges)
-        if cur == prev:
-            converged = True
-            break
-        prev = cur
-    if not converged:
-        # r4 ADVICE: exiting via max_iter means the edge set is NOT yet
-        # disjoint stars — the labeling below would emit multiple
-        # conflicting (node, label) rows per node. That is silent data
-        # corruption downstream (duplicate doc_id rows in dedup_groups),
-        # so fail loudly instead; star rounds converge in O(log n), so a
-        # hit here means max_iter is set far too low for the input.
-        raise RuntimeError(
-            f"star connected-components did not converge within "
-            f"{max_iter} rounds (checksum still changing); raise max_iter"
-        )
-    # fixed point: edges are stars (u → root); roots label themselves.
-    # Nodes whose only pair rows were self-pairs (doc_a == doc_b) carry
-    # no star edge — union them back as their own label so the result
-    # matches hash-min (whose symmetrized edge set keeps them) row for
-    # row on any input.
-    labeled = edges.select(F.col("u").alias("node"), F.col("v").alias("label")).unionByName(
-        edges.select(F.col("v").alias("node"), F.col("v").alias("label"))
-    ).distinct()
-    all_nodes = (
-        pairs.select(F.col("doc_a").alias("node"))
-        .unionByName(pairs.select(F.col("doc_b").alias("node")))
-        .distinct()
-    )
-    isolated = all_nodes.join(labeled.select("node"), "node", "left_anti")
-    return labeled.unionByName(
-        isolated.select("node", F.col("node").alias("label"))
-    )
 
 
 def dedup_groups_py(pairs: list[tuple[int, int]], all_ids=None):

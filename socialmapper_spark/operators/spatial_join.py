@@ -40,8 +40,9 @@ phase 1/2 are broadcast joins, the refine is a narrow map. Output
 partitioning is inherited from the scan, so callers that aggregate by
 polygon afterwards shuffle only the (much smaller) matched rows.
 Hot-cell skew does not matter for the join itself (no shuffle); it
-matters for downstream aggregations, which salt on cell keys (see
-pipeline.py). The polygon side is bounded by the driver instead: a
+matters for downstream aggregations. pipeline.py keys those on url and
+then on (iso, GEOID) pairs, never on cell, and leaves the rest to AQE;
+nothing is salted. The polygon side is bounded by the driver instead: a
 nationwide-sized table of 240k block-group squares preps in about 6 s
 (4-core host), most of it the Arrow transfer to and from the JVM.
 """

@@ -85,6 +85,26 @@ def test_pivot_census_cleanses_sentinels(spark, tables):
     assert row[2] >= 25.0
 
 
+def test_pivot_census_repeated_key_takes_max(spark):
+    """A (geoid, variable_code) pair that repeats must pivot to the max of
+    its cleansed values, as the DuckDB twin's max(case when ...) does, not
+    to whichever row comes first. One partition, rows in input order."""
+    from socialmapper_spark.session import local_frame
+
+    long = local_frame(
+        spark,
+        [
+            ("g1", "B01003_001E", 7.0),
+            ("g1", "B01003_001E", 9.0),
+            ("g2", "B01003_001E", -666666666.0),  # sentinel → NULL
+            ("g2", "B01003_001E", 5.0),
+        ],
+        "geoid string, variable_code string, value double",
+    ).coalesce(1)
+    wide = pivot_census(long, ["B01003_001E"])
+    assert sorted(map(tuple, wide.collect())) == [("g1", 9.0), ("g2", 5.0)]
+
+
 def test_demographic_summary_dispatch(spark):
     df = spark.createDataFrame(
         [(100.0, 50000.0), (200.0, 70000.0), (None, None)],

@@ -1,5 +1,5 @@
 """Round-4 plan-quality fixes: linear-time winnowing, md5-keyed span
-dedup, large-star/small-star components, dropped-bucket audits, and the
+dedup, connected components, dropped-bucket audits, and the
 progressive PII counts."""
 
 import time
@@ -137,37 +137,66 @@ def test_winnow_pairs_bucket_audit(spark):
     assert audit["n_rows_in_dropped"] >= 6
 
 
-# --- dedup_groups: hash-min and large-star/small-star labelers ---------------
+# --- dedup_groups: one connected-components labeler ---------------------------
 
-def _label_rows(labels):
-    """(node, label) frame -> dedup_groups_py's sorted row shape."""
-    return sorted(
-        (r["node"], r["label"], r["node"] == r["label"]) for r in labels.collect()
-    )
+def _cc_rows(pairs, **kw):
+    """dedup_groups output in dedup_groups_py's sorted row shape."""
+    from socialmapper_spark.operators.dedup import dedup_groups
+
+    return sorted(map(tuple, dedup_groups(pairs, **kw).collect()))
 
 
-def test_star_equals_hashmin_on_path_graph(spark):
-    """A 40-node path is the adversarial case for hash-min (needs ~diameter
-    rounds); the star labeler must converge well inside max_iter and give
-    the union-find labeling."""
-    from socialmapper_spark.operators.dedup import _star_labels, dedup_groups_py
+def test_cc_path_graph_matches_union_find(spark):
+    """A 40-node path is the adversarial case for plain hash-min (diameter
+    rounds); with hooking and pointer jumping it converges well inside
+    max_iter = 10 and gives the union-find labeling."""
+    from socialmapper_spark.operators.dedup import dedup_groups_py
 
     path_pairs = [(i, i + 1) for i in range(40)]
     pairs = spark.createDataFrame(path_pairs, "doc_a long, doc_b long")
-    got = _label_rows(_star_labels(pairs, max_iter=10))
+    got = _cc_rows(pairs, max_iter=10)
     assert got == dedup_groups_py(path_pairs)
     # every node folds into the single component rooted at 0
     assert all(g == 0 for _, g, _ in got)
 
 
-def test_star_equals_hashmin_on_mixed_graph(spark):
-    """Cliques + chains + singletons: both labelers, same output."""
-    from socialmapper_spark.operators.dedup import (
-        _hashmin_labels,
-        _star_labels,
-        dedup_groups,
-        dedup_groups_py,
+def test_cc_random_id_path_matches_union_find(spark):
+    """A 1001-node path whose ids are a seeded random permutation. On an
+    increasing-id path pointer jumping alone halves the chain each round;
+    on a random one it stalls, and only the root hooking brings it inside
+    the default max_iter."""
+    import random
+
+    from socialmapper_spark.operators.dedup import dedup_groups_py
+    from socialmapper_spark.session import local_frame
+
+    ids = random.Random(1001).sample(range(1001), 1001)
+    path_pairs = [(ids[i], ids[i + 1]) for i in range(1000)]
+    pairs = local_frame(spark, path_pairs, "doc_a long, doc_b long")
+    got = _cc_rows(pairs)
+    assert got == dedup_groups_py(path_pairs)
+    assert {g for _, g, _ in got} == {0}
+
+
+def test_cc_size_estimate_stays_bounded(spark):
+    """Each hooking round self-joins the labels. A plain localCheckpoint
+    keeps its plan's size estimate, so the estimate squares every round
+    (past 2^7000 in the 9 rounds this 201-node path takes). The labels
+    the loop returns must stay below 2^64."""
+    from socialmapper_spark.operators.dedup import dedup_groups
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(200)], "doc_a long, doc_b long"
     )
+    out = dedup_groups(pairs)
+    size = out._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    assert size < 2**64
+    assert out.count() == 201
+
+
+def test_cc_mixed_graph_matches_union_find(spark):
+    """Cliques + chains + singletons."""
+    from socialmapper_spark.operators.dedup import dedup_groups_py
 
     edges = (
         [(1, 2), (2, 3), (1, 3)]          # triangle
@@ -177,21 +206,16 @@ def test_star_equals_hashmin_on_mixed_graph(spark):
     pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
     docs = spark.createDataFrame([(i,) for i in [1, 2, 3, 10, 11, 12, 13, 20, 21, 99]],
                                  "doc_id long")
-    labels, converged = _hashmin_labels(pairs, max_iter=25)
-    assert converged
-    a = _label_rows(labels)
-    b = _label_rows(_star_labels(pairs, max_iter=25))
-    assert a == b == dedup_groups_py(edges)
-    assert (99, 99, True) in map(tuple, dedup_groups(pairs, docs=docs).collect())
+    assert _cc_rows(pairs) == dedup_groups_py(edges)
+    assert _cc_rows(pairs, docs=docs) == dedup_groups_py(edges, all_ids=[99])
 
 
-def test_star_matches_union_find_on_random_graphs(spark):
+def test_cc_matches_union_find_on_random_graphs(spark):
     """Seeded random graphs (mixed density, self-contained components,
-    duplicate and reversed edges) — the star labeler must equal the
-    union-find twin on every one."""
+    duplicate and reversed edges) must equal the union-find twin."""
     import random
 
-    from socialmapper_spark.operators.dedup import _star_labels, dedup_groups_py
+    from socialmapper_spark.operators.dedup import dedup_groups_py
 
     for seed in (1, 7, 23):
         rng = random.Random(seed)
@@ -203,26 +227,19 @@ def test_star_matches_union_find_on_random_graphs(spark):
         if not edges:
             continue
         pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-        got = _label_rows(_star_labels(pairs, max_iter=25))
-        assert got == dedup_groups_py(edges), f"seed {seed}"
+        assert _cc_rows(pairs) == dedup_groups_py(edges), f"seed {seed}"
 
 
-def test_star_keeps_self_pair_only_nodes(spark):
-    """A node whose only pair rows are self-pairs (doc_a == doc_b) must
-    come out as its own singleton group from BOTH labelers — the star
-    labeler unions such nodes back after the u != v edge filter."""
-    from socialmapper_spark.operators.dedup import (
-        _hashmin_labels,
-        _star_labels,
-        dedup_groups_py,
-    )
+def test_cc_keeps_self_pair_only_nodes(spark):
+    """A node whose only pair rows are self-pairs (doc_a == doc_b) comes
+    out as its own singleton group."""
+    from socialmapper_spark.operators.dedup import dedup_groups_py
 
     edges = [(5, 5), (1, 2), (7, 7), (2, 2)]
     pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    a = _label_rows(_hashmin_labels(pairs, max_iter=25)[0])
-    b = _label_rows(_star_labels(pairs, max_iter=25))
-    assert a == b == dedup_groups_py(edges)
-    assert (5, 5, True) in b and (7, 7, True) in b
+    got = _cc_rows(pairs)
+    assert got == dedup_groups_py(edges)
+    assert (5, 5, True) in got and (7, 7, True) in got
 
 
 # --- dropped-bucket audits -----------------------------------------------------

@@ -1,6 +1,6 @@
 """Round-5 fixes: quantization NaN/empty-vector domain guard, the
-driver-compatible q_str projection, and the star-CC convergence
-contract."""
+driver-compatible q_str projection, and the connected-components
+convergence contract."""
 
 import math
 
@@ -107,49 +107,25 @@ def _chain_pairs(spark, n=12):
     return spark.createDataFrame(rows, "doc_a long, doc_b long")
 
 
-def test_star_cc_raises_on_non_convergence(spark):
-    """When hash-min and then star both run out of rounds, star's edge set
-    is not yet disjoint stars and the labeling would emit conflicting
-    (node,label) rows — must raise, not silently return duplicate doc_id
-    rows."""
+def test_cc_raises_on_non_convergence(spark):
+    """Labels still changing at max_iter can split a component, and
+    dedup_groups would then keep more than one canonical doc of it —
+    must raise, not silently return them."""
     from socialmapper_spark.operators.dedup import dedup_groups
 
     with pytest.raises(RuntimeError, match="did not converge"):
         dedup_groups(_chain_pairs(spark), max_iter=1).collect()
 
 
-def test_hashmin_cc_falls_back_to_star_on_non_convergence(spark):
-    """A chain longer than max_iter leaves hash-min unconverged (its labels
-    would split the component); dedup_groups then runs star and returns
-    the one correct group, without the old split-component warning."""
-    import warnings
+def test_cc_hooks_chain_longer_than_max_iter(spark):
+    """A 21-node chain needs 20 hash-min rounds; from round 3 on the
+    labeler hooks and jumps, so max_iter = 6 is enough for the one
+    union-find group."""
+    from socialmapper_spark.operators.dedup import dedup_groups, dedup_groups_py
 
-    from socialmapper_spark.operators.dedup import (
-        _hashmin_labels,
-        dedup_groups,
-        dedup_groups_py,
-    )
-
-    pairs = _chain_pairs(spark, n=20)
-    labels, converged = _hashmin_labels(pairs, max_iter=6)
-    assert not converged and labels.select("label").distinct().count() > 1
-    with warnings.catch_warnings():
-        warnings.simplefilter("error", RuntimeWarning)
-        out = sorted(map(tuple, dedup_groups(pairs, max_iter=6).collect()))
+    out = sorted(map(tuple, dedup_groups(_chain_pairs(spark, n=20), max_iter=6).collect()))
     assert out == dedup_groups_py([(i, i + 1) for i in range(20)])
     assert {g for _, g, _ in out} == {0}
-
-
-def test_star_cc_converged_chain_matches_hashmin(spark):
-    """With enough rounds both labelers agree exactly on a path graph."""
-    from socialmapper_spark.operators.dedup import _hashmin_labels, _star_labels
-
-    def rows(labels):
-        return sorted((r["node"], r["label"]) for r in labels.collect())
-
-    labels, converged = _hashmin_labels(_chain_pairs(spark), max_iter=25)
-    a = rows(_star_labels(_chain_pairs(spark), max_iter=25))
-    assert converged and rows(labels) == a and a[0] == (0, 0)
 
 
 # --- the Catalyst cell codec at MAX_RES ----------------------------------------
