@@ -146,10 +146,11 @@ def _cc_rows(pairs, **kw):
     return sorted(map(tuple, dedup_groups(pairs, **kw).collect()))
 
 
-def test_cc_path_graph_matches_union_find(spark):
+def test_star_equals_hashmin_on_path_graph(spark):
     """A 40-node path is the adversarial case for plain hash-min (diameter
-    rounds); with hooking and pointer jumping it converges well inside
-    max_iter = 10 and gives the union-find labeling."""
+    rounds); with star-style root hooking and pointer jumping the labeler
+    converges well inside max_iter = 10 and gives the labeling hash-min
+    would reach, which is the union-find one."""
     from socialmapper_spark.operators.dedup import dedup_groups_py
 
     path_pairs = [(i, i + 1) for i in range(40)]

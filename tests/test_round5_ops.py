@@ -128,6 +128,21 @@ def test_cc_hooks_chain_longer_than_max_iter(spark):
     assert {g for _, g, _ in out} == {0}
 
 
+def test_star_cc_converged_chain_matches_hashmin(spark):
+    """Once the labeler converges, its labels do not depend on how many
+    rounds it was allowed: the 13-node chain at max_iter = 6 (done by the
+    hooking rounds) and at max_iter = 25 (room for plain hash-min's 12
+    rounds) both give the union-find group rooted at 0."""
+    from socialmapper_spark.operators.dedup import dedup_groups, dedup_groups_py
+
+    def rows(max_iter):
+        return sorted(map(tuple, dedup_groups(_chain_pairs(spark), max_iter=max_iter).collect()))
+
+    tight, loose = rows(6), rows(25)
+    assert tight == loose == dedup_groups_py([(i, i + 1) for i in range(12)])
+    assert tight[0] == (0, 0, True)
+
+
 # --- the Catalyst cell codec at MAX_RES ----------------------------------------
 
 def test_raster_decode_exact_at_high_res(spark):
